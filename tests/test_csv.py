@@ -207,7 +207,7 @@ class TestContextUtilities:
         assert flat["tuplex.exceptions"] is True
         nested = ctx.options(nested=True)
         assert nested["tuplex"]["exceptions"] is True
-        assert nested["tuplex"]["csv"]["maxDetectionMemory"] > 0
+        assert nested["tuplex"]["useCompiledUDFs"] is True
 
     def test_options_to_yaml(self, ctx, tmp_path):
         p = str(tmp_path / "config.yaml")

@@ -1,6 +1,11 @@
 """Exception-model semantics: implicit drop, resolve chains, ignore,
 in-order merge (reference: test_exceptions.py, test_resolve.py)."""
 
+import hashlib
+import re
+
+from tuplex_spark.plans.inspect import formatted_plan
+
 
 class TestImplicitDrop:
     def test_none_rows_dropped_and_counted(self, ctx):
@@ -55,16 +60,78 @@ class TestResolve:
         assert ds.collect() == ["x", "3"]
 
     def test_resolve_fallback_resolver(self, ctx):
-        """Resolver that can't compile (loop) goes through Python path."""
-        def fix(x):
-            t = 0
-            for i in range(3):
-                t += i
-            return t
+        """A resolver the compiler rejects runs on the interpreter path:
+        behind a compiled map it is the plan's one MapInPandas node."""
+        def hex_len(x):  # hashlib does not compile
+            return len(hashlib.sha256(str(x).encode()).hexdigest())
         ds = (ctx.parallelize([1, 0, 5])
               .map(lambda x: 10 // x)
-              .resolve(ZeroDivisionError, fix))
-        assert ds.collect() == [10, 3, 2]
+              .resolve(ZeroDivisionError, hex_len))
+        plan = formatted_plan(ds._df)
+        assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
+        assert ds.collect() == [10, 64, 2]
+        assert ds.exception_counts == {}
+
+
+class TestInterpreterPath:
+    """Regressions from the time the interpreter path had one copy per
+    operator kind: plan-time sampling, payload encoding and resolver
+    output conformance now behave the same for every op.  The UDFs use
+    hashlib, which the compiler rejects, so they and their resolvers run
+    on the interpreter path."""
+
+    def test_withcolumn_sample_is_budgeted(self, ctx):
+        def grow(x):
+            n = x["n"]
+            while n < 100:
+                n *= 2
+            return n
+        # n=0 never reaches 100: CPython would loop forever on it, the
+        # compiled plan guards it into RuntimeError, and plan-time
+        # sampling must give up on the row instead of hanging
+        rows = [(3, "a"), (0, "b"), (7, "c")]
+        ds = ctx.parallelize(rows, columns=["n", "s"]).withColumn("g", grow)
+        assert ds.collect() == [(3, "a", 192), (7, "c", 112)]
+        assert ds.exception_counts == {"RuntimeError": 1}
+
+    def test_python_resolver_reads_bytes_payload(self, ctx):
+        def digest(x):
+            if x["n"] <= 0:
+                raise ValueError("no digest for a non-positive n")
+            return hashlib.sha1(x["b"]).hexdigest()[:8]
+
+        def digest_fallback(x):
+            return hashlib.md5(x["b"]).hexdigest()[:8]
+        rows = [(b"ab", 1), (b"cd", -1), (b"\x00\xff", -2)]
+        ds = (ctx.parallelize(rows, columns=["b", "n"])
+              .map(digest)
+              .resolve(ValueError, digest_fallback))
+        want = []
+        for b, n in rows:
+            try:
+                want.append(digest({"b": b, "n": n}))
+            except ValueError:
+                want.append(digest_fallback({"b": b, "n": n}))
+        assert ds.collect() == want
+        assert ds.exception_counts == {}
+
+    def test_python_resolver_misfit_is_normal_case_violation(self, ctx):
+        # the resolver returns an int into the UDF's string column: that
+        # row becomes an exception row, the job does not fail
+        def tag(x):
+            if x["n"] <= 0:
+                raise ValueError("no tag for a non-positive n")
+            return hashlib.md5(x["s"].encode()).hexdigest()[:6]
+
+        def tag_width(x):
+            return len(hashlib.md5(x["s"].encode()).digest())
+        rows = [("ab", 1), ("cd", -1), ("ef", 2)]
+        ds = (ctx.parallelize(rows, columns=["s", "n"])
+              .withColumn("t", tag)
+              .resolve(ValueError, tag_width))
+        assert ds.collect() == [("ab", 1, tag({"s": "ab", "n": 1})),
+                                ("ef", 2, tag({"s": "ef", "n": 2}))]
+        assert ds.exception_counts == {"NormalCaseViolation": 1}
 
 
 class TestIgnore:

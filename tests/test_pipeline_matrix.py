@@ -65,17 +65,21 @@ class TestConfigMatrix:
         # N/A price -> ValueError; 'bad' sqft -> ValueError
         assert ds.exception_counts == {"ValueError": 2}
 
-    def test_resolver_recovers_dirty_rows(self, ctx):
-        ds = (ctx.parallelize(RAW)
+    @pytest.mark.parametrize("compiled", [True, False])
+    def test_resolver_recovers_dirty_rows(self, compiled):
+        """The compiled and the Python resolver agree."""
+        c = tx.Context(conf={"tuplex.useCompiledUDFs": compiled},
+                       name="matrix")
+        ds = (c.parallelize(RAW)
               .withColumn("price_n",
                           lambda x: int(x["price"].replace("$", "")
                                         .replace(",", "")))
               .resolve(ValueError, lambda x: -1)
               .filter(lambda x: x["kind"] == "house")
               .selectColumns(["address", "price_n"]))
-        got = ds.collect()
-        assert ("3 Oak Ave", -1) in got
-        assert len(got) == 4
+        assert ds.collect() == [("1 Main St", 1200000), ("3 Oak Ave", -1),
+                                ("4 Pine Rd", 2000000), ("6 Hill Ct", 325000)]
+        assert ds.exception_counts == {}
 
 
 def build_pipeline_r2(c: tx.Context):

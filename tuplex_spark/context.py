@@ -28,8 +28,6 @@ DEFAULTS = {
     "tuplex.useCompiledUDFs": True,      # AST->Column compiler on
     "tuplex.inputSplitSize": "64MB",     # reference ContextOptions.cc:227
     "tuplex.shufflePartitions": None,    # None -> leave Spark default
-    "tuplex.csv.maxDetectionMemory": CSV.MAX_DETECTION_BYTES,
-    "tuplex.autoBroadcastJoin": True,
 }
 
 
@@ -527,6 +525,18 @@ def _scan_mtime(pattern: str) -> float:
         return -1.0
 
 
+def _default_driver_memory() -> str:
+    """min(16g, 40% of physical memory): the pre-touched heap is
+    committed at launch, so a fixed 16g default cannot start on a host
+    with less free memory than that."""
+    import os
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{max(1024, min(16 << 10, int(total * 0.4) >> 20))}m"
+
+
 def build_session(name: str, options: dict | None = None) -> SparkSession:
     """Engine-default SparkSession. ANSI off is load-bearing: the exception
     model relies on NULL-on-error expression semantics plus explicit guard
@@ -680,12 +690,13 @@ def build_session(name: str, options: dict | None = None) -> SparkSession:
     # NOTE: -Xms=-Xmx + AlwaysPreTouch COMMITS AND TOUCHES the whole
     # heap at startup (the point: no first-touch page faults mid-query).
     # On a host without `mem` free this fails to launch rather than
-    # degrading — size SPARK_DRIVER_MEMORY / tuplex.driverMemory to
-    # what the host actually has, or set tuplex.preTouchHeap=False to
-    # restore the old lazy-commit behavior (accepting the variance
-    # documented in SCALE.md).
+    # degrading, so without tuplex.driverMemory / SPARK_DRIVER_MEMORY
+    # the default is sized from the host (_default_driver_memory); set
+    # tuplex.preTouchHeap=False to restore the old lazy-commit behavior
+    # (accepting the variance documented in SCALE.md).
     mem = str(options.get("tuplex.driverMemory")
-              or os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+              or os.environ.get("SPARK_DRIVER_MEMORY")
+              or _default_driver_memory())
     pin = options.get("tuplex.preTouchHeap", True)
     jvm_opts = "-XX:ReservedCodeCacheSize=512m"
     if pin:

@@ -7,33 +7,37 @@ aggregateByKey/unique/resolve/ignore/cache/collect/take/show/tocsv/...).
 Execution model (Spark-first, not a port):
 - every transform builds on the wrapped DataFrame lazily; Catalyst does the
   optimizing (predicate pushdown, pruning, join strategy).
-- UDFs go through a compile ladder: (a) Python-AST -> Column expressions
-  (udf/compiler.py) so the hot path stays in whole-stage codegen;
-  (b) Arrow-batched mapInPandas with the pickled original function
-  (udf/fallback.py).
+- UDFs and resolvers go through a compile ladder: (a) Python-AST -> Column
+  expressions (udf/compiler.py) so the hot path stays in whole-stage
+  codegen; (b) the interpreter path: one Arrow-batched mapInPandas row
+  runner (udf/fallback.py, staged by ``DataSet._run_rows``) applying the
+  pickled original function.  PYOBJECT datasets (pickled rows) take (b)
+  too.  Both paths end in ``DataSet._finish_op``, so they share one
+  output projection and one exception bookkeeping.
 - exception semantics (reference §2.7: rows that raise are excluded from
   output, countable, resolvable) are carried IN the DataFrame as three
-  hidden columns (__exc_code, __exc_payload = JSON of the failing op's
-  input row, __exc_op).  Rows never leave their DataFrame, so the
-  reference's "merge exceptions in order" behavior
-  (tuplex.optimizer.mergeExceptionsInOrder) is free, and when a pipeline
-  has no fallible operator the hidden columns are never materialized —
-  the plan is indistinguishable from hand-written DataFrame code.
+  hidden columns (__exc_code, __exc_payload, __exc_op).  The payload has
+  one format, written by one encoder (``DataSet._code_exprs``): the
+  failing op's input row as Spark ``to_json`` (_PAYLOAD_JSON).  Resolvers
+  read it back only through ``from_json``, compiled or not.  Rows never
+  leave their DataFrame, so the reference's "merge exceptions in order"
+  behavior (tuplex.optimizer.mergeExceptionsInOrder) is free, and when a
+  pipeline has no fallible operator the hidden columns are never
+  materialized — the plan is indistinguishable from hand-written
+  DataFrame code.
 """
 
 from __future__ import annotations
 
-import json
-import functools
 import re as _re
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from . import exceptions as E
-from .typeutils import infer_type, super_type
 from .udf import compiler, fallback
 from .udf.compiler import CompileError
-from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD
+from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, GATE, ROW_CODE, \
+    out_col
 
 _HIDDEN = (EXC_CODE, EXC_PAYLOAD, EXC_OP)
 
@@ -48,12 +52,15 @@ _PAYLOAD_JSON = {
 
 
 class UDFOpInfo:
-    """What resolve()/ignore() need to know about the preceding UDF op."""
+    """What resolve()/ignore() need to know about the preceding UDF op:
+    its name (the __exc_op tag), kind, input schema (the payload's
+    fields), the visible columns it produced and how a result splits
+    into them (fallback.make_row_runner's out_kind)."""
 
-    def __init__(self, name: str, kind: str, fn, in_schema: T.StructType,
-                 out_cols: list[str], extra=None):
-        self.name, self.kind, self.fn = name, kind, fn
-        self.in_schema, self.out_cols, self.extra = in_schema, out_cols, extra
+    def __init__(self, name: str, kind: str, in_schema: T.StructType,
+                 out_cols: list[str], out_kind: str):
+        self.name, self.kind, self.in_schema = name, kind, in_schema
+        self.out_cols, self.out_kind = out_cols, out_kind
 
 
 PYOBJ_COL = "__pyobj"
@@ -62,24 +69,30 @@ _FLAGGED_TYPES = (T.DoubleType, T.FloatType, T.LongType, T.IntegerType,
                   T.ShortType, T.ByteType)
 
 
-def _with_null_flags(df: DataFrame, in_cols: list[str]):
-    """Append JVM-computed ``isNull`` boolean flags for numeric UDF
-    inputs.  Arrow->pandas shows BOTH null and NaN as NaN in a float64
-    column (and upcasts int columns with nulls to float64), so without
-    the flag the fallback path cannot tell ``None`` from ``float('nan')``
-    and hands floats to UDFs expecting ints.  One boolean per numeric
-    input column, computed in codegen — negligible cost."""
+def _null_flags(df: DataFrame, in_cols: list[str]):
+    """JVM-computed ``isNull`` boolean flags for numeric UDF inputs.
+    Arrow->pandas shows BOTH null and NaN as NaN in a float64 column
+    (and upcasts int columns with nulls to float64), so without the flag
+    the interpreter path cannot tell ``None`` from ``float('nan')`` and
+    hands floats to UDFs expecting ints.  One boolean per numeric input
+    column, computed in codegen — negligible cost.  Returns (flag
+    Columns, {input column: flag column name})."""
     flags: dict[str, str] = {}
     add = []
     for i, c in enumerate(in_cols):
-        t = df.schema[c].dataType
-        if isinstance(t, _FLAGGED_TYPES):
-            flag = f"__nn_{i}"
-            flags[c] = flag
-            add.append(F.col(c).isNull().alias(flag))
-    if not add:
-        return df, flags
-    return df.select("*", *add), flags
+        if isinstance(df.schema[c].dataType, _FLAGGED_TYPES):
+            flags[c] = f"__nn_{i}"
+            add.append(F.col(c).isNull().alias(flags[c]))
+    return add, flags
+
+
+def _guard_code(guards):
+    """Per-row exception code Column of a compiled UDF's guards: the
+    first guard that holds wins, 0 when none does."""
+    code = None
+    for g, c in guards:
+        code = F.when(g, c) if code is None else code.when(g, c)
+    return code.otherwise(0) if code is not None else F.lit(0)
 
 
 def _py_type(dt: T.DataType, nullable: bool):
@@ -172,36 +185,6 @@ def _py_value(v):
     return v
 
 
-class _SampleBudgetExceeded(Exception):
-    """Plan-time sample evaluation ran past its line budget."""
-
-
-def _apply_budgeted(fn, row, arity, names, budget: int = 200_000):
-    """fallback._apply under a line-event budget: plan-time samples run
-    REAL CPython, so a row on which the UDF never terminates (compiled
-    plans guard such rows into RuntimeError; CPython itself would hang)
-    must abort instead of freezing the driver.  200k line events covers
-    thousands of loop iterations; tracing costs ~ms and only applies to
-    the <= 100 sample rows, never to cluster-side execution."""
-    import sys
-    count = 0
-
-    def tracer(frame, event, arg):
-        nonlocal count
-        if event == "line":
-            count += 1
-            if count > budget:
-                raise _SampleBudgetExceeded()
-        return tracer
-
-    old = sys.gettrace()
-    sys.settrace(tracer)
-    try:
-        return fallback._apply(fn, row, arity, names)
-    finally:
-        sys.settrace(old)
-
-
 class DataSet:
     def __init__(self, ctx, df: DataFrame, columns: list[str],
                  sample: list | None = None, parked=None, last_op=None,
@@ -236,107 +219,136 @@ class DataSet:
         return T.StructType([fields[c] for c in self._columns])
 
     def _spawn(self, df, columns=None, sample=None, parked=None,
-               last_op=None, bump=True, tuple1=None):
+               last_op=None, bump=True, tuple1=None, pyobj=None):
         return DataSet(self._ctx, df,
                        self._columns if columns is None else columns,
                        self._sample if sample is None else sample,
                        self._parked if parked is None else parked,
                        last_op,
                        self._op_seq + (1 if bump else 0),
+                       pyobj=self._pyobj if pyobj is None else pyobj,
                        tuple1=self._tuple1 if tuple1 is None else tuple1)
 
     def _next_op(self, kind: str) -> str:
         return f"{kind}_{self._op_seq}"
 
-    def _sample_apply(self, fn, mode="map"):
-        """Propagate the plan-time sample through a UDF (drop raising
-        rows).  Evaluation is BUDGETED (line-trace cap per row): a
-        sample row that never terminates in CPython — e.g. a growth
-        while from a non-positive start, which the compiled plan turns
-        into a guarded RuntimeError row — must not hang plan building
-        on the driver."""
-        out = []
-        arity = getattr(getattr(fn, "__code__", None), "co_argcount", 1)
+    def _sample_eval(self, fn, kind, target_col=None, new_col=None):
+        """Run ``fn`` over the plan-time sample, calling it exactly as
+        the row runner does, under fallback.call_budgeted's line budget:
+        a sample row on which the UDF never terminates in CPython (e.g.
+        a growth while from a non-positive start, which the compiled
+        plan turns into a guarded RuntimeError row) must not hang plan
+        building on the driver.  Returns (results, sample): the UDF's
+        results on the rows that did not raise (for output typing) and
+        the op's output sample."""
+        cols = self._columns
+        produced = new_col or target_col
+        out_cols = cols if produced is None or produced in cols \
+            else cols + [produced]
+        arity = fallback.arity_of(fn)
+        results, sample = [], []
         for row in self._sample:
+            tup = row if isinstance(row, tuple) and len(row) == len(cols) \
+                else (row,)
+            if self._pyobj:
+                args, names = row, None
+            elif kind == "mapColumn":
+                args, names = tup[cols.index(target_col)], [target_col]
+            else:
+                args, names = tup if len(tup) != 1 else tup[0], cols
             try:
-                r = _apply_budgeted(fn, row, arity, self._columns)
+                r = fallback.call_budgeted(fn, args, arity, names)
             except Exception:
                 continue
-            if mode == "filter":
+            results.append(r)
+            if kind == "filter":
                 if r:
-                    out.append(row)
+                    sample.append(row)
+            elif kind == "map":
+                sample.append(r)
             else:
-                out.append(r)
-        return out
+                vals = dict(zip(cols, tup))
+                vals[produced] = r
+                new = tuple(vals[c] for c in out_cols)
+                sample.append(new if len(new) != 1 else new[0])
+        return results, sample
+
+    def _try_compile(self, fn, in_schema, col_map=None):
+        if not self._ctx._options.get("tuplex.useCompiledUDFs", True):
+            return None
+        try:
+            return compiler.compile_udf(fn, in_schema,
+                                        with_guards=self._exc_enabled,
+                                        col_map=col_map)
+        except CompileError:
+            return None
 
     # ------------------------------------------------------- UDF machinery
     def _apply_udf(self, fn, kind: str, target_col: str | None = None,
                    new_col: str | None = None):
         """Shared implementation of map/filter/withColumn/mapColumn."""
-        if self._pyobj:
-            if kind not in ("map", "filter"):
-                raise NotImplementedError(
-                    f"{kind} is not available on PYOBJECT datasets "
-                    "(reference parity: fallback datasets support "
-                    "map/filter)")
-            return self._apply_pyobj(fn, kind)
+        import time as _time
+        if self._pyobj and kind not in ("map", "filter"):
+            raise NotImplementedError(
+                f"{kind} is not available on PYOBJECT datasets "
+                "(reference parity: fallback datasets support "
+                "map/filter)")
         op_name = self._next_op(kind)
+        in_schema = self._schema_of_visible()
         if kind == "mapColumn":
-            in_schema = T.StructType(
-                [self._schema_of_visible()[target_col]])
-            udf_input_cols = [target_col]
-        else:
-            in_schema = self._schema_of_visible()
-            udf_input_cols = list(self._columns)
-
-        compiled = None
-        if self._ctx._options.get("tuplex.useCompiledUDFs", True):
-            import time as _time
-            t0 = _time.time()
-            try:
-                compiled = compiler.compile_udf(
-                    fn, in_schema, with_guards=self._exc_enabled)
-            except CompileError as _dbg_e:
-                import os as _os
-                if _os.environ.get("TUPLEX_DEBUG_COMPILE"):
-                    print(f"DBGCOMPILE: {_dbg_e}", flush=True)
-                compiled = None
-            m = self._ctx._metrics
-            m.totalCompilationTime += _time.time() - t0
-            if compiled is not None:
-                m.compiledUDFs += 1
-            else:
-                m.fallbackUDFs += 1
-        else:
-            self._ctx._metrics.fallbackUDFs += 1
-
+            in_schema = T.StructType([in_schema[target_col]])
+        m = self._ctx._metrics
+        t0 = _time.time()
+        compiled = None if self._pyobj else self._try_compile(fn, in_schema)
+        m.totalCompilationTime += _time.time() - t0
+        results, sample = self._sample_eval(fn, kind, target_col, new_col)
         if compiled is not None:
             try:
-                return self._apply_compiled(compiled, fn, kind, op_name,
-                                            in_schema, target_col, new_col)
+                out, vis, out_kind = self._apply_compiled(
+                    compiled, kind, op_name, target_col, new_col)
+                m.compiledUDFs += 1
             except CompileError:
                 # materialization can fail AFTER a successful compile
                 # (e.g. a bound method returned as a value) — that must
-                # demote to the fallback, never crash the user call
-                self._ctx._metrics.compiledUDFs -= 1
-                self._ctx._metrics.fallbackUDFs += 1
-        return self._apply_fallback(fn, kind, op_name, in_schema,
-                                    udf_input_cols, target_col, new_col)
+                # demote to the interpreter path, never crash the call
+                compiled = None
+        if compiled is None:
+            m.fallbackUDFs += 1
+            out, vis, out_kind = self._apply_interpreted(
+                fn, kind, op_name, in_schema.fieldNames(), target_col,
+                new_col, results)
+        if out_kind == "dict":
+            # the op's output has one column per key: sample rows too
+            sample = [tuple(r.values()) if isinstance(r, dict) else r
+                      for r in sample]
+        pickled = out_kind == "pickle" or (self._pyobj and kind == "filter")
+        info = None
+        if not (self._pyobj or pickled):
+            # a resolver's result fills the op's produced columns; only a
+            # map's result splits into several
+            produced = vis if kind == "map" else \
+                [] if kind == "filter" else [new_col or target_col]
+            info = UDFOpInfo(op_name, kind, in_schema, produced,
+                             out_kind if kind == "map" else "scalar")
+        tup1 = (out_kind == "tuple" and len(vis) == 1) \
+            if kind == "map" else None
+        return self._spawn(out, columns=vis, sample=sample, last_op=info,
+                           tuple1=tup1, pyobj=pickled)
 
-    # -- compiled path ----------------------------------------------------
-    def _code_exprs(self, guards, op_name):
-        """(new_code, new_payload, new_op) Column triple folding previous
-        exception state with this op's guards."""
-        code = None
-        for g, c in guards:
-            code = F.when(g, c) if code is None else code.when(g, c)
-        code = code.otherwise(0) if code is not None else F.lit(0)
+    def _code_exprs(self, code, op_name):
+        """(code, payload, op) Columns folding the previous exception
+        state with this op's per-row ``code`` Column (None: the op
+        cannot fail).  The one payload encoder: a row that newly fails
+        gets its input row as Spark ``to_json`` — the form resolvers
+        read back with ``from_json``."""
+        if code is None:
+            code = F.lit(0)
         payload_src = F.to_json(
             F.struct(*[F.col(c) for c in self._columns]), _PAYLOAD_JSON)
         if not self._has_exc:
             new_fail = code != 0
             return (code, F.when(new_fail, payload_src),
-                    F.when(new_fail, F.lit(op_name)), new_fail)
+                    F.when(new_fail, F.lit(op_name)))
         prev_code = F.col(EXC_CODE)
         new_fail = (prev_code == 0) & (code != 0)
         out_code = F.when(prev_code != 0, prev_code).otherwise(code)
@@ -344,98 +356,86 @@ class DataSet:
             .when(new_fail, payload_src)
         out_op = F.when(prev_code != 0, F.col(EXC_OP)) \
             .when(new_fail, F.lit(op_name))
-        return out_code, out_payload, out_op, new_fail
+        return out_code, out_payload, out_op
 
-    def _apply_compiled(self, compiled, fn, kind, op_name, in_schema,
-                        target_col, new_col):
+    def _finish_op(self, df, kind, op_name, new_cols: dict, code,
+                   pred=None, barrier=False):
+        """Output projection of a UDF op, shared by the compiled and the
+        interpreter path.  ``new_cols`` maps produced visible columns to
+        their value Columns (``pred`` is a filter's predicate), ``code``
+        is this op's per-row exception code (None: cannot fail); both
+        fold into the visible and hidden columns.  Returns (frame,
+        visible columns)."""
+        ok = None
+        hidden = []
+        if code is not None or self._has_exc:
+            code_e, payload_e, op_e = self._code_exprs(code, op_name)
+            ok = code_e == 0
+            hidden = [code_e.alias(EXC_CODE), payload_e.alias(EXC_PAYLOAD),
+                      op_e.alias(EXC_OP)]
+        if kind == "filter":
+            # filter BEFORE the projection that drops __t columns — the
+            # predicate may reference staged locals
+            cond = F.coalesce(pred, F.lit(False))
+            if ok is not None:
+                cond = (code_e != 0) | cond
+            return (df.filter(cond).select(*self._columns, *hidden),
+                    list(self._columns))
+        vis = list(new_cols) if kind == "map" else \
+            self._columns + [c for c in new_cols if c not in self._columns]
+        sel = []
+        for v in vis:
+            if v not in new_cols:
+                sel.append(F.col(v))
+                continue
+            expr = new_cols[v]
+            if ok is not None:
+                expr = F.when(ok, expr)
+            if barrier:
+                # pushdown barrier: wrapping one computed column in a
+                # nondeterministic IDENTITY (shuffle of a 1-element
+                # array) makes this Project pushdown- and
+                # collapse-opaque.  Without it, a later filter's
+                # predicate gets rewritten by substituting the
+                # computed columns' expression trees through every
+                # staged layer — a 10-op find/rfind/slice pipeline's
+                # plan grew exponentially (multi-MB, minutes in the
+                # optimizer).  Losing pushdown through a heavy UDF
+                # projection costs one linear stage, never
+                # correctness; plain scan pushdown (filters over
+                # cheap projections) is unaffected.
+                expr = F.element_at(F.shuffle(F.array(expr)), 1)
+                barrier = False
+            sel.append(expr.alias(v))
+        return df.select(*sel, *hidden), vis
+
+    # -- compiled path ----------------------------------------------------
+    def _apply_compiled(self, compiled, kind, op_name, target_col, new_col):
         df = self._df
         # apply the compiler's CSE layers: each staged local becomes a
         # real projection column, so the op's output/guard expressions
-        # reference it instead of re-inlining its tree (the final select
-        # below never lists __t columns, so they don't escape the op)
+        # reference it instead of re-inlining its tree (_finish_op's
+        # select never lists __t columns, so they don't escape the op)
         for tmp_name, tmp_col in compiled.staged:
             df = df.select("*", tmp_col.alias(tmp_name))
-        guards = compiled.guards
-        fallible = bool(guards) and self._exc_enabled
-        ok = None
-        if fallible or self._has_exc:
-            code_e, payload_e, op_e, _ = self._code_exprs(guards, op_name)
-            ok = code_e == 0
+        code = _guard_code(compiled.guards) \
+            if compiled.guards and self._exc_enabled else None
         if kind == "filter":
-            pred = compiled.as_predicate()
-            if ok is not None:
-                # filter BEFORE the projection that drops __t columns —
-                # the predicate may reference staged locals
-                out = df.filter((code_e != 0)
-                                | F.coalesce(pred, F.lit(False)))
-                out = out.select(*self._columns,
-                                 code_e.alias(EXC_CODE),
-                                 payload_e.alias(EXC_PAYLOAD),
-                                 op_e.alias(EXC_OP))
-            else:
-                out = df.filter(F.coalesce(pred, F.lit(False)))
-                if compiled.staged:
-                    out = out.select(*self._columns,
-                                     *_present(out, _HIDDEN))
-            info = UDFOpInfo(op_name, kind, fn, in_schema, list(self._columns))
-            return self._spawn(out, sample=self._sample_apply(fn, "filter"),
-                               last_op=info)
-
+            out, vis = self._finish_op(df, kind, op_name, {}, code,
+                                       pred=compiled.as_predicate())
+            return out, vis, "pred"
         outs = compiled.as_columns()
         if kind == "map":
             names = self._out_names(outs)
-            new_cols = [(n, c) for n, (_, c, _) in zip(names, outs)]
-            vis = names
-        elif kind == "withColumn":
-            _, c, _ = outs[0]
-            vis = list(self._columns) if new_col in self._columns \
-                else list(self._columns) + [new_col]
-            new_cols = [(new_col, c)]
-        else:  # mapColumn
-            _, c, _ = outs[0]
-            vis = list(self._columns)
-            new_cols = [(target_col, c)]
-
-        produced = {n for n, _ in new_cols}
-        first_computed = True
-        sel: list[Column] = []
-        for v in vis:
-            if v in produced:
-                expr = dict(new_cols)[v]
-                if ok is not None:
-                    expr = F.when(ok, expr)
-                if compiled.staged and first_computed:
-                    # pushdown barrier: wrapping one computed column in a
-                    # nondeterministic IDENTITY (shuffle of a 1-element
-                    # array) makes this Project pushdown- and
-                    # collapse-opaque.  Without it, a later filter's
-                    # predicate gets rewritten by substituting the
-                    # computed columns' expression trees through every
-                    # staged layer — a 10-op find/rfind/slice pipeline's
-                    # plan grew exponentially (multi-MB, minutes in the
-                    # optimizer).  Losing pushdown through a heavy UDF
-                    # projection costs one linear stage, never
-                    # correctness; plain scan pushdown (filters over
-                    # cheap projections) is unaffected.
-                    expr = F.element_at(F.shuffle(F.array(expr)), 1)
-                    first_computed = False
-                sel.append(expr.alias(v))
-            else:
-                sel.append(F.col(v))
-        if ok is not None:
-            sel += [code_e.alias(EXC_CODE), payload_e.alias(EXC_PAYLOAD),
-                    op_e.alias(EXC_OP)]
-        out = df.select(*sel)
-        info = UDFOpInfo(op_name, kind, fn, in_schema, list(produced),
-                         extra={"target": target_col, "new": new_col})
-        tup1 = None
-        if kind == "map":
-            tup1 = isinstance(compiled.result, compiler.STuple) \
-                and len(compiled.result.items) == 1
-        return self._spawn(out, columns=vis,
-                           sample=self._sample_apply_kind(fn, kind,
-                                                          target_col, new_col),
-                           last_op=info, tuple1=tup1)
+        else:
+            names = [new_col or target_col]
+        out, vis = self._finish_op(
+            df, kind, op_name, dict(zip(names, (c for _, c, _ in outs))),
+            code, barrier=bool(compiled.staged))
+        out_kind = "dict" if outs[0][0] is not None else \
+            "tuple" if isinstance(compiled.result, compiler.STuple) \
+            else "scalar"
+        return out, vis, out_kind
 
     def _out_names(self, outs):
         if len(outs) == 1 and outs[0][0] is None:
@@ -443,44 +443,14 @@ class DataSet:
         return [n if n is not None else f"column{i}"
                 for i, (n, _, _) in enumerate(outs)]
 
-    def _sample_apply_kind(self, fn, kind, target_col, new_col):
-        if kind == "map":
-            return self._sample_apply(fn)
-        out = []
-        cols = self._columns
-        arity = getattr(getattr(fn, "__code__", None), "co_argcount", 1)
-        for row in self._sample:
-            tup = row if isinstance(row, tuple) else (row,)
-            vals = dict(zip(cols, tup))
-            try:
-                if kind == "mapColumn":
-                    r = fn(vals[target_col])
-                    vals[target_col] = r
-                    out.append(tuple(vals[c] for c in cols))
-                else:  # withColumn
-                    r = fallback._apply(fn, tup, arity, cols)
-                    vals[new_col] = r
-                    names = cols if new_col in cols else cols + [new_col]
-                    out.append(tuple(vals[c] for c in names))
-            except Exception:
-                continue
-        return out
-
-    # -- fallback path ----------------------------------------------------
-    def _apply_fallback(self, fn, kind, op_name, in_schema, in_cols,
-                        target_col, new_col):
-        sample_in = self._sample
-        if kind == "mapColumn":
-            ci = self._columns.index(target_col)
-            sample_in = [r[ci] if isinstance(r, tuple) else r
-                         for r in self._sample]
+    # -- interpreter path -------------------------------------------------
+    def _apply_interpreted(self, fn, kind, op_name, in_cols, target_col,
+                           new_col, results):
         if kind == "filter":
-            out_specs = [("__pred", T.BooleanType())]
-            out_kind = "scalar"
+            specs, out_kind = [(None, T.BooleanType(), True)], "pred"
         else:
             try:
-                specs, out_kind = fallback.infer_output_type(
-                    fn, sample_in, in_cols)
+                specs, out_kind = fallback.infer_output_type(results)
             except (fallback.TypeUnstableError,
                     fallback.AllSampleRowsFailed) as e:
                 if kind == "map":
@@ -488,222 +458,65 @@ class DataSet:
                     # hold them — demote to PYOBJECT rows (reference
                     # dual-mode: rows keep their own types on the
                     # fallback path)
-                    return self._apply_structured_pyobj(fn, op_name,
-                                                        in_cols)
-                if isinstance(e, fallback.AllSampleRowsFailed):
+                    specs, out_kind = [(None, T.BinaryType(), True)], \
+                        "pickle"
+                elif isinstance(e, fallback.AllSampleRowsFailed):
                     # every sampled row raised: expect all-exception
                     # output; declare a string column, runtime successes
                     # that aren't strings become NormalCaseViolation
-                    specs = [(None, T.StringType(), True)]
-                    out_kind = "scalar"
+                    specs, out_kind = [(None, T.StringType(), True)], \
+                        "scalar"
                 else:
                     raise
-            if kind in ("withColumn", "mapColumn"):
-                name = new_col if kind == "withColumn" else target_col
-                out_specs = [(name, specs[0][1])]
-            else:
-                names = self._out_names([(n, None, None) for n, _, _ in specs])
-                out_specs = [(n, t) for n, (_, t, _) in zip(names, specs)]
-
         if kind == "map":
-            keep = []
-            vis = [n for n, _ in out_specs]
+            names = [PYOBJ_COL] if out_kind == "pickle" \
+                else self._out_names(specs)
         elif kind == "filter":
-            keep = list(self._columns)
-            vis = list(self._columns)
+            names = []
         else:
-            produced = out_specs[0][0]
-            keep = [c for c in self._columns if c != produced]
-            vis = list(self._columns)
-            if kind == "withColumn" and produced not in self._columns:
-                vis = vis + [produced]
+            names = [new_col or target_col]
+            specs = specs[:1]
+        # without exception capture a map needs none of its inputs
+        # afterwards; otherwise they are the new failures' payload
+        keep = self._df.columns \
+            if kind != "map" or self._exc_enabled else []
+        df, code = self._run_rows(
+            self._df, fn, in_cols, [t for _, t, _ in specs], out_kind,
+            out_keys=[k for k, _, _ in specs], keep=keep)
+        new_cols = {n: F.col(out_col(i)) for i, n in enumerate(names)}
+        out, vis = self._finish_op(df, kind, op_name, new_cols, code,
+                                   pred=F.col(out_col(0)))
+        return out, vis, out_kind
 
+    def _run_rows(self, df, fn, in_cols, out_types, out_kind,
+                  out_keys=None, keep=(), gate=None, row_names=None):
+        """The interpreter path's one Spark stage: ``fn`` runs
+        row-at-a-time over ``in_cols`` of ``df`` inside
+        fallback.make_row_runner's mapInPandas.  Rows where ``gate``
+        (default: not failed yet) is false pass through.  Returns (frame
+        of ``keep`` + out_col(i) outputs [+ ROW_CODE], the ROW_CODE
+        Column or None when exceptions are not captured)."""
         capture = self._exc_enabled
-        schema_fields = [self._df.schema[c] for c in keep] + \
-            [T.StructField(n, t, True) for n, t in out_specs]
-        if capture:
-            schema_fields += [T.StructField(EXC_CODE, T.IntegerType(), False),
-                              T.StructField(EXC_PAYLOAD, T.StringType(), True),
-                              T.StructField(EXC_OP, T.StringType(), True)]
-        out_schema = T.StructType(schema_fields)
-        src, null_flags = _with_null_flags(self._df, in_cols)
-        runner = fallback.make_map_in_pandas(
-            fn, in_cols, out_specs, out_kind, op_name,
-            keep_fields=keep, capture=capture,
-            in_types=[self._df.schema[c].dataType for c in in_cols],
-            coerce_bool=(kind == "filter"), null_flags=null_flags)
-        out = src.mapInPandas(runner, schema=out_schema)
-        if kind == "filter":
-            cond = F.coalesce(F.col("__pred"), F.lit(False))
-            if capture:
-                cond = cond | (F.col(EXC_CODE) != 0)
-            out = out.filter(cond).drop("__pred")
-        info = UDFOpInfo(op_name, kind, fn, in_schema,
-                         [n for n, _ in out_specs],
-                         extra={"target": target_col, "new": new_col})
-        tup1 = None
-        if kind == "map":
-            tup1 = out_kind == "tuple" and len(out_specs) == 1
-        return self._spawn(out, columns=vis,
-                           sample=self._sample_apply_kind(
-                               fn, kind, target_col, new_col)
-                           if kind != "filter"
-                           else self._sample_apply(fn, "filter"),
-                           last_op=info, tuple1=tup1)
-
-    # ------------------------------------------------------- PYOBJECT mode
-    def _apply_structured_pyobj(self, fn, op_name: str, in_cols):
-        """map over structured rows whose sampled outputs have no common
-        Spark type: results are pickled into a PYOBJ column and the
-        dataset continues in PYOBJECT mode (map/filter; collect returns
-        the exact heterogeneous Python values)."""
-        import pickle
-        from .udf.fallback import UDFRow, _apply, _clean, _clean_typed
-
-        arity = getattr(getattr(fn, "__code__", None), "co_argcount", 1)
-        capture = self._exc_enabled
-        names = list(in_cols)
-        src, null_flags = _with_null_flags(self._df, names)
-        in_dtypes = [self._df.schema[c].dataType for c in names]
-        schema_fields = [T.StructField(PYOBJ_COL, T.BinaryType(), True)]
-        if capture:
-            schema_fields += [T.StructField(EXC_CODE, T.IntegerType(), False),
-                              T.StructField(EXC_PAYLOAD, T.StringType(), True),
-                              T.StructField(EXC_OP, T.StringType(), True)]
-        out_schema = T.StructType(schema_fields)
-
-        def run(batches):
-            import json
-            import pandas as pd
-            for pdf in batches:
-                n = len(pdf)
-                blobs, codes, payloads = [None] * n, [0] * n, [None] * n
-                cols = [pdf[f] for f in names]
-                fcols = [pdf[null_flags[f]] if f in null_flags else None
-                         for f in names]
-                prev_codes = pdf[EXC_CODE].tolist() \
-                    if EXC_CODE in pdf.columns else [0] * n
-                prev_payloads = pdf[EXC_PAYLOAD].tolist() \
-                    if EXC_PAYLOAD in pdf.columns else [None] * n
-                for i in range(n):
-                    if capture and prev_codes[i]:
-                        codes[i] = prev_codes[i]
-                        payloads[i] = prev_payloads[i]
-                        continue
-                    row = tuple(
-                        None if (fc is not None and bool(fc.iloc[i]))
-                        else (_clean_typed(c.iloc[i], t) if fc is not None
-                              else _clean(c.iloc[i]))
-                        for c, fc, t in zip(cols, fcols, in_dtypes))
-                    try:
-                        r = _apply(fn, row if len(row) != 1 else row[0],
-                                   arity, names)
-                        blobs[i] = pickle.dumps(r)
-                    except Exception as e:
-                        if not capture:
-                            raise
-                        codes[i] = E.code_for_instance(e)
-                        payloads[i] = json.dumps(dict(zip(names, row)),
-                                                 default=str)
-                data = {PYOBJ_COL: blobs}
-                if capture:
-                    data[EXC_CODE] = codes
-                    data[EXC_PAYLOAD] = payloads
-                    data[EXC_OP] = [op_name if c else None for c in codes]
-                yield pd.DataFrame(data)
-
-        out = src.mapInPandas(run, schema=out_schema)
-        return DataSet(self._ctx, out, [PYOBJ_COL],
-                       sample=self._sample_apply(fn, "map"),
-                       parked=list(self._parked), op_seq=self._op_seq + 1,
-                       pyobj=True)
-
-    def _apply_pyobj(self, fn, kind: str):
-        """map/filter over arbitrary pickled Python objects (reference:
-        PYOBJECT type + interpreter fallback, test_fallback.py behavior).
-
-        A map whose sampled outputs are representable as Spark types
-        promotes the dataset back onto the structured path."""
-        import pickle
-        from .typeutils import infer_schema_from_rows, infer_type
-
-        op_name = self._next_op(kind)
-        sample_out = self._sample_apply(fn, "filter" if kind == "filter"
-                                        else "map")
-        promote_schema = None
-        if kind == "map" and sample_out:
-            try:
-                sch = infer_schema_from_rows(sample_out)
-                if all(not isinstance(f.dataType, T.NullType)
-                       for f in sch.fields):
-                    promote_schema = sch
-            except Exception:
-                promote_schema = None
-
-        capture = self._exc_enabled
-        if promote_schema is not None:
-            names = [f.name for f in promote_schema.fields]
-            # nullable: exception rows materialize as nulls in data cols
-            out_fields = [T.StructField(f.name, f.dataType, True)
-                          for f in promote_schema.fields]
-        else:
-            names = [PYOBJ_COL]
-            out_fields = [T.StructField(PYOBJ_COL, T.BinaryType(), True)]
-        schema_fields = list(out_fields)
-        if capture:
-            schema_fields += [T.StructField(EXC_CODE, T.IntegerType(), False),
-                              T.StructField(EXC_PAYLOAD, T.StringType(), True),
-                              T.StructField(EXC_OP, T.StringType(), True)]
-        out_schema = T.StructType(schema_fields)
-        is_filter = kind == "filter"
-        promote = promote_schema is not None
-
-        arity = getattr(getattr(fn, "__code__", None), "co_argcount", 1)
-
-        def run(batches):
-            import pandas as pd
-            from tuplex_spark.udf.fallback import _apply as _fb_apply
-            for pdf in batches:
-                rows = {n: [] for n in names}
-                codes, payloads, ops = [], [], []
-                for b in pdf[PYOBJ_COL]:
-                    try:
-                        obj = pickle.loads(bytes(b))
-                        r = _fb_apply(fn, obj, arity)
-                        if is_filter:
-                            if not r:
-                                continue
-                            rows[PYOBJ_COL].append(bytes(b))
-                        elif promote:
-                            vals = r if isinstance(r, tuple) else (r,)
-                            for n, v in zip(names, vals):
-                                rows[n].append(v)
-                        else:
-                            rows[PYOBJ_COL].append(pickle.dumps(r))
-                        if capture:
-                            codes.append(0)
-                            payloads.append(None)
-                            ops.append(None)
-                    except Exception as e:
-                        if not capture:
-                            raise
-                        for n in names:
-                            rows[n].append(None)
-                        codes.append(E.code_for_instance(e))
-                        payloads.append(None)
-                        ops.append(op_name)
-                data = dict(rows)
-                if capture:
-                    data[EXC_CODE] = codes
-                    data[EXC_PAYLOAD] = payloads
-                    data[EXC_OP] = ops
-                yield pd.DataFrame(data)
-
-        out = self._df.mapInPandas(run, schema=out_schema)
-        stays_pyobj = True if is_filter else not promote
-        return DataSet(self._ctx, out, names, sample=sample_out,
-                       parked=list(self._parked), op_seq=self._op_seq + 1,
-                       pyobj=stays_pyobj)
+        if gate is None and self._has_exc:
+            gate = F.col(EXC_CODE) == 0
+        add, flags = _null_flags(df, in_cols)
+        if gate is not None:
+            add.append(gate.alias(GATE))
+        src = df.select("*", *add) if add else df
+        schema = T.StructType(
+            [df.schema[c] for c in keep]
+            + [T.StructField(out_col(i), t, True)
+               for i, t in enumerate(out_types)]
+            + ([T.StructField(ROW_CODE, T.IntegerType(), False)]
+               if capture else []))
+        runner = fallback.make_row_runner(
+            fn, in_cols,
+            None if self._pyobj else [df.schema[c].dataType
+                                      for c in in_cols],
+            out_types, out_kind, out_keys=out_keys, row_names=row_names,
+            null_flags=flags, keep=list(keep), capture=capture)
+        out = src.mapInPandas(runner, schema=schema)
+        return out, (F.col(ROW_CODE) if capture else None)
 
     # ---------------------------------------------------------- transforms
     def map(self, ftor) -> "DataSet":
@@ -842,167 +655,73 @@ class DataSet:
         payload = F.from_json(F.col(EXC_PAYLOAD), in_struct, _PAYLOAD_JSON)
         match = (F.col(EXC_OP) == op.name) & F.col(EXC_CODE).isin(codes)
 
-        # bind the resolver's column references onto the parsed payload
-        # fields (materialized as __res_in_* columns) via col_map
-        names = [f.name for f in in_struct.fields]
+        # the resolver reads the parsed payload fields, materialized as
+        # __res_in_* columns (a compiled resolver's column references
+        # bind onto them via col_map)
+        names = in_struct.fieldNames()
         remap = {n: f"__res_in_{n}" for n in names}
-        res_compiled = None
-        try:
-            res_compiled = compiler.compile_udf(
-                ftor, in_struct, with_guards=self._exc_enabled,
-                col_map=remap)
-        except CompileError:
-            pass
-        if res_compiled is None:
-            return self._resolve_fallback(op, ftor, match, in_struct)
-
         sub = self._df.select(
             *self._df.columns,
             *[payload.getField(n).alias(remap[n]) for n in names])
-        # staged CSE layers become projection columns over the parsed
-        # payload fields, exactly like _apply_compiled — the final
-        # select below never lists __t/__res_in_ columns, so they
-        # don't escape the op (previously any resolver complex enough
-        # to stage silently demoted to the Arrow fallback)
-        for tmp_name, tmp_col in res_compiled.staged:
-            sub = sub.select("*", tmp_col.alias(tmp_name))
-        outs = res_compiled.as_columns()
+        compiled = self._try_compile(ftor, in_struct, col_map=remap)
+        if compiled is not None:
+            # staged CSE layers become projection columns over the parsed
+            # payload fields, exactly like _apply_compiled — the final
+            # select below never lists __t/__res_in_ columns, so they
+            # don't escape the op
+            for tmp_name, tmp_col in compiled.staged:
+                sub = sub.select("*", tmp_col.alias(tmp_name))
+            outs = [c for _, c, _ in compiled.as_columns()]
+            pred = compiled.as_predicate() if op.kind == "filter" else None
+            res_code = _guard_code(compiled.guards)
+        else:
+            if op.kind == "filter":
+                out_types, out_kind = [T.BooleanType()], "pred"
+            else:
+                out_types = [self._df.schema[c].dataType
+                             for c in op.out_cols]
+                out_kind = op.out_kind
+            sub, res_code = self._run_rows(
+                sub, ftor, list(remap.values()), out_types, out_kind,
+                out_keys=op.out_cols, keep=self._df.columns, gate=match,
+                row_names=names)
+            outs = [F.col(out_col(i)) for i in range(len(out_types))]
+            pred = outs[0]
+            if res_code is None:
+                res_code = F.lit(0)
         # if the resolver itself raises, the row's exception class becomes
         # the resolver's exception (resolvable by later resolvers) —
         # reference semantics, ResolveOperator.cc
-        res_code = None
-        for g, cd in res_compiled.guards:
-            res_code = F.when(g, cd) if res_code is None \
-                else res_code.when(g, cd)
-        res_code = res_code.otherwise(0) if res_code is not None else F.lit(0)
         resolved_ok = match & (res_code == 0)
-        new_code = F.when(~match, F.col(EXC_CODE)) \
-            .when(res_code == 0, 0).otherwise(res_code).cast("int")
-
+        hidden = [
+            F.when(~match, F.col(EXC_CODE)).when(res_code == 0, 0)
+            .otherwise(res_code).cast("int").alias(EXC_CODE),
+            F.when(resolved_ok, F.lit(None))
+            .otherwise(F.col(EXC_PAYLOAD)).alias(EXC_PAYLOAD),
+            F.when(resolved_ok, F.lit(None))
+            .otherwise(F.col(EXC_OP)).alias(EXC_OP)]
         if op.kind == "filter":
-            pred = res_compiled.as_predicate()
             keep = F.when(resolved_ok, F.coalesce(pred, F.lit(False))) \
                 .otherwise(F.lit(True))
-            out = (sub.withColumn("__keep", keep)
-                   .withColumn(EXC_CODE, new_code)
-                   .filter(F.col("__keep")).drop("__keep"))
-            out = out.select(*self._columns, *_present(out, _HIDDEN))
+            out = sub.filter(keep).select(*self._columns, *hidden)
             return self._spawn(out, last_op=op)
 
-        produced = op.out_cols
-        exprs = []
-        if op.kind == "map":
-            for (name, col, _), out_name in zip(
-                    outs, self._columns if len(outs) == len(self._columns)
-                    else produced):
-                exprs.append((out_name, col))
-        else:
-            exprs.append((produced[0], outs[0][1]))
+        repl = dict(zip(op.out_cols, outs))
+        barrier = compiled is not None and bool(compiled.staged)
         sel = []
-        first_computed = True
         for v in self._columns:
-            repl = dict(exprs).get(v)
-            if repl is not None:
-                expr = F.when(resolved_ok, repl).otherwise(F.col(v))
-                if res_compiled.staged and first_computed:
-                    # same pushdown barrier as _apply_compiled: stop a
-                    # later filter from substituting the resolver's
-                    # expression tree through every staged layer
-                    expr = F.element_at(F.shuffle(F.array(expr)), 1)
-                    first_computed = False
-                sel.append(expr.alias(v))
-            else:
+            if v not in repl:
                 sel.append(F.col(v))
-        sel.append(new_code.alias(EXC_CODE))
-        sel.append(F.when(resolved_ok, F.lit(None))
-                   .otherwise(F.col(EXC_PAYLOAD)).alias(EXC_PAYLOAD))
-        sel.append(F.when(resolved_ok, F.lit(None))
-                   .otherwise(F.col(EXC_OP)).alias(EXC_OP))
-        out = sub.select(*sel)
-        return self._spawn(out, last_op=op)
-
-    def _resolve_fallback(self, op, ftor, match, in_struct):
-        names = [f.name for f in in_struct.fields]
-        # json.loads hands back strings for binary (base64) and
-        # timestamp/date (ISO) columns — the resolver must see the
-        # exact typed values the failing UDF saw (reference semantics,
-        # ResolveTask.cc)
-        coerce_kind = {}
-        for f_ in in_struct.fields:
-            if isinstance(f_.dataType, T.BinaryType):
-                coerce_kind[f_.name] = "bin"
-            elif isinstance(f_.dataType,
-                            (T.TimestampType, T.TimestampNTZType)):
-                coerce_kind[f_.name] = "ts"
-            elif isinstance(f_.dataType, T.DateType):
-                coerce_kind[f_.name] = "date"
-
-        def _coerce(nm, v):
-            k = coerce_kind.get(nm)
-            if v is None or k is None or not isinstance(v, str):
-                return v
-            import base64 as _b64
-            import datetime as _dt
-            if k == "bin":
-                return _b64.b64decode(v)
-            if k == "ts":
-                # session TZ is pinned UTC: strip the zone back to the
-                # naive datetime the original UDF received
-                return _dt.datetime.fromisoformat(
-                    v.replace("Z", "+00:00")).replace(tzinfo=None)
-            return _dt.date.fromisoformat(v)
-        out_cols = list(self._df.columns)
-        schema = self._df.schema
-        fn = ftor
-        kind = op.kind
-        produced = op.out_cols
-        vis_cols = list(self._columns)
-        codes = None  # captured in closure via match expr instead
-
-        df = self._df.withColumn("__match", match)
-
-        def run(batches):
-            import pandas as pd
-            for pdf in batches:
-                n = len(pdf)
-                drop = [False] * n
-                for i in range(n):
-                    if not pdf["__match"].iloc[i]:
-                        continue
-                    try:
-                        row = json.loads(pdf[EXC_PAYLOAD].iloc[i])
-                        vals = tuple(_coerce(nm, row.get(nm))
-                                     for nm in names)
-                        arity = getattr(getattr(fn, "__code__", None),
-                                        "co_argcount", 1)
-                        r = fallback._apply(
-                            fn, vals if len(vals) != 1 else vals[0], arity,
-                            names)
-                        if kind == "filter":
-                            if not r:
-                                drop[i] = True
-                        elif kind == "map":
-                            if isinstance(r, tuple):
-                                for j, cname in enumerate(vis_cols):
-                                    pdf.loc[pdf.index[i], cname] = r[j]
-                            elif isinstance(r, dict):
-                                for cname, v in r.items():
-                                    pdf.loc[pdf.index[i], cname] = v
-                            else:
-                                pdf.loc[pdf.index[i], vis_cols[0]] = r
-                        else:
-                            pdf.loc[pdf.index[i], produced[0]] = r
-                        pdf.loc[pdf.index[i], EXC_CODE] = 0
-                        pdf.loc[pdf.index[i], EXC_PAYLOAD] = None
-                        pdf.loc[pdf.index[i], EXC_OP] = None
-                    except Exception as e:
-                        pdf.loc[pdf.index[i], EXC_CODE] = \
-                            E.code_for_instance(e)
-                keep = [not d for d in drop]
-                yield pdf[keep][out_cols]
-
-        out = df.mapInPandas(run, schema=schema)
-        return self._spawn(out, last_op=op)
+                continue
+            expr = F.when(resolved_ok, repl[v]).otherwise(F.col(v))
+            if barrier:
+                # same pushdown barrier as _finish_op: stop a later
+                # filter from substituting the resolver's expression
+                # tree through every staged layer
+                expr = F.element_at(F.shuffle(F.array(expr)), 1)
+                barrier = False
+            sel.append(expr.alias(v))
+        return self._spawn(sub.select(*sel, *hidden), last_op=op)
 
     def ignore(self, exc_class) -> "DataSet":
         """Silently drop rows that raised ``exc_class`` in the preceding
@@ -1280,7 +999,3 @@ class DataSet:
             sb = [sort_by] if isinstance(sort_by, str) else list(sort_by)
             w = w.sortBy(*sb)
         w.saveAsTable(name)
-
-
-def _present(df, names):
-    return [F.col(n) for n in names if n in df.columns]

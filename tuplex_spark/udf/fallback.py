@@ -1,32 +1,51 @@
-"""Fallback UDF execution (the "general case" / interpreter path).
+"""The interpreter path (the "general case"): one row runner.
 
 Reference analog: the pure-Python pipeline fallback
-(core/src/physical/PythonPipelineBuilder.cc) that runs rows CPython can
-handle but the compiled path can't.  Here the fallback is an Arrow-batched
-``mapInPandas`` stage: the original function object is cloudpickled to the
-executors and applied row-at-a-time inside the batch loop with per-row
-try/except, producing the same (value, __exc_code) shape as the compiled
-path so resolve()/ignore() semantics are identical on both paths.
+(core/src/physical/PythonPipelineBuilder.cc) plus the resolve tasks
+(core/include/physical/ResolveTask.h) that run the rows CPython can
+handle but the compiled path can't.  Every UDF or resolver that does not
+compile runs through ``make_row_runner``: the original function object
+is cloudpickled into one Arrow-batched ``mapInPandas`` stage and applied
+row-at-a-time.
+
+- input: rows decode from typed columns (with the JVM-computed null
+  flags) or from one pickled-object column;
+- output: results encode as typed columns, checked by ``_conforms`` so a
+  value that misfits the declared type becomes a NormalCaseViolation
+  row, or as pickled objects;
+- exceptions: each row's exception becomes its code in ``ROW_CODE``;
+  rows whose ``GATE`` is false (already failed, or not matched by a
+  resolver) pass through untouched.
+
+The exception payload (the failing row as JSON) and the op tag are not
+written here: the caller folds ``ROW_CODE`` into the hidden exception
+columns JVM-side, with the same encoder compiled operators use.
 
 Output types come from running the UDF over the plan-time sample
-(reference analog: tracing type inference, core/src/TraceVisitor.cc).
+(reference analog: tracing type inference, core/src/TraceVisitor.cc),
+always under ``call_budgeted``'s line budget.
 """
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import types as T
 
-from ..exceptions import code_for, code_for_instance
+from ..exceptions import code_for_instance
 from ..typeutils import infer_type, super_type
-
-_NCV_CODE = code_for("NormalCaseViolation")
 
 EXC_CODE = "__exc_code"
 EXC_PAYLOAD = "__exc_payload"
 EXC_OP = "__exc_op"
+
+ROW_CODE = "__rc"   # runner output: this op's exception code per row
+GATE = "__gate"     # runner input: rows where it is false are skipped
+
+
+def out_col(i: int) -> str:
+    """Name of the runner's i-th output column."""
+    return f"__o{i}"
 
 
 class AllSampleRowsFailed(Exception):
@@ -44,20 +63,53 @@ class TypeUnstableError(Exception):
     heterogeneous values round-trip exactly."""
 
 
-def infer_output_type(fn, sample_rows, names=None):
-    """Run fn over sample python rows; widen result types.
+class NormalCaseViolation(TypeError):
+    """A runtime UDF result does not fit the sample-inferred column
+    type (exception code NormalCaseViolation)."""
+
+
+class SampleBudgetExceeded(Exception):
+    """Plan-time sample evaluation ran past its line budget."""
+
+
+def arity_of(fn) -> int:
+    return getattr(getattr(fn, "__code__", None), "co_argcount", 1)
+
+
+def call_budgeted(fn, row, arity, names, budget: int = 200_000):
+    """_apply under a line-event budget: plan-time samples run REAL
+    CPython, so a row on which the UDF never terminates (compiled plans
+    guard such rows into RuntimeError; CPython itself would hang) must
+    abort instead of freezing the driver.  200k line events covers
+    thousands of loop iterations; tracing costs ~ms and only applies to
+    the <= 100 sample rows, never to cluster-side execution."""
+    import sys
+    count = 0
+
+    def tracer(frame, event, arg):
+        nonlocal count
+        if event == "line":
+            count += 1
+            if count > budget:
+                raise SampleBudgetExceeded()
+        return tracer
+
+    old = sys.gettrace()
+    sys.settrace(tracer)
+    try:
+        return _apply(fn, row, arity, names)
+    finally:
+        sys.settrace(old)
+
+
+def infer_output_type(results):
+    """Widen the types of a UDF's sampled results.
 
     Returns (result_type_per_output, out_kind) where out_kind is
-    'scalar' | 'tuple' | 'dict'.  Raises if no sample row succeeds;
-    raises TypeUnstableError on heterogeneous result shapes/types.
+    'scalar' | 'tuple' | 'dict'.  Raises AllSampleRowsFailed when there
+    are no results and TypeUnstableError on heterogeneous result
+    shapes/types.
     """
-    arity = getattr(getattr(fn, "__code__", None), "co_argcount", 1)
-    results = []
-    for row in sample_rows:
-        try:
-            results.append(_apply(fn, row, arity, names))
-        except Exception:
-            continue
     if not results:
         raise AllSampleRowsFailed(
             "UDF raised on every sample row; output type unknown")
@@ -76,18 +128,11 @@ def infer_output_type(fn, sample_rows, names=None):
     if kind == "scalar":
         t, nullable = _widen(results)
         return [(None, t, nullable)], kind
-    if kind == "tuple":
-        n = len(r0)
-        outs = []
-        for i in range(n):
-            t, nullable = _widen([r[i] for r in results])
-            outs.append((None, t, nullable))
-        return outs, kind
-    keys = list(r0.keys())
+    keys = list(r0.keys()) if kind == "dict" else range(len(r0))
     outs = []
     for k in keys:
         t, nullable = _widen([r[k] for r in results])
-        outs.append((k, t, nullable))
+        outs.append((k if kind == "dict" else None, t, nullable))
     return outs, kind
 
 
@@ -176,6 +221,8 @@ def _conforms(v, t: T.DataType) -> bool:
     kill a stage."""
     if v is None:
         return True
+    if isinstance(t, T.NullType):
+        return False
     if isinstance(t, T.BooleanType):
         return isinstance(v, bool)
     if isinstance(t, (T.LongType, T.IntegerType)):
@@ -263,111 +310,97 @@ def _struct_to_tuple(v, t: T.DataType):
     return v
 
 
-def make_map_in_pandas(fn, in_fields: list[str], out_specs, out_kind,
-                       op_name: str, keep_fields: list[str] | None = None,
-                       capture: bool = True, pass_through_code: bool = True,
-                       in_types: list | None = None,
-                       coerce_bool: bool = False,
-                       null_flags: dict | None = None):
-    """Build a mapInPandas function applying ``fn`` row-at-a-time.
+def make_row_runner(fn, in_fields: list[str], in_types: list | None,
+                    out_types: list, out_kind: str,
+                    out_keys: list | None = None,
+                    row_names: list[str] | None = None,
+                    null_flags: dict | None = None,
+                    keep: list[str] = (), capture: bool = True):
+    """Build the ``mapInPandas`` function applying ``fn`` row-at-a-time.
 
-    in_fields:   input column names fed to the UDF (tuple order)
-    out_specs:   [(out_col_name, spark_type)] for UDF outputs
-    keep_fields: passthrough columns copied to the output unchanged
-    capture:     wrap per-row exceptions into (__exc_code, __exc_payload)
-    in_types:    Spark types of in_fields (struct inputs -> tuples)
-    coerce_bool: filter predicates use Python TRUTHINESS — a UDF may
-                 return any object (e.g. a regex match); bool() it
-                 instead of failing schema conformance
-    null_flags:  {in_field: bool_flag_column} — flag is True exactly when
-                 the field is NULL, computed JVM-side before the Arrow
-                 hand-off.  Disambiguates null from NaN (pandas shows
-                 both as NaN in float64) and lets nulls-elsewhere-upcast
-                 int columns surface as Python ints again.
+    in_fields:  input columns, in row order
+    in_types:   their Spark types (struct inputs -> tuples); None means
+                ``in_fields`` is one column of pickled Python objects
+    out_types:  Spark types of the outputs, written to out_col(i)
+    out_kind:   how a result splits into outputs: 'scalar' | 'tuple' |
+                'dict' (by ``out_keys``) | 'pred' (filter predicates use
+                Python TRUTHINESS — a UDF may return any object, e.g. a
+                regex match) | 'pickle' (one pickled-object column)
+    row_names:  names for ``x['col']`` access (default: in_fields)
+    null_flags: {in_field: bool_flag_column} — flag is True exactly when
+                the field is NULL, computed JVM-side before the Arrow
+                hand-off.  Disambiguates null from NaN (pandas shows
+                both as NaN in float64) and lets nulls-elsewhere-upcast
+                int columns surface as Python ints again.
+    keep:       columns copied to the output unchanged
+    capture:    write each row's exception code to ROW_CODE; without it
+                the first exception fails the task
     """
-    import pandas as pd  # noqa: F401  (executor-side)
+    import pickle
 
-    arity = getattr(fn, "__code__", None).co_argcount if hasattr(fn, "__code__") else 1
-    keep_fields = keep_fields or []
-    out_names = [n for n, _ in out_specs]
+    arity = arity_of(fn)
+    names = list(row_names or in_fields)
     null_flags = null_flags or {}
-    conv_types = None
-    if in_types is not None and any(
-            isinstance(t, (T.StructType, T.ArrayType)) for t in in_types):
-        conv_types = list(in_types)
+    n_out = len(out_types)
+
+    def decode(pdf):
+        if in_types is None:
+            return [None if b is None else pickle.loads(bytes(b))
+                    for b in pdf[in_fields[0]]]
+        cols = []
+        for f, t in zip(in_fields, in_types):
+            vals = pdf[f].tolist()
+            flag = null_flags.get(f)
+            if flag is not None:
+                vals = [None if z else _clean_typed(v, t)
+                        for v, z in zip(vals, pdf[flag].tolist())]
+            else:
+                vals = [_clean(v) for v in vals]
+            if isinstance(t, (T.StructType, T.ArrayType)):
+                vals = [_struct_to_tuple(v, t) for v in vals]
+            cols.append(vals)
+        return cols[0] if len(cols) == 1 else list(zip(*cols))
+
+    def encode(r):
+        if out_kind == "pickle":
+            return [pickle.dumps(r)]
+        if out_kind == "pred":
+            return [bool(r)]
+        if out_kind == "tuple":
+            vals = [r[j] for j in range(n_out)]
+        elif out_kind == "dict":
+            vals = [r[k] for k in out_keys]
+        else:
+            vals = [r]
+        if not all(_conforms(v, t) for v, t in zip(vals, out_types)):
+            raise NormalCaseViolation(
+                f"UDF output {vals!r} does not fit the sample-inferred "
+                "schema")
+        return vals
 
     def run(batches):
         import pandas as pd
         for pdf in batches:
             n = len(pdf)
-            outs = {name: [None] * n for name in out_names}
+            gate = pdf[GATE].tolist() if GATE in pdf.columns else None
+            outs = [[None] * n for _ in range(n_out)]
             codes = [0] * n
-            payloads = [None] * n
-            prev_codes = pdf[EXC_CODE].tolist() if EXC_CODE in pdf.columns \
-                else [0] * n
-            prev_payloads = pdf[EXC_PAYLOAD].tolist() \
-                if EXC_PAYLOAD in pdf.columns else [None] * n
-            prev_ops = pdf[EXC_OP].tolist() if EXC_OP in pdf.columns \
-                else [None] * n
-            in_cols = [pdf[f] for f in in_fields]
-            flag_cols = [pdf[null_flags[f]]
-                         if f in null_flags and null_flags[f] in pdf.columns
-                         else None for f in in_fields]
-            typ_list = in_types if in_types is not None \
-                else [None] * len(in_fields)
-            for i in range(n):
-                if capture and prev_codes[i]:
-                    codes[i] = prev_codes[i]
-                    payloads[i] = prev_payloads[i]
+            for i, row in enumerate(decode(pdf)):
+                if gate is not None and not gate[i]:
                     continue
-                row = tuple(
-                    None if (fc is not None and bool(fc.iloc[i]))
-                    else (_clean_typed(col.iloc[i], t) if fc is not None
-                          else _clean(col.iloc[i]))
-                    for col, fc, t in zip(in_cols, flag_cols, typ_list))
-                if conv_types is not None:
-                    row = tuple(_struct_to_tuple(v, t)
-                                for v, t in zip(row, conv_types))
                 try:
-                    r = _apply(fn, row if len(row) != 1 else row[0], arity,
-                               in_fields)
-                    if out_kind == "tuple":
-                        vals = [r[j] for j in range(len(out_names))]
-                    elif out_kind == "dict":
-                        vals = [r[name] for name in out_names]
-                    elif coerce_bool:
-                        vals = [bool(r)]
-                    else:
-                        vals = [r]
-                    if not all(_conforms(v, t)
-                               for v, (_, t) in zip(vals, out_specs)):
-                        if not capture:
-                            raise TypeError(
-                                f"UDF output {vals!r} does not fit the "
-                                "sample-inferred schema")
-                        codes[i] = _NCV_CODE
-                        payloads[i] = json.dumps(
-                            dict(zip(in_fields, row)), default=str)
-                        continue
-                    for name, v in zip(out_names, vals):
-                        outs[name][i] = v
+                    vals = encode(_apply(fn, row, arity, names))
                 except Exception as e:
                     if not capture:
                         raise
                     codes[i] = code_for_instance(e)
-                    payloads[i] = json.dumps(
-                        dict(zip(in_fields, row)), default=str)
-            data = {}
-            for f in keep_fields:
-                data[f] = pdf[f]
-            for name in out_names:
-                data[name] = outs[name]
+                    continue
+                for col, v in zip(outs, vals):
+                    col[i] = v
+            data = {f: pdf[f] for f in keep}
+            data.update((out_col(j), col) for j, col in enumerate(outs))
             if capture:
-                data[EXC_CODE] = codes
-                data[EXC_PAYLOAD] = payloads
-                data[EXC_OP] = [op_name if c and not pc else po
-                                for c, pc, po in zip(codes, prev_codes,
-                                                     prev_ops)]
+                data[ROW_CODE] = codes
             yield pd.DataFrame(data)
 
     return run
