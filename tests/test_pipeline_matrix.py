@@ -81,6 +81,19 @@ class TestConfigMatrix:
                                 ("4 Pine Rd", 2000000), ("6 Hill Ct", 325000)]
         assert ds.exception_counts == {}
 
+    @pytest.mark.parametrize("compiled", [True, False])
+    def test_scalar_resolver_fills_tuple_map(self, compiled):
+        """A resolver's result fills the failing map's columns by
+        position on both resolver paths: a scalar fills the first."""
+        c = tx.Context(conf={"tuplex.useCompiledUDFs": compiled},
+                       name="matrix")
+        ds = (c.parallelize([1, 2, 0, 4])
+              .map(lambda x: (10 // x,))
+              .resolve(ZeroDivisionError, lambda x: -1))
+        assert ds.collect() == [(10,), (5,), (-1,), (2,)]
+        assert ds.exception_counts == {}
+        assert c.metrics.fallbackUDFs == (0 if compiled else 1)
+
 
 def build_pipeline_r2(c: tx.Context):
     """Second matrix pipeline: the newer compiled shapes (first-match

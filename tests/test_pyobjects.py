@@ -75,6 +75,20 @@ class TestTypeUnstableOutputs:
               .map(lambda r: r + 1))
         assert ds.collect() == [21, 41]
 
+    def test_variant_rows_share_a_batch(self, ctx):
+        # eight rows over at most four partitions put int and str rows
+        # into one Arrow batch, where pandas reads the int arm as float
+        def f(x):
+            v = 0
+            for i in range(1):
+                v = x
+            return "odd" if v % 2 else v * 10
+
+        ds = (ctx.parallelize(list(range(1, 9))).map(f)
+              .filter(lambda r: isinstance(r, int))
+              .map(lambda r: r + 1))
+        assert ds.collect() == [21, 41, 61, 81]
+
     def test_compiled_mixed_deviation_is_exact_value(self, ctx):
         # int|str returns COMPILE since round 9 (variant struct): the
         # row that returns a string is an exact VALUE in the output —
@@ -121,3 +135,46 @@ class TestTypeUnstableOutputs:
               .resolve(Exception, lambda x: -1))
         got = ds.collect()
         assert got == [v if v != 150 else -1 for v in data]
+
+
+class TestTupleObjects:
+    """A pickled object that is a tuple reaches the UDF as that tuple,
+    exactly as in plain CPython — on the plan-time sample and in the
+    executors alike."""
+
+    DATA = [(np.array([i]), i) for i in range(4)]
+
+    @staticmethod
+    def _plain(v):
+        # ndarrays compare elementwise: compare their lists instead
+        if isinstance(v, tuple):
+            return tuple(TestTupleObjects._plain(x) for x in v)
+        return v.tolist() if isinstance(v, np.ndarray) else v
+
+    def _check_map(self, ctx, f):
+        got = ctx.parallelize(self.DATA).map(f).collect()
+        assert [type(v) for v in got] == [type(f(t)) for t in self.DATA]
+        assert [self._plain(v) for v in got] == \
+            [self._plain(f(t)) for t in self.DATA]
+
+    def test_tuple_concat_map(self, ctx):
+        self._check_map(ctx, lambda t: t + (0,))
+
+    def test_identity_map_returns_tuples(self, ctx):
+        self._check_map(ctx, lambda t: t)
+
+    def test_isinstance_filter_keeps_rows(self, ctx):
+        ds = ctx.parallelize(self.DATA).filter(
+            lambda t: isinstance(t, tuple))
+        assert [self._plain(v) for v in ds.collect()] == \
+            [self._plain(t) for t in self.DATA]
+        assert ds.exception_counts == {}
+
+    def test_untyped_sample_keeps_objects(self, ctx):
+        # the 100-row sample maps to None only; later rows' values come
+        # back exact, not as NormalCaseViolation rows
+        data = [np.array([i]) for i in range(150)]
+        f = lambda a: None if a[0] < 120 else (int(a[0]), "x")
+        ds = ctx.parallelize(data).map(f)
+        assert ds.collect() == [f(a) for a in data]
+        assert ds.exception_counts == {}

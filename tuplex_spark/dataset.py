@@ -18,8 +18,10 @@ Execution model (Spark-first, not a port):
   output, countable, resolvable) are carried IN the DataFrame as three
   hidden columns (__exc_code, __exc_payload, __exc_op).  The payload has
   one format, written by one encoder (``DataSet._code_exprs``): the
-  failing op's input row as Spark ``to_json`` (_PAYLOAD_JSON).  Resolvers
-  read it back only through ``from_json``, compiled or not.  Rows never
+  failing op's input row as Spark ``to_json`` (_PAYLOAD_JSON), or null
+  after an op on or to pickled objects, which no resolver can follow.
+  Resolvers read it back only through ``from_json``, compiled or not, and
+  their result fills the failing op's columns by position.  Rows never
   leave their DataFrame, so the reference's "merge exceptions in order"
   behavior (tuplex.optimizer.mergeExceptionsInOrder) is free, and when a
   pipeline has no fallible operator the hidden columns are never
@@ -54,13 +56,13 @@ _PAYLOAD_JSON = {
 class UDFOpInfo:
     """What resolve()/ignore() need to know about the preceding UDF op:
     its name (the __exc_op tag), kind, input schema (the payload's
-    fields), the visible columns it produced and how a result splits
-    into them (fallback.make_row_runner's out_kind)."""
+    fields) and the visible columns it produced, which a resolver's
+    result fills by position."""
 
     def __init__(self, name: str, kind: str, in_schema: T.StructType,
-                 out_cols: list[str], out_kind: str):
+                 out_cols: list[str]):
         self.name, self.kind, self.in_schema = name, kind, in_schema
-        self.out_cols, self.out_kind = out_cols, out_kind
+        self.out_cols = out_cols
 
 
 PYOBJ_COL = "__pyobj"
@@ -93,6 +95,32 @@ def _guard_code(guards):
     for g, c in guards:
         code = F.when(g, c) if code is None else code.when(g, c)
     return code.otherwise(0) if code is not None else F.lit(0)
+
+
+def _project(vis, new_cols: dict, value, barrier: bool):
+    """Select list of a UDF op's visible columns ``vis``: a column in
+    ``new_cols`` becomes ``value(name, new Column)``, the rest pass
+    through.  With ``barrier``, the first computed column is wrapped in
+    a pushdown barrier: a nondeterministic IDENTITY (shuffle of a
+    1-element array) makes the Project pushdown- and collapse-opaque.
+    Without it, a later filter's predicate gets rewritten by
+    substituting the computed columns' expression trees through every
+    staged layer — a 10-op find/rfind/slice pipeline's plan grew
+    exponentially (multi-MB, minutes in the optimizer).  Losing
+    pushdown through a heavy UDF projection costs one linear stage,
+    never correctness; plain scan pushdown (filters over cheap
+    projections) is unaffected."""
+    sel = []
+    for v in vis:
+        if v not in new_cols:
+            sel.append(F.col(v))
+            continue
+        expr = value(v, new_cols[v])
+        if barrier:
+            expr = F.element_at(F.shuffle(F.array(expr)), 1)
+            barrier = False
+        sel.append(expr.alias(v))
+    return sel
 
 
 def _py_type(dt: T.DataType, nullable: bool):
@@ -325,26 +353,27 @@ class DataSet:
         info = None
         if not (self._pyobj or pickled):
             # a resolver's result fills the op's produced columns; only a
-            # map's result splits into several
+            # map produces several
             produced = vis if kind == "map" else \
                 [] if kind == "filter" else [new_col or target_col]
-            info = UDFOpInfo(op_name, kind, in_schema, produced,
-                             out_kind if kind == "map" else "scalar")
+            info = UDFOpInfo(op_name, kind, in_schema, produced)
         tup1 = (out_kind == "tuple" and len(vis) == 1) \
             if kind == "map" else None
         return self._spawn(out, columns=vis, sample=sample, last_op=info,
                            tuple1=tup1, pyobj=pickled)
 
-    def _code_exprs(self, code, op_name):
+    def _code_exprs(self, code, op_name, payload=True):
         """(code, payload, op) Columns folding the previous exception
         state with this op's per-row ``code`` Column (None: the op
         cannot fail).  The one payload encoder: a row that newly fails
         gets its input row as Spark ``to_json`` — the form resolvers
-        read back with ``from_json``."""
+        read back with ``from_json`` — or, without ``payload`` (no
+        resolver can follow the op), null."""
         if code is None:
             code = F.lit(0)
         payload_src = F.to_json(
-            F.struct(*[F.col(c) for c in self._columns]), _PAYLOAD_JSON)
+            F.struct(*[F.col(c) for c in self._columns]), _PAYLOAD_JSON) \
+            if payload else F.lit(None).cast("string")
         if not self._has_exc:
             new_fail = code != 0
             return (code, F.when(new_fail, payload_src),
@@ -359,7 +388,7 @@ class DataSet:
         return out_code, out_payload, out_op
 
     def _finish_op(self, df, kind, op_name, new_cols: dict, code,
-                   pred=None, barrier=False):
+                   pred=None, barrier=False, payload=True):
         """Output projection of a UDF op, shared by the compiled and the
         interpreter path.  ``new_cols`` maps produced visible columns to
         their value Columns (``pred`` is a filter's predicate), ``code``
@@ -369,7 +398,8 @@ class DataSet:
         ok = None
         hidden = []
         if code is not None or self._has_exc:
-            code_e, payload_e, op_e = self._code_exprs(code, op_name)
+            code_e, payload_e, op_e = self._code_exprs(code, op_name,
+                                                       payload)
             ok = code_e == 0
             hidden = [code_e.alias(EXC_CODE), payload_e.alias(EXC_PAYLOAD),
                       op_e.alias(EXC_OP)]
@@ -383,30 +413,9 @@ class DataSet:
                     list(self._columns))
         vis = list(new_cols) if kind == "map" else \
             self._columns + [c for c in new_cols if c not in self._columns]
-        sel = []
-        for v in vis:
-            if v not in new_cols:
-                sel.append(F.col(v))
-                continue
-            expr = new_cols[v]
-            if ok is not None:
-                expr = F.when(ok, expr)
-            if barrier:
-                # pushdown barrier: wrapping one computed column in a
-                # nondeterministic IDENTITY (shuffle of a 1-element
-                # array) makes this Project pushdown- and
-                # collapse-opaque.  Without it, a later filter's
-                # predicate gets rewritten by substituting the
-                # computed columns' expression trees through every
-                # staged layer — a 10-op find/rfind/slice pipeline's
-                # plan grew exponentially (multi-MB, minutes in the
-                # optimizer).  Losing pushdown through a heavy UDF
-                # projection costs one linear stage, never
-                # correctness; plain scan pushdown (filters over
-                # cheap projections) is unaffected.
-                expr = F.element_at(F.shuffle(F.array(expr)), 1)
-                barrier = False
-            sel.append(expr.alias(v))
+        sel = _project(vis, new_cols,
+                       lambda v, e: e if ok is None else F.when(ok, e),
+                       barrier)
         return df.select(*sel, *hidden), vis
 
     # -- compiled path ----------------------------------------------------
@@ -451,6 +460,11 @@ class DataSet:
         else:
             try:
                 specs, out_kind = fallback.infer_output_type(results)
+                if self._pyobj and any(isinstance(t, T.NullType)
+                                       for _, t, _ in specs):
+                    # objects promote to typed columns only when every
+                    # output's type is known
+                    raise fallback.TypeUnstableError("untyped output")
             except (fallback.TypeUnstableError,
                     fallback.AllSampleRowsFailed) as e:
                 if kind == "map":
@@ -476,16 +490,19 @@ class DataSet:
         else:
             names = [new_col or target_col]
             specs = specs[:1]
-        # without exception capture a map needs none of its inputs
-        # afterwards; otherwise they are the new failures' payload
-        keep = self._df.columns \
-            if kind != "map" or self._exc_enabled else []
+        # a map needs its inputs afterwards only as the payload of newly
+        # failing rows, which only a resolver reads: none can follow an
+        # op on or to pickled objects
+        payload = not (self._pyobj or out_kind == "pickle")
+        keep = self._df.columns
+        if kind == "map" and not (payload and self._exc_enabled):
+            keep = [c for c in keep if c in _HIDDEN]
         df, code = self._run_rows(
             self._df, fn, in_cols, [t for _, t, _ in specs], out_kind,
             out_keys=[k for k, _, _ in specs], keep=keep)
         new_cols = {n: F.col(out_col(i)) for i, n in enumerate(names)}
         out, vis = self._finish_op(df, kind, op_name, new_cols, code,
-                                   pred=F.col(out_col(0)))
+                                   pred=F.col(out_col(0)), payload=payload)
         return out, vis, out_kind
 
     def _run_rows(self, df, fn, in_cols, out_types, out_kind,
@@ -680,11 +697,10 @@ class DataSet:
             else:
                 out_types = [self._df.schema[c].dataType
                              for c in op.out_cols]
-                out_kind = op.out_kind
+                out_kind = "fill"
             sub, res_code = self._run_rows(
                 sub, ftor, list(remap.values()), out_types, out_kind,
-                out_keys=op.out_cols, keep=self._df.columns, gate=match,
-                row_names=names)
+                keep=self._df.columns, gate=match, row_names=names)
             outs = [F.col(out_col(i)) for i in range(len(out_types))]
             pred = outs[0]
             if res_code is None:
@@ -706,21 +722,10 @@ class DataSet:
             out = sub.filter(keep).select(*self._columns, *hidden)
             return self._spawn(out, last_op=op)
 
-        repl = dict(zip(op.out_cols, outs))
-        barrier = compiled is not None and bool(compiled.staged)
-        sel = []
-        for v in self._columns:
-            if v not in repl:
-                sel.append(F.col(v))
-                continue
-            expr = F.when(resolved_ok, repl[v]).otherwise(F.col(v))
-            if barrier:
-                # same pushdown barrier as _finish_op: stop a later
-                # filter from substituting the resolver's expression
-                # tree through every staged layer
-                expr = F.element_at(F.shuffle(F.array(expr)), 1)
-                barrier = False
-            sel.append(expr.alias(v))
+        sel = _project(
+            self._columns, dict(zip(op.out_cols, outs)),
+            lambda v, e: F.when(resolved_ok, e).otherwise(F.col(v)),
+            compiled is not None and bool(compiled.staged))
         return self._spawn(sub.select(*sel, *hidden), last_op=op)
 
     def ignore(self, exc_class) -> "DataSet":

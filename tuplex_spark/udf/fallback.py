@@ -281,6 +281,9 @@ def _clean_typed(v, t):
     return v
 
 
+_VARIANT_ARMS = {1: "__vb", 2: "__vi", 3: "__vf", 4: "__vs"}
+
+
 def _struct_to_tuple(v, t: T.DataType):
     """Arrow hands struct columns to pandas as dicts; the engine's tuple
     convention (_0.._n fields) must surface as Python tuples in UDFs,
@@ -288,10 +291,11 @@ def _struct_to_tuple(v, t: T.DataType):
     per-row Python value."""
     if (isinstance(t, T.StructType) and t.fields
             and t.fields[0].name == "__vt"):
-        if v is None or not v.get("__vt"):
-            return None
-        return next((v.get(f.name) for f in t.fields[1:]
-                     if v.get(f.name) is not None), None)
+        # the tag picks the arm: a null arm may read NaN, not None
+        arm = _VARIANT_ARMS.get(v.get("__vt")) if v is not None else None
+        f = next((f for f in t.fields if f.name == arm), None)
+        return None if f is None else _struct_to_tuple(v.get(f.name),
+                                                       f.dataType)
     if (isinstance(t, T.StructType) and len(t.fields) == 1
             and t.fields[0].name == "__sv"
             and isinstance(t.fields[0].dataType, T.ArrayType)):
@@ -307,6 +311,9 @@ def _struct_to_tuple(v, t: T.DataType):
                      for f in t.fields)
     if isinstance(t, T.ArrayType) and isinstance(v, list):
         return [_struct_to_tuple(x, t.elementType) for x in v]
+    if isinstance(t, _INT_TYPES) and isinstance(v, float):
+        # pandas upcasts an int field with nulls in the batch to float
+        return int(v)
     return v
 
 
@@ -323,7 +330,10 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
                 ``in_fields`` is one column of pickled Python objects
     out_types:  Spark types of the outputs, written to out_col(i)
     out_kind:   how a result splits into outputs: 'scalar' | 'tuple' |
-                'dict' (by ``out_keys``) | 'pred' (filter predicates use
+                'dict' (by ``out_keys``) | 'fill' (a resolver: a tuple's
+                items, a dict's values or a scalar fill the outputs by
+                position, missing ones are None — as a compiled
+                resolver's columns do) | 'pred' (filter predicates use
                 Python TRUTHINESS — a UDF may return any object, e.g. a
                 regex match) | 'pickle' (one pickled-object column)
     row_names:  names for ``x['col']`` access (default: in_fields)
@@ -339,7 +349,8 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
     import pickle
 
     arity = arity_of(fn)
-    names = list(row_names or in_fields)
+    # a pickled object reaches the UDF as itself, never as a named row
+    names = None if in_types is None else list(row_names or in_fields)
     null_flags = null_flags or {}
     n_out = len(out_types)
 
@@ -366,7 +377,11 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
             return [pickle.dumps(r)]
         if out_kind == "pred":
             return [bool(r)]
-        if out_kind == "tuple":
+        if out_kind == "fill":
+            vals = list(r.values()) if isinstance(r, dict) else \
+                list(r) if isinstance(r, tuple) else [r]
+            vals = (vals + [None] * n_out)[:n_out]
+        elif out_kind == "tuple":
             vals = [r[j] for j in range(n_out)]
         elif out_kind == "dict":
             vals = [r[k] for k in out_keys]
