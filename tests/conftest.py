@@ -24,34 +24,44 @@ def spark(ctx):
     return ctx.spark
 
 
-def cpython_reference(data, fn, columns=None, op="map"):
+@pytest.fixture(scope="session")
+def ctx_interp(ctx):
+    """The same session with every UDF on the interpreter path."""
+    import tuplex_spark as tx
+    return tx.Context(conf={"tuplex.useCompiledUDFs": False},
+                      spark=ctx.spark)
+
+
+def cpython_reference(data, fn, columns=None, op="map", by_class=False):
     """Run the same UDF through plain CPython (the reference's differential
-    pattern, e.g. test_fallback.py) — returns (results, n_exceptions)."""
+    pattern, e.g. test_fallback.py) — returns (results, n_exceptions), or
+    (results, {exception class: count}) with ``by_class``."""
+    from collections import Counter
     from tuplex_spark.udf.fallback import _apply
-    out, n_exc = [], 0
+    out, excs = [], Counter()
     arity = getattr(getattr(fn, "__code__", None), "co_argcount", 1)
     for row in data:
         try:
             r = _apply(fn, row, arity, columns)
-        except Exception:
-            n_exc += 1
+        except Exception as e:
+            excs[type(e).__name__] += 1
             continue
         if op == "filter":
             if r:
                 out.append(row)
         else:
             out.append(r)
-    return out, n_exc
+    return out, (dict(excs) if by_class else sum(excs.values()))
 
 
 def _approx_eq(a, b, rel=1e-12):
     """Exact equality except floats, which tolerate JVM-vs-CPython libm
-    1-ULP differences (pow/sqrt/exp)."""
+    1-ULP differences (pow/sqrt/exp); NaN equals NaN."""
     if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
         return len(a) == len(b) and all(
             _approx_eq(x, y, rel) for x, y in zip(a, b))
     if isinstance(a, float) and isinstance(b, float):
-        if a == b:
+        if a == b or (a != a and b != b):
             return True
         return abs(a - b) <= rel * max(abs(a), abs(b))
     return a == b
@@ -81,3 +91,14 @@ def run_diff(ctx, data, fn, columns=None, op="map", expect_compiled=None):
     assert total_exc == n_exc, \
         f"exception counts: engine={out_ds.exception_counts} want={n_exc}"
     return out_ds
+
+
+def run_diff3(ctx, ctx_interp, data, fn, columns=None, op="map",
+              expect_compiled=None):
+    """run_diff three ways: the compiled path (``ctx``), the interpreter
+    path (``ctx_interp``) and CPython must agree on rows and on
+    ``exception_counts`` per exception class."""
+    want = cpython_reference(data, fn, columns, op, by_class=True)[1]
+    for c, exp in ((ctx, expect_compiled), (ctx_interp, False)):
+        got = run_diff(c, data, fn, columns, op, exp).exception_counts
+        assert got == want, f"exception counts: engine={got} want={want}"

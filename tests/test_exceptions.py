@@ -4,7 +4,7 @@ in-order merge (reference: test_exceptions.py, test_resolve.py)."""
 import hashlib
 import re
 
-from tuplex_spark.plans.inspect import formatted_plan
+from tuplex_spark.plans.inspect import explain_summary, formatted_plan
 
 
 class TestImplicitDrop:
@@ -61,14 +61,14 @@ class TestResolve:
 
     def test_resolve_fallback_resolver(self, ctx):
         """A resolver the compiler rejects runs on the interpreter path:
-        behind a compiled map it is the plan's one MapInPandas node."""
+        behind a compiled map it is the plan's one MapInArrow node."""
         def hex_len(x):  # hashlib does not compile
             return len(hashlib.sha256(str(x).encode()).hexdigest())
         ds = (ctx.parallelize([1, 0, 5])
               .map(lambda x: 10 // x)
               .resolve(ZeroDivisionError, hex_len))
         plan = formatted_plan(ds._df)
-        assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
+        assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1
         assert ds.collect() == [10, 64, 2]
         assert ds.exception_counts == {}
 
@@ -292,9 +292,8 @@ class TestResolveWithRound2Shapes:
         ds = ctx.parallelize(data) \
                 .map(lambda s: "n=" + str(int(s) * 2)) \
                 .resolve(ValueError, res)
-        plan = ds._df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" not in plan, "resolver fell back to Arrow"
-        assert "ArrowEvalPython" not in plan
+        assert not explain_summary(ds._df)["python_eval"], \
+            "resolver fell back to the interpreter path"
 
         def ref(s):
             try:

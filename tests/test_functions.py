@@ -1361,10 +1361,10 @@ class TestSampling:
         from tuplex_spark.functions import sampling
         out = sampling.hash_sample(
             spark.read.parquet(DOC), 0.2, "doc_id").select("doc_id")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "BatchEvalPython" not in plan
-        assert "MapInPandas" not in plan
+        from tuplex_spark.plans import explain_summary
+        s = explain_summary(out)
+        assert not s["exchanges"]
+        assert not s["python_eval"]
 
 
 class TestRedactVocab:

@@ -541,6 +541,39 @@ class TestJpegNative:
         assert (w, h) == (20, 12)
 
 
+class TestJpegHuffmanTables:
+    """The decoder's Huffman lookup tables: a bounded cache, and corrupt
+    tables reported as ValueError like the rest of the bad streams."""
+
+    def test_lut_cache_stays_bounded(self):
+        from tuplex_spark.functions import multimodal as mm
+        for i in range(40):  # 40 distinct per-image tables
+            mm._build_huff([0, 2] + [0] * 14, [i, i + 1])
+        assert len(mm._HUFF_LUT_CACHE) <= mm._HUFF_LUT_CACHE_MAX
+
+    def test_overfull_counts_raise_bad_table(self):
+        from tuplex_spark.functions import multimodal as mm
+        with pytest.raises(ValueError, match="bad huffman table"):
+            mm._build_huff([3] + [0] * 15, [1, 2, 3])
+
+    def test_corrupt_dht_lands_in_decode_error(self, spark):
+        import numpy as np
+        from tuplex_spark.functions.multimodal import (encode_jpeg,
+                                                       extract_features)
+        img = np.full((8, 8, 3), 128, np.uint8)
+        jpg = bytearray(encode_jpeg(8, 8, img.tobytes()))
+        # move 3 codes of the first table to length 1, where only 2
+        # fit; the symbol total (and so the segment layout) is unchanged
+        counts = jpg.index(b"\xff\xc4") + 5
+        j = next(j for j in range(16) if jpg[counts + j] >= 3)
+        jpg[counts + j] -= 3
+        jpg[counts] += 3
+        df = spark.createDataFrame([(1, jpg)],
+                                   "asset_id long, payload binary")
+        row = extract_features(df, decoder="image/real").collect()[0]
+        assert row["decode_error"] == "ValueError: bad huffman table"
+
+
 class TestGifNative:
     """GIF 87a/89a decodes natively: full LZW (variable width, clear
     codes), interlace, sub-rectangle frames, transparency, disposal —

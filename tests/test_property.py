@@ -1,17 +1,22 @@
 """Randomized differential testing: seeded generator builds arithmetic /
-string / conditional expressions, runs them through the engine and plain
-CPython on the same rows, and compares results + exception counts.
+string / conditional expressions and runs each one three ways on the same
+rows: the compiled path, the interpreter path (``tuplex.useCompiledUDFs``
+off) and plain CPython, comparing rows and exception counts per class.
 
 Mirrors the reference's pervasive differential-vs-CPython pattern
 (python/tests/*) with generated rather than hand-picked expressions.
 Deterministic (fixed seed) so failures reproduce.
 """
 
+import datetime
 import os
 import random
 import tempfile
 
-from conftest import run_diff
+import pytest
+
+from conftest import _approx_eq, run_diff3
+from tuplex_spark.plans.inspect import formatted_plan
 
 NUM_ATOMS = ["x['a']", "x['b']", "2", "3", "-1", "10"]
 NUM_OPS = ["+", "-", "*", "//", "%"]
@@ -82,34 +87,34 @@ def teardown_module():
 
 
 class TestGeneratedExpressions:
-    def test_integer_arithmetic_batch(self, ctx):
+    def test_integer_arithmetic_batch(self, ctx, ctx_interp):
         rng = random.Random(1234)
         exprs = [gen_num_expr(rng) for _ in range(15)]
         fn = _build_fn(exprs)
-        run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                 expect_compiled=True)
+        run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"],
+                  expect_compiled=True)
 
-    def test_float_arithmetic_batch(self, ctx):
+    def test_float_arithmetic_batch(self, ctx, ctx_interp):
         rng = random.Random(99)
         exprs = [gen_flt_expr(rng) for _ in range(15)]
         fn = _build_fn(exprs)
-        run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                 expect_compiled=True)
+        run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"],
+                  expect_compiled=True)
 
-    def test_string_chain_batch(self, ctx):
+    def test_string_chain_batch(self, ctx, ctx_interp):
         rng = random.Random(7)
         exprs = [gen_str_expr(rng) for _ in range(12)]
         fn = _build_fn(exprs)
-        run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"])
+        run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"])
 
-    def test_conditional_batch(self, ctx):
+    def test_conditional_batch(self, ctx, ctx_interp):
         rng = random.Random(2025)
         exprs = [gen_cond_expr(rng) for _ in range(10)]
         fn = _build_fn(exprs)
-        run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                 expect_compiled=True)
+        run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"],
+                  expect_compiled=True)
 
-    def test_exception_heavy_batch(self, ctx):
+    def test_exception_heavy_batch(self, ctx, ctx_interp):
         """Division-shaped expressions: engine exception rows must match
         CPython raise-counts exactly (one failing component poisons the
         whole row on both sides)."""
@@ -117,19 +122,19 @@ class TestGeneratedExpressions:
         exprs = [f"(10 {rng.choice(['//', '%'])} {gen_num_expr(rng)})"
                  for _ in range(8)]
         fn = _build_fn(exprs)
-        run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                 expect_compiled=True)
+        run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"],
+                  expect_compiled=True)
 
-    def test_string_edge_inputs(self, ctx):
+    def test_string_edge_inputs(self, ctx, ctx_interp):
         rng = random.Random(4242)
         exprs = [gen_str_expr(rng) for _ in range(10)]
         fn = _build_fn(exprs)
         edge_rows = [(1, 0.0, ""), (2, 1.0, " "), (3, 2.0, "\t a \n"),
                      (4, 3.0, "ALL CAPS"), (5, 4.0, "123"),
                      (6, 5.0, "a" * 300), (7, 6.0, "mIxEd CaSe WoRdS")]
-        run_diff(ctx, edge_rows, fn, columns=["a", "b", "s"])
+        run_diff3(ctx, ctx_interp, edge_rows, fn, columns=["a", "b", "s"])
 
-    def test_deep_seeds_sweep(self, ctx):
+    def test_deep_seeds_sweep(self, ctx, ctx_interp):
         """Five more seeds over the mixed grammar — cheap breadth."""
         for seed in (11, 222, 3333, 44444, 5):
             rng = random.Random(seed)
@@ -137,7 +142,7 @@ class TestGeneratedExpressions:
                      + [gen_flt_expr(rng) for _ in range(4)]
                      + [gen_cond_expr(rng) for _ in range(4)])
             fn = _build_fn(exprs)
-            run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"])
+            run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"])
 
 
 LOOP_ELEM_EXPRS = ["len(t)", "t.count('a')", "len(t) * 2", "len(t) % 3",
@@ -183,21 +188,23 @@ class TestGeneratedLoops:
     """Seeded fold/unroll loop fuzzing — loops must match CPython whether
     they compile (F.aggregate / unroll) or fall back."""
 
-    def test_fold_loops_sweep(self, ctx):
+    def test_fold_loops_sweep(self, ctx, ctx_interp):
         for seed in (1, 17, 404, 9001):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_fold_loop(rng))
-                run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, NUM_ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
-    def test_static_loops_sweep(self, ctx):
+    def test_static_loops_sweep(self, ctx, ctx_interp):
         for seed in (2, 42, 777):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_static_loop(rng))
-                run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, NUM_ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
 
 def gen_while_loop(rng):
@@ -249,29 +256,32 @@ class TestGeneratedWhileBreakDict:
     """Seeded fuzzing over the round-2 compiler features: constant-bound
     while unrolling, break/continue flag lowering, dict building."""
 
-    def test_while_sweep(self, ctx):
+    def test_while_sweep(self, ctx, ctx_interp):
         for seed in (3, 31, 314, 3141):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_while_loop(rng))
-                run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, NUM_ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
-    def test_break_continue_sweep(self, ctx):
+    def test_break_continue_sweep(self, ctx, ctx_interp):
         for seed in (7, 77, 777, 7777):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_break_loop(rng))
-                run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, NUM_ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
-    def test_dict_build_sweep(self, ctx):
+    def test_dict_build_sweep(self, ctx, ctx_interp):
         for seed in (5, 55, 555):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_dict_build(rng))
-                run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, NUM_ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
 
 def gen_first_match(rng):
@@ -302,21 +312,23 @@ class TestGeneratedFirstMatchAndComprehensions:
     """Seeded fuzzing over the first-match scan lowering and
     multi-generator comprehension flattening."""
 
-    def test_first_match_sweep(self, ctx):
+    def test_first_match_sweep(self, ctx, ctx_interp):
         for seed in (13, 131, 1313):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_first_match(rng))
-                run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, NUM_ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
-    def test_multigen_comp_sweep(self, ctx):
+    def test_multigen_comp_sweep(self, ctx, ctx_interp):
         for seed in (19, 191, 1919):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_multigen_comp(rng))
-                run_diff(ctx, NUM_ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, NUM_ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
 
 DYN_ARG_EXPRS = [
@@ -340,28 +352,28 @@ class TestDynamicMethodArgs:
     constants) — the shape that exposed the dict.get default bug.  Every
     expression must match CPython whether compiled or fallen back."""
 
-    def test_dynamic_arg_batch(self, ctx):
+    def test_dynamic_arg_batch(self, ctx, ctx_interp):
         fn = _build_fn(DYN_ARG_EXPRS)
         rows = [(1, 0.0, "hello"), (2, 1.0, "aabba"), (3, 2.0, "x"),
                 (4, 3.0, "abcabc"), (5, 4.0, "zzz y zz")]
-        run_diff(ctx, rows, fn, columns=["a", "b", "s"])
+        run_diff3(ctx, ctx_interp, rows, fn, columns=["a", "b", "s"])
 
-    def test_dynamic_arg_edge_strings(self, ctx):
+    def test_dynamic_arg_edge_strings(self, ctx, ctx_interp):
         # NOTE: the empty string is deliberately absent — ""[0:1] makes
         # several CPython calls raise where slices stay total; covered
         # one expression at a time below
         fn = _build_fn(DYN_ARG_EXPRS)
         rows = [(1, 0.0, " "), (2, 1.0, "aa"), (3, 2.0, "ab"),
                 (4, 3.0, "a b a"), (5, 4.0, "\tx\n")]
-        run_diff(ctx, rows, fn, columns=["a", "b", "s"])
+        run_diff3(ctx, ctx_interp, rows, fn, columns=["a", "b", "s"])
 
-    def test_dynamic_arg_singletons_with_empty(self, ctx):
+    def test_dynamic_arg_singletons_with_empty(self, ctx, ctx_interp):
         rows = [(1, 0.0, ""), (2, 1.0, "q"), (3, 2.0, "qq")]
         for expr in DYN_ARG_EXPRS:
             fn = _build_fn([expr])
-            run_diff(ctx, rows, fn, columns=["a", "b", "s"])
+            run_diff3(ctx, ctx_interp, rows, fn, columns=["a", "b", "s"])
 
-    def test_bounds_sweep(self, ctx):
+    def test_bounds_sweep(self, ctx, ctx_interp):
         # slice-notation start/end bounds on find/rfind/count/
         # startswith/endswith, constant and column-derived, incl.
         # negative and out-of-range values
@@ -378,7 +390,7 @@ class TestDynamicMethodArgs:
             use_end = rng.random() < 0.5
             b2 = ", " + rng.choice(bound_exprs) if use_end else ""
             fn = _build_fn([f"x['s'].{m}({needle}, {b1}{b2})"])
-            run_diff(ctx, rows, fn, columns=["a", "b", "s"])
+            run_diff3(ctx, ctx_interp, rows, fn, columns=["a", "b", "s"])
 
 
 TRY_BODIES = ["return int(x['s'])",
@@ -407,15 +419,15 @@ class TestGeneratedTryExcept:
     """Seeded try/except fuzzing: random bodies x handler sets must
     match CPython's dispatch, including unhandled propagation counts."""
 
-    def test_try_sweep(self, ctx):
+    def test_try_sweep(self, ctx, ctx_interp):
         rows = [(3, 1.5, "12"), (0, 0.5, "abc"), (5, -1, "3"),
                 (7, 2.0, ""), (4, 1.0, "x2345")]
         for seed in (23, 230, 2300, 23000):
             rng = random.Random(seed)
             for _ in range(4):
                 fn = _build_def_fn(gen_try(rng))
-                run_diff(ctx, rows, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, rows, fn, columns=["a", "b", "s"],
+                          expect_compiled=True)
 
 
 def gen_dyn_while(rng):
@@ -451,23 +463,25 @@ class TestGeneratedNewShapes:
     ROWS = [(3, 1.5, "ab a c"), (0, 0.25, ""), (7, -2.0, "dd ee"),
             (5, 0.0, "x"), (12, 3.5, "aaa bb aaa")]
 
-    def test_dynamic_while_sweep(self, ctx):
+    def test_dynamic_while_sweep(self, ctx, ctx_interp):
         for seed in (29, 290, 2900):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_dyn_while(rng))
-                run_diff(ctx, self.ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, self.ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
-    def test_format_spec_sweep(self, ctx):
+    def test_format_spec_sweep(self, ctx, ctx_interp):
         for seed in (31, 310, 3100):
             rng = random.Random(seed)
             for _ in range(4):
                 fn = _build_def_fn(gen_format_spec(rng))
-                run_diff(ctx, self.ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, self.ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
-    def test_convergence_while_sweep(self, ctx):
+    def test_convergence_while_sweep(self, ctx, ctx_interp):
         # contraction whiles (x /= c, x -= c, x *= c<1, x //= c) with a
         # constant threshold ride the F.aggregate convergence fold
         rng = random.Random(43)
@@ -491,10 +505,11 @@ class TestGeneratedNewShapes:
                     f"    {upd.format(c=c)}",
                     "    n = n + 1",
                     "return (n, v)"])
-                run_diff(ctx, self.ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, self.ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
-    def test_fixed_format_tie_sweep(self, ctx):
+    def test_fixed_format_tie_sweep(self, ctx, ctx_interp):
         # rounding of %.Nf must match CPython exactly, including repr
         # ties (2.675), binary ties (0.125), and negatives — the java
         # Formatter HALF_UPs the shortest repr, we pre-round exactly
@@ -505,15 +520,16 @@ class TestGeneratedNewShapes:
                  0.0, -0.001, 1e15 + 0.5]
         for prec in (0, 1, 2, 6):
             fn = _build_def_fn([f"return f\"{{x:.{prec}f}}\""])
-            run_diff(ctx, vals, fn, expect_compiled=True)
+            run_diff3(ctx, ctx_interp, vals, fn, expect_compiled=True)
 
-    def test_sorted_key_sweep(self, ctx):
+    def test_sorted_key_sweep(self, ctx, ctx_interp):
         for seed in (37, 370, 3700):
             rng = random.Random(seed)
             for _ in range(3):
                 fn = _build_def_fn(gen_sorted_key(rng))
-                run_diff(ctx, self.ROWS, fn, columns=["a", "b", "s"],
-                         expect_compiled=True)
+                run_diff3(ctx, ctx_interp, self.ROWS, fn,
+                          columns=["a", "b", "s"],
+                          expect_compiled=True)
 
 
 class TestRound6Sweeps:
@@ -521,7 +537,7 @@ class TestRound6Sweeps:
     (bounds × step sign × emptiness) and the extended format-spec
     grammar (fill/align/sign/comma/presentation-type matrix)."""
 
-    def test_dynamic_slice_step_sweep(self, ctx):
+    def test_dynamic_slice_step_sweep(self, ctx, ctx_interp):
         import random as _r
         rng = _r.Random(61)
         data = [-4, -3, -2, -1, 1, 2, 3, 4, 5]
@@ -532,9 +548,9 @@ class TestRound6Sweeps:
             fn = _build_def_fn([
                 "k = x if x != 0 else 1",
                 f"return {base}[{lo}:{hi}:k]"])
-            run_diff(ctx, data, fn, expect_compiled=True)
+            run_diff3(ctx, ctx_interp, data, fn, expect_compiled=True)
 
-    def test_format_spec_matrix_sweep(self, ctx):
+    def test_format_spec_matrix_sweep(self, ctx, ctx_interp):
         import random as _r
         rng = _r.Random(62)
         ints = [-1234567, -42, 0, 7, 999, 123456789]
@@ -556,9 +572,9 @@ class TestRound6Sweeps:
             except ValueError:
                 want_ok = False
             if want_ok:
-                run_diff(ctx, ints, fn)
+                run_diff3(ctx, ctx_interp, ints, fn)
 
-    def test_presentation_type_sweep(self, ctx):
+    def test_presentation_type_sweep(self, ctx, ctx_interp):
         import random as _r
         rng = _r.Random(63)
         ints = [-255, -1, 0, 1, 255, 4095, 123456]
@@ -569,4 +585,140 @@ class TestRound6Sweeps:
             typ = rng.choice(["x", "X", "o", "b"])
             spec = alt + (zero + width if width else "") + typ
             fn = _build_def_fn([f'return f"[{{x:{spec}}}]"'])
-            run_diff(ctx, ints, fn, expect_compiled=True)
+            run_diff3(ctx, ctx_interp, ints, fn, expect_compiled=True)
+
+
+NAN, INF = float("nan"), float("inf")
+# adversarial rows: None, NaN, +-inf, the edges of the long range, empty
+# and non-ASCII strings, bytes
+ADV_COLS = ["a", "b", "s", "y"]
+ADV_ROWS = [(0, NAN, "", b""),
+            (2 ** 63 - 1, INF, "héllo ☃", b"\x00\xff"),
+            (-2 ** 63, -INF, "日本", b"abc"),
+            (None, 0.0, " ", None),
+            (7, None, None, b"x"),
+            (-1, -0.0, "a\tb", b"")]
+ADV_ATOMS = {
+    "a": ["x['a'] // 3", "x['a'] % 7", "x['a'] > 0", "str(x['a'])",
+          "x['a'] == 0", "float(x['a'])"],
+    "b": ["x['b'] * 2", "x['b'] + 1.0", "x['b'] > 0", "str(x['b'])",
+          "x['b'] == x['b']", "int(x['b'])", "x['b']"],
+    "s": ["x['s'].upper()", "len(x['s'])", "x['s'][::-1]", "x['s'] + '!'",
+          "x['s'].strip()"],
+    "y": ["len(x['y'])", "x['y']", "x['y'] + b'!'"],
+}
+
+STRUCT_COLS = ["t", "d", "arr", "m", "st"]
+STRUCT_ROWS = [(datetime.datetime(2020, 1, 2, 3, 4, 5, 6),
+                datetime.date(1999, 12, 31), [1, None, 3],
+                {"a": 1.5, "b": NAN}, (1, "x")),
+               (datetime.datetime(1970, 1, 1), datetime.date(2024, 2, 29),
+                [], {}, (-2 ** 63, "")),
+               (None, None, None, None, None)]
+
+
+class TestAdversarialThreeWay:
+    """Generated UDFs over adversarial rows: compiled, interpreted and
+    CPython agree on rows and per-class exception counts."""
+
+    def test_adversarial_scalar_sweep(self, ctx, ctx_interp):
+        for seed in (3, 30, 300, 3000):
+            rng = random.Random(seed)
+            for _ in range(4):
+                exprs = [rng.choice(ADV_ATOMS[c])
+                         for c in rng.sample(ADV_COLS, 2)]
+                run_diff3(ctx, ctx_interp, ADV_ROWS, _build_fn(exprs),
+                          columns=ADV_COLS)
+
+    def test_adversarial_single_atoms(self, ctx, ctx_interp):
+        for atoms in ADV_ATOMS.values():
+            for expr in atoms:
+                run_diff3(ctx, ctx_interp, ADV_ROWS, _build_fn([expr]),
+                          columns=ADV_COLS)
+
+    def test_adversarial_filter(self, ctx, ctx_interp):
+        for expr in ("x['b'] > 0", "x['a'] % 2 == 0", "len(x['s']) > 1",
+                     "x['b'] != x['b']"):
+            run_diff3(ctx, ctx_interp, ADV_ROWS, _build_def_fn(
+                [f"return {expr}"]), columns=ADV_COLS, op="filter")
+
+    def test_structured_inputs(self, ctx, ctx_interp):
+        exprs = ["type(x['t']).__name__", "x['t'].year", "str(x['t'])",
+                 "x['d'].isoformat()", "type(x['d']).__name__",
+                 "len(x['arr'])", "x['arr'][-1]", "sorted(x['m'].items())",
+                 "x['m'].get('b')", "x['st'][1] + '!'",
+                 "type(x['st']).__name__", "x['arr']"]
+        for expr in exprs:
+            run_diff3(ctx, ctx_interp, STRUCT_ROWS, _build_fn([expr]),
+                      columns=STRUCT_COLS)
+
+    @pytest.mark.xfail(strict=True, reason="the compiled path reads a "
+                       "null struct column as a tuple of Nones")
+    def test_null_struct_passes_through(self, ctx, ctx_interp):
+        run_diff3(ctx, ctx_interp, STRUCT_ROWS, _build_fn(["x['st']"]),
+                  columns=STRUCT_COLS)
+
+
+class TestArrowHandoff:
+    """The interpreter path hands UDFs and the engine exactly the values
+    CPython has: no NaN/null confusion, no pandas types, no float ints."""
+
+    def test_passthrough_nan_stays_nan(self, ctx, ctx_interp):
+        import hashlib
+
+        def hexlen(x):  # hashlib does not compile
+            return len(hashlib.md5(repr(x).encode()).hexdigest())
+        data = [(1, NAN), (2, None), (3, 2.0)]
+        for c in (ctx_interp, ctx):
+            got = c.parallelize(data, columns=["k", "x"]) \
+                .withColumn("y", hexlen).collect()
+            assert _approx_eq(got, [(1, NAN, 32), (2, None, 32),
+                                    (3, 2.0, 32)]), got
+
+    def test_nan_in_non_nullable_float_column(self, ctx_interp):
+        got = ctx_interp.parallelize([NAN, 2.0]).map(lambda x: x * 2) \
+            .collect()
+        assert _approx_eq(got, [NAN, 4.0]), got
+
+    def test_udf_returning_nan(self, ctx_interp):
+        got = ctx_interp.parallelize([1, 2]) \
+            .map(lambda x: float("nan") if x == 1 else 1.0).collect()
+        assert _approx_eq(got, [NAN, 1.0]), got
+
+    def test_timestamp_reaches_udf_as_datetime(self, ctx_interp):
+        ts = datetime.datetime(2020, 1, 2, 3, 4, 5, 6)
+        got = ctx_interp.parallelize([ts]) \
+            .map(lambda x: (type(x).__name__, x.tzinfo is None, str(x))) \
+            .collect()
+        assert got == [("datetime", True, str(ts))]
+
+    def test_keyed_fold_sees_cpython_values(self, ctx):
+        data = [(1, NAN, 1, (1, "a")), (1, 2.0, None, (2, "b")),
+                (2, 0.5, 3, (3, "c"))]
+        cols = ["k", "v", "i", "s"]
+
+        def fold(acc, x):
+            return acc + repr(x["v"]) + type(x["i"]).__name__ \
+                + type(x["s"]).__name__ + ","
+        ds = ctx.parallelize(data, columns=cols) \
+            .aggregateByKey(lambda a, b: a + b, fold, "", ["k"])
+        assert "FlatMapGroupsInArrow" in formatted_plan(ds._df)
+        want = {}
+        for row in data:
+            want[row[0]] = fold(want.get(row[0], ""), dict(zip(cols, row)))
+        assert sorted(ds.collect()) == sorted(want.items())
+
+    def test_out_of_range_int_fails_one_row(self, ctx_interp):
+        ds = ctx_interp.parallelize(list(range(1, 200))) \
+            .map(lambda x: 2 ** 70 if x == 150 else x * 2)
+        got = ds.collect()
+        assert got == [x * 2 for x in range(1, 200) if x != 150]
+        assert ds.exception_counts == {"NormalCaseViolation": 1}
+
+    def test_no_key_fold_passes_tuples(self, ctx):
+        got = ctx.parallelize([(1, (1, "a")), (2, (2, "b"))],
+                              columns=["k", "s"]) \
+            .aggregate(lambda a, b: a + b,
+                       lambda acc, x: acc + type(x["s"]).__name__ + ",",
+                       "").collect()
+        assert got == ["tuple,tuple,"]

@@ -9,11 +9,12 @@ Execution model (Spark-first, not a port):
   optimizing (predicate pushdown, pruning, join strategy).
 - UDFs and resolvers go through a compile ladder: (a) Python-AST -> Column
   expressions (udf/compiler.py) so the hot path stays in whole-stage
-  codegen; (b) the interpreter path: one Arrow-batched mapInPandas row
-  runner (udf/fallback.py, staged by ``DataSet._run_rows``) applying the
-  pickled original function.  PYOBJECT datasets (pickled rows) take (b)
-  too.  Both paths end in ``DataSet._finish_op``, so they share one
-  output projection and one exception bookkeeping.
+  codegen; (b) the interpreter path: one ``mapInArrow`` row runner
+  (udf/fallback.py, staged by ``DataSet._run_rows``) applying the
+  pickled original function to rows decoded straight from Arrow, so it
+  sees exactly the values CPython would.  PYOBJECT datasets (pickled
+  rows) take (b) too.  Both paths end in ``DataSet._finish_op``, so they
+  share one output projection and one exception bookkeeping.
 - exception semantics (reference §2.7: rows that raise are excluded from
   output, countable, resolvable) are carried IN the DataFrame as three
   hidden columns (__exc_code, __exc_payload, __exc_op).  The payload has
@@ -66,27 +67,6 @@ class UDFOpInfo:
 
 
 PYOBJ_COL = "__pyobj"
-
-_FLAGGED_TYPES = (T.DoubleType, T.FloatType, T.LongType, T.IntegerType,
-                  T.ShortType, T.ByteType)
-
-
-def _null_flags(df: DataFrame, in_cols: list[str]):
-    """JVM-computed ``isNull`` boolean flags for numeric UDF inputs.
-    Arrow->pandas shows BOTH null and NaN as NaN in a float64 column
-    (and upcasts int columns with nulls to float64), so without the flag
-    the interpreter path cannot tell ``None`` from ``float('nan')`` and
-    hands floats to UDFs expecting ints.  One boolean per numeric input
-    column, computed in codegen — negligible cost.  Returns (flag
-    Columns, {input column: flag column name})."""
-    flags: dict[str, str] = {}
-    add = []
-    for i, c in enumerate(in_cols):
-        if isinstance(df.schema[c].dataType, _FLAGGED_TYPES):
-            flags[c] = f"__nn_{i}"
-            add.append(F.col(c).isNull().alias(flags[c]))
-    return add, flags
-
 
 def _guard_code(guards):
     """Per-row exception code Column of a compiled UDF's guards: the
@@ -509,17 +489,14 @@ class DataSet:
                   out_keys=None, keep=(), gate=None, row_names=None):
         """The interpreter path's one Spark stage: ``fn`` runs
         row-at-a-time over ``in_cols`` of ``df`` inside
-        fallback.make_row_runner's mapInPandas.  Rows where ``gate``
+        fallback.make_row_runner's mapInArrow.  Rows where ``gate``
         (default: not failed yet) is false pass through.  Returns (frame
         of ``keep`` + out_col(i) outputs [+ ROW_CODE], the ROW_CODE
         Column or None when exceptions are not captured)."""
         capture = self._exc_enabled
         if gate is None and self._has_exc:
             gate = F.col(EXC_CODE) == 0
-        add, flags = _null_flags(df, in_cols)
-        if gate is not None:
-            add.append(gate.alias(GATE))
-        src = df.select("*", *add) if add else df
+        src = df if gate is None else df.select("*", gate.alias(GATE))
         schema = T.StructType(
             [df.schema[c] for c in keep]
             + [T.StructField(out_col(i), t, True)
@@ -531,8 +508,8 @@ class DataSet:
             None if self._pyobj else [df.schema[c].dataType
                                       for c in in_cols],
             out_types, out_kind, out_keys=out_keys, row_names=row_names,
-            null_flags=flags, keep=list(keep), capture=capture)
-        out = src.mapInPandas(runner, schema=schema)
+            keep=list(keep), capture=capture)
+        out = src.mapInArrow(runner, schema=schema)
         return out, (F.col(ROW_CODE) if capture else None)
 
     # ---------------------------------------------------------- transforms

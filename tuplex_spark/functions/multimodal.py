@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -715,8 +716,11 @@ class _BitReader:
 # 16 bits, so ONE 16-bit peek + one list index replaces the bit-by-bit
 # walk (measured ~40% of scan time).  Images overwhelmingly share the
 # Annex K tables, so the 65536-entry build amortizes across every
-# image a worker decodes (guide §4.5 heavyweight-init-once).
-_HUFF_LUT_CACHE: dict = {}
+# image a worker decodes (guide §4.5 heavyweight-init-once).  Per-image
+# optimized tables (libjpeg -optimize, mozjpeg) never repeat, so the
+# cache is a small LRU: each table costs ~0.5 MB in a long-lived worker.
+_HUFF_LUT_CACHE: OrderedDict = OrderedDict()
+_HUFF_LUT_CACHE_MAX = 8
 
 
 def _build_huff(counts, symbols):
@@ -724,16 +728,24 @@ def _build_huff(counts, symbols):
     (None, 0) for prefixes that match no code (bad huffman stream).
     Consumption semantics identical to the bit-by-bit walk: exactly
     ``code_length`` bits are consumed per symbol, and the _BitReader's
-    zero-padding past markers/EOF feeds the same bits either way."""
+    zero-padding past markers/EOF feeds the same bits either way.
+    Counts that define more codes than the 16-bit code space holds, or
+    more than there are symbols, raise ValueError('bad huffman
+    table')."""
     key = (bytes(counts), bytes(symbols))
     lut = _HUFF_LUT_CACHE.get(key)
     if lut is not None:
+        _HUFF_LUT_CACHE.move_to_end(key)
         return lut
+    if sum(counts) > len(symbols):
+        raise ValueError("bad huffman table")
     lut = [(None, 0)] * 65536
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(counts[length - 1]):
+            if code >= 1 << length:
+                raise ValueError("bad huffman table")
             base = code << (16 - length)
             entry = (symbols[k], length)
             for p in range(base, base + (1 << (16 - length))):
@@ -742,6 +754,8 @@ def _build_huff(counts, symbols):
             k += 1
         code <<= 1
     _HUFF_LUT_CACHE[key] = lut
+    if len(_HUFF_LUT_CACHE) > _HUFF_LUT_CACHE_MAX:
+        _HUFF_LUT_CACHE.popitem(last=False)
     return lut
 
 

@@ -9,8 +9,10 @@ and, when each state slot evolves as ``state + expr(row)`` /
 Catalyst aggregates (F.sum/F.min/F.max with map-side partial aggregation —
 the built-in analog of the reference's thread-local hash-agg + combine,
 LocalBackend.cc:912-919).  Unrecognizable folds fall back to
-``rdd.aggregate`` (whole-dataset) or ``applyInPandas`` (by key) — still a
-distributed partial/final fold, just not codegen'd.
+``rdd.treeAggregate`` (whole-dataset) or ``applyInArrow`` (by key, rows
+decoded by the row runner's ``decode_columns``) — still a distributed
+partial/final fold, just not codegen'd.  Both hand the fold UDF the values
+CPython would see: struct columns as tuples, NaN as NaN, ints as ints.
 """
 
 from __future__ import annotations
@@ -182,7 +184,7 @@ def _slot_agg_col(slot: _Slot, name: str):
 
 
 def aggregate_general(ds, combine, aggregate, initial_value, keys):
-    from ..dataset import DataSet
+    from ..dataset import DataSet, _py_value
 
     df, parked = ds._split_exceptions()
     schema = ds._schema_of_visible()
@@ -209,7 +211,8 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
         return _fold_by_key(ds, df, parked, combine, aggregate,
                             initial_value, keys, schema, out_names)
     cols0 = [f.name for f in schema.fields]
-    vals = df.rdd.map(lambda r: tuple(r) if len(r) > 1 else r[0])
+    vals = df.rdd.map(lambda r: tuple(map(_py_value, r)) if len(r) > 1
+                      else _py_value(r[0]))
 
     def seq(a, row):
         return aggregate(a, FB.UDFRow(row, cols0)
@@ -249,20 +252,20 @@ def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
                             for n, t in zip(out_names, stypes)])
 
     init = initial_value
+    in_types = [f.dataType for f in schema.fields]
 
-    def fold(pdf):
-        import pandas as pd
+    def fold(table):
+        import pyarrow as pa
         state = copy.deepcopy(init)
-        for row in pdf[cols].itertuples(index=False, name=None):
-            cleaned = tuple(FB._clean(v) for v in row)
+        for row in zip(*FB.decode_columns(table, cols, in_types)):
             state = aggregate(state,
-                              FB.UDFRow(cleaned, cols) if len(cleaned) != 1
-                              else cleaned[0])
+                              FB.UDFRow(row, cols) if len(row) != 1
+                              else row[0])
         outs = state if isinstance(state, tuple) else (state,)
-        data = {k: [pdf[k].iloc[0]] for k in keys}
-        data.update({n: [v] for n, v in zip(out_names, outs)})
-        return pd.DataFrame(data)
+        arrays = [table.column(k).slice(0, 1) for k in keys]
+        arrays += [FB.encode_column([v], t) for v, t in zip(outs, stypes)]
+        return pa.Table.from_arrays(arrays, names=list(keys) + out_names)
 
-    out = df.groupBy(*keys).applyInPandas(fold, schema=out_schema)
+    out = df.groupBy(*keys).applyInArrow(fold, schema=out_schema)
     return DataSet(ds._ctx, out, list(keys) + out_names, sample=[],
                    parked=parked, op_seq=ds._op_seq + 1)

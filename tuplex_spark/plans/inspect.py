@@ -11,6 +11,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# physical operators that run Python code on rows
+_PYTHON_EVAL_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                      "MapInArrow", "FlatMapGroupsInPandas",
+                      "FlatMapGroupsInArrow")
+
 
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -26,9 +31,7 @@ def explain_summary(df: DataFrame) -> dict:
         "sortmerge_join": "SortMergeJoin" in plan,
         "wholestage_codegen": ("WholeStageCodegen" in plan
                                or "codegen id" in plan),
-        "python_eval": ("BatchEvalPython" in plan
-                        or "ArrowEvalPython" in plan
-                        or "MapInPandas" in plan),
+        "python_eval": any(n in plan for n in _PYTHON_EVAL_NODES),
         "scans": plan.count("Scan parquet") + plan.count("Scan csv"),
         "exchanges": plan.count("Exchange"),
         "plan": plan,

@@ -3661,6 +3661,7 @@ class Translator:
         if isinstance(base, SDict) and node.attr in base.items:
             return base.items[node.attr]
         if isinstance(base, SCol) and base.tag in ("timestamp", "date"):
+            self._guard_nulls(base, exc="AttributeError")  # None.year
             fld = {"year": F.year, "month": F.month, "day": F.day,
                    "hour": F.hour, "minute": F.minute, "second": F.second}
             if node.attr in fld:
@@ -3823,6 +3824,7 @@ class Translator:
                     [(k, SConst(v)) for k, v in base.value.items()], idx)
             base = SCol(F.lit(base.value), base.tag, False)
         if isinstance(base, SCol):
+            self._guard_nulls(base)  # None[i] is a TypeError
             if base.tag == "str":
                 i = self.to_col(self.num(idx, "string index"))
                 L = F.length(base.col)
@@ -3864,6 +3866,7 @@ class Translator:
             raise CompileError("tuple slice step")
         if not isinstance(base, SCol) or base.tag not in ("str", "array"):
             raise CompileError(f"slice on {base.tag}")
+        self._guard_nulls(base)  # None[a:b] is a TypeError
         # int steps compile, both signs, constant or DYNAMIC.  k > 1
         # keeps every k-th element of the contiguous [lo:hi] segment;
         # k < 0 maps to a positive-step slice of reverse(s): index
@@ -4071,7 +4074,11 @@ class Translator:
             div_guard("integer division or modulo by zero",
                       "float floor division by zero")
             if both_int:
-                return SCol(F.floor(lc / rc), "int")
+                # ``div`` truncates exactly (floor(a / b) goes through
+                # double): step down on an inexact mixed-sign quotient
+                q = F.call_function("div", lc, rc)
+                down = (lc % rc != 0) & ((lc < 0) != (rc < 0))
+                return SCol(F.when(down, q - 1).otherwise(q), "int")
             # CPython float_floor_div (Objects/floatobject.c float_divmod):
             # fmod-based with sign correction and a half-way adjustment —
             # plain floor(a/b) is off by one whenever a/b rounds across
@@ -4345,10 +4352,10 @@ class Translator:
                 else F.concat(pad, body)
         return body
 
-    def _guard_nulls(self, *syms, msg=None):
+    def _guard_nulls(self, *syms, msg=None, exc="TypeError"):
         for s in syms:
             if isinstance(s, SCol) and s.nullable:
-                self.guard(s.col.isNull(), "TypeError", msg=msg)
+                self.guard(s.col.isNull(), exc, msg=msg)
 
     def _ev_UnaryOp(self, node):
         v = self.eval(node.operand)
@@ -4492,6 +4499,10 @@ class Translator:
         # implicit-coercion semantics, so resolve them at compile time
         fam_l, fam_r = _tag_family(l), _tag_family(r)
         mixed = fam_l is not None and fam_r is not None and fam_l != fam_r
+        # CPython: NaN is unequal and unordered to everything; Spark
+        # has NaN = NaN and orders NaN above every other double
+        floats = "float" in (getattr(l, "tag", None),
+                             getattr(r, "tag", None))
         # None literal on either side of ==/!= -> null checks
         if isinstance(op, (ast.Eq, ast.NotEq)):
             if (isinstance(r, SConst) and r.value is None):
@@ -4501,7 +4512,10 @@ class Translator:
             elif mixed:
                 c = F.lit(False)
             else:
-                c = self.to_col(l).eqNullSafe(self.to_col(r))
+                lc, rc = self.to_col(l), self.to_col(r)
+                c = lc.eqNullSafe(rc)
+                if floats:
+                    c = c & ~(F.isnan(lc) | F.isnan(rc))
             return c if isinstance(op, ast.Eq) else ~c
         if mixed:
             self.guard(F.lit(True), "TypeError")
@@ -4509,8 +4523,9 @@ class Translator:
         # ordering: CPython raises TypeError on None operands
         self._guard_nulls(l, r)
         lc, rc = self.to_col(l), self.to_col(r)
-        return {ast.Lt: lc < rc, ast.LtE: lc <= rc,
-                ast.Gt: lc > rc, ast.GtE: lc >= rc}[type(op)]
+        c = {ast.Lt: lc < rc, ast.LtE: lc <= rc,
+             ast.Gt: lc > rc, ast.GtE: lc >= rc}[type(op)]
+        return c & ~(F.isnan(lc) | F.isnan(rc)) if floats else c
 
     def _membership(self, item: Sym, container: Sym) -> Column:
         if isinstance(container, SJson):
@@ -5353,6 +5368,10 @@ class Translator:
             return SCol(c.cast("long"), "int")
         if a.tag == "float":
             self._guard_nulls(a)
+            self.guard(F.isnan(c), "ValueError",
+                       msg="cannot convert float NaN to integer")
+            self.guard(F.abs(c) == float("inf"), "OverflowError",
+                       msg="cannot convert float infinity to integer")
             # CPython truncates toward zero; Spark double->long also truncates
             return SCol(c.cast("long"), "int")
         if a.tag == "str":
@@ -6629,6 +6648,8 @@ class Translator:
         if base.tag == "str" or (isinstance(base, SConst)
                                  and isinstance(base.value, str)):
             return self._str_method(base, name, args)
+        if base.tag in ("array", "map"):  # None.get(...)
+            self._guard_nulls(base, exc="AttributeError")
         if base.tag == "array":
             return self._list_method(base, name, args)
         if base.tag == "map" or isinstance(base, SDict):

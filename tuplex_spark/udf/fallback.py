@@ -5,14 +5,17 @@ Reference analog: the pure-Python pipeline fallback
 (core/include/physical/ResolveTask.h) that run the rows CPython can
 handle but the compiled path can't.  Every UDF or resolver that does not
 compile runs through ``make_row_runner``: the original function object
-is cloudpickled into one Arrow-batched ``mapInPandas`` stage and applied
-row-at-a-time.
+is cloudpickled into one ``mapInArrow`` stage and applied row-at-a-time.
+Arrow is the only way Python-executed rows cross the boundary.
 
-- input: rows decode from typed columns (with the JVM-computed null
-  flags) or from one pickled-object column;
-- output: results encode as typed columns, checked by ``_conforms`` so a
-  value that misfits the declared type becomes a NormalCaseViolation
-  row, or as pickled objects;
+- input: ``decode_columns`` turns each input column's ``to_pylist()``
+  into the exact values CPython would see (None stays None, NaN stays
+  NaN, ints stay ints, structs become tuples, maps dicts, timestamps
+  naive datetimes), or unpickles one pickled-object column;
+- output: results are checked by ``_conforms`` — a value that misfits
+  the declared type becomes a NormalCaseViolation row — and built into
+  Arrow arrays of the Spark output type (``encode_column``), or pickled;
+  pass-through columns go back as the input batch's own Arrow arrays;
 - exceptions: each row's exception becomes its code in ``ROW_CODE``;
   rows whose ``GATE`` is false (already failed, or not matched by a
   resolver) pass through untouched.
@@ -27,8 +30,6 @@ always under ``call_budgeted``'s line budget.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import types as T
 
@@ -213,22 +214,29 @@ def _apply(fn, row, arity, names=None):
     return fn(row)
 
 
+# ints a numeric output type holds (a double takes any int64)
+_INT_BOUND = {T.LongType: 2 ** 63, T.IntegerType: 2 ** 31,
+              T.DoubleType: 2 ** 63}
+
+
 def _conforms(v, t: T.DataType) -> bool:
     """Shallow runtime check that a produced Python value fits the
     declared (sample-inferred) Spark type.  Rows that fail become
-    NormalCaseViolation exception rows rather than crashing the Arrow
-    serializer for the whole batch — at scale one odd row must never
-    kill a stage."""
+    NormalCaseViolation exception rows rather than failing the Arrow
+    encoder for the whole batch (``pa.array`` raises on one int outside
+    the int64 range) — at scale one odd row must never kill a stage."""
     if v is None:
         return True
     if isinstance(t, T.NullType):
         return False
     if isinstance(t, T.BooleanType):
         return isinstance(v, bool)
-    if isinstance(t, (T.LongType, T.IntegerType)):
-        return isinstance(v, int) and not isinstance(v, bool)
-    if isinstance(t, T.DoubleType):
-        return isinstance(v, (int, float)) and not isinstance(v, bool)
+    if type(t) in _INT_BOUND:
+        if isinstance(v, float):
+            return isinstance(t, T.DoubleType)
+        bound = _INT_BOUND[type(t)]
+        return isinstance(v, int) and not isinstance(v, bool) \
+            and -bound <= v < bound
     if isinstance(t, T.StringType):
         return isinstance(v, str)
     if isinstance(t, T.BinaryType):
@@ -242,88 +250,83 @@ def _conforms(v, t: T.DataType) -> bool:
     return True
 
 
-def _clean(v):
-    """numpy / pandas scalars -> python scalars.  NaN maps to None — the
-    legacy ambiguous path for callers that provide no null flags (Arrow
-    nulls surface as NaN in pandas float columns, so without a flag NaN
-    must be read as null)."""
-    if v is None:
-        return None
-    if isinstance(v, float) and math.isnan(v):
-        return None
-    item = getattr(v, "item", None)
-    if item is not None and not isinstance(v, (str, bytes)):
-        try:
-            return v.item()
-        except Exception:
-            return v
-    return v
-
-
-_INT_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-
-def _clean_typed(v, t):
-    """Exact scalar extraction when the caller supplies per-row null
-    flags: NaN stays NaN (``str(float('nan')) == 'nan'``, not None), and
-    integer columns that pandas upcast to float64 (because the Arrow
-    batch had nulls elsewhere) come back as Python ints."""
-    if v is None:
-        return None
-    item = getattr(v, "item", None)
-    if item is not None and not isinstance(v, (str, bytes)):
-        try:
-            v = v.item()
-        except Exception:
-            pass
-    if isinstance(t, _INT_TYPES) and isinstance(v, float):
-        return int(v)
-    return v
-
-
 _VARIANT_ARMS = {1: "__vb", 2: "__vi", 3: "__vf", 4: "__vs"}
+# types whose Arrow Python values need _struct_to_tuple
+_WALKED = (T.StructType, T.ArrayType, T.MapType, T.TimestampType)
+# types whose numpy conversion gives to_pylist's exact values, an order
+# of magnitude faster: always (object arrays keep None), or only without
+# nulls (numpy shows a null int or float as NaN)
+_NUMPY_EXACT = (T.StringType, T.BinaryType, T.BooleanType)
+_NUMPY_NO_NULLS = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,
+                   T.DoubleType, T.FloatType)
 
 
 def _struct_to_tuple(v, t: T.DataType):
-    """Arrow hands struct columns to pandas as dicts; the engine's tuple
-    convention (_0.._n fields) must surface as Python tuples in UDFs,
-    and variant structs (compiled mixed-type returns) as the exact
-    per-row Python value."""
-    if (isinstance(t, T.StructType) and t.fields
-            and t.fields[0].name == "__vt"):
-        # the tag picks the arm: a null arm may read NaN, not None
-        arm = _VARIANT_ARMS.get(v.get("__vt")) if v is not None else None
-        f = next((f for f in t.fields if f.name == arm), None)
-        return None if f is None else _struct_to_tuple(v.get(f.name),
-                                                       f.dataType)
-    if (isinstance(t, T.StructType) and len(t.fields) == 1
-            and t.fields[0].name == "__sv"
-            and isinstance(t.fields[0].dataType, T.ArrayType)):
-        # compiled set return (compiler.is_set_struct)
-        if v is None:
-            return None
-        inner = v.get("__sv") if isinstance(v, dict) else v[0]
-        return set(inner) if inner is not None else None
+    """One value as Arrow's ``to_pylist`` hands it over -> the value
+    CPython would see.  Arrow gives structs as dicts, maps as lists of
+    (key, value) pairs and timestamps as UTC-aware datetimes; the
+    engine's tuple convention (_0.._n fields) surfaces as Python tuples,
+    maps as dicts, timestamps as naive datetimes (the session time zone
+    is UTC), and variant structs (compiled mixed-type returns) and set
+    structs as the exact per-row Python value, picked by their tag."""
     if v is None:
         return None
-    if isinstance(t, T.StructType) and isinstance(v, dict):
-        return tuple(_struct_to_tuple(v.get(f.name), f.dataType)
+    if isinstance(t, T.StructType):
+        names = t.fieldNames()
+        if names and names[0] == "__vt":
+            arm = _VARIANT_ARMS.get(v["__vt"])
+            f = next((f for f in t.fields if f.name == arm), None)
+            return None if f is None else _struct_to_tuple(v[arm],
+                                                           f.dataType)
+        if names == ["__sv"] and isinstance(t.fields[0].dataType,
+                                            T.ArrayType):
+            # compiled set return (compiler.is_set_struct)
+            inner = _struct_to_tuple(v["__sv"], t.fields[0].dataType)
+            return None if inner is None else set(inner)
+        return tuple(_struct_to_tuple(v[f.name], f.dataType)
                      for f in t.fields)
-    if isinstance(t, T.ArrayType) and isinstance(v, list):
+    if isinstance(t, T.ArrayType):
         return [_struct_to_tuple(x, t.elementType) for x in v]
-    if isinstance(t, _INT_TYPES) and isinstance(v, float):
-        # pandas upcasts an int field with nulls in the batch to float
-        return int(v)
+    if isinstance(t, T.MapType):
+        return {_struct_to_tuple(k, t.keyType):
+                _struct_to_tuple(x, t.valueType) for k, x in v}
+    if isinstance(t, T.TimestampType):
+        return v.replace(tzinfo=None)
     return v
+
+
+def decode_columns(data, fields: list[str], types: list) -> list[list]:
+    """Columns ``fields`` of an Arrow RecordBatch or Table -> one list of
+    exact Python values per column (None, int, NaN, bytes, ...): the one
+    decoder of every Python-executed row."""
+    cols = []
+    for f, t in zip(fields, types):
+        arr = data.column(f)
+        if isinstance(t, _NUMPY_EXACT) or (isinstance(t, _NUMPY_NO_NULLS)
+                                           and not arr.null_count):
+            vals = arr.to_numpy(zero_copy_only=False).tolist()
+        else:
+            vals = arr.to_pylist()
+            if isinstance(t, _WALKED):
+                vals = [_struct_to_tuple(v, t) for v in vals]
+        cols.append(vals)
+    return cols
+
+
+def encode_column(values: list, t: T.DataType):
+    """Python values already checked by ``_conforms`` -> an Arrow array
+    of Spark type ``t`` (tuples fill structs, NaN stays NaN)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    return pa.array(values, type=to_arrow_type(t))
 
 
 def make_row_runner(fn, in_fields: list[str], in_types: list | None,
                     out_types: list, out_kind: str,
                     out_keys: list | None = None,
                     row_names: list[str] | None = None,
-                    null_flags: dict | None = None,
                     keep: list[str] = (), capture: bool = True):
-    """Build the ``mapInPandas`` function applying ``fn`` row-at-a-time.
+    """Build the ``mapInArrow`` function applying ``fn`` row-at-a-time.
 
     in_fields:  input columns, in row order
     in_types:   their Spark types (struct inputs -> tuples); None means
@@ -337,12 +340,8 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
                 Python TRUTHINESS — a UDF may return any object, e.g. a
                 regex match) | 'pickle' (one pickled-object column)
     row_names:  names for ``x['col']`` access (default: in_fields)
-    null_flags: {in_field: bool_flag_column} — flag is True exactly when
-                the field is NULL, computed JVM-side before the Arrow
-                hand-off.  Disambiguates null from NaN (pandas shows
-                both as NaN in float64) and lets nulls-elsewhere-upcast
-                int columns surface as Python ints again.
-    keep:       columns copied to the output unchanged
+    keep:       columns copied to the output unchanged, as the input
+                batch's own Arrow arrays
     capture:    write each row's exception code to ROW_CODE; without it
                 the first exception fails the task
     """
@@ -351,25 +350,15 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
     arity = arity_of(fn)
     # a pickled object reaches the UDF as itself, never as a named row
     names = None if in_types is None else list(row_names or in_fields)
-    null_flags = null_flags or {}
     n_out = len(out_types)
+    out_names = list(keep) + [out_col(j) for j in range(n_out)] \
+        + ([ROW_CODE] if capture else [])
 
-    def decode(pdf):
+    def decode(batch):
         if in_types is None:
-            return [None if b is None else pickle.loads(bytes(b))
-                    for b in pdf[in_fields[0]]]
-        cols = []
-        for f, t in zip(in_fields, in_types):
-            vals = pdf[f].tolist()
-            flag = null_flags.get(f)
-            if flag is not None:
-                vals = [None if z else _clean_typed(v, t)
-                        for v, z in zip(vals, pdf[flag].tolist())]
-            else:
-                vals = [_clean(v) for v in vals]
-            if isinstance(t, (T.StructType, T.ArrayType)):
-                vals = [_struct_to_tuple(v, t) for v in vals]
-            cols.append(vals)
+            return [None if b is None else pickle.loads(b)
+                    for b in batch.column(in_fields[0]).to_pylist()]
+        cols = decode_columns(batch, in_fields, in_types)
         return cols[0] if len(cols) == 1 else list(zip(*cols))
 
     def encode(r):
@@ -394,13 +383,14 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
         return vals
 
     def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            n = len(pdf)
-            gate = pdf[GATE].tolist() if GATE in pdf.columns else None
+        import pyarrow as pa
+        for batch in batches:
+            n = batch.num_rows
+            gate = decode_columns(batch, [GATE], [T.BooleanType()])[0] \
+                if GATE in batch.schema.names else None
             outs = [[None] * n for _ in range(n_out)]
             codes = [0] * n
-            for i, row in enumerate(decode(pdf)):
+            for i, row in enumerate(decode(batch)):
                 if gate is not None and not gate[i]:
                     continue
                 try:
@@ -412,10 +402,11 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
                     continue
                 for col, v in zip(outs, vals):
                     col[i] = v
-            data = {f: pdf[f] for f in keep}
-            data.update((out_col(j), col) for j, col in enumerate(outs))
+            arrays = [batch.column(f) for f in keep]
+            arrays += [encode_column(col, t)
+                       for col, t in zip(outs, out_types)]
             if capture:
-                data[ROW_CODE] = codes
-            yield pd.DataFrame(data)
+                arrays.append(pa.array(codes, type=pa.int32()))
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return run
