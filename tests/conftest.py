@@ -32,10 +32,10 @@ def ctx_interp(ctx):
                       spark=ctx.spark)
 
 
-def cpython_reference(data, fn, columns=None, op="map", by_class=False):
+def cpython_reference(data, fn, columns=None, op="map"):
     """Run the same UDF through plain CPython (the reference's differential
-    pattern, e.g. test_fallback.py) — returns (results, n_exceptions), or
-    (results, {exception class: count}) with ``by_class``."""
+    pattern, e.g. test_fallback.py) — returns (results, {exception class:
+    count})."""
     from collections import Counter
     from tuplex_spark.udf.fallback import _apply
     out, excs = [], Counter()
@@ -51,7 +51,7 @@ def cpython_reference(data, fn, columns=None, op="map", by_class=False):
                 out.append(row)
         else:
             out.append(r)
-    return out, (dict(excs) if by_class else sum(excs.values()))
+    return out, dict(excs)
 
 
 def _approx_eq(a, b, rel=1e-12):
@@ -80,7 +80,8 @@ def run_diff(ctx, data, fn, columns=None, op="map", expect_compiled=None):
     elif expect_compiled is False:
         assert ctx.metrics.compiledUDFs == before
     got = out_ds.collect()
-    want, n_exc = cpython_reference(data, fn, columns, op)
+    want, excs = cpython_reference(data, fn, columns, op)
+    n_exc = sum(excs.values())
     norm = [tuple(w) if isinstance(w, (list, tuple)) else w for w in want]
     if want and isinstance(want[0], dict):
         norm = [tuple(w.values()) for w in want]
@@ -98,7 +99,7 @@ def run_diff3(ctx, ctx_interp, data, fn, columns=None, op="map",
     """run_diff three ways: the compiled path (``ctx``), the interpreter
     path (``ctx_interp``) and CPython must agree on rows and on
     ``exception_counts`` per exception class."""
-    want = cpython_reference(data, fn, columns, op, by_class=True)[1]
+    want = cpython_reference(data, fn, columns, op)[1]
     for c, exp in ((ctx, expect_compiled), (ctx_interp, False)):
         got = run_diff(c, data, fn, columns, op, exp).exception_counts
         assert got == want, f"exception counts: engine={got} want={want}"

@@ -3661,7 +3661,7 @@ class Translator:
         if isinstance(base, SDict) and node.attr in base.items:
             return base.items[node.attr]
         if isinstance(base, SCol) and base.tag in ("timestamp", "date"):
-            self._guard_nulls(base, exc="AttributeError")  # None.year
+            base = self._deref(base, "AttributeError")  # None.year
             fld = {"year": F.year, "month": F.month, "day": F.day,
                    "hour": F.hour, "minute": F.minute, "second": F.second}
             if node.attr in fld:
@@ -3824,7 +3824,7 @@ class Translator:
                     [(k, SConst(v)) for k, v in base.value.items()], idx)
             base = SCol(F.lit(base.value), base.tag, False)
         if isinstance(base, SCol):
-            self._guard_nulls(base)  # None[i] is a TypeError
+            base = self._deref(base)  # None[i] is a TypeError
             if base.tag == "str":
                 i = self.to_col(self.num(idx, "string index"))
                 L = F.length(base.col)
@@ -3866,7 +3866,7 @@ class Translator:
             raise CompileError("tuple slice step")
         if not isinstance(base, SCol) or base.tag not in ("str", "array"):
             raise CompileError(f"slice on {base.tag}")
-        self._guard_nulls(base)  # None[a:b] is a TypeError
+        base = self._deref(base)  # None[a:b] is a TypeError
         # int steps compile, both signs, constant or DYNAMIC.  k > 1
         # keeps every k-th element of the contiguous [lo:hi] segment;
         # k < 0 maps to a positive-step slice of reverse(s): index
@@ -4352,10 +4352,19 @@ class Translator:
                 else F.concat(pad, body)
         return body
 
-    def _guard_nulls(self, *syms, msg=None, exc="TypeError"):
+    def _guard_nulls(self, *syms, msg=None):
         for s in syms:
             if isinstance(s, SCol) and s.nullable:
-                self.guard(s.col.isNull(), exc, msg=msg)
+                self.guard(s.col.isNull(), "TypeError", msg=msg)
+
+    def _deref(self, s: Sym, exc: str = "TypeError") -> Sym:
+        """Guard a None receiver (CPython raises ``exc``).  Past the
+        guard the value is never None, so later ops on it need no null
+        guard of their own."""
+        if not (isinstance(s, SCol) and s.nullable and self.with_guards):
+            return s
+        self.guard(s.col.isNull(), exc)
+        return SCol(s.col, s.tag, False, s.elem)
 
     def _ev_UnaryOp(self, node):
         v = self.eval(node.operand)
@@ -6649,7 +6658,7 @@ class Translator:
                                  and isinstance(base.value, str)):
             return self._str_method(base, name, args)
         if base.tag in ("array", "map"):  # None.get(...)
-            self._guard_nulls(base, exc="AttributeError")
+            base = self._deref(base, "AttributeError")
         if base.tag == "array":
             return self._list_method(base, name, args)
         if base.tag == "map" or isinstance(base, SDict):
@@ -6717,10 +6726,9 @@ class Translator:
         return win, lo, adj_start
 
     def _str_method(self, base: Sym, name: str, args: list[Sym]) -> Sym:
+        base = self._deref(base, "AttributeError")
         c = self.to_col(base)
         nullable = base.nullable
-        if nullable and self.with_guards:
-            self.guard(c.isNull(), "AttributeError")
 
         def const_arg(i, types=(str,)):
             if i >= len(args) or not isinstance(args[i], SConst) \
