@@ -4358,9 +4358,8 @@ class Translator:
                 self.guard(s.col.isNull(), "TypeError", msg=msg)
 
     def _deref(self, s: Sym, exc: str = "TypeError") -> Sym:
-        """Guard a None receiver (CPython raises ``exc``).  Past the
-        guard the value is never None, so later ops on it need no null
-        guard of their own."""
+        """Guard a None receiver (CPython raises ``exc``): past the guard
+        the value is never None, so later ops need no guard of their own."""
         if not (isinstance(s, SCol) and s.nullable and self.with_guards):
             return s
         self.guard(s.col.isNull(), exc)
@@ -5646,9 +5645,7 @@ class Translator:
             return SConst(None)
         if a.tag not in ("int", "bool"):
             raise CompileError(f"chr({a.tag})")
-        c = self.to_col(a).cast("long")
-        if a.nullable:
-            self.guard(c.isNull(), "TypeError")
+        c = self.to_col(self._deref(a)).cast("long")
         self._guard_chr_range(c, "ValueError",
                               "chr() arg not in range(0x110000)")
         return SCol(self._chr_col(c), "str")

@@ -263,12 +263,10 @@ _NUMPY_NO_NULLS = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,
 
 def _struct_to_tuple(v, t: T.DataType):
     """One value as Arrow's ``to_pylist`` hands it over -> the value
-    CPython would see.  Arrow gives structs as dicts, maps as lists of
-    (key, value) pairs and timestamps as UTC-aware datetimes; the
-    engine's tuple convention (_0.._n fields) surfaces as Python tuples,
-    maps as dicts, timestamps as naive datetimes (the session time zone
-    is UTC), and variant structs (compiled mixed-type returns) and set
-    structs as the exact per-row Python value, picked by their tag."""
+    CPython would see: structs (dicts) become tuples, maps (lists of
+    pairs) dicts, UTC-aware timestamps naive datetimes (the session time
+    zone is UTC); variant and set structs (compiled mixed-type and set
+    returns) become the exact per-row Python value, picked by tag."""
     if v is None:
         return None
     if isinstance(t, T.StructType):
@@ -297,8 +295,7 @@ def _struct_to_tuple(v, t: T.DataType):
 
 def decode_columns(data, fields: list[str], types: list) -> list[list]:
     """Columns ``fields`` of an Arrow RecordBatch or Table -> one list of
-    exact Python values per column (None, int, NaN, bytes, ...): the one
-    decoder of every Python-executed row."""
+    exact Python values per column: the one decoder of Python rows."""
     cols = []
     for f, t in zip(fields, types):
         arr = data.column(f)
