@@ -8,10 +8,11 @@ compile runs through ``make_row_runner``: the original function object
 is cloudpickled into one ``mapInArrow`` stage and applied row-at-a-time.
 Arrow is the only way Python-executed rows cross the boundary.
 
-- input: ``decode_columns`` turns each input column's ``to_pylist()``
-  into the exact values CPython would see (None stays None, NaN stays
-  NaN, ints stay ints, structs become tuples, maps dicts, timestamps
-  naive datetimes), or unpickles one pickled-object column;
+- input: ``decode_columns`` turns each input column (``to_pylist()``,
+  or numpy where that gives the same values) into the exact values
+  CPython would see (None stays None, NaN stays NaN, ints stay ints,
+  structs become tuples, maps dicts, timestamps naive datetimes), or
+  unpickles one pickled-object column;
 - output: results are checked by ``_conforms`` — a value that misfits
   the declared type becomes a NormalCaseViolation row — and built into
   Arrow arrays of the Spark output type (``encode_column``), or pickled;
