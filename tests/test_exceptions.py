@@ -2,7 +2,13 @@
 in-order merge (reference: test_exceptions.py, test_resolve.py)."""
 
 import hashlib
+import itertools
+import json
+import os
 import re
+import subprocess
+import sys
+import textwrap
 
 from tuplex_spark.plans.inspect import explain_summary, formatted_plan
 
@@ -196,7 +202,7 @@ class TestMajorityTypeVoting:
     BadParallelizeInput (reference normalcaseThreshold semantics,
     FileInputOperator.cc:229-299 — the reference additionally re-runs
     violators through the pipeline's interpreter path; here they are
-    counted and excluded, recoverable via the quarantine payload)."""
+    counted and excluded)."""
 
     def test_minority_string_is_the_violation(self, ctx):
         ds = ctx.parallelize([0, "e1", 0]).filter(lambda x: x != 0)
@@ -302,3 +308,224 @@ class TestResolveWithRound2Shapes:
                 return res(s)
         assert ds.collect() == [ref(s) for s in data]
         assert ds.exception_counts == {}
+
+
+_GROUPS = itertools.count()
+EXACT = "exception_counts exact pass"
+
+
+def _job_labels(ctx, action):
+    """Run ``action`` in a job group of its own; returns the description
+    of every Spark job it started."""
+    sc = ctx.spark.sparkContext
+    group = f"test-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "action")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    labels = []
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        d = store.job(job).description()
+        labels.append(d.get() if d.isDefined() else None)
+    return labels
+
+
+def _exact_passes(labels):
+    return [x for x in labels if x and x.startswith(EXACT)]
+
+
+def _failing(ctx, n=40, m=5):
+    """``n`` rows, of which those with ``k % m == 0`` raise
+    ZeroDivisionError."""
+    return ctx.parallelize([(k, k % m) for k in range(n)], ["k", "d"]) \
+        .withColumn("q", lambda x: 10 // x["d"])
+
+
+def _right(ctx):
+    return ctx.parallelize([(k, f"v{k}") for k in range(0, 40, 2)],
+                           ["k", "v"])
+
+
+class TestOnePassCounts:
+    """``collect`` reads exception counts from the observed metrics of
+    the job that produces its rows.  Counts are exact, and the exact
+    ``groupBy`` pass runs only where no action job observes a split
+    completely: take(n)/limit, orderBy, an eager fold, and a split whose
+    observed node AQE dropped from the executed plan."""
+
+    def _counts(self, ctx, ds, exact: bool, action=None):
+        labels = _job_labels(ctx, action or ds.collect)
+        assert bool(_exact_passes(labels)) == exact, labels
+        return ds.exception_counts
+
+    def test_join_counts_in_the_collect_job(self, ctx):
+        j = _failing(ctx).join(_right(ctx), "k", "k")
+        assert self._counts(ctx, j, False) == {"ZeroDivisionError": 8}
+
+    def test_repeated_collect(self, ctx):
+        j = _failing(ctx).join(_right(ctx), "k", "k")
+        for _ in range(3):
+            assert len(j.collect()) == 16
+            assert j.exception_counts == {"ZeroDivisionError": 8}
+        ds = _failing(ctx)
+        for _ in range(2):
+            assert len(ds.collect()) == 32
+            assert ds.exception_counts == {"ZeroDivisionError": 8}
+
+    def test_cache_after_join(self, ctx):
+        j = _failing(ctx).join(_right(ctx), "k", "k").cache()
+        assert self._counts(ctx, j, False) == {"ZeroDivisionError": 8}
+        assert len(j.collect()) == 16
+
+    def test_self_union_counts_both_sides(self, ctx):
+        ds = _failing(ctx)
+        u = ds.union(ds)
+        assert self._counts(ctx, u, False) == {"ZeroDivisionError": 16}
+        j = _failing(ctx).join(_right(ctx), "k", "k")
+        assert self._counts(ctx, j.union(j), False) == \
+            {"ZeroDivisionError": 16}
+
+    def test_exceptions_on_the_right_side(self, ctx):
+        right = ctx.parallelize([(k, k % 4) for k in range(40)],
+                                ["k", "e"]) \
+            .withColumn("w", lambda x: 7 // x["e"])
+        j = _right(ctx).join(right, "k", "k")
+        assert self._counts(ctx, j, False) == {"ZeroDivisionError": 10}
+        assert len(j.collect()) == 10
+
+    def test_inner_join_with_an_empty_side(self, ctx):
+        empty = ctx.parallelize([(1, "a")], ["k", "v"]) \
+            .filter(lambda r: r["k"] > 5)
+        j = _failing(ctx).join(empty, "k", "k")
+        assert self._counts(ctx, j, True) == {"ZeroDivisionError": 8}
+        assert j.collect() == []
+
+    def test_every_row_fails_before_a_join(self, ctx):
+        j = _failing(ctx, m=1).join(_right(ctx), "k", "k")
+        assert self._counts(ctx, j, True) == {"ZeroDivisionError": 40}
+        assert j.collect() == []
+
+    def test_take_counts_the_whole_input(self, ctx):
+        ds = _failing(ctx, 45, 3)
+        assert self._counts(ctx, ds, True, lambda: ds.take(2)) == \
+            {"ZeroDivisionError": 15}
+        j = _failing(ctx, 45, 3).join(_right(ctx), "k", "k")
+        assert self._counts(ctx, j, True, lambda: j.take(1)) == \
+            {"ZeroDivisionError": 15}
+
+    def test_limit_counts_the_whole_input(self, ctx):
+        ds = _failing(ctx, 45, 3).limit(3)
+        assert self._counts(ctx, ds, True) == {"ZeroDivisionError": 15}
+        assert len(ds.collect()) == 3
+
+    def test_unique(self, ctx):
+        ds = _failing(ctx).selectColumns(["d", "q"]).unique()
+        assert self._counts(ctx, ds, False) == {"ZeroDivisionError": 8}
+        assert sorted(ds.collect()) == [(1, 10), (2, 5), (3, 3), (4, 2)]
+
+    def test_order_by(self, ctx):
+        # the sort's range partitioner reads the split twice
+        ds = _failing(ctx).orderBy("k")
+        assert self._counts(ctx, ds, True) == {"ZeroDivisionError": 8}
+        assert [r[0] for r in ds.collect()] == \
+            [k for k in range(40) if k % 5]
+
+    def test_keyed_slot_aggregate(self, ctx):
+        ds = _failing(ctx).aggregateByKey(
+            lambda a, b: a + b, lambda a, x: a + x["q"], 0, ["d"])
+        assert self._counts(ctx, ds, False) == {"ZeroDivisionError": 8}
+        assert sorted(ds.collect()) == [(1, 80), (2, 40), (3, 24),
+                                        (4, 16)]
+
+    def test_generic_fold_without_key(self, ctx):
+        ds = _failing(ctx).aggregate(
+            lambda a, b: a + b, lambda a, x: a * 1 + x["q"] % 7, 0)
+        assert self._counts(ctx, ds, True) == {"ZeroDivisionError": 8}
+        assert ds.collect() == [8 * (3 + 5 + 3 + 2)]
+
+    def test_collect_runs_no_more_jobs_than_the_clean_rows(self, ctx):
+        j = (_failing(ctx).join(_right(ctx), "k", "k")
+             .withColumn("r", lambda x: 100 // (x["k"] % 3)))
+        clean = len(_job_labels(ctx, lambda: j.toDF().collect()))
+        assert len(_job_labels(ctx, j.collect)) <= clean
+        assert j.exception_counts == {"ZeroDivisionError": 13}
+
+    def test_dirty_parallelize_parks_a_count(self, ctx):
+        ds = ctx.parallelize([1, 2, "x", 4, "y"]).map(lambda x: x * 10)
+        clean = len(_job_labels(ctx, lambda: ds.toDF().collect()))
+        assert len(_job_labels(ctx, ds.collect)) == clean
+        assert ds.exception_counts == {"BadParallelizeInput": 2}
+        assert ds.collect() == [10, 20, 40]
+
+
+_RETRY_SCRIPT = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+import tuplex_spark as tx
+
+def first_attempt_dies(x):
+    from pyspark import TaskContext
+    tc = TaskContext.get()
+    if tc is not None and tc.attemptNumber() == 0:
+        os._exit(1)
+    return 10 // x
+
+data = [k % 5 for k in range(40)]
+want = {}
+for x in data:
+    try:
+        first_attempt_dies(x)
+    except Exception as e:
+        want[type(e).__name__] = want.get(type(e).__name__, 0) + 1
+spark = (SparkSession.builder.master("local[4,2]")
+         .config("spark.driver.memory", "1g")
+         .config("spark.sql.ansi.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+sc = spark.sparkContext
+c = tx.Context(spark=spark)
+ds = c.parallelize(data, columns=["x"]).map(first_attempt_dies)
+out = {"want": want, "fallback": c.metrics.fallbackUDFs}
+sc.setJobGroup("retry", "retry")
+out["rows"] = sorted(ds.collect())
+out["counts"] = ds.exception_counts
+u = ds.unique()
+out["unique_rows"] = sorted(u.collect())
+out["unique_counts"] = u.exception_counts
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+st = sc.statusTracker()
+out["failed_tasks"] = sum(
+    st.getStageInfo(s).numFailedTasks
+    for j in st.getJobIdsForGroup("retry")
+    for s in st.getJobInfo(j).stageIds if st.getStageInfo(s))
+spark.stop()
+print("RESULT " + json.dumps(out))
+"""
+
+
+def test_retried_tasks_are_counted_once(tmp_path):
+    """Under local[4,2] every task of the interpreted UDF dies on its
+    first attempt and succeeds on the retry: the observed counts must
+    not include the failed attempts."""
+    script = tmp_path / "retry.py"
+    script.write_text(textwrap.dedent(_RETRY_SCRIPT))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, str(script), root],
+                          capture_output=True, text=True, timeout=600,
+                          cwd=str(tmp_path))
+    line = [x for x in proc.stdout.splitlines() if x.startswith("RESULT ")]
+    assert line, proc.stdout[-2000:] + proc.stderr[-4000:]
+    out = json.loads(line[-1][len("RESULT "):])
+    assert out["fallback"] == 1
+    assert out["failed_tasks"] > 0
+    assert out["want"] == {"ZeroDivisionError": 8}
+    assert out["counts"] == out["want"]
+    assert out["unique_counts"] == out["want"]
+    assert out["rows"] == sorted(10 // (k % 5) for k in range(40) if k % 5)
+    assert out["unique_rows"] == [2, 3, 5, 10]

@@ -264,14 +264,8 @@ class Context:
             df, extra_bad = self._parallelize_lenient(data, sschema)
             bad += extra_bad
         cols = [f.name for f in sschema.fields]
-        parked = []
-        if bad:
-            code = code_for("BadParallelizeInput")
-            bad_rows = [(code, json.dumps({"row": list(r) if isinstance(
-                r, tuple) else r}, default=str), "parallelize")
-                for r in bad]
-            parked = [self.spark.createDataFrame(
-                bad_rows, "code int, payload string, op string")]
+        # the rejected rows never reach Spark: park their known count
+        parked = [{"BadParallelizeInput": len(bad)}] if bad else []
         return DataSet(self, df, cols, sample=good[:_SAMPLE_ROWS],
                        parked=parked)
 
@@ -398,23 +392,27 @@ class Context:
         if schema is not None:
             reader = reader.schema(schema)
         df = reader.json(pattern)
-        bad = None
-        if "_corrupt_record" in df.columns:
-            cached = df.cache()
-            bad = cached.filter(F.col("_corrupt_record").isNotNull()) \
-                .select("_corrupt_record")
-            df = cached.filter(F.col("_corrupt_record").isNull()) \
-                .drop("_corrupt_record")
-        if columns:
-            df = df.toDF(*columns)
-        parked = []
-        if bad is not None:
-            code = code_for("BadParseInput")
-            parked = [bad.select(F.lit(code).alias("code"),
-                                 F.col("_corrupt_record").alias("payload"),
-                                 F.lit("json").alias("op"))]
-        return DataSet(self, df, df.columns,
-                       sample=self._sample_from_df(df), parked=parked)
+        if "_corrupt_record" not in df.columns:
+            if columns:
+                df = df.toDF(*columns)
+            return DataSet(self, df, df.columns,
+                           sample=self._sample_from_df(df))
+        # malformed records travel as failed rows, like bad CSV cells;
+        # the rows are cached because a query on raw JSON may not read
+        # only the corrupt-record column
+        cached = df.cache()
+        clean = cached.drop("_corrupt_record")
+        names = clean.toDF(*columns).columns if columns else clean.columns
+        bad = F.col("_corrupt_record").isNotNull()
+        df = cached.select(
+            *[F.col(c).alias(n) for c, n in zip(clean.columns, names)],
+            F.when(bad, code_for("BadParseInput")).otherwise(0)
+            .cast("int").alias(EXC_CODE),
+            F.when(bad, F.col("_corrupt_record")).alias(EXC_PAYLOAD),
+            F.when(bad, F.lit("json")).alias(EXC_OP))
+        sample = self._sample_from_df(
+            df.filter(F.col(EXC_CODE) == 0).select(*names))
+        return DataSet(self, df, names, sample=sample)
 
     def table(self, name: str, columns=None) -> DataSet:
         """Catalog table source — the read side of bucketed

@@ -28,11 +28,26 @@ Execution model (Spark-first, not a port):
   pipeline has no fallible operator the hidden columns are never
   materialized — the plan is indistinguishable from hand-written
   DataFrame code.
+- exception counts come from the job that produces an action's rows.
+  Each split point (join, unique, set ops, orderBy, limit, aggregates,
+  the action itself) parks its failed rows as a named
+  ``DataFrame.observe`` of one ``count_if`` per exception class, and the
+  action reads the counts from its own query's observed metrics.  One
+  exact ``groupBy`` pass over the codes of every split that no
+  action job observes completely runs only when the action stops early
+  (take(n), limit), a sort or an eager fold consumed the split, or AQE
+  dropped the observed node from the executed plan.  Writers, show and
+  toDF report no counts and split without observing.
 """
 
 from __future__ import annotations
 
+import itertools as _itertools
+import json as _json
 import re as _re
+from collections import Counter as _Counter
+from functools import reduce as _reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -52,6 +67,31 @@ _PAYLOAD_JSON = {
     "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
     "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
 }
+
+
+class _Split(NamedTuple):
+    """Failed rows parked at one split point.  The observation ``name``
+    counts them per exception class in the job that consumes the split;
+    ``frame`` (visible columns and the code) is what the exact pass
+    counts when no action job observes all of it (``exact`` says why)."""
+    name: str
+    frame: DataFrame
+    exact: str | None = None
+
+
+_SPLIT_IDS = _itertools.count()
+
+# the per-class counts a split observes, as one SQL struct (one py4j
+# call, where a count_if Column per class takes ~150)
+_COUNTS = "struct(" + ", ".join(
+    f"count_if(`{EXC_CODE}` = {c}) AS {cls}"
+    for cls, c in E._CODES.items()) + ")"
+
+
+def _exact(parked, why: str):
+    """``parked`` with every observed split sent to the exact pass."""
+    return [p._replace(exact=why) if isinstance(p, _Split) and not p.exact
+            else p for p in parked]
 
 
 class UDFOpInfo:
@@ -203,8 +243,8 @@ class DataSet:
         self._columns = list(columns)
         self._pyobj = pyobj  # PYOBJECT mode: rows are pickled objects
         self._sample = sample if sample is not None else []
-        # quarantined exception rows cut off at relational boundaries
-        # (join/aggregate/unique): list of DataFrames (code, payload, op)
+        # failed rows cut off at split points (join/aggregate/unique/...):
+        # _Split entries, or {class: count} dicts a source knows already
         self._parked = list(parked or [])
         self._last_op = last_op  # UDFOpInfo of the last resolvable op
         self._op_seq = op_seq
@@ -586,16 +626,21 @@ class DataSet:
     def orderBy(self, *cols, ascending: bool = True) -> "DataSet":
         """Total sort (Spark range-partitions on sampled bounds — scales
         to arbitrary data; output order is the contract, so exception
-        rows are split out first)."""
+        rows are split out first).  The range partitioner samples its
+        input in a job of its own, which would count the rows of an
+        observed split in the same stage twice: exact counts instead."""
         df, parked = self._split_exceptions()
         names = [c for c in cols] or list(self._columns)
         return self._spawn(df.orderBy(*names, ascending=ascending),
-                           parked=parked)
+                           parked=_exact(parked, "orderBy samples its "
+                                                 "input twice"))
 
     def limit(self, n: int) -> "DataSet":
-        """First n rows as a TRANSFORM (take(n) is the action variant)."""
+        """First n rows as a TRANSFORM (take(n) is the action variant).
+        The limit stops reading early, so counts are exact, over the
+        whole input."""
         df, parked = self._split_exceptions()
-        return self._spawn(df.limit(n), parked=parked)
+        return self._spawn(df.limit(n), parked=_exact(parked, "limit"))
 
     def union(self, other: "DataSet") -> "DataSet":
         """Bag union by column NAME (both sides keep their exception
@@ -623,15 +668,22 @@ class DataSet:
 
     # ---------------------------------------------------------- exceptions
     def _split_exceptions(self):
-        """Move failed rows out of the frame into the parked list."""
+        """Move failed rows out of the frame into the parked list.  The
+        frame, pruned to the visible columns and the code (so no payload
+        is built), is observed under a fresh name with one ``count_if``
+        per exception class: the job that consumes the clean rows counts
+        the failed ones.  Where no job of the action observes the whole
+        split (take(n), limit, orderBy, an eager fold, or AQE dropping the
+        node), the action counts the pruned frame in one exact pass
+        instead.  Returns (clean frame, parked list)."""
         if not self._has_exc:
             return self._df, list(self._parked)
-        df = self._df
-        bad = df.filter(F.col(EXC_CODE) != 0).select(
-            F.col(EXC_CODE).alias("code"), F.col(EXC_PAYLOAD).alias("payload"),
-            F.col(EXC_OP).alias("op"))
-        good = df.filter(F.col(EXC_CODE) == 0).select(*self._columns)
-        return good, list(self._parked) + [bad]
+        code = F.col(EXC_CODE)
+        pruned = self._df.select(*self._columns, code)
+        name = f"tuplex_exceptions_{next(_SPLIT_IDS)}"
+        observed = pruned.observe(name, F.expr(_COUNTS).alias("counts"))
+        good = observed.filter(code == 0).select(*self._columns)
+        return good, list(self._parked) + [_Split(name, pruned)]
 
     def resolve(self, exc_class, ftor) -> "DataSet":
         """Re-run rows that raised ``exc_class`` in the preceding operator
@@ -726,17 +778,42 @@ class DataSet:
         (reference: dataset.py:706)."""
         return dict(self._exception_counts)
 
-    def _collect_exception_counts(self):
-        counts: dict[str, int] = {}
-        frames = list(self._parked)
-        if self._has_exc:
-            frames.append(self._df.filter(F.col(EXC_CODE) != 0).select(
-                F.col(EXC_CODE).alias("code")))
-        for fr in frames:
-            for row in fr.groupBy("code").count().collect():
-                name = E.name_for_code(row["code"])
-                counts[name] = counts.get(name, 0) + row["count"]
-        self._exception_counts = counts
+    def _collect_exception_counts(self, df, parked):
+        """Exception counts of an action that ran ``df``: each parked
+        split's counts come from ``df``'s observed metrics.  The splits
+        no job of the action observed completely are counted in one
+        exact job grouping their codes, labelled with the reason."""
+        counts = _Counter()
+        observed = None
+        exact, why = [], {}
+        for p in parked:
+            if isinstance(p, dict):
+                counts.update(p)
+                continue
+            if not p.exact:
+                if observed is None:
+                    observed = df._jdf.queryExecution().observedMetrics()
+                row = observed.get(p.name)
+                if row.isDefined():
+                    counts.update(_json.loads(row.get().json())["counts"])
+                    continue
+            exact.append(p.frame.select(EXC_CODE))
+            why[p.exact or "observation not in the executed plan"] = None
+        if exact:
+            sc = self._ctx.spark.sparkContext
+            prev = sc.getLocalProperty("spark.job.description")
+            sc.setLocalProperty("spark.job.description",
+                                "exception_counts exact pass: "
+                                + "; ".join(why))
+            try:
+                rows = _reduce(DataFrame.union, exact) \
+                    .groupBy(EXC_CODE).count().collect()
+            finally:
+                sc.setLocalProperty("spark.job.description", prev)
+            for code, n in rows:
+                if code:
+                    counts[E.name_for_code(code)] += n
+        self._exception_counts = {c: n for c, n in counts.items() if n}
 
     # -------------------------------------------------------------- joins
     def join(self, right: "DataSet", leftKeyColumn: str,
@@ -808,9 +885,11 @@ class DataSet:
         return [_py_type(f.dataType, f.nullable) for f in s.fields]
 
     def toDF(self) -> DataFrame:
-        """The clean Spark DataFrame (escape hatch; failed rows removed)."""
-        df, _ = self._split_exceptions()
-        return df
+        """The clean Spark DataFrame (escape hatch; failed rows removed).
+        It reports no counts, so it splits without observing."""
+        if not self._has_exc:
+            return self._df
+        return self._df.filter(F.col(EXC_CODE) == 0).select(*self._columns)
 
     def createOrReplaceTempView(self, name: str) -> None:
         """Register the clean rows as a session temp view for
@@ -825,9 +904,13 @@ class DataSet:
         import time as _time
         t0 = _time.time()
         df, parked = self._split_exceptions()
-        self._parked_for_counts = parked
-        rows = df.collect() if nmax is None or nmax < 0 else df.take(nmax)
-        self._collect_exception_counts()
+        if nmax is None or nmax < 0:
+            rows = df.collect()
+        else:
+            # the reference runs the whole input for take: exact counts
+            rows = df.take(nmax)
+            parked = _exact(parked, "take(n)")
+        self._collect_exception_counts(df, parked)
         m = self._ctx._metrics
         m.totalRunTime += _time.time() - t0
         m.numActions += 1
@@ -842,8 +925,7 @@ class DataSet:
         return [tuple(_py_value(v) for v in r) for r in rows]
 
     def show(self, nrows: int = None):
-        df, _ = self._split_exceptions()
-        df.show(nrows if nrows else 20)
+        self.toDF().show(nrows if nrows else 20)
 
     def tocsv(self, path: str, header: bool = True, null_value: str = "",
               part_name_generator=None, **kwargs):
@@ -857,7 +939,7 @@ class DataSet:
         part_name_generator(part_no) -> custom part file names applied by
         post-hoc rename (Spark has no naming hook; same caveat as the
         reference's callback, which names parts by output task)."""
-        df, _ = self._split_exceptions()
+        df = self.toDF()
         if isinstance(header, list):
             if len(header) != len(self._columns):
                 raise ValueError(
@@ -898,7 +980,7 @@ class DataSet:
                     _os.remove(crc)
 
     def toorc(self, path: str, **kwargs):
-        df, _ = self._split_exceptions()
+        df = self.toDF()
         n = kwargs.get("num_parts")
         if n:
             df = df.repartition(n)
@@ -908,7 +990,7 @@ class DataSet:
         """JSON-lines sink (write side of Context.json) — the
         training-data interchange format; one JSON object per line,
         Spark-native writer (beyond the reference's csv/orc pair)."""
-        df, _ = self._split_exceptions()
+        df = self.toDF()
         n = kwargs.get("num_parts")
         if n:
             df = df.repartition(n)
@@ -934,7 +1016,7 @@ class DataSet:
         column skip whole row groups — the cheap cousin of directory
         partitioning for high-cardinality columns (was silently ignored
         in the non-bucketed path before round 7)."""
-        df, _ = self._split_exceptions()
+        df = self.toDF()
         n = kwargs.get("num_parts")
         if n:
             df = df.repartition(n)

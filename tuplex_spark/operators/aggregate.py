@@ -184,7 +184,7 @@ def _slot_agg_col(slot: _Slot, name: str):
 
 
 def aggregate_general(ds, combine, aggregate, initial_value, keys):
-    from ..dataset import DataSet, _py_value
+    from ..dataset import DataSet, _exact, _py_value
 
     df, parked = ds._split_exceptions()
     schema = ds._schema_of_visible()
@@ -210,6 +210,9 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
     if keys:
         return _fold_by_key(ds, df, parked, combine, aggregate,
                             initial_value, keys, schema, out_names)
+    # the fold runs now, in a job of its own: no action job observes
+    # the splits it consumes
+    parked = _exact(parked, "an eager fold consumed the split")
     cols0 = [f.name for f in schema.fields]
     vals = df.rdd.map(lambda r: tuple(map(_py_value, r)) if len(r) > 1
                       else _py_value(r[0]))
