@@ -10,7 +10,11 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+from pyspark.sql import types as T
+
 from tuplex_spark.plans.inspect import explain_summary, formatted_plan
+from tuplex_spark.typeutils import conforms, super_type
 
 
 class TestImplicitDrop:
@@ -224,6 +228,129 @@ class TestMajorityTypeVoting:
                              columns=["n", "s"])
         assert ds.collect() == [(1, "a"), (2, "b")]
         assert ds.exception_counts.get("BadParallelizeInput") == 1
+
+
+_L, _D, _B, _S = T.LongType(), T.DoubleType(), T.BooleanType(), \
+    T.StringType()
+
+
+def _st(*types):
+    return T.StructType([T.StructField(f"_{i}", t, True)
+                         for i, t in enumerate(types)])
+
+
+_VARIANT = T.StructType([T.StructField(n, t, True) for n, t in
+                         [("__vt", T.IntegerType()), ("__vi", _L),
+                          ("__vs", _S)]])
+
+# (a, b, super_type(a, b)): None means no common type, never string
+_SUPER_TYPES = [
+    (_L, _L, _L), (_B, _L, _L), (_L, _D, _D), (_B, _D, _D),
+    (_S, _S, _S), (T.NullType(), _S, _S), (_L, _S, None),
+    (_B, _S, None), (T.BinaryType(), _S, None),
+    (T.ArrayType(_L), T.ArrayType(_D), T.ArrayType(_D)),
+    (T.ArrayType(_L), T.ArrayType(_S), None),
+    (T.MapType(_S, _L), T.MapType(_S, _B), T.MapType(_S, _L)),
+    (T.MapType(_S, _L), T.MapType(_S, _S), None),
+    (_st(_L, _S), _st(_D, _S), _st(_D, _S)),
+    (_st(_L, _S), _st(_S, _S), None),
+    (_st(_L), _st(_L, _L), None),
+]
+
+# (value, type, conforms(value, type))
+_CONFORMS = [
+    (None, _L, True), (True, _B, True), (1, _B, False),
+    (True, _L, True), (1, _D, True), (1.5, _L, False), ("a", _L, False),
+    (2 ** 63 - 1, _L, True), (2 ** 63, _L, False),
+    (-2 ** 63, _L, True), (-2 ** 63 - 1, _L, False),
+    (2 ** 63, _D, False),
+    ([1, 2], T.ArrayType(_L, False), True),
+    ([1, "z"], T.ArrayType(_L), False),
+    ([1, None], T.ArrayType(_L, False), False),
+    ([1, None], T.ArrayType(_L, True), True),
+    ([[1], [2 ** 63]], T.ArrayType(T.ArrayType(_L)), False),
+    ({"a": 1}, T.MapType(_S, _L), True),
+    ({"a": "b"}, T.MapType(_S, _L), False),
+    ({1: 1}, T.MapType(_S, _L), False),
+    ((1, "a"), _st(_L, _S), True),
+    ((1, 2), _st(_L, _S), False),
+    ((1,), _st(_L, _S), False),
+    ("s", _VARIANT, True), (3, _VARIANT, True), (1.5, _VARIANT, False),
+]
+
+
+class TestOneLattice:
+    """One lattice types every sampled value (typeutils): a pair with no
+    common type is a violation or a variant, never a string; every
+    value written is checked against its type, nested values too."""
+
+    @pytest.mark.parametrize("a, b, want", _SUPER_TYPES)
+    def test_super_type(self, a, b, want):
+        assert super_type(a, b) == want
+        assert super_type(b, a) == want
+
+    @pytest.mark.parametrize("v, t, want", _CONFORMS)
+    def test_conforms(self, v, t, want):
+        assert conforms(v, t) is want
+
+    def test_mixed_family_lists_are_violations(self, ctx):
+        ds = ctx.parallelize([[1], [2], ["a"]])
+        assert ds.collect() == [[1], [2]]
+        assert ds.exception_counts == {"BadParallelizeInput": 1}
+
+    def test_mixed_list_outputs_keep_their_values(self, ctx, ctx_interp):
+        def f(x):
+            return ["a"] if x % 3 == 0 else [x]
+        data = list(range(10))
+        for c in (ctx, ctx_interp):
+            ds = c.parallelize(data).map(f)
+            assert ds.collect() == [f(x) for x in data]
+            assert ds.exception_counts == {}
+
+    def test_parallelize_builds_one_frame(self, ctx, monkeypatch):
+        calls = []
+        create = ctx.spark.createDataFrame
+
+        def spy(*args, **kwargs):
+            calls.append(1)
+            return create(*args, **kwargs)
+        monkeypatch.setattr(ctx.spark, "createDataFrame", spy)
+        ds = ctx.parallelize(list(range(4000)) + [2 ** 70])
+        assert len(calls) == 1
+        monkeypatch.undo()
+        assert ds.collect() == list(range(4000))
+        assert ds.exception_counts == {"BadParallelizeInput": 1}
+
+    def test_nested_misfit_fails_only_its_row(self, ctx_interp):
+        data = list(range(200))
+        ds = ctx_interp.parallelize(data).map(
+            lambda x: [x, "z"] if x == 150 else [x, x])
+        assert ds.collect() == [[x, x] for x in data if x != 150]
+        assert ds.exception_counts == {"NormalCaseViolation": 1}
+
+    def test_mixed_scalar_sample_is_a_variant(self, ctx_interp):
+        def f(x):
+            return "s" if x["a"] == 3 else x["a"]
+        rows = [(i, str(i)) for i in range(6)]
+        ds = ctx_interp.parallelize(rows, columns=["a", "b"]) \
+            .withColumn("c", f)
+        assert ds.collect() == [(a, b, f({"a": a})) for a, b in rows]
+        assert ds.exception_counts == {}
+        m = ctx_interp.parallelize(list(range(6))).map(
+            lambda x: "s" if x == 3 else x)
+        assert not m._pyobj
+        assert m.collect() == [0, 1, 2, "s", 4, 5]
+
+    def test_keyed_fold_state_misfit_is_a_violation(self, ctx):
+        # two statements: not lowered onto native aggregates
+        def f(a, r):
+            v = r["v"]
+            return a + (v if v < 1000 else 0.5)
+        rows = [("k", i % 7) for i in range(300)] + [("k", 5000)]
+        ds = ctx.parallelize(rows, columns=["k", "v"]).aggregateByKey(
+            lambda a, b: a + b, f, 0, ["k"])
+        assert ds.collect() == []
+        assert ds.exception_counts == {"NormalCaseViolation": 1}
 
 
 class TestResolveWithRound2Shapes:

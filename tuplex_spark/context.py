@@ -17,7 +17,8 @@ from pyspark.sql import SparkSession, functions as F, types as T
 
 from .dataset import DataSet
 from .exceptions import code_for
-from .typeutils import infer_schema_from_rows
+from .typeutils import coerce, conforms, infer_schema_from_rows, \
+    infer_type, super_type
 from .sources import csv_inference as CSV
 from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD
 
@@ -31,75 +32,32 @@ DEFAULTS = {
 }
 
 
-def _type_family(v) -> str | None:
-    """Coarse type family for normal-case voting: values within one
-    family always widen (bool<int<float lattice, str+str, ...); values
-    across families have no common type."""
-    if v is None:
-        return None
-    if isinstance(v, (bool, int, float)):
-        return "num"
-    if isinstance(v, str):
-        return "str"
-    if isinstance(v, (bytes, bytearray)):
-        return "bin"
-    return type(v).__name__
+def _plurality_family(rows: list, width: int) -> list:
+    """The rows whose every value belongs to its column's plurality
+    family (reference normalcaseThreshold voting,
+    FileInputOperator.cc:229-299, as a plurality).  A family is a run of
+    values whose types have a ``super_type``; it widens as values join,
+    so ``[1, 2.5, True]`` is one family.  A value with no Spark type
+    belongs to none."""
+    families = [[] for _ in range(width)]  # per column: [type, count]
 
-
-def _majority_family_split(rows: list, width: int):
-    """Partition rows into (conforming, violating) by per-column majority
-    type family.  No-op (all conforming) when every column is
-    single-family."""
-    from collections import Counter
-    counts = [Counter() for _ in range(width)]
-    fams_per_row = []
-    for r in rows:
-        vals = r if isinstance(r, tuple) else (r,)
-        fams = tuple(_type_family(v) for v in vals)
-        fams_per_row.append(fams)
+    def join(fams, t):
+        if t is None:
+            return -1
         for i, f in enumerate(fams):
-            if f is not None:
-                counts[i][f] += 1
-    if all(len(c) <= 1 for c in counts):
-        return rows, []
-    prio = {"num": 0, "str": 1, "bin": 2}
-    major = [min(c.items(), key=lambda kv: (-kv[1], prio.get(kv[0], 9)))[0]
-             if c else None for c in counts]
-    good, bad = [], []
-    for r, fams in zip(rows, fams_per_row):
-        ok = all(f is None or m is None or f == m
-                 for f, m in zip(fams, major))
-        (good if ok else bad).append(r)
-    return good, bad
+            w = super_type(f[0], t)
+            if w is not None:
+                f[0], f[1] = w, f[1] + 1
+                return i
+        fams.append([t, 1])
+        return len(fams) - 1
 
-
-def _coerce_val(v, t: T.DataType):
-    """Upcast a Python value along the widened schema's numeric lattice
-    (bool -> int -> float, reference TypeSystem.h superType): Spark's
-    createDataFrame verifier is strict (an int is rejected by a double
-    field), but the unified type IS the declared semantics — a
-    ``parallelize([1, 2.5])`` must collect as [1.0, 2.5], not quarantine
-    the int row."""
-    if v is None:
-        return None
-    if isinstance(t, T.DoubleType) and isinstance(v, (bool, int)):
-        return float(v)
-    if isinstance(t, (T.LongType, T.IntegerType)) and isinstance(v, bool):
-        return int(v)
-    if isinstance(t, T.StructType) and isinstance(v, tuple):
-        return tuple(_coerce_val(x, f.dataType)
-                     for x, f in zip(v, t.fields))
-    if isinstance(t, T.ArrayType) and isinstance(v, list):
-        return [_coerce_val(x, t.elementType) for x in v]
-    if isinstance(t, T.MapType) and isinstance(v, dict):
-        return {_coerce_val(k, t.keyType): _coerce_val(x, t.valueType)
-                for k, x in v.items()}
-    return v
-
-
-def _coerce_row(row: tuple, schema: T.StructType) -> tuple:
-    return tuple(_coerce_val(v, f.dataType)
-                 for v, f in zip(row, schema.fields))
+    tags = [[None if v is None else join(fams, infer_type(v))
+             for v, fams in zip(r, families)] for r in rows]
+    major = [max(range(len(f)), key=lambda i: f[i][1]) if f else None
+             for f in families]
+    return [r for r, tag in zip(rows, tags)
+            if all(i is None or i == m for i, m in zip(tag, major))]
 
 
 class Context:
@@ -233,45 +191,31 @@ class Context:
         if self._has_unrepresentable(rows):
             return self._parallelize_pyobjects(rows)
 
-        norm = [r if isinstance(r, tuple) else r for r in rows]
-        # split conforming vs bad rows by width
-        widths = {}
-        for r in norm:
-            w = len(r) if isinstance(r, tuple) else 1
-            widths[w] = widths.get(w, 0) + 1
-        major_w = max(widths, key=widths.get) if widths else 1
-        good, bad = [], []
-        for r in norm:
-            w = len(r) if isinstance(r, tuple) else 1
-            (good if w == major_w else bad).append(r)
-        # normal-case typing: when a column mixes INCOMPATIBLE families
-        # (ints alongside strings), the MAJORITY family is the schema and
-        # minority rows are the violations (reference normalcaseThreshold
-        # voting, FileInputOperator.cc:229-299) — the supertype fallback
-        # would declare the column string and quarantine the majority
-        good, type_bad = _majority_family_split(good, major_w)
-        bad += type_bad
-        if schema is None:
-            sschema = infer_schema_from_rows(good, columns)
-        else:
-            sschema = schema
-        data = [r if isinstance(r, tuple) else (r,) for r in good]
-        data = [_coerce_row(r, sschema) for r in data]
-        try:
-            df = self.spark.createDataFrame(data, sschema)
-        except Exception:
-            # type-nonconforming rows: route through per-row validation
-            df, extra_bad = self._parallelize_lenient(data, sschema)
-            bad += extra_bad
-        cols = [f.name for f in sschema.fields]
+        data = [r if isinstance(r, tuple) else (r,) for r in rows]
+        # normal case: the plurality row width, then per column the
+        # plurality type family; every other row is a violation
+        widths: dict[int, int] = {}
+        for r in data:
+            widths[len(r)] = widths.get(len(r), 0) + 1
+        width = max(widths, key=widths.get) if widths else 1
+        good = _plurality_family([r for r in data if len(r) == width],
+                                 width)
+        sschema = infer_schema_from_rows(good, columns) if schema is None \
+            else schema
+        fields = sschema.fields
+        kept = [tuple(coerce(v, f.dataType) for v, f in zip(r, fields))
+                for r in good if len(r) == len(fields) and all(
+                    conforms(v, f.dataType) if v is not None else f.nullable
+                    for v, f in zip(r, fields))]
+        df = self.spark.createDataFrame(kept, sschema)
         # the rejected rows never reach Spark: park their known count
-        parked = [{"BadParallelizeInput": len(bad)}] if bad else []
-        return DataSet(self, df, cols, sample=good[:_SAMPLE_ROWS],
-                       parked=parked)
+        bad = len(data) - len(kept)
+        parked = [{"BadParallelizeInput": bad}] if bad else []
+        return DataSet(self, df, sschema.fieldNames(),
+                       sample=kept[:_SAMPLE_ROWS], parked=parked)
 
     @staticmethod
     def _has_unrepresentable(rows) -> bool:
-        from .typeutils import infer_type
         for r in rows[:500]:
             vals = r if isinstance(r, tuple) else (r,)
             for v in vals:
@@ -289,23 +233,13 @@ class Context:
         return DataSet(self, df, [PYOBJ_COL], sample=rows[:_SAMPLE_ROWS],
                        pyobj=True)
 
-    def _parallelize_lenient(self, data, sschema):
-        ok, bad = [], []
-        for r in data:
-            try:
-                self.spark.createDataFrame([r], sschema)
-                ok.append(r)
-            except Exception:
-                bad.append(r)
-        return self.spark.createDataFrame(ok, sschema), bad
-
     def csv(self, pattern: str, columns=None, header=None, delimiter=None,
             quotechar: str = '"', null_values=None, type_hints=None
             ) -> DataSet:
         """CSV scan with driver-side sampling inference (reference:
         context.py:288, FileInputOperator.cc:195-313)."""
         null_values = list(null_values or [""])
-        delim, has_header, det_cols, tags, multiline = CSV.detect(
+        delim, has_header, det_cols, types, multiline = CSV.detect(
             pattern, delimiter, header, null_values, quotechar,
             float(self._options.get("tuplex.normalcaseThreshold", 0.9)))
         cols = list(columns) if columns else det_cols
@@ -313,7 +247,7 @@ class Context:
             raise ValueError(
                 f"could not detect any columns in {pattern!r} "
                 "(empty file?); pass columns= explicitly")
-        fields = CSV.build_schema(cols, tags, type_hints)
+        fields = CSV.build_schema(cols, types, type_hints)
         schema = T.StructType(list(fields) + [
             T.StructField("_corrupt_record", T.StringType(), True)])
         reader = (self.spark.read

@@ -469,19 +469,19 @@ class DataSet:
     def _out_names(self, outs):
         if len(outs) == 1 and outs[0][0] is None:
             return ["column0"]
-        return [n if n is not None else f"column{i}"
-                for i, (n, _, _) in enumerate(outs)]
+        return [o[0] if o[0] is not None else f"column{i}"
+                for i, o in enumerate(outs)]
 
     # -- interpreter path -------------------------------------------------
     def _apply_interpreted(self, fn, kind, op_name, in_cols, target_col,
                            new_col, results):
         if kind == "filter":
-            specs, out_kind = [(None, T.BooleanType(), True)], "pred"
+            specs, out_kind = [(None, T.BooleanType())], "pred"
         else:
             try:
                 specs, out_kind = fallback.infer_output_type(results)
                 if self._pyobj and any(isinstance(t, T.NullType)
-                                       for _, t, _ in specs):
+                                       for _, t in specs):
                     # objects promote to typed columns only when every
                     # output's type is known
                     raise fallback.TypeUnstableError("untyped output")
@@ -492,13 +492,13 @@ class DataSet:
                     # hold them — demote to PYOBJECT rows (reference
                     # dual-mode: rows keep their own types on the
                     # fallback path)
-                    specs, out_kind = [(None, T.BinaryType(), True)], \
+                    specs, out_kind = [(None, T.BinaryType())], \
                         "pickle"
                 elif isinstance(e, fallback.AllSampleRowsFailed):
                     # every sampled row raised: expect all-exception
                     # output; declare a string column, runtime successes
                     # that aren't strings become NormalCaseViolation
-                    specs, out_kind = [(None, T.StringType(), True)], \
+                    specs, out_kind = [(None, T.StringType())], \
                         "scalar"
                 else:
                     raise
@@ -518,8 +518,8 @@ class DataSet:
         if kind == "map" and not (payload and self._exc_enabled):
             keep = [c for c in keep if c in _HIDDEN]
         df, code = self._run_rows(
-            self._df, fn, in_cols, [t for _, t, _ in specs], out_kind,
-            out_keys=[k for k, _, _ in specs], keep=keep)
+            self._df, fn, in_cols, [t for _, t in specs], out_kind,
+            out_keys=[k for k, _ in specs], keep=keep)
         new_cols = {n: F.col(out_col(i)) for i, n in enumerate(names)}
         out, vis = self._finish_op(df, kind, op_name, new_cols, code,
                                    pred=F.col(out_col(0)), payload=payload)

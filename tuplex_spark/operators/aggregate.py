@@ -24,7 +24,8 @@ from pyspark.sql import functions as F, types as T
 from ..udf import reflection
 from ..udf.compiler import (CompileError, SRow, Translator, spark_tag,
                             tag_to_spark)
-from ..typeutils import infer_type
+from ..exceptions import code_for
+from ..typeutils import coerce, conforms, infer_type
 from ..udf import fallback as FB
 
 
@@ -234,6 +235,10 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
 
 def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
                  schema, out_names):
+    """applyInArrow fold per key.  The state's types come from folding
+    the plan-time sample; a group whose final state does not fit them
+    becomes one NormalCaseViolation row (null state, no payload, this
+    op's tag) instead of a value ``pa.array`` would truncate."""
     from ..dataset import DataSet
     import copy
 
@@ -250,12 +255,19 @@ def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
     outs = state if isinstance(state, tuple) else (state,)
     stypes = [infer_type(v) or T.DoubleType() for v in outs]
     key_fields = [schema[k] for k in keys]
+    capture = ds._exc_enabled
+    hidden = [T.StructField(FB.EXC_CODE, T.IntegerType(), False),
+              T.StructField(FB.EXC_PAYLOAD, T.StringType(), True),
+              T.StructField(FB.EXC_OP, T.StringType(), True)] \
+        if capture else []
     out_schema = T.StructType(
         list(key_fields) + [T.StructField(n, t, True)
-                            for n, t in zip(out_names, stypes)])
+                            for n, t in zip(out_names, stypes)] + hidden)
 
     init = initial_value
     in_types = [f.dataType for f in schema.fields]
+    op_name = ds._next_op("aggregateByKey")
+    violation = code_for("NormalCaseViolation")
 
     def fold(table):
         import pyarrow as pa
@@ -265,9 +277,22 @@ def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
                               FB.UDFRow(row, cols) if len(row) != 1
                               else row[0])
         outs = state if isinstance(state, tuple) else (state,)
+        fits = len(outs) == len(stypes) and all(
+            conforms(v, t) for v, t in zip(outs, stypes))
+        if not (fits or capture):
+            raise FB.NormalCaseViolation(
+                f"fold state {state!r} does not fit the sample-inferred "
+                "schema")
+        if not fits:
+            outs = [None] * len(stypes)
         arrays = [table.column(k).slice(0, 1) for k in keys]
-        arrays += [FB.encode_column([v], t) for v, t in zip(outs, stypes)]
-        return pa.Table.from_arrays(arrays, names=list(keys) + out_names)
+        arrays += [FB.encode_column([coerce(v, t)], t)
+                   for v, t in zip(outs, stypes)]
+        if capture:
+            arrays += [pa.array([0 if fits else violation], pa.int32()),
+                       pa.nulls(1, pa.string()),
+                       pa.array([None if fits else op_name], pa.string())]
+        return pa.Table.from_arrays(arrays, names=out_schema.fieldNames())
 
     out = df.groupBy(*keys).applyInArrow(fold, schema=out_schema)
     return DataSet(ds._ctx, out, list(keys) + out_names, sample=[],

@@ -17,8 +17,12 @@ from __future__ import annotations
 import csv as _csv
 import glob as _glob
 import io
+from collections import Counter
+from functools import reduce
 
 from pyspark.sql import types as T
+
+from ..typeutils import super_type
 
 MAX_DETECTION_BYTES = 256 * 1024  # reference: csv.maxDetectionMemory
 CANDIDATE_DELIMS = [",", ";", "|", "\t"]
@@ -78,41 +82,33 @@ def detect_delimiter(text: str) -> str:
     return best
 
 
-def _cell_type(v: str, null_values) -> str:
+_BOOL, _LONG, _DOUBLE, _STRING = (T.BooleanType(), T.LongType(),
+                                  T.DoubleType(), T.StringType())
+
+
+def _cell_type(v: str, null_values) -> T.DataType | None:
+    """Spark type of one CSV cell's text; None for a null cell."""
     if v in null_values:
-        return "null"
+        return None
     try:
         int(v)
-        return "int"
+        return _LONG
     except ValueError:
         pass
     try:
         float(v)
-        return "float"
+        return _DOUBLE
     except ValueError:
         pass
     if v.lower() in ("true", "false"):
-        return "bool"
-    return "str"
-
-
-_T_ORDER = {"null": 0, "bool": 1, "int": 2, "float": 3, "str": 4}
-
-
-def _widen(a: str | None, b: str) -> str:
-    if a is None or a == "null":
-        return b
-    if b == "null":
-        return a
-    if {a, b} <= {"bool", "int", "float"}:
-        return a if _T_ORDER[a] >= _T_ORDER[b] else b
-    return a if a == b else "str"
+        return _BOOL
+    return _STRING
 
 
 def detect(pattern: str, delimiter: str | None, header: bool | None,
            null_values, quotechar: str = '"',
            normalcase_threshold: float = 0.9):
-    """Returns (delimiter, has_header, columns, tag-per-column,
+    """Returns (delimiter, has_header, columns, Spark type per column,
     multiline).
 
     Per-column typing is *normal-case majority* typing (reference:
@@ -161,76 +157,54 @@ def detect(pattern: str, delimiter: str | None, header: bool | None,
     if not rows0:
         return delim, bool(header), [], [], multiline
 
-    def row_tags(r):
-        return [_cell_type(c, null_values) for c in r]
-
+    # each sampled cell is typed once, for the header check and the vote
+    typed = [[[_cell_type(c, null_values) for c in r] for r in rs]
+             for rs in per_file]
     has_header = header
     if has_header is None:
         # header iff the lead file's first row is all-string and
-        # differs from the body's majority tags (reference:
+        # differs from the body's majority types (reference:
         # CSVStatistic header estimation)
-        first = row_tags(rows0[0])
-        body = rows0[1:] or rows0
-        body_majority = _majority_tags(body, null_values,
-                                       normalcase_threshold)
-        has_header = (all(t == "str" for t in first)
-                      and first != body_majority and len(rows0) > 1)
+        first = typed[0][0]
+        body_types = _vote(typed[0][1:] or typed[0], normalcase_threshold)
+        has_header = (all(t is _STRING for t in first)
+                      and first != body_types and len(rows0) > 1)
     columns = rows0[0] if has_header else \
         [f"column{i}" for i in range(width)]
     # type votes pool BODY rows of every sampled file (header=True
     # makes the scan skip each file's first line, so drop it from
     # every sample, not just the first)
     body_from = 1 if has_header else 0
-    pooled = [r for rs in per_file for r in (rs[body_from:] or rs)]
-    tags = _majority_tags(pooled or rows0, null_values,
-                          normalcase_threshold)
-    return delim, bool(has_header), columns, tags, multiline
+    pooled = [r for ts in typed for r in (ts[body_from:] or ts)]
+    types = _vote(pooled or typed[0], normalcase_threshold)
+    return delim, bool(has_header), columns, types, multiline
 
 
-# which tags a cell of a given tag can be parsed as (specific -> general)
-_COMPAT = {"bool": {"bool"}, "int": {"int", "float"},
-           "float": {"float"}, "str": {"str"}}
-
-
-def _majority_tags(rows, null_values, threshold: float = 0.9):
-    if not rows:
-        return []
-    width = len(rows[0])
+def _vote(rows, threshold: float = 0.9) -> list[T.DataType]:
+    """Per column of typed cells: the most specific of bool/long/double
+    whose ``super_type`` covers >= threshold of the non-null cells, else
+    the widened type (string when the cells have no common type)."""
     out = []
-    for i in range(width):
-        counts: dict[str, int] = {}
-        widened = None
-        n = 0
-        for r in rows:
-            t = _cell_type(r[i], null_values)
-            widened = _widen(widened, t)
-            if t != "null":
-                counts[t] = counts.get(t, 0) + 1
-                n += 1
+    for col in zip(*rows):
+        counts = Counter(col)
+        del counts[None]
+        n = sum(counts.values())
         if not n:
-            out.append("str")
+            out.append(_STRING)
             continue
-        chosen = None
-        for cand in ("bool", "int", "float"):
-            covered = sum(c for t, c in counts.items()
-                          if cand in _COMPAT.get(t, {"str"}))
-            if covered / n >= threshold:
-                chosen = cand
-                break
-        out.append(chosen or widened or "str")
+        chosen = next((c for c in (_BOOL, _LONG, _DOUBLE)
+                       if sum(k for t, k in counts.items()
+                              if super_type(t, c) == c) / n >= threshold),
+                      None)
+        out.append(chosen or reduce(
+            lambda a, b: super_type(a, b) or _STRING, counts))
     return out
 
 
-_TAG_TO_SPARK = {"bool": T.BooleanType(), "int": T.LongType(),
-                 "float": T.DoubleType(), "str": T.StringType(),
-                 "null": T.StringType()}
-
-
-def build_schema(columns, tags, type_hints=None) -> T.StructType:
+def build_schema(columns, types, type_hints=None) -> T.StructType:
     hints = dict(type_hints or {})
     fields = []
-    for i, (name, tag) in enumerate(zip(columns, tags)):
-        dt = _TAG_TO_SPARK.get(tag, T.StringType())
+    for i, (name, dt) in enumerate(zip(columns, types)):
         hint = hints.get(name, hints.get(i))
         if hint is not None:
             dt = _hint_to_spark(hint)

@@ -3189,6 +3189,8 @@ class Translator:
             if isinstance(a, SVariant) or isinstance(b, SVariant):
                 raise CompileError("variant arm")
             tag = _unify_tags(a.tag, b.tag)
+            if tag == "array":
+                _unify_elems([a, b])
         except CompileError:
             # str-vs-scalar (or variant-vs-anything) conditional: keep
             # both arms' EXACT types in a tagged variant struct instead
@@ -3276,6 +3278,8 @@ class Translator:
         try:
             for _, v in arms:
                 tag = _unify_tags(tag, v.tag)
+            if tag == "array":
+                _unify_elems([v for _, v in arms])
         except CompileError:
             # str mixed with a scalar family: compile as a tagged
             # variant struct instead of demoting the whole UDF
@@ -7271,6 +7275,19 @@ def _unify_tags(a: str, b: str) -> str:
     # to compile keeps CPython semantics — silently coercing to string
     # turned `return "odd" if n % 2 else n * 10` into '20'/'40'
     raise CompileError(f"incompatible result types {a} and {b}")
+
+
+def _unify_elems(arrays) -> None:
+    """Arrays merged into one column need a common element type (where
+    known): Spark would cast ``[x]`` to ``array<string>`` beside
+    ``["a"]``.  Raises CompileError when there is none."""
+    tag = "null"
+    for s in arrays:
+        if isinstance(s, SConst) and isinstance(s.value, (list, tuple)):
+            for v in s.value:
+                tag = _unify_tags(tag, _pytag(v))
+        elif getattr(s, "elem", None) is not None:
+            tag = _unify_tags(tag, s.elem)
 
 
 _COMPILE_CACHE: dict = {}

@@ -13,9 +13,10 @@ Arrow is the only way Python-executed rows cross the boundary.
   CPython would see (None stays None, NaN stays NaN, ints stay ints,
   structs become tuples, maps dicts, timestamps naive datetimes), or
   unpickles one pickled-object column;
-- output: results are checked by ``_conforms`` — a value that misfits
-  the declared type becomes a NormalCaseViolation row — and built into
-  Arrow arrays of the Spark output type (``encode_column``), or pickled;
+- output: results are checked by ``typeutils.conforms`` — a value that
+  misfits the declared type becomes a NormalCaseViolation row — laid
+  out by ``typeutils.coerce`` and built into Arrow arrays of the Spark
+  output type (``encode_column``), or pickled;
   pass-through columns go back as the input batch's own Arrow arrays;
 - exceptions: each row's exception becomes its code in ``ROW_CODE``;
   rows whose ``GATE`` is false (already failed, or not matched by a
@@ -35,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 from ..exceptions import code_for_instance
-from ..typeutils import infer_type, super_type
+from ..typeutils import coerce, conforms, infer_type, widen
 
 EXC_CODE = "__exc_code"
 EXC_PAYLOAD = "__exc_payload"
@@ -107,10 +108,13 @@ def call_budgeted(fn, row, arity, names, budget: int = 200_000):
 def infer_output_type(results):
     """Widen the types of a UDF's sampled results.
 
-    Returns (result_type_per_output, out_kind) where out_kind is
-    'scalar' | 'tuple' | 'dict'.  Raises AllSampleRowsFailed when there
-    are no results and TypeUnstableError on heterogeneous result
-    shapes/types.
+    Returns ([(dict key or None, Spark type)] per output, out_kind)
+    where out_kind is 'scalar' | 'tuple' | 'dict'.  An output whose
+    scalars have no common type but all come from the bool/int/float/
+    str families is the compiler's variant struct
+    (``compiler._VARIANT_FIELDS``).
+    Raises AllSampleRowsFailed when there are no results and
+    TypeUnstableError on heterogeneous result shapes or any other mix.
     """
     if not results:
         raise AllSampleRowsFailed(
@@ -128,43 +132,31 @@ def infer_output_type(results):
                 or (kind == "dict" and list(r.keys()) != list(r0.keys())):
             raise TypeUnstableError(f"result shape {rk} vs {kind}")
     if kind == "scalar":
-        t, nullable = _widen(results)
-        return [(None, t, nullable)], kind
+        return [(None, _output_type(results))], kind
     keys = list(r0.keys()) if kind == "dict" else range(len(r0))
-    outs = []
-    for k in keys:
-        t, nullable = _widen([r[k] for r in results])
-        outs.append((k if kind == "dict" else None, t, nullable))
-    return outs, kind
+    return [(k if kind == "dict" else None,
+             _output_type([r[k] for r in results]))
+            for k in keys], kind
 
 
-def _widen(values):
-    t = None
-    nullable = False
+def _output_type(values) -> T.DataType:
+    t, _ = widen(values)
+    if t is not None:
+        return t
+    from .compiler import _VARIANT_FIELDS
+    arms = {}
     for v in values:
-        vt = infer_type(v)
-        if vt is None:
-            if v is not None:
-                # non-None value with no Spark type (empty tuple, user
-                # object): only the pickled PYOBJECT path can hold it
-                raise TypeUnstableError(
-                    f"unrepresentable value of type {type(v).__name__}")
-            nullable = True
-        else:
-            if t is not None:
-                merged = super_type(t, vt)
-                # super_type's universal-string fallback means the mix
-                # had no real common type — that's instability, not a
-                # stringly-typed column
-                if isinstance(merged, T.StringType) and not (
-                        isinstance(t, T.StringType)
-                        and isinstance(vt, T.StringType)):
-                    raise TypeUnstableError(
-                        f"{t.simpleString()} vs {vt.simpleString()}")
-                t = merged
-            else:
-                t = vt
-    return (t or T.NullType()), nullable or t is None
+        if v is not None:
+            arms.setdefault(type(v).__name__, infer_type(v))
+    if not arms.keys() <= _VARIANT_FIELDS.keys():
+        raise TypeUnstableError(
+            "sampled outputs have no common type: "
+            + ", ".join(sorted(arms)))
+    present = sorted(arms, key=lambda f: _VARIANT_FIELDS[f][2])
+    return T.StructType(
+        [T.StructField("__vt", T.IntegerType(), True)]
+        + [T.StructField(_VARIANT_FIELDS[f][0], arms[f], True)
+           for f in present])
 
 
 class UDFRow:
@@ -213,42 +205,6 @@ def _apply(fn, row, arity, names=None):
             row = UDFRow(row, names)
         return fn(row)
     return fn(row)
-
-
-# ints a numeric output type holds (a double takes any int64)
-_INT_BOUND = {T.LongType: 2 ** 63, T.IntegerType: 2 ** 31,
-              T.DoubleType: 2 ** 63}
-
-
-def _conforms(v, t: T.DataType) -> bool:
-    """Shallow runtime check that a produced Python value fits the
-    declared (sample-inferred) Spark type.  Rows that fail become
-    NormalCaseViolation exception rows rather than failing the Arrow
-    encoder for the whole batch (``pa.array`` raises on one int outside
-    the int64 range) — at scale one odd row must never kill a stage."""
-    if v is None:
-        return True
-    if isinstance(t, T.NullType):
-        return False
-    if isinstance(t, T.BooleanType):
-        return isinstance(v, bool)
-    if type(t) in _INT_BOUND:
-        if isinstance(v, float):
-            return isinstance(t, T.DoubleType)
-        bound = _INT_BOUND[type(t)]
-        return isinstance(v, int) and not isinstance(v, bool) \
-            and -bound <= v < bound
-    if isinstance(t, T.StringType):
-        return isinstance(v, str)
-    if isinstance(t, T.BinaryType):
-        return isinstance(v, (bytes, bytearray))
-    if isinstance(t, T.ArrayType):
-        return isinstance(v, list)
-    if isinstance(t, T.MapType):
-        return isinstance(v, dict)
-    if isinstance(t, T.StructType):
-        return isinstance(v, (tuple, dict))
-    return True
 
 
 _VARIANT_ARMS = {1: "__vb", 2: "__vi", 3: "__vf", 4: "__vs"}
@@ -312,8 +268,9 @@ def decode_columns(data, fields: list[str], types: list) -> list[list]:
 
 
 def encode_column(values: list, t: T.DataType):
-    """Python values already checked by ``_conforms`` -> an Arrow array
-    of Spark type ``t`` (tuples fill structs, NaN stays NaN)."""
+    """Python values already checked by ``conforms`` and laid out by
+    ``coerce`` -> an Arrow array of Spark type ``t`` (tuples fill
+    structs, NaN stays NaN)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
     return pa.array(values, type=to_arrow_type(t))
@@ -374,11 +331,11 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
             vals = [r[k] for k in out_keys]
         else:
             vals = [r]
-        if not all(_conforms(v, t) for v, t in zip(vals, out_types)):
+        if not all(conforms(v, t) for v, t in zip(vals, out_types)):
             raise NormalCaseViolation(
                 f"UDF output {vals!r} does not fit the sample-inferred "
                 "schema")
-        return vals
+        return [coerce(v, t) for v, t in zip(vals, out_types)]
 
     def run(batches):
         import pyarrow as pa
