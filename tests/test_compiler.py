@@ -10,7 +10,7 @@ import random
 
 import pytest
 
-from conftest import run_diff
+from conftest import run_diff, run_diff3
 
 
 NUMS = [1, 2, 3, -4, 10, 0, 7]
@@ -5287,3 +5287,34 @@ class TestLoopReturnsWithAccumulation:
                 acc = acc + 1
             return acc
         run_diff(ctx, ["ab zc", "aa bb"], f, expect_compiled=False)
+
+
+class TestOneNumericOrder:
+    """Arms merged into one value meet on typeutils' lattice (bool ->
+    int -> float) and every arm is cast to the shared type: a bool arm
+    beside an int arm is 1, as on the interpreter path, not a plan-time
+    DATATYPE_MISMATCH."""
+
+    def test_bool_arm_beside_int_arm(self, ctx, ctx_interp):
+        run_diff3(ctx, ctx_interp, NUMS, lambda x: True if x > 2 else x,
+                  expect_compiled=True)
+
+    def test_bool_list_beside_int_list(self, ctx, ctx_interp):
+        run_diff3(ctx, ctx_interp, NUMS,
+                  lambda x: [True] if x > 2 else [x], expect_compiled=True)
+
+    def test_bool_and_int_in_one_list(self, ctx, ctx_interp):
+        run_diff3(ctx, ctx_interp, NUMS, lambda x: [True, x],
+                  expect_compiled=True)
+
+    def test_bool_arms_at_every_merge_site(self, ctx, ctx_interp):
+        def returns(x):
+            if x > 2:
+                return x > 5
+            return x
+        for f in (returns,
+                  lambda x: {0: True, 1: 5}[x % 2],
+                  lambda x: {0: False}.get(x, 2.5),
+                  lambda x: list((x > 1, x)),
+                  lambda x: 0.5 if x > 3 else (x > 1 if x < 7 else x)):
+            run_diff3(ctx, ctx_interp, NUMS, f, expect_compiled=True)

@@ -13,6 +13,7 @@ import textwrap
 import pytest
 from pyspark.sql import types as T
 
+from conftest import run_diff3
 from tuplex_spark.plans.inspect import explain_summary, formatted_plan
 from tuplex_spark.typeutils import conforms, super_type
 
@@ -327,6 +328,12 @@ class TestOneLattice:
             lambda x: [x, "z"] if x == 150 else [x, x])
         assert ds.collect() == [[x, x] for x in data if x != 150]
         assert ds.exception_counts == {"NormalCaseViolation": 1}
+
+    def test_none_inside_nested_output_is_kept(self, ctx, ctx_interp):
+        # the sample holds only [x, x]; list elements are nullable anyway
+        run_diff3(ctx, ctx_interp, list(range(200)) + [1000],
+                  lambda x: [x, None] if x > 500 else [x, x],
+                  expect_compiled=True)
 
     def test_mixed_scalar_sample_is_a_variant(self, ctx_interp):
         def f(x):

@@ -53,12 +53,18 @@ def gen_str_expr(rng):
     return base
 
 
+BOOL_ATOMS = ["True", "False", "x['a'] > 0", "x['b'] < 1.0"]
+
+
 def gen_cond_expr(rng):
-    num = gen_num_expr(rng)
-    s = gen_str_expr(rng)
+    """A conditional whose arms are int, float or bool expressions, so
+    both paths must widen mixed arms along bool -> int -> float."""
+    arms = [gen_num_expr(rng), f"len({gen_str_expr(rng)})",
+            gen_flt_expr(rng), rng.choice(BOOL_ATOMS)]
     cmp_ = rng.choice(["x['a'] > 2", "x['b'] < 1.0", "len(x['s']) > 3",
                        "x['a'] % 2 == 0"])
-    return f"({num} if {cmp_} else len({s}))"
+    a, b = rng.sample(arms, 2)
+    return f"({a} if {cmp_} else {b})"
 
 
 _TMPFILES = []
@@ -110,6 +116,13 @@ class TestGeneratedExpressions:
     def test_conditional_batch(self, ctx, ctx_interp):
         rng = random.Random(2025)
         exprs = [gen_cond_expr(rng) for _ in range(10)]
+        fn = _build_fn(exprs)
+        run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"],
+                  expect_compiled=True)
+
+    def test_mixed_arm_conditional_batch(self, ctx, ctx_interp):
+        rng = random.Random(6)
+        exprs = [gen_cond_expr(rng) for _ in range(12)]
         fn = _build_fn(exprs)
         run_diff3(ctx, ctx_interp, NUM_ROWS, fn, columns=["a", "b", "s"],
                   expect_compiled=True)

@@ -1,6 +1,8 @@
 """PYOBJECT fallback path: arbitrary Python objects through the pipeline
 (reference: TypeSystem.h PYOBJECT, test_fallback.py:25-47 numpy flows)."""
 
+from fractions import Fraction
+
 import numpy as np
 import pytest
 
@@ -37,6 +39,14 @@ class TestPyObjects:
         got = ctx.parallelize(data).map(f).collect()
         want = [f(a) for a in data]
         assert got == want
+
+    def test_object_past_the_first_rows(self, ctx):
+        # every row is checked for a value with no Spark type, not a prefix
+        data = list(range(600)) + [Fraction(7)]
+        f = lambda x: x if isinstance(x, int) else x.numerator
+        ds = ctx.parallelize(data).map(f)
+        assert ds.collect() == [f(x) for x in data]
+        assert ds.exception_counts == {}
 
     def test_unsupported_op_raises_cleanly(self, ctx):
         data = [np.array([1, 2])]

@@ -32,13 +32,13 @@ DEFAULTS = {
 }
 
 
-def _plurality_family(rows: list, width: int) -> list:
-    """The rows whose every value belongs to its column's plurality
-    family (reference normalcaseThreshold voting,
+def _plurality_family(rows: list, width: int) -> list | None:
+    """The rows of ``width`` values whose every value belongs to its
+    column's plurality family (reference normalcaseThreshold voting,
     FileInputOperator.cc:229-299, as a plurality).  A family is a run of
     values whose types have a ``super_type``; it widens as values join,
-    so ``[1, 2.5, True]`` is one family.  A value with no Spark type
-    belongs to none."""
+    so ``[1, 2.5, True]`` is one family.  None when any row holds a
+    value with no Spark type: the list takes the PYOBJECT path."""
     families = [[] for _ in range(width)]  # per column: [type, count]
 
     def join(fams, t):
@@ -52,12 +52,17 @@ def _plurality_family(rows: list, width: int) -> list:
         fams.append([t, 1])
         return len(fams) - 1
 
+    # -1: no Spark type; rows of another width are only checked for that
     tags = [[None if v is None else join(fams, infer_type(v))
-             for v, fams in zip(r, families)] for r in rows]
+             for v, fams in zip(r, families)] if len(r) == width else
+            [-1 for v in r if v is not None and infer_type(v) is None]
+            for r in rows]
+    if any(-1 in tag for tag in tags):
+        return None
     major = [max(range(len(f)), key=lambda i: f[i][1]) if f else None
              for f in families]
-    return [r for r, tag in zip(rows, tags)
-            if all(i is None or i == m for i, m in zip(tag, major))]
+    return [r for r, tag in zip(rows, tags) if len(r) == width
+            and all(i is None or i == m for i, m in zip(tag, major))]
 
 
 class Context:
@@ -183,14 +188,6 @@ class Context:
             columns = columns or keys
             rows = [tuple(r.get(k) for k in keys) for r in rows]
 
-        # PYOBJECT escape hatch (reference TypeSystem.h PYOBJECT +
-        # python-object fallback datasets): values with no Spark type
-        # (numpy arrays, user classes, ...) go to a pickled-binary column;
-        # map/filter still work, and a map producing representable values
-        # promotes back to the structured path.
-        if self._has_unrepresentable(rows):
-            return self._parallelize_pyobjects(rows)
-
         data = [r if isinstance(r, tuple) else (r,) for r in rows]
         # normal case: the plurality row width, then per column the
         # plurality type family; every other row is a violation
@@ -198,8 +195,15 @@ class Context:
         for r in data:
             widths[len(r)] = widths.get(len(r), 0) + 1
         width = max(widths, key=widths.get) if widths else 1
-        good = _plurality_family([r for r in data if len(r) == width],
-                                 width)
+        good = _plurality_family(data, width)
+        if good is None:
+            # PYOBJECT escape hatch (reference TypeSystem.h PYOBJECT +
+            # python-object fallback datasets): values with no Spark
+            # type (numpy arrays, user classes, ...) go to a
+            # pickled-binary column; map/filter still work, and a map
+            # producing representable values promotes back to the
+            # structured path.
+            return self._parallelize_pyobjects(rows)
         sschema = infer_schema_from_rows(good, columns) if schema is None \
             else schema
         fields = sschema.fields
@@ -213,15 +217,6 @@ class Context:
         parked = [{"BadParallelizeInput": bad}] if bad else []
         return DataSet(self, df, sschema.fieldNames(),
                        sample=kept[:_SAMPLE_ROWS], parked=parked)
-
-    @staticmethod
-    def _has_unrepresentable(rows) -> bool:
-        for r in rows[:500]:
-            vals = r if isinstance(r, tuple) else (r,)
-            for v in vals:
-                if v is not None and infer_type(v) is None:
-                    return True
-        return False
 
     def _parallelize_pyobjects(self, rows) -> DataSet:
         import pickle

@@ -52,6 +52,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from . import exceptions as E
+from .typeutils import infer_type
 from .udf import compiler, fallback
 from .udf.compiler import CompileError
 from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, GATE, ROW_CODE, \
@@ -188,26 +189,19 @@ def _py_type(dt: T.DataType, nullable: bool):
 
 def _py_type_of_value(v):
     """Python value -> typing object (for PYOBJECT datasets, whose Spark
-    schema is one pickled binary column — types come from the sample)."""
+    schema is one pickled binary column — types come from the sample):
+    the lattice's type where the value has one, else by hand for
+    ``None``, tuples (empty, or holding an object), sets and objects."""
     import typing
+    t = infer_type(v)
+    if t is not None:
+        return _py_type(t, False)
     if v is None:
         return type(None)
-    if isinstance(v, bool):
-        return bool
-    if isinstance(v, (int, float, str, bytes)):
-        return type(v)
     if isinstance(v, tuple):
         return tuple(_py_type_of_value(x) for x in v)
     if isinstance(v, (set, frozenset)):
         return typing.Set[_py_type_of_value(next(iter(v)))] if v else set
-    if isinstance(v, list):
-        return typing.List[_py_type_of_value(v[0])] if v else list
-    if isinstance(v, dict):
-        if v:
-            k = next(iter(v))
-            return typing.Dict[_py_type_of_value(k),
-                               _py_type_of_value(v[k])]
-        return dict
     return object
 
 

@@ -22,8 +22,7 @@ import ast
 from pyspark.sql import functions as F, types as T
 
 from ..udf import reflection
-from ..udf.compiler import (CompileError, SRow, Translator, spark_tag,
-                            tag_to_spark)
+from ..udf.compiler import CompileError, SRow, Translator
 from ..exceptions import code_for
 from ..typeutils import coerce, conforms, infer_type
 from ..udf import fallback as FB

@@ -2,14 +2,18 @@
 
 Replicates the reference's lattice (utils/include/TypeSystem.h:253
 ``superType``: bool -> int -> float; Option[T] for nullable) on Spark
-types.  Every sampler types values here:
+types.  Every sampler types values here, and the compiler merges
+arms on the same order:
 
 - ``Context.parallelize`` (schema of the rows it keeps, ``conforms``
   and ``coerce`` for every row before the one ``createDataFrame``);
 - ``sources/csv_inference`` (widening of sampled cell types);
 - ``udf/fallback`` (``infer_output_type`` over a UDF's sampled
   results, ``conforms``/``coerce`` for every row the runner writes);
-- ``operators/aggregate`` (the keyed fold's state).
+- ``operators/aggregate`` (the keyed fold's state);
+- ``udf/compiler`` (``_unify_tags`` meets two arms' tags in
+  ``super_type``; ``Translator._as`` casts each arm to the shared type);
+- ``DataSet.types`` of a PYOBJECT dataset (``dataset._py_type_of_value``).
 
 Two vote rules pick the normal case, on purpose, because the inputs
 differ.  CSV cells are text: the most specific type that covers
@@ -74,20 +78,21 @@ def infer_type(value) -> T.DataType | None:
             fields.append(T.StructField(f"_{i}", t or T.NullType(),
                                         v is None))
         return T.StructType(fields)
+    # list elements and map values are declared nullable, whatever the
+    # sample holds: a later [x, None] among sampled [x, x] is the
+    # general case (Option[T]), not a violation, as on the compiled path
     if isinstance(value, list):
-        elem, nullable = widen(value)
+        elem, _ = widen(value)
         if elem is None:
             return None  # unrepresentable or mixed elements
-        # a NullType element must be declared nullable — Arrow rejects
-        # non-nullable null fields (empty lists hit this)
-        return T.ArrayType(elem, containsNull=nullable)
+        return T.ArrayType(elem, containsNull=True)
     if isinstance(value, dict):
         kt, _ = widen(value.keys())
-        vt, nullable = widen(value.values())
+        vt, _ = widen(value.values())
         if kt is None or vt is None or None in value:
             return None
         return T.MapType(T.StringType() if isinstance(kt, T.NullType)
-                         else kt, vt, valueContainsNull=nullable)
+                         else kt, vt, valueContainsNull=True)
     if isinstance(value, datetime.datetime):
         return T.TimestampType()
     if isinstance(value, datetime.date):

@@ -33,6 +33,7 @@ from pyspark.sql import Column, functions as F, types as T
 
 from . import reflection
 from ..exceptions import code_for, codes_caught_by, name_for_code
+from ..typeutils import super_type
 
 # exception classes whose CPython construction is (message,) wherever
 # the engine emits a guarded raise — so a handler's ``e.args`` read is
@@ -1139,6 +1140,24 @@ class Translator:
         if isinstance(s, SVariant):
             return s.col
         raise CompileError(f"cannot materialize {type(s).__name__}")
+
+    def _as(self, s: Sym, tag: str, elem: str | None = None,
+            exact: bool = False) -> Column:
+        """``s`` as one arm of a value tagged ``tag`` (``elem`` for an
+        array's elements), as ``_unify_arms`` chose them: a numeric arm
+        or array of another tag is cast along the lattice, so a bool
+        beside an int is 1, as ``typeutils.coerce`` has it on the
+        interpreter path.  Null arms stay uncast; Spark types them.
+        ``exact`` casts every arm: a fold's struct fields must carry
+        the exact Spark type (``len`` gives an int tag on a 32-bit
+        column, a ``None`` start has no type)."""
+        c = self.to_col(s)
+        if exact or (tag in _NUM_TAGS and s.tag not in (tag, "null")):
+            return c.cast(tag_to_spark(tag).simpleString())
+        if tag == "array" and elem in _NUM_TAGS \
+                and _elem_tag(s) not in (elem, "null"):
+            return c.cast(f"array<{tag_to_spark(elem).simpleString()}>")
+        return c
 
     def truthy(self, s: Sym) -> Column:
         if isinstance(s, SJson):
@@ -2701,12 +2720,9 @@ class Translator:
         k = F.when(need, F.least(k, F.lit(self._WHILE_FOLD_CAP))) \
              .otherwise(F.lit(self._WHILE_FOLD_MARGIN)).cast("int")
 
-        def cast_to(col: Column, tg: str) -> Column:
-            return col.cast(tag_to_spark(tg).simpleString())
-
         nacc = len(accs)
         zero_fields = [
-            cast_to(self.to_col(init[n]), final[n]).alias(f"f{i}")
+            self._as(init[n], final[n], exact=True).alias(f"f{i}")
             for i, n in enumerate(accs)]
         if guard_codes:
             zero_fields += [F.lit(False).alias(f"f{nacc}"),
@@ -2718,7 +2734,7 @@ class Translator:
                 {n: SCol(acc.getField(f"f{i}"), final[n], nullable[n])
                  for i, n in enumerate(accs)})
             fields = [
-                cast_to(self.to_col(res[n]), final[n]).alias(f"f{i}")
+                self._as(res[n], final[n], exact=True).alias(f"f{i}")
                 for i, n in enumerate(accs)]
             if guard_codes:
                 if [cd for _, cd in caught] != guard_codes:
@@ -3093,12 +3109,9 @@ class Translator:
         guard_codes = [c for _, c in caught2]
         nullable = {n: init[n].nullable or out2[n].nullable for n in accs}
 
-        def cast_to(col: Column, tag: str) -> Column:
-            return col.cast(tag_to_spark(tag).simpleString())
-
         nacc = len(accs)
         zero_fields = [
-            cast_to(self.to_col(init[n]), final[n]).alias(f"f{i}")
+            self._as(init[n], final[n], exact=True).alias(f"f{i}")
             for i, n in enumerate(accs)]
         if guard_codes:
             zero_fields += [F.lit(False).alias(f"f{nacc}"),
@@ -3110,7 +3123,7 @@ class Translator:
                 {n: SCol(acc.getField(f"f{i}"), final[n], nullable[n])
                  for i, n in enumerate(accs)}, x)
             fields = [
-                cast_to(self.to_col(res[n]), final[n]).alias(f"f{i}")
+                self._as(res[n], final[n], exact=True).alias(f"f{i}")
                 for i, n in enumerate(accs)]
             if guard_codes:
                 if [c for _, c in caught] != guard_codes:
@@ -3188,9 +3201,7 @@ class Translator:
         try:
             if isinstance(a, SVariant) or isinstance(b, SVariant):
                 raise CompileError("variant arm")
-            tag = _unify_tags(a.tag, b.tag)
-            if tag == "array":
-                _unify_elems([a, b])
+            tag, elem = _unify_arms([a, b])
         except CompileError:
             # str-vs-scalar (or variant-vs-anything) conditional: keep
             # both arms' EXACT types in a tagged variant struct instead
@@ -3203,14 +3214,9 @@ class Translator:
             if self._unroll_depth > 0 and self._hof_depth == 0:
                 col = self._stage_raw(col)
             return SVariant(col, present)
-        ca, cb = self.to_col(a), self.to_col(b)
-        if tag == "float":
-            if a.tag in ("int", "bool"):
-                ca = ca.cast("double")
-            if b.tag in ("int", "bool"):
-                cb = cb.cast("double")
-        merged = SCol(F.when(cond, ca).otherwise(cb), tag,
-                      a.nullable or b.nullable)
+        merged = SCol(F.when(cond, self._as(a, tag, elem))
+                      .otherwise(self._as(b, tag, elem)), tag,
+                      a.nullable or b.nullable, elem)
         if self._unroll_depth > 0 and self._hof_depth == 0:
             merged = self._stage_sym(merged)
         return merged
@@ -3271,31 +3277,25 @@ class Translator:
         return self._merge_returns_scalar(arms)
 
     def _merge_returns_scalar(self, arms) -> Sym:
-        tag = "null"
         nullable = any(v.nullable or v.tag == "null" for _, v in arms)
         if any(isinstance(v, SVariant) for _, v in arms):
             return self._merge_returns_variant(arms)
         try:
-            for _, v in arms:
-                tag = _unify_tags(tag, v.tag)
-            if tag == "array":
-                _unify_elems([v for _, v in arms])
+            tag, elem = _unify_arms([v for _, v in arms])
         except CompileError:
             # str mixed with a scalar family: compile as a tagged
             # variant struct instead of demoting the whole UDF
             return self._merge_returns_variant(arms)
         expr = None
         for cond, val in arms:
-            c = self.to_col(val)
-            if tag == "float" and val.tag in ("int", "bool"):
-                c = c.cast("double")
+            c = self._as(val, tag, elem)
             if cond is None:
                 expr = c if expr is None else expr.otherwise(c)
                 break
             expr = F.when(cond, c) if expr is None else expr.when(cond, c)
         if expr is None:
             expr = F.lit(None)
-        return SCol(expr, tag, nullable)
+        return SCol(expr, tag, nullable, elem)
 
     @staticmethod
     def _variant_present(syms) -> list[str] | None:
@@ -3399,18 +3399,7 @@ class Translator:
             raise CompileError("empty list literal (element type unknown)")
         if all(isinstance(i, SConst) for i in items):
             return SConst([i.value for i in items])
-        tag = "null"
-        for i in items:
-            if isinstance(i, (STuple, SDict, SRow)):
-                raise CompileError("list of composite values")
-            tag = _unify_tags(tag, i.tag)
-        cols = []
-        for i in items:
-            c = self.to_col(i)
-            if tag == "float" and i.tag in ("int", "bool"):
-                c = c.cast("double")
-            cols.append(c)
-        return SCol(F.array(*cols), "array", False, elem=tag)
+        return self._array_from(STuple(items), "list")
 
     def _ev_Dict(self, node):
         pairs = []
@@ -3709,35 +3698,27 @@ class Translator:
             raise CompileError(f"{idx.tag} key into int-keyed dict")
         if fam == "str" and idx.tag != "str":
             raise CompileError(f"{idx.tag} key into str-keyed dict")
-        tag = "null"
-        nullable = False
         vals = [v for _, v in items]
         if default is not None:
             if not isinstance(default, (SConst, SCol)):
                 raise CompileError("dict .get default shape")
             vals = vals + [default]
-        for v in vals:
-            if not isinstance(v, (SConst, SCol)):
-                raise CompileError("dict value shape for dynamic lookup")
-            tag = _unify_tags(tag, v.tag)
-            nullable = nullable or v.nullable or v.tag == "null"
+        if not all(isinstance(v, (SConst, SCol)) for v in vals):
+            raise CompileError("dict value shape for dynamic lookup")
+        tag = _unify_arms(vals)[0]
+        nullable = any(v.nullable or v.tag == "null" for v in vals)
         if tag not in ("int", "float", "bool", "str"):
             raise CompileError(f"dynamic dict lookup of {tag} values")
-
-        def cast_arm(v):
-            c = self.to_col(v)
-            if tag == "float" and v.tag in ("int", "bool"):
-                c = c.cast("double")
-            return c
 
         kcol = idx.col
         expr = None
         for k, v in items:
             arm = kcol == F.lit(int(k) if isinstance(k, bool) else k)
-            c = cast_arm(v)
+            c = self._as(v, tag)
             expr = F.when(arm, c) if expr is None else expr.when(arm, c)
         if default is not None:
-            return SCol(expr.otherwise(cast_arm(default)), tag, nullable)
+            return SCol(expr.otherwise(self._as(default, tag)), tag,
+                        nullable)
         hit = F.coalesce(
             kcol.isin([int(k) if isinstance(k, bool) else k
                        for k in keys]), F.lit(False))
@@ -5773,18 +5754,11 @@ class Translator:
         if isinstance(a, SConst) and isinstance(a.value, (list, tuple)):
             return SConst(list(a.value))
         if isinstance(a, STuple):
-            tag = "null"
-            for i in a.items:
-                if isinstance(i, (STuple, SDict, SRow)):
-                    raise CompileError(f"{ctx} of composite values")
-                tag = _unify_tags(tag, i.tag)
-            cols = []
-            for i in a.items:
-                c = self.to_col(i)
-                if tag == "float" and i.tag in ("int", "bool"):
-                    c = c.cast("double")
-                cols.append(c)
-            return SCol(F.array(*cols), "array", False, elem=tag)
+            if any(isinstance(i, (STuple, SDict, SRow)) for i in a.items):
+                raise CompileError(f"{ctx} of composite values")
+            tag, elem = _unify_arms(a.items)
+            return SCol(F.array(*[self._as(i, tag, elem) for i in a.items]),
+                        "array", False, elem=tag)
         raise CompileError(f"{ctx}({a.tag})")
 
     def _set_from(self, a: Sym, ctx: str = "set") -> SCol:
@@ -7259,17 +7233,25 @@ def _tag_family(s: Sym) -> str | None:
     return None
 
 
+# tags with a Spark type (tag_to_spark): they meet in typeutils.super_type
+_LATTICE_TAGS = {"bool", "int", "float", "str", "date", "timestamp"}
+
+
 def _unify_tags(a: str, b: str) -> str:
-    if a == b:
+    """Tag of two arms merged into one value.  Tags with a Spark type
+    meet where ``typeutils.super_type`` puts them (bool -> int -> float,
+    the reference's superType); ``null`` and ``any`` yield to the other
+    tag; containers unify only with themselves (their elements:
+    ``_unify_arms``)."""
+    if a == b or b == "null":
         return a
     if a == "null":
         return b
-    if b == "null":
-        return a
-    if {a, b} <= _NUM_TAGS:
-        order = {"bool": 0, "int": 1, "float": 2}
-        return a if order[a] >= order[b] else b
-    if "any" in (a, b):
+    if a in _LATTICE_TAGS and b in _LATTICE_TAGS:
+        t = super_type(tag_to_spark(a), tag_to_spark(b))
+        if t is not None:
+            return spark_tag(t)
+    elif "any" in (a, b):
         return a if b == "any" else b
     # genuinely incompatible (str vs int, array vs scalar, ...): refusing
     # to compile keeps CPython semantics — silently coercing to string
@@ -7277,17 +7259,26 @@ def _unify_tags(a: str, b: str) -> str:
     raise CompileError(f"incompatible result types {a} and {b}")
 
 
-def _unify_elems(arrays) -> None:
-    """Arrays merged into one column need a common element type (where
-    known): Spark would cast ``[x]`` to ``array<string>`` beside
-    ``["a"]``.  Raises CompileError when there is none."""
-    tag = "null"
-    for s in arrays:
-        if isinstance(s, SConst) and isinstance(s.value, (list, tuple)):
-            for v in s.value:
-                tag = _unify_tags(tag, _pytag(v))
-        elif getattr(s, "elem", None) is not None:
-            tag = _unify_tags(tag, s.elem)
+def _elem_tag(s: Sym) -> str:
+    """Element tag of an array arm; ``null`` when unknown or empty."""
+    if isinstance(s, SConst) and isinstance(s.value, (list, tuple)):
+        tag = "null"
+        for v in s.value:
+            tag = _unify_tags(tag, _pytag(v))
+        return tag
+    return getattr(s, "elem", None) or "null"
+
+
+def _unify_arms(arms) -> tuple[str, str | None]:
+    """(tag, element tag or None when unknown) of arms merged into one
+    column.  Arrays need a common element type too: Spark would cast
+    ``[x]`` to ``array<string>`` beside ``["a"]``.  Raises CompileError
+    when there is none."""
+    tag = elem = "null"
+    for s in arms:
+        tag = _unify_tags(tag, s.tag)
+        elem = _unify_tags(elem, _elem_tag(s))
+    return tag, None if elem == "null" else elem
 
 
 _COMPILE_CACHE: dict = {}
