@@ -1,0 +1,175 @@
+"""One Arrow boundary for every Python value.
+
+Values enter Spark through ``fallback.to_frame`` (``parallelize``, the
+no-key fold's result) and leave through ``fallback.from_frame``
+(``collect``/``take``, sources' plan-time samples, the no-key fold's
+partial states), both built on the row runner's ``encode_column`` /
+``decode_columns``.  So the compiled path, the interpreter path and
+CPython see the same values, whatever the driver's time zone.
+"""
+
+import ast
+import datetime
+import os
+import pathlib
+import time
+
+import pytest
+
+from conftest import run_diff3
+
+# a DST gap (2:30 on 2020-03-08 does not exist in New York), a DST
+# fold (1:30 on 2020-11-01 happens twice), before the epoch, and the
+# last microsecond of a day
+TIMES = [datetime.datetime(2020, 1, 1, 12),
+         datetime.datetime(2020, 3, 8, 2, 30),
+         datetime.datetime(2020, 11, 1, 1, 30),
+         datetime.datetime(1969, 12, 31, 23, 0, 0, 1),
+         datetime.datetime(2020, 7, 1, 23, 59, 59, 999999)]
+
+# one list per column shape; each must come back from collect() as is
+ADVERSARIAL = {
+    "floats": [1.5, float("nan"), float("inf"), -float("inf"), -0.0, None],
+    "bytes": [b"", b"\x00\xff", b"abc", None],
+    "timestamps": TIMES + [None],
+    "struct_tuples": [(1, ((2, 2.5), "x")), (2, None),
+                      (3, ((4, float("nan")), "é")),
+                      (4, ((None, -float("inf")), ""))],
+    "null_structs": [((1, "a"), 0), (None, 1), ((2, None), 2)],
+    "timestamp_in_tuple": [(1, (TIMES[0], "a")), (2, None),
+                           (3, (TIMES[1], "b"))],
+}
+
+
+@pytest.fixture
+def new_york():
+    """The driver runs in America/New_York, not in the session's UTC."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+def _reprs(values):
+    """Values as reprs: NaN equals NaN, and bytes differ from bytearray,
+    a float from an int and a naive datetime from an aware one."""
+    return [repr(v) for v in values]
+
+
+class TestDriverTimeZone:
+    def test_hour_after_parallelize(self, ctx, ctx_interp, new_york):
+        run_diff3(ctx, ctx_interp, TIMES, lambda d: d.hour,
+                  expect_compiled=True)
+        run_diff3(ctx, ctx_interp, TIMES,
+                  lambda d: (d.day, d.hour, d.minute))
+
+    def test_parquet_sample_matches_runtime(self, ctx, ctx_interp,
+                                            new_york, tmp_path):
+        path = str(tmp_path / "times")
+        ctx.parallelize(TIMES).toparquet(path)
+        for c in (ctx, ctx_interp):
+            src = c.parquet(path)
+            assert sorted(src._sample) == sorted(TIMES)
+            assert sorted(src.collect()) == sorted(TIMES)
+            assert sorted(src.map(lambda d: d.hour).collect()) == \
+                sorted(d.hour for d in TIMES)
+
+    @pytest.mark.parametrize("shape", sorted(ADVERSARIAL))
+    def test_values_round_trip(self, ctx, ctx_interp, new_york, shape):
+        data = ADVERSARIAL[shape]
+        for c in (ctx, ctx_interp):
+            ds = c.parallelize(data)
+            assert _reprs(ds.collect()) == _reprs(data)
+            assert _reprs(ds.take(2)) == _reprs(data[:2])
+            assert ds.exception_counts == {}
+        # through the row runner and back (a compiled identity map reads
+        # a null struct as a tuple of Nones: ROADMAP, null structs)
+        ident = (lambda a, b: (a, b)) if isinstance(data[0], tuple) \
+            else (lambda x: x)
+        got = ctx_interp.parallelize(data).map(ident).collect()
+        assert _reprs(got) == _reprs(data)
+
+    @pytest.mark.parametrize("shape", sorted(ADVERSARIAL))
+    def test_no_key_fold_sees_cpython_values(self, ctx, new_york, shape):
+        data = ADVERSARIAL[shape]
+        r = ctx.parallelize(data).aggregate(
+            lambda a, b: a + b, lambda a, x: a + [repr(x)], []).collect()
+        assert len(r) == 1 and sorted(r[0]) == sorted(_reprs(data))
+
+    def test_variant_and_set_structs(self, ctx, ctx_interp, new_york):
+        nums = [1, 2, 3, 4, 0]
+        variant = lambda x: "odd" if x % 2 else x * 10  # noqa: E731
+        as_set = lambda x: {x, x % 2}  # noqa: E731
+        for f in (variant, as_set):
+            run_diff3(ctx, ctx_interp, nums, f, expect_compiled=True)
+            folded = ctx.parallelize(nums).map(f).aggregate(
+                lambda a, b: a + b, lambda a, x: a + [repr(x)],
+                []).collect()
+            assert sorted(folded[0]) == sorted(repr(f(x)) for x in nums)
+
+    def test_fold_result_crosses_back(self, ctx, new_york):
+        r = ctx.parallelize(TIMES).aggregate(
+            lambda a, b: (min(a[0], b[0]), a[1] + b[1]),
+            lambda a, x: (min(a[0], x), a[1] + [x.hour]),
+            (datetime.datetime.max, [])).collect()
+        assert r[0][0] == min(TIMES)
+        assert sorted(r[0][1]) == sorted(d.hour for d in TIMES)
+        # no partition holds a row: the initial value
+        empty = ctx.parallelize([1, 2]).filter(lambda x: x > 5).aggregate(
+            lambda a, b: a + b, lambda a, x: a + [x], [])
+        assert empty.collect() == [[]]
+
+
+# ---------------------------------------------------------------- tooling
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent / "tuplex_spark"
+FROZEN = ("functions", "streaming")
+
+# Spark calls that move rows between Python and the JVM, and the one
+# place each may appear: the boundary in udf/fallback.py
+ROW_MOVERS = {"createDataFrame", "toArrow", "_collect_as_arrow",
+              "toDataFrame", "collect", "toPandas", "toLocalIterator"}
+ALLOWED = {("udf/fallback.py", "to_frame", "toDataFrame"),
+           ("udf/fallback.py", "from_frame", "_collect_as_arrow")}
+
+
+def _core_modules():
+    for p in sorted(ROOT.rglob("*.py")):
+        rel = p.relative_to(ROOT).as_posix()
+        if rel.split("/")[0] not in FROZEN:
+            yield rel, p.read_text()
+
+
+def _row_movers(rel, src):
+    """(module, enclosing function, attribute) of every row-moving
+    attribute the module uses."""
+    found = []
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr in ROW_MOVERS:
+                found.append((rel, fn, child.attr))
+            walk(child, fn)
+    walk(ast.parse(src), None)
+    return found
+
+
+class TestOneBoundary:
+    def test_no_rdd_and_no_second_decoder(self):
+        for rel, src in _core_modules():
+            assert "_py_value" not in src, rel
+            assert ".rdd" not in src, rel
+
+    def test_rows_move_only_at_the_boundary(self):
+        found = [f for rel, src in _core_modules()
+                 for f in _row_movers(rel, src)]
+        assert set(found) <= ALLOWED, sorted(set(found) - ALLOWED)
+        assert set(found) == ALLOWED

@@ -5318,3 +5318,30 @@ class TestOneNumericOrder:
                   lambda x: list((x > 1, x)),
                   lambda x: 0.5 if x > 3 else (x > 1 if x < 7 else x)):
             run_diff3(ctx, ctx_interp, NUMS, f, expect_compiled=True)
+
+    def test_set_algebra_meets_on_the_lattice(self, ctx, ctx_interp):
+        """Set algebra and relations meet their elements on the lattice:
+        ``{x} | {True}`` keeps int elements, as CPython's ``{1}`` and
+        ``{True, 2}`` do, where double-space algebra collected floats."""
+        for f in (lambda x: {x} | {True},
+                  lambda x: {x} & {True, 2},
+                  lambda x: {x} - {True},
+                  lambda x: {x} ^ {2.5},
+                  lambda x: {x} <= {True, 2},
+                  lambda x: {x} == {1.0},
+                  lambda x: {x > 1} | {x}):
+            run_diff3(ctx, ctx_interp, NUMS, f, expect_compiled=True)
+        got = ctx.parallelize([1, 2]).map(lambda x: {x} | {True}).collect()
+        assert got == [{1}, {1, 2}]
+        assert {type(v) for s in got for v in s} == {int}
+
+    def test_nested_arrays_that_fail_analysis_demote(self, ctx,
+                                                     ctx_interp):
+        """``_as`` casts one level of array elements, so the arms below
+        fail Spark's analysis (ARRAY<ARRAY<BIGINT>> beside
+        ARRAY<ARRAY<BOOLEAN>>): the op runs on the interpreter path
+        instead of raising out of ``map``."""
+        before = ctx.metrics.fallbackUDFs
+        run_diff3(ctx, ctx_interp, [1, 2],
+                  lambda x: [[[x]], [[True]]], expect_compiled=False)
+        assert ctx.metrics.fallbackUDFs == before + 1

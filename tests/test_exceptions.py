@@ -309,13 +309,14 @@ class TestOneLattice:
             assert ds.exception_counts == {}
 
     def test_parallelize_builds_one_frame(self, ctx, monkeypatch):
+        from tuplex_spark import context
         calls = []
-        create = ctx.spark.createDataFrame
+        create = context.to_frame
 
         def spy(*args, **kwargs):
             calls.append(1)
             return create(*args, **kwargs)
-        monkeypatch.setattr(ctx.spark, "createDataFrame", spy)
+        monkeypatch.setattr(context, "to_frame", spy)
         ds = ctx.parallelize(list(range(4000)) + [2 ** 70])
         assert len(calls) == 1
         monkeypatch.undo()

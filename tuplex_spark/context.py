@@ -12,15 +12,17 @@ unknown keys the same way).
 from __future__ import annotations
 
 import json
+import pickle
 
 from pyspark.sql import SparkSession, functions as F, types as T
 
-from .dataset import DataSet
+from .dataset import PYOBJ_COL, DataSet
 from .exceptions import code_for
 from .typeutils import coerce, conforms, infer_schema_from_rows, \
     infer_type, super_type
 from .sources import csv_inference as CSV
-from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD
+from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, from_frame, \
+    to_frame
 
 _SAMPLE_ROWS = 100
 
@@ -203,7 +205,11 @@ class Context:
             # pickled-binary column; map/filter still work, and a map
             # producing representable values promotes back to the
             # structured path.
-            return self._parallelize_pyobjects(rows)
+            df = to_frame(self.spark, [(pickle.dumps(r),) for r in rows],
+                          T.StructType([T.StructField(PYOBJ_COL,
+                                                      T.BinaryType())]))
+            return DataSet(self, df, [PYOBJ_COL],
+                           sample=rows[:_SAMPLE_ROWS], pyobj=True)
         sschema = infer_schema_from_rows(good, columns) if schema is None \
             else schema
         fields = sschema.fields
@@ -211,22 +217,12 @@ class Context:
                 for r in good if len(r) == len(fields) and all(
                     conforms(v, f.dataType) if v is not None else f.nullable
                     for v, f in zip(r, fields))]
-        df = self.spark.createDataFrame(kept, sschema)
+        df = to_frame(self.spark, kept, sschema)
         # the rejected rows never reach Spark: park their known count
         bad = len(data) - len(kept)
         parked = [{"BadParallelizeInput": bad}] if bad else []
         return DataSet(self, df, sschema.fieldNames(),
                        sample=kept[:_SAMPLE_ROWS], parked=parked)
-
-    def _parallelize_pyobjects(self, rows) -> DataSet:
-        import pickle
-        from .dataset import PYOBJ_COL
-        data = [(pickle.dumps(r),) for r in rows]
-        schema = T.StructType([T.StructField(PYOBJ_COL, T.BinaryType(),
-                                             True)])
-        df = self.spark.createDataFrame(data, schema)
-        return DataSet(self, df, [PYOBJ_COL], sample=rows[:_SAMPLE_ROWS],
-                       pyobj=True)
 
     def csv(self, pattern: str, columns=None, header=None, delimiter=None,
             quotechar: str = '"', null_values=None, type_hints=None
@@ -412,10 +408,10 @@ class Context:
         return df
 
     def _sample_from_df(self, df):
-        rows = df.limit(_SAMPLE_ROWS).collect()
+        rows = from_frame(df.limit(_SAMPLE_ROWS))
         if len(df.columns) == 1:
             return [r[0] for r in rows]
-        return [tuple(r) for r in rows]
+        return rows
 
 
 _SCAN_MTIME_CAP = 4096  # stat budget per cache probe
@@ -555,6 +551,10 @@ def build_session(name: str, options: dict | None = None) -> SparkSession:
          .config("spark.sql.optimizer.excludedRules",
                  "org.apache.spark.sql.catalyst.optimizer."
                  "InferFiltersFromGenerate")
+         # Arrow tables from the driver (parallelize) become RDD scans
+         # split over the cores, as Row lists were, not local relations
+         # whose compiled UDFs the optimizer would evaluate in the driver
+         .config("spark.sql.execution.arrow.localRelationThreshold", "0")
          # CSV malformation detection must not depend on which columns a
          # query touches: with parser column pruning, a row with extra
          # tokens is corrupt under the full parse (collect drops it) but

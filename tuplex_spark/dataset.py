@@ -15,6 +15,8 @@ Execution model (Spark-first, not a port):
   sees exactly the values CPython would.  PYOBJECT datasets (pickled
   rows) take (b) too.  Both paths end in ``DataSet._finish_op``, so they
   share one output projection and one exception bookkeeping.
+- actions decode their rows from Arrow with (b)'s decoder
+  (``fallback.from_frame``): they return the values (b) and CPython see.
 - exception semantics (reference §2.7: rows that raise are excluded from
   output, countable, resolvable) are carried IN the DataFrame as three
   hidden columns (__exc_code, __exc_payload, __exc_op).  The payload has
@@ -49,6 +51,7 @@ from collections import Counter as _Counter
 from functools import reduce as _reduce
 from typing import NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from . import exceptions as E
@@ -205,28 +208,6 @@ def _py_type_of_value(v):
     return object
 
 
-def _py_value(v):
-    """Spark row values -> Python values: struct Rows become tuples
-    (the engine's tuple convention), recursively through arrays/maps;
-    variant structs (compiled mixed-type returns, compiler.SVariant)
-    decode to the exact per-row Python value."""
-    from pyspark.sql import Row as _Row
-    if isinstance(v, _Row):
-        flds = getattr(v, "__fields__", None)
-        if flds and flds[0] == "__vt":
-            if not v[0]:
-                return None
-            return next((x for x in v[1:] if x is not None), None)
-        if flds == ["__sv"]:  # compiled set return (compiler.is_set_struct)
-            return set(v[0]) if v[0] is not None else None
-        return tuple(_py_value(x) for x in v)
-    if isinstance(v, list):
-        return [_py_value(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _py_value(x) for k, x in v.items()}
-    return v
-
-
 class DataSet:
     def __init__(self, ctx, df: DataFrame, columns: list[str],
                  sample: list | None = None, parked=None, last_op=None,
@@ -349,10 +330,12 @@ class DataSet:
                 out, vis, out_kind = self._apply_compiled(
                     compiled, kind, op_name, target_col, new_col)
                 m.compiledUDFs += 1
-            except CompileError:
+            except (CompileError, AnalysisException):
                 # materialization can fail AFTER a successful compile
-                # (e.g. a bound method returned as a value) — that must
-                # demote to the interpreter path, never crash the call
+                # (e.g. a bound method returned as a value), and so can
+                # Spark's analysis of the projection (arms whose nested
+                # element types differ) — that must demote to the
+                # interpreter path, never crash the call
                 compiled = None
         if compiled is None:
             m.fallbackUDFs += 1
@@ -800,8 +783,8 @@ class DataSet:
                                 "exception_counts exact pass: "
                                 + "; ".join(why))
             try:
-                rows = _reduce(DataFrame.union, exact) \
-                    .groupBy(EXC_CODE).count().collect()
+                rows = fallback.from_frame(_reduce(
+                    DataFrame.union, exact).groupBy(EXC_CODE).count())
             finally:
                 sc.setLocalProperty("spark.job.description", prev)
             for code, n in rows:
@@ -899,10 +882,10 @@ class DataSet:
         t0 = _time.time()
         df, parked = self._split_exceptions()
         if nmax is None or nmax < 0:
-            rows = df.collect()
+            rows = fallback.from_frame(df)
         else:
             # the reference runs the whole input for take: exact counts
-            rows = df.take(nmax)
+            rows = fallback.from_frame(df.limit(nmax))
             parked = _exact(parked, "take(n)")
         self._collect_exception_counts(df, parked)
         m = self._ctx._metrics
@@ -912,11 +895,25 @@ class DataSet:
         m.totalExceptionCount += sum(self._exception_counts.values())
         if self._pyobj:
             import pickle
-            return [pickle.loads(bytes(r[0])) for r in rows]
-        if len(self._columns) == 1:
-            vals = [_py_value(r[0]) for r in rows]
-            return [(v,) for v in vals] if self._tuple1 else vals
-        return [tuple(_py_value(v) for v in r) for r in rows]
+            return [pickle.loads(r[0]) for r in rows]
+        if len(self._columns) == 1 and not self._tuple1:
+            return [r[0] for r in rows]
+        return rows
+
+    def _records_per_file(self, part_size) -> int:
+        """``maxRecordsPerFile`` for a ``part_size`` byte cap per output
+        file (Spark caps files by record count, not bytes): the cap over
+        the sampled rows' mean width as CSV text, 100 bytes without a
+        sample.  Parquet encodes and compresses, so there the width is
+        an upper bound on the file size, the safe direction for the
+        small-files problem the cap exists to fix."""
+        est = 100
+        if self._sample:
+            widths = [len(",".join(str(v) for v in
+                          (r if isinstance(r, tuple) else (r,)))) + 1
+                      for r in self._sample[:50]]
+            est = max(1, sum(widths) // len(widths))
+        return max(1, int(part_size) // est)
 
     def show(self, nrows: int = None):
         self.toDF().show(nrows if nrows else 20)
@@ -950,14 +947,8 @@ class DataSet:
         w = df.write.mode("overwrite")
         part_size = kwargs.get("part_size")
         if part_size:
-            est = 100  # bytes/row fallback when there is no sample
-            if self._sample:
-                widths = [len(",".join(str(v) for v in
-                              (r if isinstance(r, tuple) else (r,)))) + 1
-                          for r in self._sample[:50]]
-                est = max(1, sum(widths) // len(widths))
             w = w.option("maxRecordsPerFile",
-                         max(1, int(part_size) // est))
+                         self._records_per_file(part_size))
         (w.option("header", header).option("nullValue", null_value)
           .csv(path))
         if part_name_generator is not None:
@@ -1022,20 +1013,8 @@ class DataSet:
             w = df.write.mode("overwrite")
             part_size = kwargs.get("part_size")
             if part_size:
-                # tocsv parity: approximate byte cap per output file via
-                # maxRecordsPerFile from a sampled row-size estimate
-                # (parquet encodes/compresses, so the estimate is the
-                # UNENCODED row width — an upper bound on file size,
-                # which is the safe direction for the small-files
-                # problem this knob exists to fix)
-                est = 100
-                if self._sample:
-                    widths = [len(",".join(str(v) for v in
-                                  (r if isinstance(r, tuple) else (r,))))
-                              + 1 for r in self._sample[:50]]
-                    est = max(1, sum(widths) // len(widths))
                 w = w.option("maxRecordsPerFile",
-                             max(1, int(part_size) // est))
+                             self._records_per_file(part_size))
             if partition_by:
                 # hive-layout directory partitioning: every reader's
                 # filter on these columns becomes directory PRUNING

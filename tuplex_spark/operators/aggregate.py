@@ -8,16 +8,21 @@ and, when each state slot evolves as ``state + expr(row)`` /
 ``min(state, expr)`` / ``max(state, expr)``, lowers the fold onto native
 Catalyst aggregates (F.sum/F.min/F.max with map-side partial aggregation —
 the built-in analog of the reference's thread-local hash-agg + combine,
-LocalBackend.cc:912-919).  Unrecognizable folds fall back to
-``rdd.treeAggregate`` (whole-dataset) or ``applyInArrow`` (by key, rows
-decoded by the row runner's ``decode_columns``) — still a distributed
-partial/final fold, just not codegen'd.  Both hand the fold UDF the values
-CPython would see: struct columns as tuples, NaN as NaN, ints as ints.
+LocalBackend.cc:912-919).  Unrecognizable folds run the fold UDF in
+Python over rows decoded by the row runner's ``decode_columns``, in one
+fold loop (``_fold``): per partition in ``mapInArrow`` (whole-dataset;
+the driver combines the pickled partial states with ``combine``) or per
+group in ``applyInArrow`` (by key) — still a distributed partial/final
+fold, just not codegen'd.  Both hand the fold UDF the values CPython
+would see: struct columns as tuples, NaN as NaN, ints as ints.
 """
 
 from __future__ import annotations
 
 import ast
+import copy
+import functools
+import pickle
 
 from pyspark.sql import functions as F, types as T
 
@@ -184,7 +189,7 @@ def _slot_agg_col(slot: _Slot, name: str):
 
 
 def aggregate_general(ds, combine, aggregate, initial_value, keys):
-    from ..dataset import DataSet, _exact, _py_value
+    from ..dataset import DataSet, _exact
 
     df, parked = ds._split_exceptions()
     schema = ds._schema_of_visible()
@@ -213,23 +218,41 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
     # the fold runs now, in a job of its own: no action job observes
     # the splits it consumes
     parked = _exact(parked, "an eager fold consumed the split")
-    cols0 = [f.name for f in schema.fields]
-    vals = df.rdd.map(lambda r: tuple(map(_py_value, r)) if len(r) > 1
-                      else _py_value(r[0]))
+    cols = [f.name for f in schema.fields]
+    in_types = [f.dataType for f in schema.fields]
 
-    def seq(a, row):
-        return aggregate(a, FB.UDFRow(row, cols0)
-                         if isinstance(row, tuple) else row)
-    result = vals.treeAggregate(initial_value, seq,
-                                lambda a, b: combine(a, b))
-    rows = [result if isinstance(result, tuple) else (result,)]
-    spark = ds._ctx.spark
-    stypes = [infer_type(v) or T.NullType() for v in rows[0]]
+    def partial(batches):
+        # one pickled state per partition; the driver combines them
+        import pyarrow as pa
+        state = copy.deepcopy(initial_value)
+        for batch in batches:
+            state = _fold(aggregate, state, batch, cols, in_types)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pickle.dumps(state)], pa.binary())],
+            names=["__state"])
+    states = [pickle.loads(r[0]) for r in FB.from_frame(
+        df.mapInArrow(partial, "__state binary"))]
+    result = functools.reduce(combine, states) if states \
+        else copy.deepcopy(initial_value)
+    outs = result if isinstance(result, tuple) else (result,)
+    stypes = [infer_type(v) or T.NullType() for v in outs]
     out_schema = T.StructType([
         T.StructField(n, t, True) for n, t in zip(out_names, stypes)])
-    out = spark.createDataFrame(rows, out_schema)
+    out = FB.to_frame(ds._ctx.spark,
+                      [tuple(coerce(v, t) for v, t in zip(outs, stypes))],
+                      out_schema)
     return DataSet(ds._ctx, out, out_names, sample=[result], parked=parked,
                    op_seq=ds._op_seq + 1)
+
+
+def _fold(aggregate, state, data, cols, in_types):
+    """``state`` folded with ``aggregate`` over the rows of Arrow
+    ``data``, each row decoded as CPython sees it: one column's value
+    bare, several as a ``UDFRow``."""
+    for row in zip(*FB.decode_columns(data, cols, in_types)):
+        state = aggregate(state, FB.UDFRow(row, cols) if len(row) != 1
+                          else row[0])
+    return state
 
 
 def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
@@ -239,7 +262,6 @@ def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
     becomes one NormalCaseViolation row (null state, no payload, this
     op's tag) instead of a value ``pa.array`` would truncate."""
     from ..dataset import DataSet
-    import copy
 
     cols = [f.name for f in schema.fields]
     # output type: fold the plan-time sample to observe the state type
@@ -270,11 +292,8 @@ def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
 
     def fold(table):
         import pyarrow as pa
-        state = copy.deepcopy(init)
-        for row in zip(*FB.decode_columns(table, cols, in_types)):
-            state = aggregate(state,
-                              FB.UDFRow(row, cols) if len(row) != 1
-                              else row[0])
+        state = _fold(aggregate, copy.deepcopy(init), table, cols,
+                      in_types)
         outs = state if isinstance(state, tuple) else (state,)
         fits = len(outs) == len(stypes) and all(
             conforms(v, t) for v, t in zip(outs, stypes))

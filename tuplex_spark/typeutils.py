@@ -6,7 +6,8 @@ types.  Every sampler types values here, and the compiler merges
 arms on the same order:
 
 - ``Context.parallelize`` (schema of the rows it keeps, ``conforms``
-  and ``coerce`` for every row before the one ``createDataFrame``);
+  and ``coerce`` for every row before ``fallback.to_frame`` encodes
+  them as one Arrow table);
 - ``sources/csv_inference`` (widening of sampled cell types);
 - ``udf/fallback`` (``infer_output_type`` over a UDF's sampled
   results, ``conforms``/``coerce`` for every row the runner writes);

@@ -797,9 +797,9 @@ class SVariant(Sym):
     (rows violating the normal case run interpreted,
     core/src/physical/PythonPipelineBuilder.cc); here the whole column
     stays compiled and the struct decodes back to the exact Python
-    value at every boundary (collect's _py_value, the Arrow fallback's
-    _struct_to_tuple), so downstream ops and results see real
-    ``int | str`` values."""
+    value wherever rows cross into Python (``fallback.decode_columns``,
+    for the interpreter path, the folds and actions alike), so
+    downstream ops and results see real ``int | str`` values."""
     tag = "pyvariant"
     nullable = True
 
@@ -816,9 +816,9 @@ def is_set_struct(dt) -> bool:
     """Compiled SET value at a column boundary: a 1-field struct whose
     ``__sv`` field holds the distinct elements sorted (sets are
     unordered, so the deterministic order is free to pick) — decoded
-    back to a real Python ``set`` by collect's _py_value and the Arrow
-    fallback's _struct_to_tuple, and re-bound as a set-tagged column by
-    _col_sym so downstream compiled set ops keep compiling."""
+    back to a real Python ``set`` wherever rows cross into Python
+    (``fallback.decode_columns``), and re-bound as a set-tagged column
+    by _col_sym so downstream compiled set ops keep compiling."""
     return (isinstance(dt, T.StructType) and len(dt.fields) == 1
             and dt.fields[0].name == "__sv"
             and isinstance(dt.fields[0].dataType, T.ArrayType))
@@ -1144,17 +1144,18 @@ class Translator:
     def _as(self, s: Sym, tag: str, elem: str | None = None,
             exact: bool = False) -> Column:
         """``s`` as one arm of a value tagged ``tag`` (``elem`` for an
-        array's elements), as ``_unify_arms`` chose them: a numeric arm
-        or array of another tag is cast along the lattice, so a bool
-        beside an int is 1, as ``typeutils.coerce`` has it on the
-        interpreter path.  Null arms stay uncast; Spark types them.
+        array's or set's elements), as ``_unify_arms`` chose them: a
+        numeric arm, array or set of another tag is cast along the
+        lattice, so a bool beside an int is 1, as ``typeutils.coerce``
+        has it on the interpreter path.  Null arms stay uncast; Spark
+        types them.
         ``exact`` casts every arm: a fold's struct fields must carry
         the exact Spark type (``len`` gives an int tag on a 32-bit
         column, a ``None`` start has no type)."""
         c = self.to_col(s)
         if exact or (tag in _NUM_TAGS and s.tag not in (tag, "null")):
             return c.cast(tag_to_spark(tag).simpleString())
-        if tag == "array" and elem in _NUM_TAGS \
+        if tag in ("array", "set") and elem in _NUM_TAGS \
                 and _elem_tag(s) not in (elem, "null"):
             return c.cast(f"array<{tag_to_spark(elem).simpleString()}>")
         return c
@@ -4463,25 +4464,19 @@ class Translator:
                     return F.lit(True)
                 self.guard(F.lit(True), "TypeError")
                 return F.lit(None).cast("boolean")
-            lc, rc = self.to_col(l), self.to_col(r)
-            if l.elem and r.elem and l.elem not in ("null", "any") \
-                    and r.elem not in ("null", "any") \
-                    and l.elem != r.elem:
-                if {l.elem, r.elem} <= {"int", "float", "bool"}:
-                    # {1} == {1.0}: compare in double space
-                    lc = lc.cast("array<double>")
-                    rc = rc.cast("array<double>")
-                    sub = F.size(F.array_except(lc, rc)) == 0
-                    sup = F.size(F.array_except(rc, lc)) == 0
-                else:
-                    # disjoint element TYPES: relations reduce to
-                    # emptiness ({} == {} holds across types; raw
-                    # array_except would be an analysis error)
-                    sub = F.size(lc) == 0
-                    sup = F.size(rc) == 0
-            else:
+            try:
+                # {1} == {1.0} == {True}: elements meet on the lattice
+                _, elem = _unify_arms([l, r])
+                lc, rc = self._as(l, "set", elem), self._as(r, "set", elem)
                 sub = F.size(F.array_except(lc, rc)) == 0   # l <= r
                 sup = F.size(F.array_except(rc, lc)) == 0   # r <= l
+            except CompileError:
+                # disjoint element TYPES: relations reduce to emptiness
+                # ({} == {} holds across types; raw array_except would
+                # be an analysis error)
+                lc, rc = self.to_col(l), self.to_col(r)
+                sub = F.size(lc) == 0
+                sup = F.size(rc) == 0
             return {ast.Eq: sub & sup, ast.NotEq: ~(sub & sup),
                     ast.LtE: sub, ast.GtE: sup,
                     ast.Lt: sub & (F.size(lc) < F.size(rc)),
@@ -5796,19 +5791,11 @@ class Translator:
         if getattr(a, "tag", None) != "set" \
                 or getattr(b, "tag", None) != "set":
             raise CompileError("set op with non-set operand")
-        ac, bc = self.to_col(a), self.to_col(b)
-        elem = a.elem or b.elem
-        if a.elem and b.elem and a.elem not in ("null", "any") \
-                and b.elem not in ("null", "any") and a.elem != b.elem:
-            if {a.elem, b.elem} <= {"int", "float", "bool"}:
-                # 1 == 1.0 dedups across int/float in CPython:
-                # compare in double space (documented divergence
-                # beyond 2**53)
-                ac, bc = (ac.cast("array<double>"),
-                          bc.cast("array<double>"))
-                elem = "float"
-            else:
-                raise CompileError("set op over mixed element types")
+        # 1 == 1.0 == True dedups across numeric types in CPython: the
+        # elements meet on the lattice (a float meet is exact only up
+        # to 2**53); other mixes raise CompileError
+        _, elem = _unify_arms([a, b])
+        ac, bc = self._as(a, "set", elem), self._as(b, "set", elem)
         if op_name == "symmetric_difference":
             col = F.array_union(F.array_except(ac, bc),
                                 F.array_except(bc, ac))

@@ -6,13 +6,15 @@ Reference analog: the pure-Python pipeline fallback
 handle but the compiled path can't.  Every UDF or resolver that does not
 compile runs through ``make_row_runner``: the original function object
 is cloudpickled into one ``mapInArrow`` stage and applied row-at-a-time.
-Arrow is the only way Python-executed rows cross the boundary.
+Arrow is the only way any Python value crosses the boundary: the row
+runner's and the folds' batches, and the driver's own crossings
+(``to_frame`` in, ``from_frame`` out).
 
 - input: ``decode_columns`` turns each input column (``to_pylist()``,
   or numpy where that gives the same values) into the exact values
   CPython would see (None stays None, NaN stays NaN, ints stay ints,
-  structs become tuples, maps dicts, timestamps naive datetimes), or
-  unpickles one pickled-object column;
+  structs become tuples, maps dicts, timestamps naive UTC datetimes),
+  or unpickles one pickled-object column;
 - output: results are checked by ``typeutils.conforms`` — a value that
   misfits the declared type becomes a NormalCaseViolation row — laid
   out by ``typeutils.coerce`` and built into Arrow arrays of the Spark
@@ -250,9 +252,10 @@ def _struct_to_tuple(v, t: T.DataType):
     return v
 
 
-def decode_columns(data, fields: list[str], types: list) -> list[list]:
-    """Columns ``fields`` of an Arrow RecordBatch or Table -> one list of
-    exact Python values per column: the one decoder of Python rows."""
+def decode_columns(data, fields: list, types: list) -> list[list]:
+    """Columns ``fields`` (names or positions) of an Arrow RecordBatch or
+    Table -> one list of exact Python values per column: the one decoder
+    of Python rows."""
     cols = []
     for f, t in zip(fields, types):
         arr = data.column(f)
@@ -274,6 +277,45 @@ def encode_column(values: list, t: T.DataType):
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
     return pa.array(values, type=to_arrow_type(t))
+
+
+def to_frame(spark, rows: list[tuple], schema: T.StructType):
+    """Rows laid out by ``coerce`` -> a DataFrame of ``schema``: one
+    Arrow table of ``encode_column`` arrays (naive datetimes as UTC,
+    whatever the driver's time zone), handed to the JVM as it is.
+    ``createDataFrame(table)`` would rebuild nested arrays first, losing
+    struct field nullability (a tuple holding a tuple or a datetime
+    fails to cast) and, before pyarrow 17, a null map's null."""
+    import pyarrow as pa
+    from pyspark.sql import DataFrame
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [encode_column(list(c), f.dataType)
+         for c, f in zip(cols, schema.fields)],
+        names=schema.fieldNames())
+    # one batch per partition (build_session's localRelationThreshold)
+    sc = spark.sparkContext
+    size = max(1, -(-table.num_rows // sc.defaultParallelism))
+    jvm = spark._jvm
+    batches = sc._serialize_to_jvm(
+        table.to_batches(size), ArrowStreamSerializer(),
+        jvm.PythonSQLUtils.readArrowStreamFromFile, jvm.ArrowIteratorServer)
+    return DataFrame(jvm.PythonSQLUtils.toDataFrame(
+        batches, schema.json(), spark._jsparkSession), spark)
+
+
+def from_frame(df) -> list[tuple]:
+    """A DataFrame's rows as tuples of the values CPython would see,
+    decoded from the Arrow batches the JVM sends.  Not through
+    ``toArrow()``: its cast to the schema fails on a null struct whose
+    fields are not nullable."""
+    types = [f.dataType for f in df.schema.fields]
+    rows = []
+    for batch in df._collect_as_arrow():
+        cols = decode_columns(batch, range(batch.num_columns), types)
+        rows += zip(*cols) if cols else [()] * batch.num_rows
+    return rows
 
 
 def make_row_runner(fn, in_fields: list[str], in_types: list | None,
