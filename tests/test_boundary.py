@@ -145,9 +145,15 @@ def _core_modules():
             yield rel, p.read_text()
 
 
-def _row_movers(rel, src):
-    """(module, enclosing function, attribute) of every row-moving
-    attribute the module uses."""
+# JVM calls that read exception counts, which only the one count reader
+# makes; and the writers, which are actions, not toDF() escapes
+COUNT_READS = {"observedMetrics", "getOrNewObservation", "getRowOrEmpty"}
+WRITERS = ("tocsv", "toorc", "tojson", "toparquet")
+
+
+def _uses(rel, src, attrs):
+    """(module, enclosing function, attribute) of every attribute in
+    ``attrs`` the module uses."""
     found = []
 
     def walk(node, fn):
@@ -155,7 +161,7 @@ def _row_movers(rel, src):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 walk(child, child.name)
                 continue
-            if isinstance(child, ast.Attribute) and child.attr in ROW_MOVERS:
+            if isinstance(child, ast.Attribute) and child.attr in attrs:
                 found.append((rel, fn, child.attr))
             walk(child, fn)
     walk(ast.parse(src), None)
@@ -170,6 +176,19 @@ class TestOneBoundary:
 
     def test_rows_move_only_at_the_boundary(self):
         found = [f for rel, src in _core_modules()
-                 for f in _row_movers(rel, src)]
+                 for f in _uses(rel, src, ROW_MOVERS)]
         assert set(found) <= ALLOWED, sorted(set(found) - ALLOWED)
         assert set(found) == ALLOWED
+
+    def test_one_action_path_and_one_count_reader(self):
+        found = {f for rel, src in _core_modules()
+                 for f in _uses(rel, src, COUNT_READS)}
+        at = ("dataset.py", "_collect_exception_counts")
+        assert found == {at + ("getOrNewObservation",),
+                         at + ("getRowOrEmpty",)}, sorted(found)
+        tree = ast.parse((ROOT / "dataset.py").read_text())
+        methods = {n.name: n for n in ast.walk(tree)
+                   if isinstance(n, ast.FunctionDef)}
+        for w in WRITERS:
+            assert not any(isinstance(n, ast.Attribute) and n.attr == "toDF"
+                           for n in ast.walk(methods[w])), w

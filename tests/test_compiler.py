@@ -7,6 +7,7 @@ CPython-differential pattern of test_fallback.py.
 
 import math
 import random
+import sys
 
 import pytest
 
@@ -5345,3 +5346,15 @@ class TestOneNumericOrder:
         run_diff3(ctx, ctx_interp, [1, 2],
                   lambda x: [[[x]], [[True]]], expect_compiled=False)
         assert ctx.metrics.fallbackUDFs == before + 1
+
+    def test_demotion_prints_nothing(self, ctx, capfd, monkeypatch):
+        """The ``AnalysisException`` a demotion catches is no error:
+        pyspark's query-context logger must not print it."""
+        from pyspark.logger import PySparkLogger
+        log = PySparkLogger.getLogger("DataFrameQueryContextLogger")
+        for h in log.handlers:  # a handler made earlier holds an old stderr
+            monkeypatch.setattr(h, "stream", sys.stderr)
+        got = ctx.parallelize([1, 2]).map(
+            lambda x: [[[x]], [[True]]]).collect()
+        assert got == [[[[x]], [[True]]] for x in (1, 2)]
+        assert "DATATYPE_MISMATCH" not in capfd.readouterr().err

@@ -597,6 +597,81 @@ class TestOnePassCounts:
         assert ds.collect() == [10, 20, 40]
 
 
+
+# engine writer, and the same write of a plain DataFrame: (format read
+# back, write(ds, path), write(DataFrameWriter, path))
+_WRITERS = {
+    "csv": ("csv", lambda ds, p: ds.tocsv(p),
+            lambda w, p: w.option("header", True).csv(p)),
+    "orc": ("orc", lambda ds, p: ds.toorc(p), lambda w, p: w.orc(p)),
+    "json": ("json", lambda ds, p: ds.tojson(p), lambda w, p: w.json(p)),
+    "parquet": ("parquet", lambda ds, p: ds.toparquet(p),
+                lambda w, p: w.parquet(p)),
+    "partition_by": ("parquet",
+                     lambda ds, p: ds.toparquet(p, partition_by="d"),
+                     lambda w, p: w.partitionBy("d").parquet(p)),
+    "bucket_by": ("parquet",
+                  lambda ds, p: ds.toparquet(p, bucket_by="k",
+                                             num_buckets=4,
+                                             table="writer_counts_ds"),
+                  lambda w, p: w.format("parquet").option("path", p)
+                  .bucketBy(4, "k").saveAsTable("writer_counts_df")),
+}
+
+
+class TestWriterCounts:
+    """Writers are actions: like ``collect``, each counts the failed
+    rows in the job that writes the clean ones."""
+
+    @pytest.mark.parametrize("kind", sorted(_WRITERS))
+    def test_writer_counts_in_its_own_job(self, ctx, tmp_path, kind):
+        fmt, write, plain = _WRITERS[kind]
+        ds = _failing(ctx)
+        out = str(tmp_path / "ds")
+        labels = _job_labels(ctx, lambda: write(ds, out))
+        assert not _exact_passes(labels), labels
+        assert ds.exception_counts == {"ZeroDivisionError": 8}
+        assert ctx.spark.read.format(fmt).option("header", True) \
+            .load(out).count() == 32
+        clean = _job_labels(ctx, lambda: plain(
+            ds.toDF().write.mode("overwrite"), str(tmp_path / "df")))
+        assert len(labels) <= len(clean), (labels, clean)
+
+    def test_num_rows_counts_the_whole_input(self, ctx, tmp_path):
+        ds = _failing(ctx)
+        out = str(tmp_path / "ds")
+        labels = _job_labels(ctx, lambda: ds.tocsv(out, num_rows=3))
+        assert set(_exact_passes(labels)) == {f"{EXACT}: num_rows"}, labels
+        assert ds.exception_counts == {"ZeroDivisionError": 8}
+        assert ctx.spark.read.option("header", True).csv(out).count() == 3
+
+    def test_write_after_a_join_with_an_empty_side(self, ctx, tmp_path):
+        empty = ctx.parallelize([(1, "a")], ["k", "v"]) \
+            .filter(lambda r: r["k"] > 5)
+        j = _failing(ctx).join(empty, "k", "k")
+        labels = _job_labels(ctx, lambda: j.toparquet(str(tmp_path)))
+        assert _exact_passes(labels), labels
+        assert j.exception_counts == {"ZeroDivisionError": 8}
+
+    def test_writing_one_dataset_twice(self, ctx, tmp_path):
+        j = _failing(ctx).join(_right(ctx), "k", "k")
+        for _ in range(2):
+            labels = _job_labels(ctx, lambda: j.tocsv(str(tmp_path)))
+            assert not _exact_passes(labels), labels
+            assert j.exception_counts == {"ZeroDivisionError": 8}
+
+    def test_writers_count_as_actions(self, ctx, tmp_path):
+        m = ctx.metrics
+        before = m.as_dict()
+        _failing(ctx).tojson(str(tmp_path))
+        after = m.as_dict()
+        assert after["numActions"] == before["numActions"] + 1
+        assert after["totalRunTime"] > before["totalRunTime"]
+        assert after["totalExceptionCount"] == \
+            before["totalExceptionCount"] + 8
+        assert after["lastActionRowCount"] == before["lastActionRowCount"]
+
+
 _RETRY_SCRIPT = """
 import json, os, sys
 sys.path.insert(0, sys.argv[1])

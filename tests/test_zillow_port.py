@@ -7,6 +7,7 @@ built on — string find/rfind/slicing, int/float casts, chained compares,
 and multi-step withColumn dependencies."""
 
 import math
+from collections import Counter
 
 COLUMNS = ["title", "address", "city", "state", "postal_code", "price",
            "facts and features", "real estate provider", "url"]
@@ -124,7 +125,21 @@ ROWS = [
 ]
 
 
-def _cpython_chain(rows):
+# rows that raise in the chain: no bedroom count (ValueError), a city
+# with no first letter (IndexError), a ZIP that is no number
+# (ValueError), a price with letters in it (ValueError)
+DIRTY = ROWS + [
+    _row("Condo for sale", "$300,000", "studio , 1 ba , 500 sqft"),
+    _row("Condo for sale", "$300,000", "2 bds , 1 ba , 500 sqft", city=""),
+    _row("Condo for sale", "$300,000", "2 bds , 1 ba , 500 sqft",
+         zipc="MA-02"),
+    _row("Condo for sale", "$3OO,000", "2 bds , 1 ba , 800 sqft"),
+]
+
+
+def _cpython_chain(rows, excs=None):
+    """The chain in plain CPython; ``excs`` (a Counter) counts the
+    exception class of every row that raises."""
     out = []
     for tup in rows:
         x = dict(zip(COLUMNS, tup))
@@ -148,30 +163,46 @@ def _cpython_chain(rows):
                              ["url", "zipcode", "address", "city", "state",
                               "bedrooms", "bathrooms", "sqft", "offer",
                               "type", "price"]))
-        except Exception:
+        except Exception as e:
+            if excs is not None:
+                excs[type(e).__name__] += 1
             continue
     return out
 
 
+def _chain(ctx, rows):
+    return (ctx.parallelize(rows, columns=COLUMNS)
+           .withColumn("bedrooms", extractBd)
+           .filter(lambda x: x["bedrooms"] < 10)
+           .withColumn("type", extractType)
+           .filter(lambda x: x["type"] == "condo")
+           .withColumn("zipcode", lambda x: "%05d" % int(x["postal_code"]))
+           .mapColumn("city", lambda x: x[0].upper() + x[1:].lower())
+           .withColumn("bathrooms", extractBa)
+           .withColumn("sqft", extractSqft)
+           .withColumn("offer", extractOffer)
+           .withColumn("price", extractPrice)
+           .filter(lambda x: 100000 < x["price"] < 2e7
+                   and x["offer"] == "sale")
+           .selectColumns(["url", "zipcode", "address", "city", "state",
+                           "bedrooms", "bathrooms", "sqft", "offer",
+                           "type", "price"]))
+
+
 class TestZillowPipeline:
     def test_full_chain_matches_cpython(self, ctx):
-        ds = (ctx.parallelize(ROWS, columns=COLUMNS)
-              .withColumn("bedrooms", extractBd)
-              .filter(lambda x: x["bedrooms"] < 10)
-              .withColumn("type", extractType)
-              .filter(lambda x: x["type"] == "condo")
-              .withColumn("zipcode", lambda x: "%05d" % int(x["postal_code"]))
-              .mapColumn("city", lambda x: x[0].upper() + x[1:].lower())
-              .withColumn("bathrooms", extractBa)
-              .withColumn("sqft", extractSqft)
-              .withColumn("offer", extractOffer)
-              .withColumn("price", extractPrice)
-              .filter(lambda x: 100000 < x["price"] < 2e7
-                      and x["offer"] == "sale")
-              .selectColumns(["url", "zipcode", "address", "city", "state",
-                              "bedrooms", "bathrooms", "sqft", "offer",
-                              "type", "price"]))
+        ds = _chain(ctx, ROWS)
         got = ds.collect()
         want = _cpython_chain(ROWS)
         assert got == want
         assert len(got) == 2  # sale condos under 2e7 with < 10 bd
+
+    def test_tocsv_counts_match_cpython(self, ctx, tmp_path):
+        want = Counter()
+        rows = _cpython_chain(DIRTY, want)
+        assert sum(want.values()) == 4
+        ds = _chain(ctx, DIRTY)
+        ds.tocsv(str(tmp_path))
+        assert ds.exception_counts == dict(want)
+        assert ctx.spark.read.option("header", True) \
+            .csv(str(tmp_path)).count() == len(rows)

@@ -33,13 +33,14 @@ Execution model (Spark-first, not a port):
 - exception counts come from the job that produces an action's rows.
   Each split point (join, unique, set ops, orderBy, limit, aggregates,
   the action itself) parks its failed rows as a named
-  ``DataFrame.observe`` of one ``count_if`` per exception class, and the
-  action reads the counts from its own query's observed metrics.  One
-  exact ``groupBy`` pass over the codes of every split that no
-  action job observes completely runs only when the action stops early
-  (take(n), limit), a sort or an eager fold consumed the split, or AQE
-  dropped the observed node from the executed plan.  Writers, show and
-  toDF report no counts and split without observing.
+  ``DataFrame.observe`` of one ``count_if`` per exception class; every
+  action (collect, take, the writers) runs ``DataSet._action``, which
+  reads the counts from the session's observations of its own job.  One
+  exact ``groupBy`` pass over the codes of every split that no action
+  job observes completely runs only when the action stops early (take(n),
+  limit, num_rows), a sort or an eager fold consumed the split, or AQE
+  dropped the observed node from the executed plan.  show and toDF
+  report no counts and split without observing.
 """
 
 from __future__ import annotations
@@ -52,6 +53,7 @@ from functools import reduce as _reduce
 from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from . import exceptions as E
@@ -326,6 +328,10 @@ class DataSet:
         m.totalCompilationTime += _time.time() - t0
         results, sample = self._sample_eval(fn, kind, target_col, new_col)
         if compiled is not None:
+            # pyspark logs every AnalysisException it raises, with the
+            # JVM stack; one caught here is a demotion, not an error
+            log = PySparkLogger.getLogger("DataFrameQueryContextLogger")
+            was, log.disabled = log.disabled, True
             try:
                 out, vis, out_kind = self._apply_compiled(
                     compiled, kind, op_name, target_col, new_col)
@@ -337,6 +343,8 @@ class DataSet:
                 # element types differ) — that must demote to the
                 # interpreter path, never crash the call
                 compiled = None
+            finally:
+                log.disabled = was
         if compiled is None:
             m.fallbackUDFs += 1
             out, vis, out_kind = self._apply_interpreted(
@@ -755,27 +763,31 @@ class DataSet:
         (reference: dataset.py:706)."""
         return dict(self._exception_counts)
 
-    def _collect_exception_counts(self, df, parked):
-        """Exception counts of an action that ran ``df``: each parked
-        split's counts come from ``df``'s observed metrics.  The splits
-        no job of the action observed completely are counted in one
-        exact job grouping their codes, labelled with the reason."""
+    def _collect_exception_counts(self, parked, run):
+        """Run an action's ``run()``; set the counts of ``parked`` from
+        session observations keyed like their ``CollectMetrics`` nodes
+        (name, frame id), which any query that runs the node completes.
+        Splits with no observed row (exact ones; an empty row: AQE
+        dropped the node; none within the read's 100 ms wait) are counted
+        in one exact job grouping their codes, labelled with the reason."""
+        manager = self._ctx.spark._jsparkSession.observationManager()
+        obs = [None if isinstance(p, dict) or p.exact else
+               manager.getOrNewObservation(p.name, p.frame._jdf.id())
+               for p in parked]
+        out = run()
         counts = _Counter()
-        observed = None
         exact, why = [], {}
-        for p in parked:
+        for p, o in zip(parked, obs):
             if isinstance(p, dict):
                 counts.update(p)
                 continue
-            if not p.exact:
-                if observed is None:
-                    observed = df._jdf.queryExecution().observedMetrics()
-                row = observed.get(p.name)
-                if row.isDefined():
-                    counts.update(_json.loads(row.get().json())["counts"])
-                    continue
+            row = None if o is None else o.getRowOrEmpty()
+            if row is not None and row.isDefined() and row.get().length():
+                counts.update(_json.loads(row.get().json())["counts"])
+                continue
             exact.append(p.frame.select(EXC_CODE))
-            why[p.exact or "observation not in the executed plan"] = None
+            why[p.exact or ("observed node dropped" if row.isDefined()
+                            else "observation incomplete")] = None
         if exact:
             sc = self._ctx.spark.sparkContext
             prev = sc.getLocalProperty("spark.job.description")
@@ -791,6 +803,7 @@ class DataSet:
                 if code:
                     counts[E.name_for_code(code)] += n
         self._exception_counts = {c: n for c, n in counts.items() if n}
+        return out
 
     # -------------------------------------------------------------- joins
     def join(self, right: "DataSet", leftKeyColumn: str,
@@ -863,7 +876,8 @@ class DataSet:
 
     def toDF(self) -> DataFrame:
         """The clean Spark DataFrame (escape hatch; failed rows removed).
-        It reports no counts, so it splits without observing."""
+        It is no action and reports no counts, so it splits without
+        observing; the writers count theirs."""
         if not self._has_exc:
             return self._df
         return self._df.filter(F.col(EXC_CODE) == 0).select(*self._columns)
@@ -874,25 +888,32 @@ class DataSet:
         parity-plus; the reference has no SQL surface)."""
         self.toDF().createOrReplaceTempView(name)
 
+    def _action(self, body, limit=None, why=None):
+        """The one action path: split the failed rows off, run ``body``
+        on the clean frame (its first ``limit`` rows: the splits then
+        take the exact pass, labelled ``why``), read the counts and book
+        the action in ``Context.metrics``.  Returns ``body``'s result."""
+        import time as _time
+        t0 = _time.time()
+        df, parked = self._split_exceptions()
+        if limit is not None:
+            df, parked = df.limit(limit), _exact(parked, why)
+        out = self._collect_exception_counts(parked, lambda: body(df))
+        m = self._ctx._metrics
+        m.totalRunTime += _time.time() - t0
+        m.numActions += 1
+        m.totalExceptionCount += sum(self._exception_counts.values())
+        return out
+
     def collect(self) -> list:
         return self.take(-1)
 
     def take(self, nmax: int = 5) -> list:
-        import time as _time
-        t0 = _time.time()
-        df, parked = self._split_exceptions()
-        if nmax is None or nmax < 0:
-            rows = fallback.from_frame(df)
-        else:
-            # the reference runs the whole input for take: exact counts
-            rows = fallback.from_frame(df.limit(nmax))
-            parked = _exact(parked, "take(n)")
-        self._collect_exception_counts(df, parked)
-        m = self._ctx._metrics
-        m.totalRunTime += _time.time() - t0
-        m.numActions += 1
-        m.lastActionRowCount = len(rows)
-        m.totalExceptionCount += sum(self._exception_counts.values())
+        # the reference runs the whole input for take: exact counts
+        rows = self._action(fallback.from_frame,
+                            None if nmax is None or nmax < 0 else nmax,
+                            "take(n)")
+        self._ctx._metrics.lastActionRowCount = len(rows)
         if self._pyobj:
             import pickle
             return [pickle.loads(r[0]) for r in rows]
@@ -918,39 +939,44 @@ class DataSet:
     def show(self, nrows: int = None):
         self.toDF().show(nrows if nrows else 20)
 
+    def _write(self, save, kwargs, prep=None):
+        """Writer action: ``save`` the ``prep``-ed clean frame's writer.
+        ``num_rows`` -> limit, ``num_parts`` -> repartition, ``part_size``
+        (bytes per part file) -> ``maxRecordsPerFile``.  Writers know no
+        row count without another pass: ``lastActionRowCount`` stays."""
+        n, parts = kwargs.get("num_rows"), kwargs.get("num_parts")
+        size = kwargs.get("part_size")
+
+        def body(df):
+            df = df.repartition(parts) if parts else df
+            w = (prep(df) if prep else df).write.mode("overwrite")
+            save(w.option("maxRecordsPerFile", self._records_per_file(size))
+                 if size else w)
+        self._action(body, int(n) if n else None, "num_rows")
+
     def tocsv(self, path: str, header: bool = True, null_value: str = "",
               part_name_generator=None, **kwargs):
-        """Write CSV (reference: dataset.py:500).
+        """Write CSV (reference: dataset.py:500); num_rows, num_parts
+        and part_size as in ``_write``.
 
-        num_parts -> repartition; num_rows -> limit; part_size (a
-        byte cap per part file) -> maxRecordsPerFile via a sample-based
-        row-size estimate (Spark caps files by record count, not bytes);
         header may be a list of names to write instead of the column
         names (reference signature);
         part_name_generator(part_no) -> custom part file names applied by
         post-hoc rename (Spark has no naming hook; same caveat as the
         reference's callback, which names parts by output task)."""
-        df = self.toDF()
+        prep = None
         if isinstance(header, list):
             if len(header) != len(self._columns):
                 raise ValueError(
                     f"header names {len(header)} != columns "
                     f"{len(self._columns)}")
-            df = df.select(*[F.col(c).alias(h)
-                             for c, h in zip(self._columns, header)])
-            header = True
-        if kwargs.get("num_rows"):
-            df = df.limit(int(kwargs["num_rows"]))
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
-        w = df.write.mode("overwrite")
-        part_size = kwargs.get("part_size")
-        if part_size:
-            w = w.option("maxRecordsPerFile",
-                         self._records_per_file(part_size))
-        (w.option("header", header).option("nullValue", null_value)
-          .csv(path))
+            names, header = header, True
+
+            def prep(df):
+                return df.select(*[F.col(c).alias(h)
+                                   for c, h in zip(self._columns, names)])
+        self._write(lambda w: w.option("header", header)
+                    .option("nullValue", null_value).csv(path), kwargs, prep)
         if part_name_generator is not None:
             import glob as _glob
             import os as _os
@@ -965,21 +991,13 @@ class DataSet:
                     _os.remove(crc)
 
     def toorc(self, path: str, **kwargs):
-        df = self.toDF()
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
-        df.write.mode("overwrite").orc(path)
+        self._write(lambda w: w.orc(path), kwargs)
 
     def tojson(self, path: str, **kwargs):
         """JSON-lines sink (write side of Context.json) — the
         training-data interchange format; one JSON object per line,
         Spark-native writer (beyond the reference's csv/orc pair)."""
-        df = self.toDF()
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
-        df.write.mode("overwrite").json(path)
+        self._write(lambda w: w.json(path), kwargs)
 
     def toparquet(self, path: str, bucket_by=None, num_buckets: int = 32,
                   sort_by=None, table: str | None = None,
@@ -1001,38 +1019,25 @@ class DataSet:
         column skip whole row groups — the cheap cousin of directory
         partitioning for high-cardinality columns (was silently ignored
         in the non-bucketed path before round 7)."""
-        df = self.toDF()
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
+        def names(c):
+            return [c] if isinstance(c, str) else list(c or ())
+        sb = names(sort_by)
         if bucket_by is None:
-            if sort_by:
-                sb = [sort_by] if isinstance(sort_by, str) \
-                    else list(sort_by)
-                df = df.sortWithinPartitions(*sb)
-            w = df.write.mode("overwrite")
-            part_size = kwargs.get("part_size")
-            if part_size:
-                w = w.option("maxRecordsPerFile",
-                             self._records_per_file(part_size))
-            if partition_by:
-                # hive-layout directory partitioning: every reader's
-                # filter on these columns becomes directory PRUNING
-                # (the same lever ivf_build uses for probe pruning)
-                pb = [partition_by] if isinstance(partition_by, str) \
-                    else list(partition_by)
-                w = w.partitionBy(*pb)
-            w.parquet(path)
+            # hive-layout directory partitioning: every reader's filter
+            # on these columns becomes directory PRUNING (the same lever
+            # ivf_build uses for probe pruning)
+            self._write(lambda w: w.partitionBy(*names(partition_by))
+                        .parquet(path), kwargs,
+                        lambda df: df.sortWithinPartitions(*sb) if sb
+                        else df)
             return
         if partition_by:
             raise ValueError("partition_by and bucket_by are exclusive")
-        cols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
         name = table or _re.sub(r"[^A-Za-z0-9_]", "_",
                                 path.rstrip("/").rsplit("/", 1)[-1])
-        w = (df.write.mode("overwrite").format("parquet")
-             .option("path", path)
-             .bucketBy(num_buckets, *cols))
-        if sort_by:
-            sb = [sort_by] if isinstance(sort_by, str) else list(sort_by)
-            w = w.sortBy(*sb)
-        w.saveAsTable(name)
+
+        def save(w):
+            w = w.format("parquet").option("path", path) \
+                .bucketBy(num_buckets, *names(bucket_by))
+            (w.sortBy(*sb) if sb else w).saveAsTable(name)
+        self._write(save, kwargs)
