@@ -7,7 +7,10 @@ built on — string find/rfind/slicing, int/float casts, chained compares,
 and multi-step withColumn dependencies."""
 
 import math
+import threading
 from collections import Counter
+
+import pytest
 
 COLUMNS = ["title", "address", "city", "state", "postal_code", "price",
            "facts and features", "real estate provider", "url"]
@@ -206,3 +209,44 @@ class TestZillowPipeline:
         assert ds.exception_counts == dict(want)
         assert ctx.spark.read.option("header", True) \
             .csv(str(tmp_path)).count() == len(rows)
+
+
+# py4j round trips the building thread makes to compile and build the
+# chain over ROWS, no action: 14,746 with pyspark's per-call origin
+# capture on (its default), 5,226 with it off, as engine sessions build
+# it (context.build_session).  The bound is half of 14,746.
+ROUND_TRIPS = 7373
+
+
+class TestPlanBuilding:
+    def test_chain_builds_without_origin_capture(self, ctx, monkeypatch):
+        from py4j.java_gateway import GatewayClient
+        from pyspark.errors.utils import is_debugging_enabled
+        from tuplex_spark.udf import compiler
+        # compile every UDF: earlier tests may have filled the cache
+        monkeypatch.setattr(compiler, "_COMPILE_CACHE", {})
+        builder = threading.current_thread()
+        sent = [0]
+        send = GatewayClient.send_command
+
+        # py4j frees collected Java objects from a thread of its own;
+        # only the building thread's round trips are the build's
+        def counting(self, *args, **kwargs):
+            sent[0] += threading.current_thread() is builder
+            return send(self, *args, **kwargs)
+
+        monkeypatch.setattr(GatewayClient, "send_command", counting)
+        _chain(ctx, ROWS)
+        monkeypatch.undo()
+        assert sent[0] <= ROUND_TRIPS, sent[0]
+        assert not is_debugging_enabled()
+
+    def test_analysis_errors_keep_their_query_context(self, ctx):
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import functions as F
+        with pytest.raises(AnalysisException) as e:
+            ctx.spark.range(3).select(
+                F.array(F.array("id"), F.array(F.lit(True))))
+        q = e.value.getQueryContext()[0]
+        assert q.contextType().name == "DataFrame"
+        assert q.fragment() == "array"

@@ -68,6 +68,16 @@ def _plurality_family(rows: list, width: int) -> list | None:
 
 
 class Context:
+    """Owns the SparkSession and the ``tuplex.*`` options.
+
+    Without ``spark`` the session comes from ``build_session``, which
+    turns off pyspark's per-call origin capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) to save py4j round
+    trips while plans are built.  A session passed in as ``spark`` keeps
+    its own setting.  pyspark reads that setting once per process, at
+    its first ``pyspark.sql.functions`` call with a session, and the
+    engine never writes pyspark's cached copy of it."""
+
     def __init__(self, conf: dict | None = None, spark: SparkSession = None,
                  name: str = "tuplex_spark", **kwargs):
         def norm(d):
@@ -535,6 +545,18 @@ def build_session(name: str, options: dict | None = None) -> SparkSession:
          .config("spark.sql.files.maxPartitionBytes",
                  options.get("tuplex.inputSplitSize", "64MB"))
          .config("spark.ui.enabled", "false")
+         # Plans are built Column by Column over py4j, and with this
+         # flag on (pyspark's default) every pyspark.sql.functions call
+         # also records its Python call site in the JVM: about 7 more
+         # round trips per call (getActiveSession, a JVM class lookup,
+         # conf.get, PySparkCurrentOrigin.set/clear).  Off, the zillow
+         # port's 11-UDF chain builds in 5,226 round trips instead of
+         # 14,746 (tests/test_zillow_port.py).  No error loses anything:
+         # an AnalysisException keeps its DataFrame query context
+         # (fragment and JVM call site), and pyspark still logs it.
+         # pyspark reads the flag once per process, at its first wrapped
+         # call with a session.
+         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
          # InferFiltersFromGenerate synthesizes size(gen_input) > 0 and
          # predicate pushdown then INLINES the generator's whole input
          # expression into the filter.  For explode(expensive-HOF) —
