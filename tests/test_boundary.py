@@ -150,6 +150,14 @@ def _core_modules():
 COUNT_READS = {"observedMetrics", "getOrNewObservation", "getRowOrEmpty"}
 WRITERS = ("tocsv", "toorc", "tojson", "toparquet")
 
+# the compiler's one format-spec lowering, the four constructs that use
+# it (f-strings, str.format, format() and %-formats), and the second
+# lowerings it replaced
+FORMAT_SPEC_CALLERS = ("_ev_JoinedStr", "_str_method", "_b_format",
+                       "_percent_format")
+SECOND_LOWERINGS = {"_format_spec_col", "_format_spec_full", "_SPEC_RE",
+                    "_while_counter_rewrite_incfirst"}
+
 
 def _uses(rel, src, attrs):
     """(module, enclosing function, attribute) of every attribute in
@@ -192,3 +200,16 @@ class TestOneBoundary:
         for w in WRITERS:
             assert not any(isinstance(n, ast.Attribute) and n.attr == "toDF"
                            for n in ast.walk(methods[w])), w
+
+    def test_one_lowering_per_compiled_construct(self):
+        found = {f for rel, src in _core_modules()
+                 for f in _uses(rel, src, {"_format_spec"})}
+        assert found == {("udf/compiler.py", fn, "_format_spec")
+                         for fn in FORMAT_SPEC_CALLERS}, sorted(found)
+        tree = ast.parse((ROOT / "udf/compiler.py").read_text())
+        names = {n.name for n in ast.walk(tree)
+                 if isinstance(n, ast.FunctionDef)}
+        names |= {t.id for n in ast.walk(tree) if isinstance(n, ast.Assign)
+                  for t in n.targets if isinstance(t, ast.Name)}
+        assert "_format_spec" in names
+        assert not names & SECOND_LOWERINGS, sorted(names & SECOND_LOWERINGS)

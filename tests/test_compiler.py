@@ -2061,6 +2061,34 @@ class TestFormatSpecs:
                  expect_compiled=True)
 
 
+class TestFormatSpecsCountCharacters:
+    """String width, precision and alignment count characters, as
+    CPython does; java's Formatter counts UTF-16 units, so an emoji
+    outside the BMP used to pad one short or be cut in half."""
+
+    DATA = ["😀", "ab", "😀x", "é", ""]
+
+    def test_format_method_width(self, ctx):
+        run_diff(ctx, self.DATA, lambda s: "{:5s}|".format(s),
+                 expect_compiled=True)
+
+    def test_format_method_precision(self, ctx):
+        run_diff(ctx, self.DATA, lambda s: "{:.1s}|".format(s),
+                 expect_compiled=True)
+
+    def test_format_method_centered(self, ctx):
+        run_diff(ctx, self.DATA, lambda s: "{:^7}|".format(s),
+                 expect_compiled=True)
+
+    def test_fstring_width(self, ctx):
+        run_diff(ctx, self.DATA, lambda s: f"{s:5}|",
+                 expect_compiled=True)
+
+    def test_format_builtin_width(self, ctx):
+        run_diff(ctx, self.DATA, lambda s: format(s, "4s") + "|",
+                 expect_compiled=True)
+
+
 class TestMapFilterDivmodBuiltins:
     DATA = ["a bb ccc", "dddd e", ""]
 
@@ -5358,3 +5386,29 @@ class TestOneNumericOrder:
             lambda x: [[[x]], [[True]]]).collect()
         assert got == [[[[x]], [[True]]] for x in (1, 2)]
         assert "DATATYPE_MISMATCH" not in capfd.readouterr().err
+
+
+class TestCompileCache:
+    def test_a_full_cache_still_takes_new_udfs(self, ctx, monkeypatch):
+        """Past its bound the compile cache drops its oldest entry, so a
+        long-lived process keeps caching: a fresh UDF built twice
+        compiles once."""
+        from collections import OrderedDict
+        from tuplex_spark.udf import compiler
+        full = OrderedDict((("filler", i), None)
+                           for i in range(compiler._COMPILE_CACHE_MAX))
+        monkeypatch.setattr(compiler, "_COMPILE_CACHE", full)
+        calls = [0]
+        compile_ = compiler.Translator.compile
+
+        def counting(self, fn):
+            calls[0] += 1
+            return compile_(self, fn)
+
+        monkeypatch.setattr(compiler.Translator, "compile", counting)
+        fresh = lambda x: x * 7 + 41  # noqa: E731
+        for _ in range(2):
+            assert ctx.parallelize([1, 2]).map(fresh).collect() == [48, 55]
+        assert calls[0] == 1
+        assert len(full) == compiler._COMPILE_CACHE_MAX
+        assert ("filler", 0) not in full

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import pickle
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession, functions as F, types as T
 
@@ -101,8 +102,9 @@ class Context:
         # scans of the same files otherwise pay parquet footer analysis
         # plus a driver-side sample collect per call (~0.2s each) —
         # plan-build overhead that dominated sub-second queries.  The
-        # mtime key drops the entry when the files change.
-        self._scan_cache: dict = {}
+        # mtime key drops the entry when the files change.  Past 256
+        # entries the oldest goes.
+        self._scan_cache: OrderedDict = OrderedDict()
 
     @property
     def metrics(self):
@@ -385,8 +387,9 @@ class Context:
         if columns:
             df = df.toDF(*columns)
         sample = self._sample_from_df(df)
-        if len(self._scan_cache) < 256:
-            self._scan_cache[key] = (df, sample)
+        self._scan_cache[key] = (df, sample)
+        if len(self._scan_cache) > 256:
+            self._scan_cache.popitem(last=False)
         return DataSet(self, df, df.columns, sample=sample)
 
     def _read_parquet_nanos_safe(self, pattern: str):
@@ -564,12 +567,9 @@ def build_session(name: str, options: dict | None = None) -> SparkSession:
          # array per row below the stage that was deliberately staged to
          # compute it once (measured 6-10x slowdown at sf0.1).  The
          # inferred filter only skips empty arrays; never worth it.
-         # InferFiltersFromGenerate: inlines whole generator expressions
-         # into synthesized filters (re-runs the tokenizer per row below
-         # the staged projection — measured 6-10x at sf0.1).  Predicate
-         # pushdown through HEAVY compiled-UDF projections is blocked
-         # per-operator instead (dataset.py: nondeterministic identity
-         # wrapper), so plain scan pushdown keeps working.
+         # Predicate pushdown through HEAVY compiled-UDF projections is
+         # blocked per-operator instead (dataset.py: nondeterministic
+         # identity wrapper), so plain scan pushdown keeps working.
          .config("spark.sql.optimizer.excludedRules",
                  "org.apache.spark.sql.catalyst.optimizer."
                  "InferFiltersFromGenerate")

@@ -151,15 +151,10 @@ def _combine_matches(combine_fn, ops) -> bool:
         body = _body_expr(node)
     except Exception:
         return False
-    a_name, b_name = params
     slots = list(body.elts) if isinstance(body, ast.Tuple) else [body]
     if len(slots) != len(ops):
         return False
-    for i, (sl, op) in enumerate(zip(slots, ops)):
-        want = -1 if len(ops) == 1 and not isinstance(body, ast.Tuple) else i
-
-        def refs(n):
-            return {_agg_ref_slot(n, a_name, 99), _agg_ref_slot(n, b_name, 99)}
+    for sl, op in zip(slots, ops):
         if op == "sum":
             if not (isinstance(sl, ast.BinOp) and isinstance(sl.op, ast.Add)):
                 return False

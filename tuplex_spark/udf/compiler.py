@@ -28,6 +28,7 @@ import math as _math
 import re as _re_mod
 import string as _string_mod
 import random as _random_mod
+from collections import OrderedDict
 
 from pyspark.sql import Column, functions as F, types as T
 
@@ -2052,7 +2053,7 @@ class Translator:
             # tolerate both break and continue: the counter is already
             # advanced before either can skip anything, so the for-range
             # rewrite (loop var j, body `i = j + 1; rest`) is exact.
-            rewritten = self._while_counter_rewrite_incfirst(st)
+            rewritten = self._while_counter_rewrite(st, inc_first=True)
             if rewritten is not None:
                 return self._exec_for(rewritten, path)
             # increment-LAST form: `continue` would skip the trailing
@@ -2061,7 +2062,7 @@ class Translator:
             # updates on both forms, so it rides the for-range fold's
             # flag lowering.
             if not any(_contains_continue(s) for s in st.body):
-                rewritten = self._while_counter_rewrite(st)
+                rewritten = self._while_counter_rewrite(st, inc_first=False)
                 if rewritten is not None:
                     return self._exec_for(rewritten, path)
             # `while True: if c: break; rest` / `while True: body;
@@ -2091,7 +2092,8 @@ class Translator:
             for _ in range(self._MAX_UNROLL):
                 test = self.eval(st.test)
                 if not isinstance(test, SConst):
-                    rewritten = self._while_counter_rewrite(st)
+                    rewritten = self._while_counter_rewrite(
+                        st, inc_first=False)
                     if rewritten is not None:
                         self._unroll_depth -= 1
                         try:
@@ -2226,14 +2228,19 @@ class Translator:
                 return self._exec_while(w, path)
         return None
 
-    def _while_counter_rewrite(self, st: ast.While):
+    def _while_counter_rewrite(self, st: ast.While, inc_first: bool):
         """``while i < stop: ...; i += 1`` with a DATA-DEPENDENT stop
-        rewrites to ``for i in range(i0, stop)`` and takes the dynamic
-        fold path (one F.aggregate, no Python).  Conditions: the test is
-        ``i < stop`` / ``i <= stop`` (either operand order), the body's
-        LAST statement is ``i += 1``, nothing else assigns i, and the
-        stop expression is loop-invariant (reads no name the body
-        assigns).  Returns the synthesized ast.For or None."""
+        rewrites to ``for i in range(i0, stop): ...`` and takes the
+        dynamic fold path (one F.aggregate, no Python).  With
+        ``inc_first`` the increment is the body's FIRST statement
+        (``while i < stop: i += 1; rest``) and the loop becomes ``for
+        __wi in range(i0, stop): i = __wi + 1; rest`` — exact even when
+        rest holds break/continue, because CPython has already advanced
+        the counter before either can transfer control; otherwise it is
+        the LAST statement.  Conditions: the test is ``i < stop`` /
+        ``i <= stop`` (either operand order), nothing else assigns i,
+        and the stop expression is loop-invariant (reads no name the
+        body assigns).  Returns the synthesized ast.For or None."""
         t = st.test
         if not (isinstance(t, ast.Compare) and len(t.ops) == 1):
             return None
@@ -2248,15 +2255,15 @@ class Translator:
             return None
         if not st.body:
             return None
-        last = st.body[-1]
-        if not (isinstance(last, ast.AugAssign)
-                and isinstance(last.op, ast.Add)
-                and isinstance(last.target, ast.Name)
-                and last.target.id == var
-                and isinstance(last.value, ast.Constant)
-                and last.value.value == 1):
+        inc = st.body[0] if inc_first else st.body[-1]
+        if not (isinstance(inc, ast.AugAssign)
+                and isinstance(inc.op, ast.Add)
+                and isinstance(inc.target, ast.Name)
+                and inc.target.id == var
+                and isinstance(inc.value, ast.Constant)
+                and inc.value.value == 1):
             return None
-        rest = st.body[:-1]
+        rest = st.body[1:] if inc_first else st.body[:-1]
         assigned = {n.id for bs in rest for n in ast.walk(bs)
                     if isinstance(n, ast.Name)
                     and isinstance(n.ctx, ast.Store)}
@@ -2282,80 +2289,22 @@ class Translator:
                             "int", stop_sym.nullable)
         elif le:
             stop_sym = self._binop(ast.Add(), stop_sym, SConst(1))
-        return ast.For(
-            target=ast.Name(id=var, ctx=ast.Store()),
-            iter=ast.Call(func=ast.Name(id="range", ctx=ast.Load()),
-                          args=[_SymExpr(start_sym), _SymExpr(stop_sym)],
-                          keywords=[]),
-            body=rest if rest else [ast.Pass()],
-            orelse=[])
-
-    def _while_counter_rewrite_incfirst(self, st: ast.While):
-        """``while i < stop: i += 1; <rest>`` (increment FIRST) rewrites
-        to ``for __wi in range(i0, stop): i = __wi + 1; <rest>`` —
-        unlike the increment-last form this is exact even when <rest>
-        contains break/continue, because CPython has already advanced
-        the counter before either can transfer control.  Conditions
-        mirror _while_counter_rewrite: test ``i < stop``/``i <= stop``
-        (either orientation), nothing else assigns i, loop-invariant
-        stop.  Returns the synthesized ast.For or None."""
-        t = st.test
-        if not (isinstance(t, ast.Compare) and len(t.ops) == 1):
-            return None
-        op = t.ops[0]
-        left, right = t.left, t.comparators[0]
-        if isinstance(left, ast.Name) and isinstance(op, (ast.Lt, ast.LtE)):
-            var, stop_node, le = left.id, right, isinstance(op, ast.LtE)
-        elif isinstance(right, ast.Name) \
-                and isinstance(op, (ast.Gt, ast.GtE)):
-            var, stop_node, le = right.id, left, isinstance(op, ast.GtE)
+        if inc_first:
+            n = self._loop_flag_id = getattr(self, "_loop_flag_id", 0) + 1
+            target = f"__wi{n}"
+            body = [ast.Assign(
+                targets=[ast.Name(id=var, ctx=ast.Store())],
+                value=ast.BinOp(left=ast.Name(id=target, ctx=ast.Load()),
+                                op=ast.Add(),
+                                right=ast.Constant(value=1)))] + rest
         else:
-            return None
-        if not st.body:
-            return None
-        first = st.body[0]
-        if not (isinstance(first, ast.AugAssign)
-                and isinstance(first.op, ast.Add)
-                and isinstance(first.target, ast.Name)
-                and first.target.id == var
-                and isinstance(first.value, ast.Constant)
-                and first.value.value == 1):
-            return None
-        rest = st.body[1:]
-        assigned = {n.id for bs in rest for n in ast.walk(bs)
-                    if isinstance(n, ast.Name)
-                    and isinstance(n.ctx, ast.Store)}
-        if var in assigned:
-            return None
-        stop_reads = {n.id for n in ast.walk(stop_node)
-                      if isinstance(n, ast.Name)
-                      and isinstance(n.ctx, ast.Load)}
-        if stop_reads & (assigned | {var}):
-            return None  # stop must be loop-invariant
-        if var not in self._locals:
-            return None
-        start_sym = self._locals[var]
-        stop_sym = self.eval(stop_node)
-        stop_sym = self.num(stop_sym, "while bound")
-        if stop_sym.tag == "float":
-            if le:
-                raise CompileError("while <= float bound")
-            stop_sym = SCol(F.ceil(self.to_col(stop_sym)).cast("long"),
-                            "int", stop_sym.nullable)
-        elif le:
-            stop_sym = self._binop(ast.Add(), stop_sym, SConst(1))
-        n = self._loop_flag_id = getattr(self, "_loop_flag_id", 0) + 1
-        j = f"__wi{n}"
-        sync = ast.Assign(
-            targets=[ast.Name(id=var, ctx=ast.Store())],
-            value=ast.BinOp(left=ast.Name(id=j, ctx=ast.Load()),
-                            op=ast.Add(), right=ast.Constant(value=1)))
+            target, body = var, rest if rest else [ast.Pass()]
         return ast.For(
-            target=ast.Name(id=j, ctx=ast.Store()),
+            target=ast.Name(id=target, ctx=ast.Store()),
             iter=ast.Call(func=ast.Name(id="range", ctx=ast.Load()),
                           args=[_SymExpr(start_sym), _SymExpr(stop_sym)],
                           keywords=[]),
-            body=[sync] + rest,
+            body=body,
             orelse=[])
 
     def _exec_while_unroll_break(self, st: ast.While, path):
@@ -2614,64 +2563,14 @@ class Translator:
                for s in init.values()):
             return bail()
 
-        def run_step(acc_syms):
-            """Evaluate (test, body) under acc bindings; returns
-            (cond_sym, {acc: Sym-after}, captured_guards).  Guards the
-            body emits are CAPTURED (round 11, same scheme as
-            _exec_for_fold): their conditions reference the fold's
-            accumulator fields, so they fold into synthetic
-            (flag, code) fields updated only on iterations the loop
-            test admits — exactly the iterations CPython runs."""
-            saved_locals = dict(self._locals)
-            saved_returns = list(self._returns)
-            k_guards = len(self.guards)
-            self._branch_depth += 1
-            self._hof_depth += 1
-            try:
-                for n, s in acc_syms.items():
-                    self._locals[n] = s
-                cond = self.truthy(self.eval(st.test))
-                if brk is not None and brk in acc_syms:
-                    # a broken row freezes: iterations after the flag
-                    # set are no-ops, exactly CPython's early exit
-                    cond = cond & ~F.coalesce(
-                        self.to_col(acc_syms[brk]), F.lit(False))
-                if self.exec_block(body, None) \
-                        or len(self._returns) != len(saved_returns):
-                    raise CompileError("return inside convergence while")
-                caught = list(self.guards[k_guards:])
-                self._truncate_guards(k_guards)
-                return cond, {n: self._locals[n] for n in accs}, caught
-            finally:
-                self._branch_depth -= 1
-                self._hof_depth -= 1
-                self._locals = saved_locals
-                self._returns = saved_returns
-
-        # two dry passes to fix the accumulator struct schema (same
-        # scheme as _exec_for_fold)
-        dummy = F.lit(0)
-        try:
-            _, out, caught1 = run_step({n: SCol(dummy, s.tag, s.nullable)
-                                        for n, s in init.items()})
-            final = {}
-            for n in accs:
-                tg = _unify_tags(init[n].tag, out[n].tag)
-                if tg not in ("int", "float", "bool", "str"):
-                    raise CompileError(f"while accumulator widens to {tg}")
-                final[n] = tg
-            _, out2, caught2 = run_step(
-                {n: SCol(dummy, final[n], init[n].nullable)
-                 for n in accs})
-            for n in accs:
-                if _unify_tags(final[n], out2[n].tag) != final[n]:
-                    raise CompileError("while accumulator oscillates")
-            if [c for _, c in caught1] != [c for _, c in caught2]:
-                raise CompileError("unstable guard sites in while body")
-        except CompileError:
-            return bail()
-        guard_codes = [c for _, c in caught2]
-        nullable = {n: init[n].nullable or out2[n].nullable for n in accs}
+        def enter(acc_syms, _x):
+            cond = self.truthy(self.eval(st.test))
+            if brk is not None and brk in acc_syms:
+                # a broken row freezes: iterations after the flag
+                # set are no-ops, exactly CPython's early exit
+                cond = cond & ~F.coalesce(
+                    self.to_col(acc_syms[brk]), F.lit(False))
+            return cond
 
         # per-row iteration bound (double space, clamped BEFORE ceil so
         # inf/1e300 never overflows ceil's long)
@@ -2721,51 +2620,11 @@ class Translator:
         k = F.when(need, F.least(k, F.lit(self._WHILE_FOLD_CAP))) \
              .otherwise(F.lit(self._WHILE_FOLD_MARGIN)).cast("int")
 
-        nacc = len(accs)
-        zero_fields = [
-            self._as(init[n], final[n], exact=True).alias(f"f{i}")
-            for i, n in enumerate(accs)]
-        if guard_codes:
-            zero_fields += [F.lit(False).alias(f"f{nacc}"),
-                            F.lit(0).alias(f"f{nacc + 1}")]
-        zero = F.struct(*zero_fields)
-
-        def merge(acc, _x):
-            cond, res, caught = run_step(
-                {n: SCol(acc.getField(f"f{i}"), final[n], nullable[n])
-                 for i, n in enumerate(accs)})
-            fields = [
-                self._as(res[n], final[n], exact=True).alias(f"f{i}")
-                for i, n in enumerate(accs)]
-            if guard_codes:
-                if [cd for _, cd in caught] != guard_codes:
-                    raise CompileError("unstable guard sites in while "
-                                       "body")
-                already = acc.getField(f"f{nacc}")
-                gc = acc.getField(f"f{nacc + 1}")
-                for gcond, code in caught:
-                    cc = F.coalesce(gcond, F.lit(False))
-                    gc = F.when(~already & cc, F.lit(code)).otherwise(gc)
-                    already = already | cc
-                fields += [already.alias(f"f{nacc}"),
-                           gc.alias(f"f{nacc + 1}")]
-            return F.when(cond, F.struct(*fields)).otherwise(acc)
-
-        result = F.aggregate(F.sequence(F.lit(1), k), zero, merge)
-        any_null = any(getattr(s, "nullable", False) for s in init.values())
-        for i, n in enumerate(accs):
-            self._locals[n] = SCol(result.getField(f"f{i}"), final[n],
-                                   nullable[n] or any_null)
-        if guard_codes:
-            # folded body raises re-emit FIRST (ahead of the cap
-            # guard), preserving first-raise order — the stored code
-            # is the first site to fire across iterations
-            gf_col = F.coalesce(result.getField(f"f{nacc}"),
-                                F.lit(False))
-            gc_col = result.getField(f"f{nacc + 1}")
-            for code in dict.fromkeys(guard_codes):
-                self.guard(gf_col & (gc_col == code),
-                           name_for_code(code))
+        try:
+            self._fold_loop(body, init, F.sequence(F.lit(1), k), enter,
+                            any(s.nullable for s in init.values()))
+        except CompileError:
+            return bail()
         # cap guard: condition still true after K iterations -> the
         # compiled bound was insufficient (CPython would keep looping);
         # grow additionally guards its termination PREcondition (see
@@ -3006,6 +2865,123 @@ class Translator:
             out.append(s)
         return out
 
+    def _fold_loop(self, body: list, init: dict, seq: Column, enter,
+                   null_in: bool) -> Column:
+        """Fold a dynamic loop onto ONE ``F.aggregate`` over the array
+        ``seq``: the one core of the for fold (_exec_for_fold) and the
+        convergence while fold (_while_convergence_fold).  ``init`` maps
+        each accumulator to its pre-loop Sym; they travel as struct
+        fields f0, f1, ....  ``enter(acc_syms, x)`` runs at the top of
+        each iteration with the accumulators bound and returns the
+        condition under which the iteration runs (None: always; the
+        while fold passes its test, so iterations past convergence are
+        no-ops).  Two dry passes over the body fix the struct's tags.
+        Guards the body emits are CAPTURED (round 11): their conditions
+        reference the fold's lambda variables, so they fold into
+        synthetic (already, code) fields updated only on iterations
+        that run, and are re-emitted as ordinary guards after the fold.
+        Rebinds each accumulator to its field of the result (nullable
+        when ``null_in``, too) and returns the result struct."""
+        accs = list(init)
+
+        def run(acc_syms, x):
+            """Execute one iteration under acc/element bindings; returns
+            (condition, {acc: Sym-after}, captured_guards).  A return
+            inside aborts (the callers rewrote returns away first)."""
+            saved_locals = dict(self._locals)
+            saved_returns = list(self._returns)
+            n_guards = len(self.guards)
+            self._branch_depth += 1
+            self._hof_depth += 1
+            try:
+                for n, s in acc_syms.items():
+                    self._locals[n] = s
+                cond = enter(acc_syms, x)
+                if self.exec_block(body, None) \
+                        or len(self._returns) != len(saved_returns):
+                    raise CompileError("return/raise inside dynamic loop")
+                caught = list(self.guards[n_guards:])
+                self._truncate_guards(n_guards)
+                return cond, {n: self._locals[n] for n in accs}, caught
+            finally:
+                self._branch_depth -= 1
+                self._hof_depth -= 1
+                self._locals = saved_locals
+                self._returns = saved_returns
+
+        # pass 1 (dry): discover post-body tags to fix the struct schema
+        dummy = F.lit(0)
+        _, out, caught1 = run({n: SCol(dummy, s.tag, s.nullable)
+                               for n, s in init.items()}, dummy)
+        final = {}
+        for n in accs:
+            t = _unify_tags(init[n].tag, out[n].tag)
+            if t not in ("int", "float", "bool", "str"):
+                raise CompileError(f"fold accumulator widens to {t}")
+            final[n] = t
+        _, out2, caught2 = run({n: SCol(dummy, final[n], init[n].nullable)
+                                for n in accs}, dummy)
+        for n in accs:
+            if _unify_tags(final[n], out2[n].tag) != final[n]:
+                raise CompileError("fold accumulator type oscillates")
+        if [c for _, c in caught1] != [c for _, c in caught2]:
+            raise CompileError("unstable guard sites in loop body")
+        guard_codes = [c for _, c in caught2]
+        nullable = {n: init[n].nullable or out2[n].nullable for n in accs}
+
+        nacc = len(accs)
+        zero_fields = [
+            self._as(init[n], final[n], exact=True).alias(f"f{i}")
+            for i, n in enumerate(accs)]
+        if guard_codes:
+            zero_fields += [F.lit(False).alias(f"f{nacc}"),
+                            F.lit(0).alias(f"f{nacc + 1}")]
+        zero = F.struct(*zero_fields)
+
+        def merge(acc, x):
+            cond, res, caught = run(
+                {n: SCol(acc.getField(f"f{i}"), final[n], nullable[n])
+                 for i, n in enumerate(accs)}, x)
+            fields = [
+                self._as(res[n], final[n], exact=True).alias(f"f{i}")
+                for i, n in enumerate(accs)]
+            if guard_codes:
+                if [c for _, c in caught] != guard_codes:
+                    raise CompileError("unstable guard sites in loop "
+                                       "body")
+                already = acc.getField(f"f{nacc}")
+                gc = acc.getField(f"f{nacc + 1}")
+                for gcond, code in caught:
+                    c = F.coalesce(gcond, F.lit(False))
+                    gc = F.when(~already & c, F.lit(code)).otherwise(gc)
+                    already = already | c
+                fields += [already.alias(f"f{nacc}"),
+                           gc.alias(f"f{nacc + 1}")]
+            step = F.struct(*fields)
+            return step if cond is None \
+                else F.when(cond, step).otherwise(acc)
+
+        result = F.aggregate(seq, zero, merge)
+        if guard_codes:
+            # re-emit the folded raises as ordinary top-level guards:
+            # first-raise order inside the loop is preserved by the
+            # already-mask (the stored code is the FIRST site to fire
+            # across all iterations), and emission HERE keeps the
+            # loop's raise ahead of later statements' guards (the while
+            # fold's cap guard included) in the dataset when-chain.  No
+            # recorded message — handlers reading str(e) over these
+            # sites stay on the fallback.
+            gf_col = F.coalesce(result.getField(f"f{nacc}"),
+                                F.lit(False))
+            gc_col = result.getField(f"f{nacc + 1}")
+            for code in dict.fromkeys(guard_codes):
+                self.guard(gf_col & (gc_col == code),
+                           name_for_code(code))
+        for i, n in enumerate(accs):
+            self._locals[n] = SCol(result.getField(f"f{i}"), final[n],
+                                   nullable[n] or null_in)
+        return result
+
     def _exec_for_fold(self, st: ast.For, path: Column | None):
         arr, tags, is_struct, arr_nullable = self._iter_array(st.iter)
         body = list(st.body)
@@ -3059,109 +3035,13 @@ class Translator:
             if s.tag not in ("int", "float", "bool", "str", "null"):
                 raise CompileError(f"fold accumulator of tag {s.tag}")
 
-        def run_body(acc_syms, x):
-            """Execute the loop body under acc/element bindings; returns
-            ({acc: Sym-after}, captured_guards).  Returns inside abort
-            (the return rewrite removed them first); guards the body
-            emits are CAPTURED (round 11) — their conditions reference
-            the fold's lambda variables, so they fold into synthetic
-            (flag, code) accumulator fields instead of top-level guard
-            rows, with the first-raise ordering preserved by the
-            already-raised mask."""
-            saved_locals = dict(self._locals)
-            saved_returns = list(self._returns)
-            n_guards = len(self.guards)
-            self._branch_depth += 1
-            self._hof_depth += 1
-            try:
-                for n, s in acc_syms.items():
-                    self._locals[n] = s
-                self._bind_loop_target(st.target, x, tags, is_struct)
-                if self.exec_block(body, None) \
-                        or len(self._returns) != len(saved_returns):
-                    raise CompileError("return/raise inside dynamic loop")
-                caught = list(self.guards[n_guards:])
-                self._truncate_guards(n_guards)
-                return {n: self._locals[n] for n in accs}, caught
-            finally:
-                self._branch_depth -= 1
-                self._hof_depth -= 1
-                self._locals = saved_locals
-                self._returns = saved_returns
+        def enter(_acc_syms, x):
+            self._bind_loop_target(st.target, x, tags, is_struct)
 
-        # pass 1 (dry): discover post-body tags to fix the struct schema
-        dummy = F.lit(0)
-        out, caught1 = run_body({n: SCol(dummy, s.tag, s.nullable)
-                                 for n, s in init.items()}, dummy)
-        final = {}
-        for n in accs:
-            t = _unify_tags(init[n].tag, out[n].tag)
-            if t not in ("int", "float", "bool", "str"):
-                raise CompileError(f"fold accumulator widens to {t}")
-            final[n] = t
-        out2, caught2 = run_body({n: SCol(dummy, final[n],
-                                          init[n].nullable)
-                                  for n in accs}, dummy)
-        for n in accs:
-            if _unify_tags(final[n], out2[n].tag) != final[n]:
-                raise CompileError("fold accumulator type oscillates")
-        if [c for _, c in caught1] != [c for _, c in caught2]:
-            raise CompileError("unstable guard sites in loop body")
-        guard_codes = [c for _, c in caught2]
-        nullable = {n: init[n].nullable or out2[n].nullable for n in accs}
-
-        nacc = len(accs)
-        zero_fields = [
-            self._as(init[n], final[n], exact=True).alias(f"f{i}")
-            for i, n in enumerate(accs)]
-        if guard_codes:
-            zero_fields += [F.lit(False).alias(f"f{nacc}"),
-                            F.lit(0).alias(f"f{nacc + 1}")]
-        zero = F.struct(*zero_fields)
-
-        def merge(acc, x):
-            res, caught = run_body(
-                {n: SCol(acc.getField(f"f{i}"), final[n], nullable[n])
-                 for i, n in enumerate(accs)}, x)
-            fields = [
-                self._as(res[n], final[n], exact=True).alias(f"f{i}")
-                for i, n in enumerate(accs)]
-            if guard_codes:
-                if [c for _, c in caught] != guard_codes:
-                    raise CompileError("unstable guard sites in loop "
-                                       "body")
-                already = acc.getField(f"f{nacc}")
-                gc = acc.getField(f"f{nacc + 1}")
-                for cond, code in caught:
-                    c = F.coalesce(cond, F.lit(False))
-                    gc = F.when(~already & c, F.lit(code)).otherwise(gc)
-                    already = already | c
-                fields += [already.alias(f"f{nacc}"),
-                           gc.alias(f"f{nacc + 1}")]
-            return F.struct(*fields)
-
-        result = F.aggregate(arr, zero, merge)
-        if guard_codes:
-            # re-emit the folded raises as ordinary top-level guards:
-            # first-raise order inside the loop is preserved by the
-            # already-mask (the stored code is the FIRST site to fire
-            # across all iterations), and emission HERE keeps the
-            # loop's raise ahead of later statements' guards in the
-            # dataset when-chain.  No recorded message — handlers
-            # reading str(e) over these sites stay on the fallback.
-            gf_col = F.coalesce(result.getField(f"f{nacc}"),
-                                F.lit(False))
-            gc_col = result.getField(f"f{nacc + 1}")
-            for code in dict.fromkeys(guard_codes):
-                self.guard(gf_col & (gc_col == code),
-                           name_for_code(code))
+        result = self._fold_loop(body, init, arr, enter, arr_nullable)
         tmp = f"__fold_{self._tmp}"
         self._tmp += 1
-        res_sym = SCol(result, "struct", arr_nullable)
-        self._locals[tmp] = res_sym
-        for i, n in enumerate(accs):
-            self._locals[n] = SCol(result.getField(f"f{i}"), final[n],
-                                   nullable[n] or arr_nullable)
+        self._locals[tmp] = SCol(result, "struct", arr_nullable)
         # Python leaves the loop var bound to the last element; that is
         # not cheaply expressible here, so drop the binding — a later
         # reference becomes CompileError -> Arrow fallback (never wrong
@@ -3570,16 +3450,7 @@ class Translator:
             it = self.eval(gen.iter)
             if gi > 0 and len(self.guards) != n_guards_iter:
                 raise CompileError("guarded inner comprehension iterable")
-            if isinstance(it, SDict):
-                # iterating a dict yields its (constant) keys
-                it = SConst(list(it.items.keys()))
-            if isinstance(it, SConst) and isinstance(it.value,
-                                                     (list, tuple)):
-                it = SCol(F.array(*[F.lit(v) for v in it.value]), "array",
-                          False,
-                          elem=_pytag(it.value[0]) if it.value else "str")
-            if not (isinstance(it, SCol) and it.tag == "array"):
-                raise CompileError(f"comprehension over {it.tag}")
+            it = self._comp_iter_array(it)
             elem = it.elem or "str"
             var = gen.target.id
             if gi == 0:
@@ -4149,6 +4020,20 @@ class Translator:
             return SConst(None)
         parts = spec.split(fmt)
         matches = spec.findall(fmt)
+
+        def spec_of(flags, width, prc):
+            # printf flags as a format spec: '-' left-aligns, '0'
+            # zero-pads through the sign ('%05d' -> '05d'), '+'/' '/'#'
+            # carry over
+            s = ("+" if "+" in flags else " " if " " in flags else "") \
+                + ("#" if "#" in flags else "")
+            if "-" in flags and width:
+                s = "<" + s + width
+            elif "0" in flags and width:
+                s += "0" + width
+            else:
+                s += width
+            return s if prc is None else s + "." + prc
         out = ""
         cols = []
         ai = 0
@@ -4171,16 +4056,8 @@ class Translator:
                             f"unsupported %-format {m!r}")  # precision
                     flags, width = pm.groups()
                     a = self.num(a, "%-format")
-                    s = ("+" if "+" in flags else
-                         " " if " " in flags else "") \
-                        + ("#" if "#" in flags else "")
-                    if "-" in flags and width:
-                        s = "<" + s + width
-                    elif "0" in flags and width:
-                        s += "0" + width
-                    else:
-                        s += width
-                    cols.append(self._format_spec_full(s + m[-1], a))
+                    cols.append(self._format_spec(
+                        spec_of(flags, width, None) + m[-1], a))
                     out += "%s"
                 elif m.endswith(("f", "e", "E", "g", "G")):
                     # route through the spec machinery: CPython-exact
@@ -4190,18 +4067,8 @@ class Translator:
                                        m[:-1])
                     flags, width, prc = pm.groups()
                     a = self.num(a, "%-format")
-                    s = ("+" if "+" in flags else
-                         " " if " " in flags else "") \
-                        + ("#" if "#" in flags else "")
-                    if "-" in flags and width:
-                        s = "<" + s + width
-                    elif "0" in flags and width:
-                        s += "0" + width
-                    else:
-                        s += width
-                    if prc is not None:
-                        s += "." + prc
-                    cols.append(self._format_spec_full(s + m[-1], a))
+                    cols.append(self._format_spec(
+                        spec_of(flags, width, prc) + m[-1], a))
                     out += "%s"
                 elif "#" in m:
                     raise CompileError(f"unsupported %-format {m!r}")
@@ -4249,15 +4116,8 @@ class Translator:
                         cols.append(body)
                         out += "%s"
                     elif flags or width:
-                        s = ("+" if "+" in flags else
-                             " " if " " in flags else "")
-                        if "-" in flags and width:
-                            s = "<" + s + width
-                        elif "0" in flags and width:
-                            s += "0" + width
-                        else:
-                            s += width
-                        cols.append(self._format_spec_full(s + "d", a))
+                        cols.append(self._format_spec(
+                            spec_of(flags, width, None) + "d", a))
                         out += "%s"
                     else:
                         cols.append(c)
@@ -4588,7 +4448,7 @@ class Translator:
                             val = SCol(self._to_str(val), "str", False)
                         else:
                             raise CompileError("f-string conversion")
-                    parts.append(self._format_spec_col(spec, val))
+                    parts.append(self._format_spec(spec, val))
                     continue
                 if v.conversion == 114:  # !r
                     parts.append(self._repr_col(val))
@@ -4599,8 +4459,6 @@ class Translator:
             else:
                 raise CompileError("f-string part")
         return SCol(F.concat(*parts), "str")
-
-    _SPEC_RE = _re_mod.compile(r"^(0?)(\d*)(?:\.(\d+))?([dfs]?)$")
 
     @staticmethod
     def _cpython_fixed_round(c: Column, prec: int) -> Column:
@@ -4833,112 +4691,26 @@ class Translator:
         # fixed/sci arbitration for 'g'): return cheap staged refs
         return self._stage_raw(digits), self._stage_raw(e10)
 
-    def _format_spec_col(self, spec: str, val: Sym) -> Column:
-        """Translate an audited subset of the format-spec mini-language
-        ({:.2f}, {:03d}, {:5s}, ...) onto java.util.Formatter via
-        format_string — identical output to CPython for this subset.
-        Type rules mirror CPython: 'd' rejects floats (ValueError row),
-        'f' accepts ints (cast to double so Java's %f doesn't throw)."""
-        m = self._SPEC_RE.match(spec)
-        if not m:
-            return self._format_spec_full(spec, val)
-        zero, width, prec, typ = m.groups()
-        tag = getattr(val, "tag", None)
-        if isinstance(val, SConst):
-            tag = _pytag(val.value)
-        if not typ:
-            if prec is not None or not (zero or width):
-                return self._format_spec_full(spec, val)
-            # bare width: string-style padding for str, right-align via
-            # %<w>s only matches CPython for strings (numbers also
-            # right-align -> same); zero flag without type only valid
-            # for numbers
-            typ = "s" if tag == "str" else ("d" if tag in ("int", "bool")
-                                            else "f" if tag == "float"
-                                            else None)
-            if typ is None:
-                raise CompileError(f"format spec {spec!r}")
-            if typ == "f" and prec is None:
-                # bare spec keeps the repr ('{:8}'.format(2.5) is
-                # '     2.5', not 6-digit fixed) — full path handles
-                return self._format_spec_full(spec, val)
-            if typ == "s" and zero:
-                # zero-padded strings are valid ('ab000000'): the
-                # printf path can't express the fill — use the full one
-                return self._format_spec_full(spec, val)
-        # the 0 flag without a width is a CPython no-op, but java's
-        # Formatter THROWS MissingFormatWidth on '%0d' — drop it
-        fmt = "%" + (zero if width else "") + width \
-            + (f".{prec}" if prec is not None else "")
-        if typ == "d":
-            if tag == "float":
-                self.guard(F.lit(True), "ValueError")
-                return F.lit(None).cast("string")
-            if prec is not None:
-                self.guard(F.lit(True), "ValueError")  # CPython rejects
-                return F.lit(None).cast("string")
-            c = self.to_col(val).cast("long")
-        elif typ == "f":
-            if tag == "str":
-                self.guard(F.lit(True), "ValueError")
-                return F.lit(None).cast("string")
-            # java.util.Formatter rounds HALF_UP on the shortest repr;
-            # CPython rounds half-even on the binary double
-            # ('{:.2f}'.format(2.675) -> '2.67', java '2.68') — pre-
-            # round exactly so java formats verbatim
-            c = self._cpython_fixed_round(
-                self.to_col(val).cast("double"),
-                int(prec) if prec is not None else 6)
-        else:
-            if zero:
-                return self._format_spec_full(spec, val)  # 0-pad str
-            if tag not in ("str", None):
-                # explicit 's' on numbers: CPython raises regardless of
-                # precision ("Unknown format code 's'") — padding the
-                # stringified number was silently wrong
-                self.guard(F.lit(True), "ValueError")
-                return F.lit(None).cast("string")
-            c = self._to_str(val)
-            # CPython left-aligns strings by default; printf %Ns
-            # right-aligns — use %-Ns
-            if width:
-                fmt = "%" + "-" + width + \
-                    (f".{prec}" if prec is not None else "")
-        res = F.format_string(fmt + typ, c)
-        if typ == "f":
-            # java prints 'Infinity'/'NaN'; CPython 'inf'/'nan' with
-            # the zero flag padding between the sign and the text
-            # ('{:08.2f}'.format(-inf) == '-0000inf')
-            w = int(width) if width else 0
-
-            def inf_lit(t):
-                if not w:
-                    return F.lit(t)
-                if zero and t.startswith("-"):
-                    return F.lit("-" + t[1:].rjust(w - 1, "0"))
-                return F.lit(t.rjust(w, "0" if zero else " "))
-
-            res = F.when(F.isnan(c), inf_lit("nan")) \
-                   .when(c == float("inf"), inf_lit("inf")) \
-                   .when(c == float("-inf"), inf_lit("-inf")) \
-                   .otherwise(res)
-        return res
-
-    _SPEC_FULL_RE = _re_mod.compile(
+    _FORMAT_SPEC_RE = _re_mod.compile(
         r"^(?:(?P<fill>.)?(?P<align>[<>^=]))?(?P<sign>[-+ ]?)"
         r"(?P<alt>#?)(?P<zero>0?)"
         r"(?P<width>\d*)(?P<comma>[,_]?)(?:\.(?P<prec>\d+))?"
         r"(?P<typ>[dfsxXobeEgG%]?)$")
 
-    def _format_spec_full(self, spec: str, val: Sym) -> Column:
-        """Extended format-spec subset: fill/align (``<>^=``), sign
-        (``+``/space), thousands comma — on top of the width/precision/
-        type core.  Alignment is built from repeat/concat (CPython's
-        exact padding split, incl. the ``^`` left-bias and ``=``
-        pad-after-sign); signs and commas ride java.util.Formatter,
-        whose en-US grouping matches CPython's ',' (probed).  Specs
-        outside this grammar still fall back."""
-        m = self._SPEC_FULL_RE.match(spec)
+    def _format_spec(self, spec: str, val: Sym) -> Column:
+        """The one format-spec lowering, shared by f-strings,
+        ``str.format``, ``format()`` and %-formats: fill/align
+        (``<>^=``), sign (``+``/space), ``#``, zero flag, width,
+        thousands separator, precision and type.  Type rules mirror
+        CPython ('d' of a float or 's' of a number is a ValueError row).
+        Width, precision and alignment are built from length/substring/
+        repeat/concat, which count characters as CPython does (java's
+        Formatter counts UTF-16 units, so a non-BMP character would pad
+        one short), with CPython's exact padding split (the ``^``
+        left-bias, ``=`` pad-after-sign); signs and commas ride
+        java.util.Formatter, whose en-US grouping matches CPython's ','
+        (probed).  Specs outside this grammar fall back."""
+        m = self._FORMAT_SPEC_RE.match(spec)
         if not m:
             raise CompileError(f"format spec {spec!r}")
         fill, align, sign, alt, zero, width, comma, prec, typ = m.group(
@@ -5300,7 +5072,7 @@ class Translator:
             return SConst(format(a.value, spec.value))
         if spec.value == "":
             return SCol(self._to_str(a), "str", False)
-        return SCol(self._format_spec_col(spec.value, a), "str", False)
+        return SCol(self._format_spec(spec.value, a), "str", False)
 
     # -- calls -----------------------------------------------------------
     def _ev_Call(self, node):
@@ -6932,11 +6704,11 @@ class Translator:
             # literal '%' must be escaped for format_string (java
             # Formatter) — '{:.1f}%'.format(x) previously emitted a
             # trailing bare '%' and threw UnknownFormatConversionException
-            # at action time; replacement tokens never contain '%'
-            # (a '%' inside a spec fails _SPEC_RE -> CompileError)
+            # at action time; each whole replacement token ('%' in its
+            # spec included) becomes one '%s'
             fmt = _re_mod.sub(r"\{[^{}]*\}", "%s", pat.replace("%", "%%"))
             cols = [self._to_str(v) if spec is None
-                    else self._format_spec_col(spec, v)
+                    else self._format_spec(spec, v)
                     for (_, spec), v in zip(fields, vals)]
             return SCol(F.format_string(fmt, *cols), "str")
         if name in ("isdigit", "isdecimal"):
@@ -7268,9 +7040,17 @@ def _unify_arms(arms) -> tuple[str, str | None]:
     return tag, None if elem == "null" else elem
 
 
-_COMPILE_CACHE: dict = {}
+# compile_udf's memo; past _COMPILE_CACHE_MAX entries the oldest goes,
+# so a long-lived process keeps caching its newest UDFs
+_COMPILE_CACHE: OrderedDict = OrderedDict()
 _COMPILE_CACHE_MAX = 512
 _MISS = object()
+
+
+def _cache_compile(key, out) -> None:
+    _COMPILE_CACHE[key] = out
+    if len(_COMPILE_CACHE) > _COMPILE_CACHE_MAX:
+        _COMPILE_CACHE.popitem(last=False)
 
 
 def _all_co_names(code, depth: int = 0) -> frozenset:
@@ -7366,9 +7146,9 @@ def compile_udf(fn, schema: T.StructType, env: dict | None = None,
         tr = Translator(schema, env or {}, with_guards, col_map)
         out = tr.compile(fn)
     except CompileError:
-        if key is not None and len(_COMPILE_CACHE) < _COMPILE_CACHE_MAX:
-            _COMPILE_CACHE[key] = None
+        if key is not None:
+            _cache_compile(key, None)
         raise
-    if key is not None and len(_COMPILE_CACHE) < _COMPILE_CACHE_MAX:
-        _COMPILE_CACHE[key] = out
+    if key is not None:
+        _cache_compile(key, out)
     return out
