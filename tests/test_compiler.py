@@ -1055,6 +1055,87 @@ class TestBreakContinueCompiled:
                  expect_compiled=False)
 
 
+_STAGED_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession, types as T
+from tuplex_spark.udf import compiler
+
+
+def f(x):
+    s = 0
+    for i in range(10):
+        if i * x["a"] > 12:
+            break
+        s += i
+    return s
+
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.driver.memory", "512m")
+         .config("spark.ui.enabled", "false").getOrCreate())
+schema = T.StructType([T.StructField("a", T.LongType()),
+                       T.StructField("b", T.DoubleType()),
+                       T.StructField("s", T.StringType())])
+staged = compiler.compile_udf(f, schema).staged
+print("RESULT " + json.dumps([[n, str(c)] for n, c in staged]))
+spark.stop()
+"""
+
+
+class TestStagedLayers:
+    """A compiled UDF's staged locals (``__tN``) go on the frame in one
+    projection, as lateral column aliases."""
+
+    def test_layers_do_not_depend_on_the_hash_seed(self, tmp_path):
+        # the UDF of TestBreakContinueCompiled.test_data_dependent_break,
+        # compiled in two processes with different string hash seeds
+        import json
+        import os
+        import subprocess
+        script = tmp_path / "staged.py"
+        script.write_text(_STAGED_SCRIPT)
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        procs = [subprocess.Popen(
+            [sys.executable, str(script), root], stdout=subprocess.PIPE,
+            stderr=subprocess.PIPE, text=True, cwd=str(tmp_path),
+            env={**os.environ, "PYTHONHASHSEED": seed})
+            for seed in ("0", "1")]
+        layers = []
+        for p in procs:
+            out, err = p.communicate(timeout=600)
+            line = [x for x in out.splitlines() if x.startswith("RESULT ")]
+            assert line, out[-2000:] + err[-4000:]
+            layers.append(json.loads(line[-1][len("RESULT "):]))
+        assert len(layers[0]) > 1
+        assert layers[0] == layers[1]
+
+    def test_session_without_lateral_aliases_demotes(self, ctx):
+        import tuplex_spark as tx
+
+        def f(x):
+            s = 0
+            for i in range(10):
+                if i * x["a"] > 12:
+                    break
+                s += i
+            return s
+        rows = TestBreakContinueCompiled.ROWS
+        session = ctx.spark.newSession()
+        session.conf.set(
+            "spark.sql.lateralColumnAlias.enableImplicitResolution",
+            "false")
+        want = [f({"a": r[0]}) for r in rows]
+        for c, compiled in ((ctx, 1), (tx.Context(spark=session), 0)):
+            before = (c.metrics.compiledUDFs, c.metrics.fallbackUDFs)
+            ds = c.parallelize(rows, columns=["a", "b", "s"]).map(f)
+            assert (c.metrics.compiledUDFs - before[0],
+                    c.metrics.fallbackUDFs - before[1]) == \
+                (compiled, 1 - compiled)
+            assert ds.collect() == want
+            assert ds.exception_counts == {}
+
+
 class TestWhileCompiled:
     """Constant-condition while loops unroll iteratively (the condition
     must fold each iteration; data-dependent conditions fall back)."""

@@ -361,6 +361,66 @@ class TestOneLattice:
         assert ds.exception_counts == {"NormalCaseViolation": 1}
 
 
+# resolvers of ``10 // x`` over [1, 2, 0, 5] (a long column): the rows
+# and counts both paths must give
+_VIOLATION = ([10, 5, 2], {"NormalCaseViolation": 1})
+_RESOLVERS = {
+    "str": (lambda x: "inf", _VIOLATION),
+    "float": (lambda x: 0.5, _VIOLATION),
+    "list": (lambda x: [x], _VIOLATION),
+    "nested_list": (lambda x: [[[x]], [[True]]], _VIOLATION),
+    "int": (lambda x: -1, ([10, 5, -1, 2], {})),
+    "bool": (lambda x: True, ([10, 5, 1, 2], {})),
+    "none": (lambda x: None, ([10, 5, None, 2], {})),
+}
+
+
+class TestResolverResultTyping:
+    """A compiled resolver's result is typed by the one lattice, as the
+    row runner's 'fill' mode types an interpreted one: it fits the op's
+    column type C when super_type(R, C) == C and is cast to C.  A misfit
+    demotes the resolver to the row runner, which makes the row a
+    NormalCaseViolation.  Neither path counts a resolver in
+    ``compiledUDFs``/``fallbackUDFs``, which count ops."""
+
+    @pytest.mark.parametrize("name", list(_RESOLVERS))
+    def test_both_paths_agree(self, ctx, ctx_interp, name):
+        resolver, (want, counts) = _RESOLVERS[name]
+        for c in (ctx, ctx_interp):
+            ds = c.parallelize([1, 2, 0, 5]).map(lambda x: 10 // x)
+            ops = (c.metrics.compiledUDFs, c.metrics.fallbackUDFs)
+            ds = ds.resolve(ZeroDivisionError, resolver)
+            assert (c.metrics.compiledUDFs, c.metrics.fallbackUDFs) == ops
+            assert ds.collect() == want
+            assert ds.exception_counts == counts
+            # a fitting compiled resolver stays compiled
+            assert explain_summary(ds._df)["python_eval"] is \
+                (c is ctx_interp or counts != {})
+
+    def test_widening_result_is_cast(self, ctx, ctx_interp):
+        for c in (ctx, ctx_interp):
+            ds = c.parallelize([1, 2, 0, 5]).map(lambda x: 10 / x) \
+                .resolve(ZeroDivisionError, lambda x: 0)
+            out = ds.collect()
+            assert out == [10.0, 5.0, 0.0, 2.0]
+            assert all(type(v) is float for v in out)
+            assert ds.exception_counts == {}
+
+    def test_compiled_resolver_misfit_is_normal_case_violation(
+            self, ctx, ctx_interp):
+        # the compiled twin of TestInterpreterPath's misfit test: the
+        # resolver returns an int into the op's string column
+        rows = [("ab", 1), ("cd", 0), ("ef", 2)]
+        for c in (ctx, ctx_interp):
+            before = c.metrics.compiledUDFs
+            ds = c.parallelize(rows, columns=["s", "n"]) \
+                .withColumn("t", lambda x: x["s"] * (2 // x["n"]))
+            assert c.metrics.compiledUDFs == before + (c is ctx)
+            ds = ds.resolve(ZeroDivisionError, lambda x: len(x["s"]))
+            assert ds.collect() == [("ab", 1, "abab"), ("ef", 2, "ef")]
+            assert ds.exception_counts == {"NormalCaseViolation": 1}
+
+
 class TestResolveWithRound2Shapes:
     """The exception model composed with the newer compiled shapes:
     guards raised inside first-match scans / dict lookups / mixed

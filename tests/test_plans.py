@@ -49,6 +49,35 @@ class TestPushdown:
         assert s["python_eval"]  # fallback engaged, Arrow-batched
 
 
+def _trim_step(x):
+    i = x.find(",")
+    j = x.rfind(" ")
+    head = x[i + 1:] if i >= 0 else x
+    tail = head[:j] if j > 0 else head
+    return tail + x[:2]
+
+
+class TestPushdownBarrier:
+    def test_filter_after_compiled_string_chain_plans_small(self, ctx):
+        """A filter after compiled ops whose staged locals feed each
+        other must not get the ops' expression trees substituted into
+        its predicate through every staged layer: ``_project``'s
+        pushdown barrier stops that.  Without it, the plan of two of
+        these ops and the filter is 454k chars long, and it grows
+        exponentially with each op."""
+        rows = ["a, bc d", "ef, g h, ij", "k"]
+        ds = ctx.parallelize(rows, columns=["s"])
+        before = ctx.metrics.compiledUDFs
+        for _ in range(6):
+            ds = ds.mapColumn("s", _trim_step)
+            rows = [_trim_step(r) for r in rows]
+        ds = ds.filter(lambda x: len(x) > 4)
+        assert ctx.metrics.compiledUDFs == before + 7
+        plan = ds.toDF()._jdf.queryExecution().optimizedPlan().toString()
+        assert len(plan) < 100_000, len(plan)
+        assert ds.collect() == [r for r in rows if len(r) > 4]
+
+
 class TestJoins:
     def test_small_dim_join_broadcasts(self, spark):
         """AQE/planner should broadcast nation against lineitem-scale."""

@@ -241,6 +241,27 @@ class TestPlanBuilding:
         assert sent[0] <= ROUND_TRIPS, sent[0]
         assert not is_debugging_enabled()
 
+    def test_chain_builds_with_two_selects_per_compiled_op(
+            self, ctx, monkeypatch):
+        # a compiled op stages all its CSE layers in one select and
+        # projects its output in one more: this chain builds with 18
+        # selects, where one select per staged layer made 46
+        from pyspark.sql.classic.dataframe import DataFrame
+        calls = [0]
+        select = DataFrame.select
+
+        def counting(self, *cols):
+            calls[0] += 1
+            return select(self, *cols)
+
+        monkeypatch.setattr(DataFrame, "select", counting)
+        before = ctx.metrics.compiledUDFs
+        _chain(ctx, ROWS)
+        monkeypatch.undo()
+        compiled = ctx.metrics.compiledUDFs - before
+        assert compiled == 11
+        assert calls[0] <= 2 * compiled, calls[0]
+
     def test_analysis_errors_keep_their_query_context(self, ctx):
         from pyspark.errors import AnalysisException
         from pyspark.sql import functions as F

@@ -77,7 +77,14 @@ class Context:
     trips while plans are built.  A session passed in as ``spark`` keeps
     its own setting.  pyspark reads that setting once per process, at
     its first ``pyspark.sql.functions`` call with a session, and the
-    engine never writes pyspark's cached copy of it."""
+    engine never writes pyspark's cached copy of it.
+
+    A compiled UDF's staged locals go on the frame in one projection, as
+    lateral column aliases, so they need
+    ``spark.sql.lateralColumnAlias.enableImplicitResolution``, which
+    engine sessions keep at Spark's default (true).  In a session passed
+    in with it off, a UDF whose staged locals read each other demotes to
+    the interpreter path, with the same rows."""
 
     def __init__(self, conf: dict | None = None, spark: SparkSession = None,
                  name: str = "tuplex_spark", **kwargs):

@@ -14,7 +14,9 @@ Execution model (Spark-first, not a port):
   pickled original function to rows decoded straight from Arrow, so it
   sees exactly the values CPython would.  PYOBJECT datasets (pickled
   rows) take (b) too.  Both paths end in ``DataSet._finish_op``, so they
-  share one output projection and one exception bookkeeping.
+  share one output projection and one exception bookkeeping.  Compiled
+  ops and resolvers stage their CSE layers in one projection
+  (``_stage``) and fall back from (a) to (b) by one rule (``_demoting``).
 - actions decode their rows from Arrow with (b)'s decoder
   (``fallback.from_frame``): they return the values (b) and CPython see.
 - exception semantics (reference §2.7: rows that raise are excluded from
@@ -57,7 +59,7 @@ from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from . import exceptions as E
-from .typeutils import infer_type
+from .typeutils import infer_type, super_type
 from .udf import compiler, fallback
 from .udf.compiler import CompileError
 from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, GATE, ROW_CODE, \
@@ -121,6 +123,38 @@ def _guard_code(guards):
     for g, c in guards:
         code = F.when(g, c) if code is None else code.when(g, c)
     return code.otherwise(0) if code is not None else F.lit(0)
+
+
+def _stage(df, compiled):
+    """(``df`` with a compiled UDF's CSE layers, the ``__tN`` locals its
+    output and guard Columns read, whether there were any).  All go in
+    one projection: a layer that reads an earlier one is a lateral
+    column alias, which Spark resolves into one Project per dependency
+    level.  No op lists them in its output, so they never escape it."""
+    staged = [c.alias(n) for n, c in compiled.staged]
+    return (df.select("*", *staged), True) if staged else (df, False)
+
+
+def _demoting(compiled, build, interpret):
+    """The one demotion rule of a compiled op or resolver: (result of
+    ``build(compiled)``, True), or (result of ``interpret()``, the
+    interpreter path, False) when the UDF did not compile (``compiled``
+    None) or building it failed: materializing (CompileError: a bound
+    method returned as a value, a resolver result that misfits its
+    column) or Spark's analysis (AnalysisException: arms whose nested
+    element types differ, lateral column aliases switched off)."""
+    if compiled is not None:
+        # pyspark logs every AnalysisException it raises, with the JVM
+        # stack; one caught here is a demotion, not an error
+        log = PySparkLogger.getLogger("DataFrameQueryContextLogger")
+        was, log.disabled = log.disabled, True
+        try:
+            return build(compiled), True
+        except (CompileError, AnalysisException):
+            pass
+        finally:
+            log.disabled = was
+    return interpret(), False
 
 
 def _project(vis, new_cols: dict, value, barrier: bool):
@@ -327,29 +361,15 @@ class DataSet:
         compiled = None if self._pyobj else self._try_compile(fn, in_schema)
         m.totalCompilationTime += _time.time() - t0
         results, sample = self._sample_eval(fn, kind, target_col, new_col)
-        if compiled is not None:
-            # pyspark logs every AnalysisException it raises, with the
-            # JVM stack; one caught here is a demotion, not an error
-            log = PySparkLogger.getLogger("DataFrameQueryContextLogger")
-            was, log.disabled = log.disabled, True
-            try:
-                out, vis, out_kind = self._apply_compiled(
-                    compiled, kind, op_name, target_col, new_col)
-                m.compiledUDFs += 1
-            except (CompileError, AnalysisException):
-                # materialization can fail AFTER a successful compile
-                # (e.g. a bound method returned as a value), and so can
-                # Spark's analysis of the projection (arms whose nested
-                # element types differ) — that must demote to the
-                # interpreter path, never crash the call
-                compiled = None
-            finally:
-                log.disabled = was
-        if compiled is None:
-            m.fallbackUDFs += 1
-            out, vis, out_kind = self._apply_interpreted(
+        (out, vis, out_kind), was_compiled = _demoting(
+            compiled,
+            lambda cu: self._apply_compiled(cu, kind, op_name, target_col,
+                                            new_col),
+            lambda: self._apply_interpreted(
                 fn, kind, op_name, in_schema.fieldNames(), target_col,
-                new_col, results)
+                new_col, results))
+        m.compiledUDFs += was_compiled
+        m.fallbackUDFs += not was_compiled
         if out_kind == "dict":
             # the op's output has one column per key: sample rows too
             sample = [tuple(r.values()) if isinstance(r, dict) else r
@@ -425,13 +445,7 @@ class DataSet:
 
     # -- compiled path ----------------------------------------------------
     def _apply_compiled(self, compiled, kind, op_name, target_col, new_col):
-        df = self._df
-        # apply the compiler's CSE layers: each staged local becomes a
-        # real projection column, so the op's output/guard expressions
-        # reference it instead of re-inlining its tree (_finish_op's
-        # select never lists __t columns, so they don't escape the op)
-        for tmp_name, tmp_col in compiled.staged:
-            df = df.select("*", tmp_col.alias(tmp_name))
+        df, barrier = _stage(self._df, compiled)
         code = _guard_code(compiled.guards) \
             if compiled.guards and self._exc_enabled else None
         if kind == "filter":
@@ -445,7 +459,7 @@ class DataSet:
             names = [new_col or target_col]
         out, vis = self._finish_op(
             df, kind, op_name, dict(zip(names, (c for _, c, _ in outs))),
-            code, barrier=bool(compiled.staged))
+            code, barrier=barrier)
         out_kind = "dict" if outs[0][0] is not None else \
             "tuple" if isinstance(compiled.result, compiler.STuple) \
             else "scalar"
@@ -694,53 +708,62 @@ class DataSet:
         sub = self._df.select(
             *self._df.columns,
             *[payload.getField(n).alias(remap[n]) for n in names])
-        compiled = self._try_compile(ftor, in_struct, col_map=remap)
-        if compiled is not None:
-            # staged CSE layers become projection columns over the parsed
-            # payload fields, exactly like _apply_compiled — the final
-            # select below never lists __t/__res_in_ columns, so they
-            # don't escape the op
-            for tmp_name, tmp_col in compiled.staged:
-                sub = sub.select("*", tmp_col.alias(tmp_name))
-            outs = [c for _, c, _ in compiled.as_columns()]
-            pred = compiled.as_predicate() if op.kind == "filter" else None
-            res_code = _guard_code(compiled.guards)
-        else:
-            if op.kind == "filter":
-                out_types, out_kind = [T.BooleanType()], "pred"
-            else:
-                out_types = [self._df.schema[c].dataType
-                             for c in op.out_cols]
-                out_kind = "fill"
-            sub, res_code = self._run_rows(
-                sub, ftor, list(remap.values()), out_types, out_kind,
-                keep=self._df.columns, gate=match, row_names=names)
-            outs = [F.col(out_col(i)) for i in range(len(out_types))]
-            pred = outs[0]
-            if res_code is None:
-                res_code = F.lit(0)
-        # if the resolver itself raises, the row's exception class becomes
-        # the resolver's exception (resolvable by later resolvers) —
-        # reference semantics, ResolveOperator.cc
-        resolved_ok = match & (res_code == 0)
-        hidden = [
-            F.when(~match, F.col(EXC_CODE)).when(res_code == 0, 0)
-            .otherwise(res_code).cast("int").alias(EXC_CODE),
-            F.when(resolved_ok, F.lit(None))
-            .otherwise(F.col(EXC_PAYLOAD)).alias(EXC_PAYLOAD),
-            F.when(resolved_ok, F.lit(None))
-            .otherwise(F.col(EXC_OP)).alias(EXC_OP)]
-        if op.kind == "filter":
-            keep = F.when(resolved_ok, F.coalesce(pred, F.lit(False))) \
-                .otherwise(F.lit(True))
-            out = sub.filter(keep).select(*self._columns, *hidden)
-            return self._spawn(out, last_op=op)
+        # a resolver's result fills the op's produced columns by position
+        out_types = [T.BooleanType()] if op.kind == "filter" else \
+            [self._df.schema[c].dataType for c in op.out_cols]
 
-        sel = _project(
-            self._columns, dict(zip(op.out_cols, outs)),
-            lambda v, e: F.when(resolved_ok, e).otherwise(F.col(v)),
-            compiled is not None and bool(compiled.staged))
-        return self._spawn(sub.select(*sel, *hidden), last_op=op)
+        def finish(df, outs, res_code, barrier=False):
+            # if the resolver itself raises, the row's exception class
+            # becomes the resolver's exception (resolvable by later
+            # resolvers) — reference semantics, ResolveOperator.cc.  The
+            # __t/__res_in_ columns are never listed: they don't escape
+            resolved_ok = match & (res_code == 0)
+            hidden = [
+                F.when(~match, F.col(EXC_CODE)).when(res_code == 0, 0)
+                .otherwise(res_code).cast("int").alias(EXC_CODE),
+                F.when(resolved_ok, F.lit(None))
+                .otherwise(F.col(EXC_PAYLOAD)).alias(EXC_PAYLOAD),
+                F.when(resolved_ok, F.lit(None))
+                .otherwise(F.col(EXC_OP)).alias(EXC_OP)]
+            if op.kind == "filter":
+                keep = F.when(resolved_ok, F.coalesce(outs[0], F.lit(False)))
+                return df.filter(keep.otherwise(F.lit(True))) \
+                    .select(*self._columns, *hidden)
+            sel = _project(
+                self._columns, dict(zip(op.out_cols, outs)),
+                lambda v, e: F.when(resolved_ok, e).otherwise(F.col(v)),
+                barrier)
+            return df.select(*sel, *hidden)
+
+        def compiled_path(compiled):
+            df, barrier = _stage(sub, compiled)
+            outs = [compiled.as_predicate()] if op.kind == "filter" else \
+                [c for _, c, _ in compiled.as_columns()][:len(out_types)]
+            # the one lattice types the result, as the row runner's
+            # 'fill' does: column type C takes result type R when
+            # super_type(C, R) == C (C first: an int literal's int
+            # meets a long column at the same rank), cast to C; a
+            # misfit demotes, and the row runner makes each misfit row
+            # a NormalCaseViolation
+            for f, t in zip(df.select(*outs).schema.fields, out_types):
+                if super_type(t, f.dataType) != t:
+                    raise CompileError(f"resolver result {f.dataType} "
+                                       f"does not fit {t}")
+            return finish(df, [c.cast(t) for c, t in zip(outs, out_types)],
+                          _guard_code(compiled.guards), barrier)
+
+        def interpreted():
+            df, code = self._run_rows(
+                sub, ftor, list(remap.values()), out_types,
+                "pred" if op.kind == "filter" else "fill",
+                keep=self._df.columns, gate=match, row_names=names)
+            return finish(df, [F.col(out_col(i))
+                               for i in range(len(out_types))],
+                          F.lit(0) if code is None else code)
+
+        out, _ = _demoting(self._try_compile(ftor, in_struct, col_map=remap),
+                           compiled_path, interpreted)
+        return self._spawn(out, last_op=op)
 
     def ignore(self, exc_class) -> "DataSet":
         """Silently drop rows that raised ``exc_class`` in the preceding

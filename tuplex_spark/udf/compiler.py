@@ -3057,7 +3057,9 @@ class Translator:
 
     def _merge_envs(self, cond, t_env, f_env, saved):
         out = {}
-        for k in set(t_env) | set(f_env):
+        # first-seen order: the order of any layers staged while
+        # merging must not depend on the string hash seed
+        for k in dict.fromkeys([*t_env, *f_env]):
             tv, fv = t_env.get(k), f_env.get(k)
             if tv is fv:
                 out[k] = tv
