@@ -125,6 +125,62 @@ class TestDriverTimeZone:
         assert empty.collect() == [[]]
 
 
+ROWS = [(1, "a"), (2, "b"), (3, "")]
+
+# withColumn UDFs over ROWS whose result is not a scalar, whether the
+# compiled path keeps them (a dict result takes the interpreter path)
+WHOLE_RESULTS = {
+    "tuple": (lambda x: (x["a"], x["a"] + 1), True),
+    "one_tuple": (lambda x: (x["s"],), True),
+    "nested_tuple": (lambda x: (x["s"], (x["a"], x["a"] * 0.5)), True),
+    "dict": (lambda x: {"k": x["a"], "j": x["a"] * 2}, False),
+}
+
+
+class TestWholeResultInOneColumn:
+    """withColumn/mapColumn put the UDF's whole result in the one new
+    column: a tuple as a struct (collected as a tuple), a dict as a
+    map, on both paths, as CPython computes them."""
+
+    @pytest.mark.parametrize("shape", sorted(WHOLE_RESULTS))
+    def test_with_column(self, ctx, ctx_interp, shape):
+        fn, compiles = WHOLE_RESULTS[shape]
+        want = [(a, s, fn({"a": a, "s": s})) for a, s in ROWS]
+        for c, compiled in ((ctx, compiles), (ctx_interp, False)):
+            before = c.metrics.compiledUDFs
+            ds = c.parallelize(ROWS, columns=["a", "s"]).withColumn("t", fn)
+            assert c.metrics.compiledUDFs == before + compiled
+            assert _reprs(ds.collect()) == _reprs(want)
+            assert ds.exception_counts == {}
+
+    def test_map_column(self, ctx, ctx_interp):
+        for c, compiled in ((ctx, True), (ctx_interp, False)):
+            before = c.metrics.compiledUDFs
+            ds = c.parallelize(ROWS, columns=["a", "s"]) \
+                .mapColumn("a", lambda v: (v, v * 2))
+            assert c.metrics.compiledUDFs == before + compiled
+            assert ds.collect() == [((a, a * 2), s) for a, s in ROWS]
+            # a later op reads the struct column as the tuple
+            assert ds.map(lambda x: x["a"][1] + len(x["s"])).collect() == \
+                [a * 2 + len(s) for a, s in ROWS]
+
+    @pytest.mark.parametrize("shape", ["tuple", "dict"])
+    def test_resolver_fills_the_whole_column(self, ctx, ctx_interp, shape):
+        rows = ROWS + [(0, "z")]
+        fn = (lambda x: (10 // x["a"], x["s"])) if shape == "tuple" \
+            else (lambda x: {"q": 10 // x["a"]})
+        fix = (lambda x: (-1, "?")) if shape == "tuple" \
+            else (lambda x: {"q": -1})
+        want = [(a, s, fn({"a": a, "s": s}) if a else fix(None))
+                for a, s in rows]
+        for c in (ctx, ctx_interp):
+            ds = c.parallelize(rows, columns=["a", "s"]).withColumn("t", fn)
+            assert _reprs(ds.collect()) == _reprs(want[:-1])
+            assert ds.exception_counts == {"ZeroDivisionError": 1}
+            fixed = ds.resolve(ZeroDivisionError, fix)
+            assert _reprs(fixed.collect()) == _reprs(want)
+            assert fixed.exception_counts == {}
+
 # ---------------------------------------------------------------- tooling
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent / "tuplex_spark"
@@ -157,6 +213,11 @@ FORMAT_SPEC_CALLERS = ("_ev_JoinedStr", "_str_method", "_b_format",
                        "_percent_format")
 SECOND_LOWERINGS = {"_format_spec_col", "_format_spec_full", "_SPEC_RE",
                     "_while_counter_rewrite_incfirst"}
+# the guard side tables and the second comprehension lowering, which one
+# guard record and one comprehension lowering replaced
+DELETED_TRANSLATOR_NAMES = {"_guard_msgs", "_guard_args", "_record_args",
+                            "_truncate_guards", "_ev_listcomp_strict",
+                            "_ev_listcomp_guarded"}
 
 
 def _uses(rel, src, attrs):
@@ -213,3 +274,28 @@ class TestOneBoundary:
                   for t in n.targets if isinstance(t, ast.Name)}
         assert "_format_spec" in names
         assert not names & SECOND_LOWERINGS, sorted(names & SECOND_LOWERINGS)
+        attrs = {n.attr for n in ast.walk(tree)
+                 if isinstance(n, ast.Attribute)
+                 and isinstance(n.value, ast.Name) and n.value.id == "self"}
+        gone = (names | attrs) & DELETED_TRANSLATOR_NAMES
+        assert not gone, sorted(gone)
+        # one lambda scope: the higher-order-function depth rises in one
+        # method only
+        scopes = {f.name for f in ast.walk(tree)
+                  if isinstance(f, ast.FunctionDef)
+                  for n in ast.walk(f)
+                  if isinstance(n, ast.AugAssign)
+                  and isinstance(n.target, ast.Attribute)
+                  and n.target.attr == "_hof_depth"
+                  and isinstance(n.op, ast.Add)}
+        assert scopes == {"_lambda_scope"}, sorted(scopes)
+        # no lowering is chosen by a CompileError's text
+        for h in ast.walk(tree):
+            if isinstance(h, ast.ExceptHandler) and h.name \
+                    and isinstance(h.type, ast.Name) \
+                    and h.type.id == "CompileError":
+                reads = [n for s in h.body for c in ast.walk(s)
+                         if isinstance(c, ast.Compare)
+                         for n in ast.walk(c)
+                         if isinstance(n, ast.Name) and n.id == h.name]
+                assert not reads, h.lineno

@@ -5493,3 +5493,20 @@ class TestCompileCache:
         assert calls[0] == 1
         assert len(full) == compiler._COMPILE_CACHE_MAX
         assert ("filler", 0) not in full
+
+
+class TestCounterRewriteStartsFromAnInt:
+    """The counter rewrite turns ``while i < stop: ...; i += 1`` into a
+    range fold, which counts in ints; a counter that starts from a float
+    must not take it (i = 0.5 would run 0, 1, ... instead of 0.5, 1.5,
+    ...)."""
+
+    def test_float_start(self, ctx, ctx_interp):
+        def f(x):
+            i = 0.5
+            s = 0.0
+            while i < x:
+                s += i
+                i += 1
+            return s
+        run_diff3(ctx, ctx_interp, [0, 1, 3, 5], f)

@@ -125,6 +125,20 @@ def _guard_code(guards):
     return code.otherwise(0) if code is not None else F.lit(0)
 
 
+def _whole_result(compiled):
+    """The one column a withColumn/mapColumn UDF (or its resolver)
+    fills: the whole result.  A tuple is one struct column in the
+    engine's _0.._n convention; a dict, one map column, is left to the
+    interpreter path."""
+    if isinstance(compiled.result, compiler.SDict):
+        raise CompileError("dict result of a column op")
+    outs = compiled.as_columns()
+    if isinstance(compiled.result, compiler.STuple):
+        return F.struct(*[c.alias(f"_{i}")
+                          for i, (_, c, _) in enumerate(outs)])
+    return outs[0][1]
+
+
 def _stage(df, compiled):
     """(``df`` with a compiled UDF's CSE layers, the ``__tN`` locals its
     output and guard Columns read, whether there were any).  All go in
@@ -452,17 +466,18 @@ class DataSet:
             out, vis = self._finish_op(df, kind, op_name, {}, code,
                                        pred=compiled.as_predicate())
             return out, vis, "pred"
-        outs = compiled.as_columns()
         if kind == "map":
-            names = self._out_names(outs)
+            outs = compiled.as_columns()
+            new_cols = dict(zip(self._out_names(outs),
+                                (c for _, c, _ in outs)))
+            out_kind = "dict" if outs[0][0] is not None else \
+                "tuple" if isinstance(compiled.result, compiler.STuple) \
+                else "scalar"
         else:
-            names = [new_col or target_col]
-        out, vis = self._finish_op(
-            df, kind, op_name, dict(zip(names, (c for _, c, _ in outs))),
-            code, barrier=barrier)
-        out_kind = "dict" if outs[0][0] is not None else \
-            "tuple" if isinstance(compiled.result, compiler.STuple) \
-            else "scalar"
+            new_cols = {new_col or target_col: _whole_result(compiled)}
+            out_kind = "scalar"
+        out, vis = self._finish_op(df, kind, op_name, new_cols, code,
+                                   barrier=barrier)
         return out, vis, out_kind
 
     def _out_names(self, outs):
@@ -478,7 +493,10 @@ class DataSet:
             specs, out_kind = [(None, T.BooleanType())], "pred"
         else:
             try:
-                specs, out_kind = fallback.infer_output_type(results)
+                # a column op's new column holds the whole result: a
+                # tuple is one struct column, a dict one map column
+                specs, out_kind = fallback.infer_output_type(
+                    results if kind == "map" else [(r,) for r in results])
                 if self._pyobj and any(isinstance(t, T.NullType)
                                        for _, t in specs):
                     # objects promote to typed columns only when every
@@ -507,8 +525,7 @@ class DataSet:
         elif kind == "filter":
             names = []
         else:
-            names = [new_col or target_col]
-            specs = specs[:1]
+            names, out_kind = [new_col or target_col], "scalar"
         # a map needs its inputs afterwards only as the payload of newly
         # failing rows, which only a resolver reads: none can follow an
         # op on or to pickled objects
@@ -708,9 +725,11 @@ class DataSet:
         sub = self._df.select(
             *self._df.columns,
             *[payload.getField(n).alias(remap[n]) for n in names])
-        # a resolver's result fills the op's produced columns by position
+        # a resolver's result fills the op's produced columns by
+        # position, or is the whole value of a column op's one column
         out_types = [T.BooleanType()] if op.kind == "filter" else \
             [self._df.schema[c].dataType for c in op.out_cols]
+        whole = op.kind in ("withColumn", "mapColumn")
 
         def finish(df, outs, res_code, barrier=False):
             # if the resolver itself raises, the row's exception class
@@ -738,6 +757,7 @@ class DataSet:
         def compiled_path(compiled):
             df, barrier = _stage(sub, compiled)
             outs = [compiled.as_predicate()] if op.kind == "filter" else \
+                [_whole_result(compiled)] if whole else \
                 [c for _, c, _ in compiled.as_columns()][:len(out_types)]
             # the one lattice types the result, as the row runner's
             # 'fill' does: column type C takes result type R when
@@ -755,7 +775,8 @@ class DataSet:
         def interpreted():
             df, code = self._run_rows(
                 sub, ftor, list(remap.values()), out_types,
-                "pred" if op.kind == "filter" else "fill",
+                "pred" if op.kind == "filter" else
+                "scalar" if whole else "fill",
                 keep=self._df.columns, gate=match, row_names=names)
             return finish(df, [F.col(out_col(i))
                                for i in range(len(out_types))],

@@ -23,12 +23,14 @@ the "general case".
 from __future__ import annotations
 
 import ast
+import contextlib
 import json as _json_mod
 import math as _math
 import re as _re_mod
 import string as _string_mod
 import random as _random_mod
 from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import Column, functions as F, types as T
 
@@ -52,6 +54,19 @@ _ARGS_IS_MESSAGE = {
 
 class CompileError(Exception):
     """UDF not expressible as Column expressions -> use fallback ladder."""
+
+
+class _Guard(NamedTuple):
+    """One raise site: rows where ``cond`` holds raise the exception
+    class ``code``.  ``msg`` is CPython's ``str(e)`` there and ``args``
+    its ``e.args`` as Syms, when the site records them (handlers that
+    read ``str(e)``/``e.args`` need them); ``snap`` holds the locals the
+    active ``try`` handlers read, as of the raise point."""
+    cond: Column
+    code: int
+    msg: Column | None
+    args: list | None
+    snap: dict
 
 
 class _SymExpr(ast.expr):
@@ -931,15 +946,10 @@ class Translator:
         self.env = env
         self.col_map = col_map or {}  # schema name -> physical df column
         self.with_guards = with_guards
-        self.guards: list[tuple[Column, int]] = []
-        self._guard_msgs: dict[int, Column] = {}  # guard idx -> str(exc)
-        # guard idx -> exact exc.args as evaluated Syms (user raise
-        # sites record them; engine raise sites derive (str(e),) for
-        # the one-string-arg builtins at handler-compile time)
-        self._guard_args: dict[int, list] = {}
-        # innermost-last stack of (as-name|None, [(eff_cond, code,
-        # msg_col|None, args|None)]) for the handler bodies currently
-        # being compiled — `raise e` / bare `raise` re-emit per-guard
+        self.guards: list[_Guard] = []  # raise sites, in emission order
+        # innermost-last stack of (as-name|None, [_Guard under its
+        # handler condition]) for the handler bodies currently being
+        # compiled — `raise e` / bare `raise` re-emit per-guard
         self._reraise_ctx: list[tuple[str | None, list]] = []
         self.accessed: set[str] = set()
         self._locals: dict[str, Sym] = {}
@@ -973,13 +983,12 @@ class Translator:
         # per reference OOM'd codegen on a single '{:e}')
         self._sci_staged: dict = {}
         self._hof_depth = 0
-        # stack of (snap_dict, names): one entry per enclosing try body
-        # whose handlers read body-assigned names — guard() records the
-        # named locals AS OF each raise point (CPython handler scope)
-        # into EVERY active entry, so nested tries keep all levels'
-        # snapshots.  Guard-index rebasing in _exec_try remaps ancestor
-        # entries when a nested try consumes guards.
-        self._snap_stack: list[tuple[dict, set]] = []
+        # the body-assigned names each enclosing try body's handlers
+        # read — guard() records them AS OF each raise point (CPython
+        # handler scope) in the guard's snap, for every level of nested
+        # tries
+        self._snap_stack: list[set[str]] = []
+        self._loop_flag_id = 0  # see _fresh_id
 
     # -- public entry ----------------------------------------------------
     def compile(self, fn) -> CompiledUDF:
@@ -1000,7 +1009,8 @@ class Translator:
         if isinstance(result, SRow):
             result = self._row_tuple()  # identity map: fan the row out
         self._check_materializable(result)
-        return CompiledUDF(result, self.guards, self.accessed, self)
+        return CompiledUDF(result, [(g.cond, g.code) for g in self.guards],
+                           self.accessed, self)
 
     def _check_materializable(self, s: Sym):
         """Fail compilation (inside the caught region) for result shapes
@@ -1081,44 +1091,79 @@ class Translator:
 
     # -- guard plumbing --------------------------------------------------
     def guard(self, cond: Column, exc: str, path: Column | None = None,
-              msg: Column | str | None = None):
+              msg: Column | str | None = None, args: list | None = None):
+        """Record a raise site (see _Guard).  ``msg`` is the exact
+        CPython str(exc) as a Column over the operand values AT THE
+        RAISE POINT, so handlers that read ``str(e)`` compile (_exec_try
+        builds a when-chain over the handler's guards); sites without
+        one keep those handlers on the exact fallback."""
         if not self.with_guards:
             return
         if path is not None:
             cond = path & cond
         if self._path is not None:
             cond = self._path & cond
-        self.guards.append((cond, code_for(exc)))
-        if msg is not None:
-            # the exact CPython str(exc) for this raise site, as a
-            # Column over the operand values AT THE RAISE POINT —
-            # lets handlers that read ``str(e)`` compile (_exec_try
-            # builds a when-chain over the handler's guards).  Sites
-            # without a recorded message keep those handlers on the
-            # exact fallback.
-            self._guard_msgs[len(self.guards) - 1] = \
-                F.lit(msg) if isinstance(msg, str) else msg
-        for snaps, names in self._snap_stack:
-            snaps[len(self.guards) - 1] = {
-                n: self._locals[n] for n in names if n in self._locals}
+        names = set().union(*self._snap_stack)
+        self.guards.append(_Guard(
+            cond, code_for(exc), F.lit(msg) if isinstance(msg, str) else msg,
+            args, {n: self._locals[n] for n in names if n in self._locals}))
 
-    def _record_args(self, args: list) -> None:
-        """Attach CPython ``e.args`` Syms to the guard JUST emitted
-        (round 12: KeyError sites — args=(key,) — so handlers reading
-        e.args/e.args[0] compile over dict/map misses).  No-op when
-        guards are off (guard() appended nothing)."""
-        if self.with_guards:
-            self._guard_args[len(self.guards) - 1] = args
+    @contextlib.contextmanager
+    def _speculate(self):
+        """Run the ``with`` body as a speculative lowering: when it
+        raises CompileError, the guards, returns, staged layers (and
+        the JSON and sci-format caches that name them), locals and path
+        go back to what they were before it, and compilation carries on
+        after the block as if it had not run."""
+        saved = (len(self.guards), list(self._returns), len(self.staged),
+                 dict(self._json_staged), dict(self._sci_staged),
+                 dict(self._locals), self._path)
+        try:
+            yield
+        except CompileError:
+            n_guards, self._returns, n_staged, self._json_staged, \
+                self._sci_staged, self._locals, self._path = saved
+            del self.guards[n_guards:]
+            del self.staged[n_staged:]
 
-    def _truncate_guards(self, start: int) -> None:
-        """Roll back guards emitted past ``start`` (speculative
-        compile paths) — and their recorded messages, so a later guard
-        reusing the index can't inherit a stale str(exc)."""
-        del self.guards[start:]
-        for gi in [g for g in self._guard_msgs if g >= start]:
-            del self._guard_msgs[gi]
-        for gi in [g for g in self._guard_args if g >= start]:
-            del self._guard_args[gi]
+    def _lambda_scope(self, bind: dict, fn):
+        """Run ``fn()`` as the body of a Spark higher-order function's
+        lambda, with ``bind`` (its variables' Syms) over the current
+        locals.  No projection exists there, so nothing is staged, and
+        the guards ``fn`` emits are taken back: their conditions read
+        the lambda's variables, which mean nothing at row scope.
+        Returns (fn's result, the captured guards); a caller that
+        cannot host a guard rejects a non-empty capture."""
+        saved = dict(self._locals)
+        n_guards = len(self.guards)
+        self._branch_depth += 1
+        self._hof_depth += 1
+        try:
+            self._locals.update(bind)
+            out = fn()
+            caught = self.guards[n_guards:]
+            del self.guards[n_guards:]
+            return out, caught
+        finally:
+            self._branch_depth -= 1
+            self._hof_depth -= 1
+            self._locals = saved
+
+    def _fresh_id(self) -> int:
+        """A new number for the synthetic names of one loop lowering
+        (``__brk3``, ``__rv3``, ``__wi3``)."""
+        self._loop_flag_id += 1
+        return self._loop_flag_id
+
+    def _narrow(self, path: Column | None, start: int) -> Column | None:
+        """The path past the conditional returns recorded since
+        ``start``: a row that returned there runs no later statement.
+        Also sets it as the current path."""
+        for cond, _ in self._returns[start:]:
+            if cond is not None:
+                path = ~cond if path is None else (path & ~cond)
+        self._path = path
+        return path
 
     # -- conversions -----------------------------------------------------
     def to_col(self, s: Sym) -> Column:
@@ -1290,21 +1335,12 @@ class Translator:
                     # str(e) stays 1-arg-only — the multi-arg message
                     # is the str of the args TUPLE, not derivable from
                     # _to_str of a single Sym
-                    ng = len(self.guards)
-                    try:
-                        asyms = [self.eval(a) for a in st.exc.args]
-                        rargs = asyms
-                        if len(asyms) == 1:
-                            ng2 = len(self.guards)
-                            try:
-                                rmsg = self._to_str(asyms[0])
-                            except CompileError:
-                                self._truncate_guards(ng2)
-                    except CompileError:
-                        self._truncate_guards(ng)
-                self.guard(F.lit(True), exc_name, msg=rmsg)
-                if self.with_guards and rargs is not None:
-                    self._guard_args[len(self.guards) - 1] = rargs
+                    with self._speculate():
+                        rargs = [self.eval(a) for a in st.exc.args]
+                    if rargs is not None and len(rargs) == 1:
+                        with self._speculate():
+                            rmsg = self._to_str(rargs[0])
+                self.guard(F.lit(True), exc_name, msg=rmsg, args=rargs)
                 self._returns.append((path, SRaised()))
                 return True
             if isinstance(st, ast.Assert):
@@ -1318,18 +1354,11 @@ class Translator:
                 # value, not its str)
                 aargs: list | None = [] if st.msg is None else None
                 if st.msg is not None:
-                    ng = len(self.guards)
-                    try:
-                        with self._under_path(~cond):
-                            msym = self.eval(st.msg)
-                            amsg = self._to_str(msym)
-                            aargs = [msym]
-                    except CompileError:
-                        self._truncate_guards(ng)
-                        aargs = None
-                self.guard(~cond, "AssertionError", msg=amsg)
-                if aargs is not None:
-                    self._record_args(aargs)
+                    with self._speculate(), self._under_path(~cond):
+                        msym = self.eval(st.msg)
+                        amsg = self._to_str(msym)
+                        aargs = [msym]
+                self.guard(~cond, "AssertionError", msg=amsg, args=aargs)
                 continue
             if isinstance(st, ast.Pass):
                 continue
@@ -1504,11 +1533,7 @@ class Translator:
                     return True, path
             finally:
                 self._unroll_depth -= 1
-            for cond, _ in self._returns[start:]:
-                if cond is not None:
-                    path = ~cond if path is None else (path & ~cond)
-            self._path = path
-            return False, path
+            return False, self._narrow(path, start)
         if self._is_first_match(st):
             # the filter/element_at fast path can't host a
             # guard-raising predicate (a guard can't be conditioned
@@ -1517,15 +1542,8 @@ class Translator:
             # that — the raise fires at the first raising element of
             # any not-yet-returned row, CPython's order (round 12;
             # previously the whole UDF fell back to Arrow)
-            ng = len(self.guards)
-            saved_returns = len(self._returns)
-            n_staged = len(self.staged)
-            try:
+            with self._speculate():
                 return self._exec_for_first_match(st, path)
-            except CompileError:
-                self._truncate_guards(ng)
-                del self._returns[saved_returns:]
-                del self.staged[n_staged:]
         if st.orelse:
             raise CompileError("for-else")
         ret = self._exec_for_fold(st, path)
@@ -1564,23 +1582,14 @@ class Translator:
         arr, tags, is_struct, _arr_nullable = self._iter_array(st.iter)
 
         def cond_fn(x):
-            saved_locals = dict(self._locals)
-            n_guards = len(self.guards)
-            self._branch_depth += 1
-            self._hof_depth += 1
-            try:
-                self._bind_loop_target(st.target, x, tags, is_struct)
-                out = self.truthy(self.eval(cond_node))
-                if len(self.guards) != n_guards:
-                    # the predicate runs on EVERY element; a guard-raising
-                    # predicate can't be path-conditioned per element
-                    self._truncate_guards(n_guards)
-                    raise CompileError("guard-raising first-match predicate")
-                return out
-            finally:
-                self._branch_depth -= 1
-                self._hof_depth -= 1
-                self._locals = saved_locals
+            out, caught = self._lambda_scope(
+                self._loop_target_syms(st.target, x, tags, is_struct),
+                lambda: self.truthy(self.eval(cond_node)))
+            if caught:
+                # the predicate runs on EVERY element; a guard-raising
+                # predicate can't be path-conditioned per element
+                raise CompileError("guard-raising first-match predicate")
+            return out
 
         matched = F.filter(arr, cond_fn)
         if self._hof_depth == 0:
@@ -1600,8 +1609,8 @@ class Translator:
         self._path = ret_path  # guards in the return expr fire only on hit
         self._branch_depth += 1
         try:
-            self._bind_loop_target(st.target, F.element_at(matched, 1),
-                                   tags, is_struct)
+            self._locals.update(self._loop_target_syms(
+                st.target, F.element_at(matched, 1), tags, is_struct))
             val = self.eval(ret_node) if ret_node is not None \
                 else SConst(None)
         finally:
@@ -1622,10 +1631,7 @@ class Translator:
             start = len(self._returns)
             if self.exec_block(st.orelse, path):
                 return True, path
-            for cond, _ in self._returns[start:]:
-                if cond is not None:
-                    path = path & ~cond
-            self._path = path
+            path = self._narrow(path, start)
         return False, path
 
     def _exec_try(self, st: ast.Try, path: Column | None):
@@ -1646,10 +1652,11 @@ class Translator:
         CPython evaluates return values BEFORE finally runs.  Handlers
         that read body-assigned names see their values AS OF the raise
         point (per-guard snapshots, merged by disjoint raise
-        conditions) — including across NESTED tries: the snapshot stack
-        records every enclosing level and guard-index rebasing remaps
-        ancestor entries.  Handlers may read the ``as`` binding as
-        ``type(e).__name__`` / ``e.__class__.__name__`` (class static
+        conditions) — including across NESTED tries: each guard's
+        snapshot holds the names every enclosing level reads, and a
+        kept guard carries it out of an inner try.  Handlers may read
+        the ``as`` binding as ``type(e).__name__`` /
+        ``e.__class__.__name__`` (class static
         per guard), ``str(e)`` (raise sites record their exact CPython
         message, incl. operand reprs, via guard(msg=...)), ``e.args``
         (user raise sites record the evaluated arg Syms; engine sites
@@ -1718,64 +1725,36 @@ class Translator:
         n_guards = len(self.guards)
         start_returns = len(self._returns)
         self._branch_depth += 1  # blocks dict mutation aliasing inside
-        snaps: dict[int, dict] = {}
-        entry = (snaps, rw)
-        if rw:
+        try:
             # handlers see body-assigned names AS OF the raise point
             # (CPython handler scope): guard() records them per guard
-            # (into this entry AND every enclosing try's entry)
-            self._snap_stack.append(entry)
-        try:
-            body_term = self.exec_block(st.body, path)
-            if rw:
-                self._snap_stack = [e for e in self._snap_stack
-                                    if e is not entry]
+            self._snap_stack.append(rw)
+            try:
+                body_term = self.exec_block(st.body, path)
+            finally:
+                self._snap_stack.pop()
             body_env = self._locals
             new_guards = self.guards[n_guards:]
-            # raise-site messages for the body's guards, keyed by their
-            # absolute index (>= n_guards); survive the truncation so
-            # handlers can compile str(e) and kept guards re-attach
-            new_msgs = {gi: self._guard_msgs[gi]
-                        for gi in self._guard_msgs if gi >= n_guards}
-            new_args = {gi: self._guard_args[gi]
-                        for gi in self._guard_args if gi >= n_guards}
-            self._truncate_guards(n_guards)
-            kept: list[tuple[Column, int]] = []
-            kept_old: list[int] = []
-            per_handler: list[list[tuple[Column, int]]] = \
-                [[] for _ in st.handlers]
+            del self.guards[n_guards:]
+            # each guard under its first-raise condition: kept ones
+            # stay row failures, the others feed their handler
+            per_handler: list[list[_Guard]] = [[] for _ in st.handlers]
             prior: Column | None = None
-            for gi, (cond, code) in enumerate(new_guards,
-                                              start=n_guards):
+            for g in new_guards:
                 hi = next((i for i, hc in enumerate(handler_codes)
-                           if hc is None or code in hc), None)
-                eff = cond if prior is None else (cond & ~prior)
+                           if hc is None or g.code in hc), None)
+                eff = g._replace(
+                    cond=g.cond if prior is None else (g.cond & ~prior))
                 if hi is None:
-                    kept.append((eff, code))
-                    kept_old.append(gi)
+                    self.guards.append(eff)
                 else:
-                    per_handler[hi].append((eff, gi))
-                prior = cond if prior is None else (prior | cond)
-            self.guards.extend(kept)
-            # guard indices >= n_guards just moved (handled ones were
-            # consumed): remap every ENCLOSING try's snapshot dict so
-            # its index keys track the surviving guards
-            for osnaps, _ in self._snap_stack:
-                pending = {g: osnaps.pop(g)
-                           for g in [g for g in osnaps if g >= n_guards]}
-                for new_i, gi_old in enumerate(kept_old, start=n_guards):
-                    if gi_old in pending:
-                        osnaps[new_i] = pending[gi_old]
-            # same remap for raise-site messages/args of surviving guards
-            for new_i, gi_old in enumerate(kept_old, start=n_guards):
-                if gi_old in new_msgs:
-                    self._guard_msgs[new_i] = new_msgs[gi_old]
-                if gi_old in new_args:
-                    self._guard_args[new_i] = new_args[gi_old]
+                    per_handler[hi].append(eff)
+                prior = g.cond if prior is None else (prior | g.cond)
             handled = None
             for conds in per_handler:
-                for c, _ in conds:
-                    handled = c if handled is None else (handled | c)
+                for g in conds:
+                    handled = g.cond if handled is None \
+                        else (handled | g.cond)
             # ---- else: only when the body completed without raising --
             else_term = False
             if st.orelse and not body_term:
@@ -1803,9 +1782,9 @@ class Translator:
                                        handler_kinds):
                 if not conds:
                     continue
-                hcond = conds[0][0]
-                for c, _ in conds[1:]:
-                    hcond = hcond | c
+                hcond = conds[0].cond
+                for g in conds[1:]:
+                    hcond = hcond | g.cond
                 hpath = hcond if path is None else (path & hcond)
                 hbody = h.body
                 if kinds:
@@ -1816,12 +1795,10 @@ class Translator:
                     if "typename" in kinds:
                         # type(e).__name__: class is static per guard
                         ncol = None
-                        for eff, gi in conds:
-                            nm = name_for_code(
-                                new_guards[gi - n_guards][1])
-                            ncol = F.when(eff, F.lit(nm)) \
-                                if ncol is None else ncol.when(eff,
-                                                               F.lit(nm))
+                        for g in conds:
+                            nm = F.lit(name_for_code(g.code))
+                            ncol = F.when(g.cond, nm) \
+                                if ncol is None else ncol.when(g.cond, nm)
                         name_sym = SCol(ncol, "str", False)
                     if "message" in kinds:
                         # str(e): every guard feeding this handler must
@@ -1829,24 +1806,19 @@ class Translator:
                         # without one sends the whole UDF to the exact
                         # fallback (never a made-up message)
                         mcol = None
-                        for eff, gi in conds:
-                            m = new_msgs.get(gi)
-                            if m is None:
+                        for g in conds:
+                            if g.msg is None:
                                 raise CompileError(
                                     "handler reads str(e) for a raise "
                                     "site without a recorded message")
-                            mcol = F.when(eff, m) if mcol is None \
-                                else mcol.when(eff, m)
+                            mcol = F.when(g.cond, g.msg) if mcol is None \
+                                else mcol.when(g.cond, g.msg)
                         msg_sym = SCol(mcol, "str", False)
                     if "args" in kinds:
-                        args_sym = self._exc_args_sym(
-                            conds, new_guards, new_msgs, new_args,
-                            n_guards)
+                        args_sym = self._exc_args_sym(conds)
                     repr_sym = None
                     if "repr" in kinds:
-                        repr_sym = self._exc_repr_sym(
-                            conds, new_guards, new_msgs, new_args,
-                            n_guards)
+                        repr_sym = self._exc_repr_sym(conds)
                     import copy as _copy
                     rw_t = _ExcReadRewriter(h.name, name_sym, msg_sym,
                                             args_sym, repr_sym)
@@ -1859,23 +1831,19 @@ class Translator:
                 # handler's guards picks the right snapshot per row
                 for name in rw:
                     arms = []
-                    for eff, gi in conds:
-                        s = snaps.get(gi, {}).get(name, saved.get(name))
+                    for g in conds:
+                        s = g.snap.get(name, saved.get(name))
                         if s is None:
                             raise CompileError(
                                 "handler reads possibly-unbound name")
-                        arms.append((eff, s))
+                        arms.append((g.cond, s))
                     merged = arms[-1][1]
                     for eff, s in reversed(arms[:-1]):
                         merged = self._merge_vals(eff, s, merged)
                     self._locals[name] = merged
                 # bare `raise` / `raise <as-name>` inside this handler
                 # re-emits the original per-guard code+message+args
-                ctx_entries = [
-                    (eff, new_guards[gi - n_guards][1],
-                     new_msgs.get(gi), new_args.get(gi))
-                    for eff, gi in conds]
-                self._reraise_ctx.append((h.name, ctx_entries))
+                self._reraise_ctx.append((h.name, conds))
                 try:
                     h_term = self.exec_block(hbody, hpath)
                 finally:
@@ -1888,19 +1856,22 @@ class Translator:
             if all_term:
                 return True, path
             # narrow for returns captured inside this construct
-            for i in range(start_returns, len(self._returns)):
-                c, _ = self._returns[i]
-                if c is not None:
-                    path = ~c if path is None else (path & ~c)
-            self._path = path
-            return False, path
+            return False, self._narrow(path, start_returns)
         finally:
             self._branch_depth -= 1
-            self._snap_stack = [e for e in self._snap_stack
-                                if e is not entry]
 
-    def _exc_args_sym(self, conds, new_guards, new_msgs, new_args,
-                      n_guards: int):
+    @staticmethod
+    def _site_args(g: _Guard, what: str) -> list:
+        """A raise site's ``e.args``: recorded, or (str(e),) from its
+        recorded message for the one-string-arg builtins."""
+        if g.args is not None:
+            return g.args
+        if name_for_code(g.code) in _ARGS_IS_MESSAGE and g.msg is not None:
+            return [SCol(g.msg, "str", False)]
+        raise CompileError(f"handler reads {what} for a raise site "
+                           "without recorded args")
+
+    def _exc_args_sym(self, conds: list[_Guard]):
         """Merged ``e.args`` tuple for a handler: explicit raise-site
         args where recorded, else (str(e),) derived from the recorded
         message for the one-string-arg builtins.  All feeding guards
@@ -1908,23 +1879,13 @@ class Translator:
         row; mixed arities cannot merge into a static tuple)."""
         per: list[tuple[Column, list]] = []
         arity = None
-        for eff, gi in conds:
-            a = new_args.get(gi)
-            if a is None:
-                code = new_guards[gi - n_guards][1]
-                m = new_msgs.get(gi)
-                if name_for_code(code) in _ARGS_IS_MESSAGE \
-                        and m is not None:
-                    a = [SCol(m, "str", False)]
-                else:
-                    raise CompileError(
-                        "handler reads e.args for a raise site "
-                        "without recorded args")
+        for g in conds:
+            a = self._site_args(g, "e.args")
             if arity is None:
                 arity = len(a)
             elif arity != len(a):
                 arity = -1  # mixed — padded representation below
-            per.append((eff, a))
+            per.append((g.cond, a))
         if arity == -1:
             # round 12: MIXED arity — no static tuple exists (the
             # length is data-dependent), so carry the per-site args +
@@ -1952,8 +1913,7 @@ class Translator:
             merged = self._merge_vals(eff, a[k], merged)
         return merged
 
-    def _exc_repr_sym(self, conds, new_guards, new_msgs, new_args,
-                      n_guards: int):
+    def _exc_repr_sym(self, conds: list[_Guard]):
         """Merged ``repr(e)`` for a handler — CPython's
         BaseException.__repr__ is ``TypeName(repr(arg), ...)`` over
         e.args (one arg prints without a trailing comma), so it
@@ -1963,18 +1923,9 @@ class Translator:
         Python float repr drifts from Spark's cast), or (message,)
         for the one-string-arg builtins."""
         rcol = None
-        for eff, gi in conds:
-            code = new_guards[gi - n_guards][1]
-            nm = name_for_code(code)
-            a = new_args.get(gi)
-            if a is None:
-                m = new_msgs.get(gi)
-                if nm in _ARGS_IS_MESSAGE and m is not None:
-                    a = [SCol(m, "str", False)]
-                else:
-                    raise CompileError(
-                        "handler reads repr(e) for a raise site "
-                        "without recorded args")
+        for g in conds:
+            nm = name_for_code(g.code)
+            a = self._site_args(g, "repr(e)")
             parts = []
             for s in a:
                 tg = getattr(s, "tag", None)
@@ -1995,8 +1946,8 @@ class Translator:
                 col = F.concat(F.lit(nm + "("), inner, F.lit(")"))
             else:
                 col = F.lit(nm + "()")
-            rcol = F.when(eff, col) if rcol is None \
-                else rcol.when(eff, col)
+            rcol = F.when(g.cond, col) if rcol is None \
+                else rcol.when(g.cond, col)
         return SCol(rcol, "str", False)
 
     def _emit_reraise(self, entries, path: Column | None) -> None:
@@ -2005,10 +1956,8 @@ class Translator:
         (disjoint) raise condition AND the current path — so the row's
         code and recorded message survive the handler exactly as
         CPython's bare ``raise`` propagates the in-flight exception."""
-        for eff, code, m, a in entries:
-            self.guard(eff, name_for_code(code), msg=m)
-            if self.with_guards and a is not None:
-                self._guard_args[len(self.guards) - 1] = a
+        for g in entries:
+            self.guard(g.cond, name_for_code(g.code), msg=g.msg, args=g.args)
         self._returns.append((path, SRaised()))
 
     def _run_finally(self, st: ast.Try, path: Column | None,
@@ -2030,91 +1979,48 @@ class Translator:
         new = self.guards[m:]
         if new:
             f_any = None
-            for c, _ in new:
-                f_any = c if f_any is None else (f_any | c)
+            for g in new:
+                f_any = g.cond if f_any is None else (f_any | g.cond)
             for i in range(n_guards, m):
-                c, code = self.guards[i]
-                self.guards[i] = (c & ~f_any, code)
+                g = self.guards[i]
+                self.guards[i] = g._replace(cond=g.cond & ~f_any)
 
     def _exec_while(self, st: ast.While, path: Column | None):
-        """Compile ``while`` by ITERATIVE unrolling: execute the body as
-        long as the condition folds to a constant True (counter loops
-        with literal bounds — the reference compiles these natively,
-        ASTNodes.h NWhile).  A condition that stays symbolic (data-
-        dependent) cannot bound the unroll and falls back.  Conditional
-        returns inside the body narrow the path for LATER iterations
-        (mirroring the flat-unroll semantics), so guards in iteration
-        k+1 never fire for rows that already returned in iteration k.
+        """Compile ``while`` by one ladder for every loop:
+
+        1. the static unroll (_exec_while_unroll), speculatively: when
+           the test and every break fold to constants, later statements
+           keep the loop's constants;
+        2. the counter rewrites to a for-range fold: increment-first
+           (exact with break and continue, because the counter moves
+           before either can skip anything; tried only for a loop that
+           has one), then increment-last (not with ``continue``, which
+           would skip the increment: CPython loops forever where the
+           range fold ends);
+        3. the ``while True`` respellings (_while_true_break_rewrite),
+           which run this ladder on the respelled loop;
+        4. the convergence fold (_while_convergence_fold).
+
+        The first of 2-4 that recognizes the loop decides it: if its
+        lowering fails, the loop falls back.
         Returns (all_paths_terminated, narrowed_path)."""
         if st.orelse:
             raise CompileError("while-else")
+        with self._speculate():
+            return self._exec_while_unroll(st, path)
         if any(_contains_break_continue(s) for s in st.body):
-            # increment-FIRST counter loops (`while i < n: i += 1; ...`)
-            # tolerate both break and continue: the counter is already
-            # advanced before either can skip anything, so the for-range
-            # rewrite (loop var j, body `i = j + 1; rest`) is exact.
             rewritten = self._while_counter_rewrite(st, inc_first=True)
             if rewritten is not None:
                 return self._exec_for(rewritten, path)
-            # increment-LAST form: `continue` would skip the trailing
-            # `i += 1` (CPython loops forever where the range fold
-            # terminates) — reject it; `break` exits without further
-            # updates on both forms, so it rides the for-range fold's
-            # flag lowering.
-            if not any(_contains_continue(s) for s in st.body):
-                rewritten = self._while_counter_rewrite(st, inc_first=False)
-                if rewritten is not None:
-                    return self._exec_for(rewritten, path)
-            # `while True: if c: break; rest` / `while True: body;
-            # if c: break` respell as plain condition-driven whiles,
-            # unlocking the counter/contraction/convergence folds for
-            # the while-True spelling of data-dependent loops
-            rw = self._while_true_break_rewrite(st, path)
-            if rw is not None:
-                return rw
-            # data-dependent break-ifs over a recognized contraction
-            # test (round 12): the convergence fold lowers them to a
-            # frozen-flag accumulator — break only exits earlier, so
-            # the analytic bound stays valid.  A CompileError here
-            # (e.g. a nested loop makes the body unscannable) must not
-            # preempt the static unroll path below.
-            ng = len(self.guards)
-            try:
-                if self._while_convergence_fold(st):
-                    return False, path
-            except CompileError:
-                self._truncate_guards(ng)
-            # `while True:` (or any statically-foldable test) with
-            # statically-resolvable breaks: unroll with flag lowering
-            return self._exec_while_unroll_break(st, path)
-        self._unroll_depth += 1
-        try:
-            for _ in range(self._MAX_UNROLL):
-                test = self.eval(st.test)
-                if not isinstance(test, SConst):
-                    rewritten = self._while_counter_rewrite(
-                        st, inc_first=False)
-                    if rewritten is not None:
-                        self._unroll_depth -= 1
-                        try:
-                            return self._exec_for(rewritten, path)
-                        finally:
-                            self._unroll_depth += 1
-                    if self._while_convergence_fold(st):
-                        return False, path
-                    raise CompileError("dynamic while condition")
-                if not test.value:
-                    return False, path
-                start = len(self._returns)
-                if self.exec_block(st.body, path):
-                    return True, path
-                for cond, _ in self._returns[start:]:
-                    if cond is not None:
-                        path = ~cond if path is None else (path & ~cond)
-                self._path = path
-            raise CompileError("while exceeds unroll limit")
-        finally:
-            self._unroll_depth -= 1
+        if not any(_contains_continue(s) for s in st.body):
+            rewritten = self._while_counter_rewrite(st, inc_first=False)
+            if rewritten is not None:
+                return self._exec_for(rewritten, path)
+        done = self._while_true_break_rewrite(st, path)
+        if done is not None:
+            return done
+        self._while_convergence_fold(st)
+        return False, path
 
     _INV_CMP = {ast.Gt: ast.LtE, ast.GtE: ast.Lt, ast.Lt: ast.GtE,
                 ast.LtE: ast.Gt, ast.Eq: ast.NotEq, ast.NotEq: ast.Eq,
@@ -2192,11 +2098,7 @@ class Translator:
             start = len(self._returns)
             if self.exec_block(pre, path):
                 return True, path
-            for cond, _ in self._returns[start:]:
-                if cond is not None:
-                    path = ~cond if path is None else (path & ~cond)
-            self._path = path
-            return self._exec_while(w, path)
+            return self._exec_while(w, self._narrow(path, start))
         # mid-body: the rotated loop body B;A re-checks c at the same
         # program point CPython does (after A, before B), and the
         # one-time prefix run of A matches CPython's first iteration —
@@ -2221,11 +2123,7 @@ class Translator:
                 start = len(self._returns)
                 if self.exec_block(pre, path):
                     return True, path
-                for cond, _ in self._returns[start:]:
-                    if cond is not None:
-                        path = ~cond if path is None else (path & ~cond)
-                self._path = path
-                return self._exec_while(w, path)
+                return self._exec_while(w, self._narrow(path, start))
         return None
 
     def _while_counter_rewrite(self, st: ast.While, inc_first: bool):
@@ -2274,9 +2172,9 @@ class Translator:
                       and isinstance(n.ctx, ast.Load)}
         if stop_reads & (assigned | {var}):
             return None  # stop must be loop-invariant
-        if var not in self._locals:
-            return None
-        start_sym = self._locals[var]
+        start_sym = self._locals.get(var)
+        if getattr(start_sym, "tag", None) != "int":
+            return None  # a range counts in ints, not from 0.5 or True
         stop_sym = self.eval(stop_node)
         stop_sym = self.num(stop_sym, "while bound")
         if stop_sym.tag == "float":
@@ -2290,8 +2188,7 @@ class Translator:
         elif le:
             stop_sym = self._binop(ast.Add(), stop_sym, SConst(1))
         if inc_first:
-            n = self._loop_flag_id = getattr(self, "_loop_flag_id", 0) + 1
-            target = f"__wi{n}"
+            target = f"__wi{self._fresh_id()}"
             body = [ast.Assign(
                 targets=[ast.Name(id=var, ctx=ast.Store())],
                 value=ast.BinOp(left=ast.Name(id=target, ctx=ast.Load()),
@@ -2307,18 +2204,20 @@ class Translator:
             body=body,
             orelse=[])
 
-    def _exec_while_unroll_break(self, st: ast.While, path):
-        """``while True: ... break ...`` (or any test that folds
-        constant per iteration) with breaks whose conditions RESOLVE
-        statically during unrolling: break/continue lower to flag
-        assignments (the static-for scheme) and iterations unroll until
-        the break flag folds to True or the test folds to False.  A
-        break whose condition stays data-dependent leaves the flag
-        symbolic — the unroll cannot terminate, so it falls back (the
-        reference compiles these natively as real jumps,
-        codegen/src/BlockGeneratorVisitor.cc; an expression tree has no
-        jumps and no bound to unroll to)."""
-        n = self._loop_flag_id = getattr(self, "_loop_flag_id", 0) + 1
+    def _exec_while_unroll(self, st: ast.While, path):
+        """Unroll a ``while`` whose test folds to a constant on every
+        iteration (counter loops with literal bounds, ``while True`` —
+        the reference compiles these natively, ASTNodes.h NWhile):
+        break/continue lower to flag assignments (the static-for
+        scheme) and iterations unroll until the break flag folds to
+        True or the test to False.  Conditional returns inside the body
+        narrow the path for LATER iterations, so guards in iteration
+        k+1 never fire for rows that already returned in iteration k.
+        A test or break that stays data-dependent cannot bound the
+        unroll (the reference compiles these as real jumps,
+        codegen/src/BlockGeneratorVisitor.cc; an expression tree has
+        no jumps and no bound to unroll to)."""
+        n = self._fresh_id()
         brk, cont = f"__brk{n}", f"__cont{n}"
         lowered = _lower_break_continue(list(st.body), brk, cont)
         self._locals[brk] = SConst(False)
@@ -2339,10 +2238,7 @@ class Translator:
                 stmts = [_flag_assign(cont, False)] + lowered
                 if self.exec_block(stmts, path):
                     return True, path
-                for cond, _ in self._returns[start:]:
-                    if cond is not None:
-                        path = ~cond if path is None else (path & ~cond)
-                self._path = path
+                path = self._narrow(path, start)
             raise CompileError("while exceeds unroll limit")
         finally:
             self._unroll_depth -= 1
@@ -2502,7 +2398,7 @@ class Translator:
             return var, "add", float(c), float(t), exact
         return None
 
-    def _while_convergence_fold(self, st: ast.While) -> bool:
+    def _while_convergence_fold(self, st: ast.While) -> None:
         """Lower a recognized contraction ``while`` (see
         _while_contraction_info) onto ONE ``F.aggregate`` over
         ``F.sequence(1, K_row)`` with step
@@ -2513,12 +2409,11 @@ class Translator:
         more than the cap (possible only for near-1 ratios or tiny
         linear steps on huge values) gets a guarded RuntimeError row
         instead of a silently-wrong value — the one documented
-        divergence from CPython, which would keep iterating."""
-        n_guards = len(self.guards)
+        divergence from CPython, which would keep iterating.  Raises
+        CompileError for any other loop."""
         info = self._while_contraction_info(st)
         if info is None:
-            self._truncate_guards(n_guards)
-            return False
+            raise CompileError("dynamic while condition")
         var, kind, c, t, exact = info
         # round 12: data-dependent break-ifs lower to a FROZEN-FLAG
         # accumulator — break only exits earlier, so the contraction
@@ -2537,10 +2432,8 @@ class Translator:
                     and not all(
                         _is_pure_continue_if(s) or not _contains_continue(s)
                         for s in st.body):
-                self._truncate_guards(n_guards)
-                return False
-            fid = self._loop_flag_id = getattr(self, "_loop_flag_id",
-                                               0) + 1
+                raise CompileError("continue before a while fold's update")
+            fid = self._fresh_id()
             brk, cont = f"__brk{fid}", f"__cont{fid}"
             body = [_flag_assign(cont, False)] \
                 + _lower_break_continue(body, brk, cont)
@@ -2549,19 +2442,12 @@ class Translator:
         assigned = _loop_assigned_names(body)
         accs = [n for n in assigned if n in self._locals]
 
-        def bail():
-            self._truncate_guards(n_guards)
-            if brk is not None:
-                self._locals.pop(brk, None)
-                self._locals.pop(cont, None)
-            return False
-
         if set(assigned) != set(accs):
-            return bail()
+            raise CompileError("while fold assigns a name unbound before it")
         init = {n: self._locals[n] for n in accs}
         if any(s.tag not in ("int", "float", "bool", "str")
                for s in init.values()):
-            return bail()
+            raise CompileError("while fold accumulator tag")
 
         def enter(acc_syms, _x):
             cond = self.truthy(self.eval(st.test))
@@ -2620,11 +2506,8 @@ class Translator:
         k = F.when(need, F.least(k, F.lit(self._WHILE_FOLD_CAP))) \
              .otherwise(F.lit(self._WHILE_FOLD_MARGIN)).cast("int")
 
-        try:
-            self._fold_loop(body, init, F.sequence(F.lit(1), k), enter,
-                            any(s.nullable for s in init.values()))
-        except CompileError:
-            return bail()
+        self._fold_loop(body, init, F.sequence(F.lit(1), k), enter,
+                        any(s.nullable for s in init.values()))
         # cap guard: condition still true after K iterations -> the
         # compiled bound was insufficient (CPython would keep looping);
         # grow additionally guards its termination PREcondition (see
@@ -2642,7 +2525,6 @@ class Translator:
         if brk is not None:
             self._locals.pop(brk, None)
             self._locals.pop(cont, None)
-        return True
 
     def _unroll_with_break(self, st: ast.For, vals) -> list:
         """Unroll with break/continue lowered to boolean flags: break/
@@ -2650,7 +2532,7 @@ class Translator:
         wrapped in ``if not flag``, and each iteration runs under
         ``if not __brk``.  The existing If/branch-merge machinery then
         computes exactly CPython's control flow."""
-        n = self._loop_flag_id = getattr(self, "_loop_flag_id", 0) + 1
+        n = self._fresh_id()
         brk, cont = f"__brk{n}", f"__cont{n}"
         lowered = _lower_break_continue(list(st.body), brk, cont)
         stmts = [_flag_assign(brk, False)]
@@ -2795,23 +2677,21 @@ class Translator:
             return it.col, [it.elem or "any"], False, it.nullable
         raise CompileError(f"loop over {it.tag}")
 
-    def _bind_loop_target(self, target, x: Column, tags, is_struct):
+    @staticmethod
+    def _loop_target_syms(target, x: Column, tags, is_struct) -> dict:
+        """{name: Sym} binding a loop target to the element ``x``."""
         if is_struct:
             elems = [SCol(x.getField(f"e{i}"), t, False)
                      for i, t in enumerate(tags)]
             if isinstance(target, ast.Name):
-                self._locals[target.id] = STuple(elems)
-                return [target.id]
+                return {target.id: STuple(elems)}
             if isinstance(target, ast.Tuple) \
                     and len(target.elts) == len(elems) \
                     and all(isinstance(e, ast.Name) for e in target.elts):
-                for e, s in zip(target.elts, elems):
-                    self._locals[e.id] = s
-                return [e.id for e in target.elts]
+                return {e.id: s for e, s in zip(target.elts, elems)}
             raise CompileError("loop target shape")
         if isinstance(target, ast.Name):
-            self._locals[target.id] = SCol(x, tags[0], False)
-            return [target.id]
+            return {target.id: SCol(x, tags[0], False)}
         raise CompileError("loop target shape")
 
     def _rewrite_loop_returns(self, stmts: list, rv: str, rf: str):
@@ -2888,26 +2768,15 @@ class Translator:
             """Execute one iteration under acc/element bindings; returns
             (condition, {acc: Sym-after}, captured_guards).  A return
             inside aborts (the callers rewrote returns away first)."""
-            saved_locals = dict(self._locals)
-            saved_returns = list(self._returns)
-            n_guards = len(self.guards)
-            self._branch_depth += 1
-            self._hof_depth += 1
-            try:
-                for n, s in acc_syms.items():
-                    self._locals[n] = s
+            def iteration():
                 cond = enter(acc_syms, x)
+                n_returns = len(self._returns)
                 if self.exec_block(body, None) \
-                        or len(self._returns) != len(saved_returns):
+                        or len(self._returns) != n_returns:
                     raise CompileError("return/raise inside dynamic loop")
-                caught = list(self.guards[n_guards:])
-                self._truncate_guards(n_guards)
-                return cond, {n: self._locals[n] for n in accs}, caught
-            finally:
-                self._branch_depth -= 1
-                self._hof_depth -= 1
-                self._locals = saved_locals
-                self._returns = saved_returns
+                return cond, {n: self._locals[n] for n in accs}
+            (cond, res), caught = self._lambda_scope(acc_syms, iteration)
+            return cond, res, caught
 
         # pass 1 (dry): discover post-body tags to fix the struct schema
         dummy = F.lit(0)
@@ -2924,9 +2793,9 @@ class Translator:
         for n in accs:
             if _unify_tags(final[n], out2[n].tag) != final[n]:
                 raise CompileError("fold accumulator type oscillates")
-        if [c for _, c in caught1] != [c for _, c in caught2]:
+        guard_codes = [g.code for g in caught2]
+        if [g.code for g in caught1] != guard_codes:
             raise CompileError("unstable guard sites in loop body")
-        guard_codes = [c for _, c in caught2]
         nullable = {n: init[n].nullable or out2[n].nullable for n in accs}
 
         nacc = len(accs)
@@ -2946,14 +2815,14 @@ class Translator:
                 self._as(res[n], final[n], exact=True).alias(f"f{i}")
                 for i, n in enumerate(accs)]
             if guard_codes:
-                if [c for _, c in caught] != guard_codes:
+                if [g.code for g in caught] != guard_codes:
                     raise CompileError("unstable guard sites in loop "
                                        "body")
                 already = acc.getField(f"f{nacc}")
                 gc = acc.getField(f"f{nacc + 1}")
-                for gcond, code in caught:
-                    c = F.coalesce(gcond, F.lit(False))
-                    gc = F.when(~already & c, F.lit(code)).otherwise(gc)
+                for g in caught:
+                    c = F.coalesce(g.cond, F.lit(False))
+                    gc = F.when(~already & c, F.lit(g.code)).otherwise(gc)
                     already = already | c
                 fields += [already.alias(f"f{nacc}"),
                            gc.alias(f"f{nacc + 1}")]
@@ -3000,8 +2869,7 @@ class Translator:
                 # field (see _rewrite_loop_returns)
                 raise CompileError(
                     "mixed bare/valued returns in dynamic loop")
-            rid = self._loop_flag_id = \
-                getattr(self, "_loop_flag_id", 0) + 1
+            rid = self._fresh_id()
             rv, rf = f"__rv{rid}", f"__rf{rid}"
             body = self._rewrite_loop_returns(body, rv, rf)
             self._locals[rv] = SConst(None)
@@ -3014,7 +2882,7 @@ class Translator:
             # (when(brk, acc) no-ops), and `continue` skips the rest of
             # one iteration via the same `if not __cont` wrapping the
             # static unroll uses.
-            n = self._loop_flag_id = getattr(self, "_loop_flag_id", 0) + 1
+            n = self._fresh_id()
             brk, cont = f"__brk{n}", f"__cont{n}"
             lowered = _lower_break_continue(body, brk, cont)
             body = [ast.If(test=_not_name(brk),
@@ -3036,7 +2904,8 @@ class Translator:
                 raise CompileError(f"fold accumulator of tag {s.tag}")
 
         def enter(_acc_syms, x):
-            self._bind_loop_target(st.target, x, tags, is_struct)
+            self._locals.update(
+                self._loop_target_syms(st.target, x, tags, is_struct))
 
         result = self._fold_loop(body, init, arr, enter, arr_nullable)
         tmp = f"__fold_{self._tmp}"
@@ -3305,19 +3174,76 @@ class Translator:
         raise CompileError("non-str dict keys need constant values")
 
     def _ev_ListComp(self, node):
-        """Comprehensions: the strict filter/transform lowering first;
-        if it aborts ONLY because the body needs exception guards, a
-        single-generator comprehension retries on the guard-lifting
-        path (round 12, _ev_listcomp_guarded)."""
-        n = len(self.guards)
-        try:
-            return self._ev_listcomp_strict(node)
-        except CompileError as e:
-            if str(e) != "guarded comprehension body" \
-                    or len(node.generators) != 1:
-                raise
-            self._truncate_guards(n)
-            return self._ev_listcomp_guarded(node)
+        """[expr for v in arr (if cond)*]+ -> F.filter + F.transform,
+        nested generators flattened level by level
+        (``[f(a,b) for a in xs for b in g(a)]`` becomes
+        ``flatten(transform(xs, a -> transform(g(a), b -> f(a,b))))``
+        — inner iterables may reference outer variables, exactly
+        CPython's re-evaluation-per-outer-element semantics).
+
+        A guard predicate can't reference HOF lambda variables at row
+        scope, so a condition or inner iterable that needs exception
+        guards falls back, and so does a guarded body under several
+        generators.  The guarded body of a single-generator
+        comprehension (``[10 // int(t) for t in toks]``) is lifted to
+        row scope instead (_lift_comp_guards)."""
+        gens = node.generators
+        for gen in gens:
+            if gen.is_async or not isinstance(gen.target, ast.Name):
+                raise CompileError("comprehension target")
+        out_tag = ["str"]
+
+        def level(gi, it):
+            gen, elem = gens[gi], it.elem or "str"
+
+            def scope(x, fn):
+                return self._lambda_scope(
+                    {gen.target.id: SCol(x, elem, False)}, fn)
+
+            def make_cond(c):
+                # NOT `lambda x, c=cond:` — pyspark counts defaulted
+                # params, sees arity 2, and passes the array INDEX as c
+                def fn(x):
+                    out, caught = scope(
+                        x, lambda: self.truthy(self.eval(c)))
+                    if caught:
+                        raise CompileError(
+                            "guarded comprehension condition")
+                    return out
+                return fn
+
+            def inner(x):
+                out, caught = scope(x, lambda: level(
+                    gi + 1,
+                    self._comp_iter_array(self.eval(gens[gi + 1].iter))))
+                if caught:
+                    raise CompileError("guarded inner comprehension iterable")
+                return out
+
+            body_guards = []
+
+            def body(x):
+                res, caught = scope(x, lambda: self.eval(node.elt))
+                if caught and len(gens) > 1:
+                    raise CompileError("guarded comprehension body")
+                body_guards[:] = caught
+                out_tag[0] = res.tag
+                return self.to_col(res)
+
+            arr = it.col
+            for cond in gen.ifs:
+                arr = F.filter(arr, make_cond(cond))
+            if gi < len(gens) - 1:
+                return F.flatten(F.transform(arr, inner))
+            out = F.transform(arr, body)
+            if not body_guards:
+                return out
+            arr = self._lift_comp_guards(arr, scope, node.elt, body_guards)
+            return F.transform(arr, body)
+
+        it = self._comp_iter_array(self.eval(gens[0].iter))
+        out = level(0, it)
+        return SCol(out, "array", it.nullable, elem=out_tag[0])
 
     def _comp_iter_array(self, it):
         """Normalize a comprehension iterable Sym to an array SCol."""
@@ -3333,72 +3259,28 @@ class Translator:
             raise CompileError(f"comprehension over {it.tag}")
         return it
 
-    def _ev_listcomp_guarded(self, node):
-        """Round 12: a SINGLE-generator comprehension whose BODY can
-        raise (``[10 // int(t) for t in toks]``) compiles by LIFTING
-        the per-element guards to row scope: the row raises iff some
-        filter-surviving element's body raises, at the FIRST such
-        element in array order with site order within the element
-        preserved — exactly CPython's evaluation order.  The value
-        column evaluates the body unguarded (only read on rows where
-        no guard fired).  Guarded filter conditions, guarded
-        iterables, and nested generators still fall back."""
-        gen = node.generators[0]
-        if gen.is_async or not isinstance(gen.target, ast.Name):
-            raise CompileError("comprehension target")
-        it = self._comp_iter_array(self.eval(gen.iter))
-        elem = it.elem or "str"
-        var = gen.target.id
-
-        def bind(xcol, enode):
-            """Evaluate ``enode`` with the loop var bound to ``xcol``;
-            guards the eval emits are CAPTURED and returned."""
-            saved = self._locals.get(var)
-            n = len(self.guards)
-            self._locals[var] = SCol(xcol, elem, False)
-            self._hof_depth += 1
-            try:
-                res = self.eval(enode)
-                caught = list(self.guards[n:])
-                self._truncate_guards(n)
-                return res, caught
-            finally:
-                self._hof_depth -= 1
-                if saved is None:
-                    self._locals.pop(var, None)
-                else:
-                    self._locals[var] = saved
-
-        arr = it.col
-
-        def make_cond(c):
-            def fn(x):
-                res, caught = bind(x, c)
-                if caught:
-                    raise CompileError(
-                        "guarded comprehension condition")
-                return self.truthy(res)
-            return fn
-
-        for cond in gen.ifs:
-            arr = F.filter(arr, make_cond(cond))
+    def _lift_comp_guards(self, arr: Column, scope, elt,
+                          caught: list[_Guard]) -> Column:
+        """Lift the guards a comprehension body emits (``caught``, as
+        captured over the lambda variable) to row scope: the row raises
+        iff some filter-surviving element's body raises, at the FIRST
+        such element in array order with site order within the element
+        preserved — exactly CPython's evaluation order.  ``scope(x,
+        fn)`` evaluates in the comprehension's lambda scope with the
+        loop variable bound to ``x``.  Returns the filtered array the
+        value column must read (staged at row scope, since the guards
+        read it too); the value evaluates the body unguarded, read only
+        on rows where no guard fired."""
         if self._hof_depth == 0:
             name = f"__t{len(self.staged)}"
             self.staged.append((name, arr))
             arr = F.col(name)
-        # probe once for the site list (codes in site order — the
-        # eval is deterministic, so every re-evaluation agrees)
-        probe_res, probe_caught = bind(F.element_at(arr, 1), node.elt)
-        if not probe_caught:
-            raise CompileError("guarded comprehension body")
-        codes = [c for _, c in probe_caught]
-        out_tag = probe_res.tag
+        codes = [g.code for g in caught]
 
         def any_fn(x, i):
-            _, caught = bind(x, node.elt)
             a = F.lit(False)
-            for c, _ in caught:
-                a = a | F.coalesce(c, F.lit(False))
+            for g in scope(x, lambda: self.eval(elt))[1]:
+                a = a | F.coalesce(g.cond, F.lit(False))
             return F.struct(i.alias("i"), a.alias("f"))
 
         fb = F.element_at(
@@ -3409,95 +3291,15 @@ class Translator:
             fb = F.col(name)
         has_bad = fb.isNotNull()
         xbad = F.element_at(arr, (fb["i"] + 1).cast("int"))
-        _, bad_caught = bind(xbad, node.elt)
-        if [c for _, c in bad_caught] != codes:
+        bad = scope(xbad, lambda: self.eval(elt))[1]
+        if [g.code for g in bad] != codes:
             raise CompileError("unstable guard sites in comprehension")
         prior = F.lit(False)
-        for c, code in bad_caught:
-            cc = F.coalesce(c, F.lit(False))
-            self.guard(has_bad & cc & ~prior, name_for_code(code))
+        for g in bad:
+            cc = F.coalesce(g.cond, F.lit(False))
+            self.guard(has_bad & cc & ~prior, name_for_code(g.code))
             prior = prior | cc
-
-        def val_fn(x):
-            res, caught = bind(x, node.elt)
-            out_tag_local = res.tag
-            if out_tag_local != out_tag:
-                raise CompileError("unstable comprehension body type")
-            return self.to_col(res)
-
-        out = F.transform(arr, val_fn)
-        return SCol(out, "array", it.nullable, elem=out_tag)
-
-    def _ev_listcomp_strict(self, node):
-        """[expr for v in arr (if cond)*]+ -> F.filter + F.transform,
-        nested generators flattened level by level
-        (``[f(a,b) for a in xs for b in g(a)]`` becomes
-        ``flatten(transform(xs, a -> transform(g(a), b -> f(a,b))))``
-        — inner iterables may reference outer variables, exactly
-        CPython's re-evaluation-per-outer-element semantics).
-
-        Bodies, conditions, or inner iterables that would need exception
-        guards abort compilation (a guard predicate can't reference HOF
-        lambda variables at row scope) and retry on the guard-lifting
-        path (_ev_ListComp wrapper) or fall back."""
-        for gen in node.generators:
-            if gen.is_async or not isinstance(gen.target, ast.Name):
-                raise CompileError("comprehension target")
-        out_tag = ["str"]
-        top_nullable = [False]
-
-        def build(gi):
-            gen = node.generators[gi]
-            n_guards_iter = len(self.guards)
-            it = self.eval(gen.iter)
-            if gi > 0 and len(self.guards) != n_guards_iter:
-                raise CompileError("guarded inner comprehension iterable")
-            it = self._comp_iter_array(it)
-            elem = it.elem or "str"
-            var = gen.target.id
-            if gi == 0:
-                top_nullable[0] = it.nullable
-
-            def bind_eval(xcol, mode, expr_node=None):
-                saved = self._locals.get(var)
-                n_guards = len(self.guards)
-                self._locals[var] = SCol(xcol, elem, False)
-                self._hof_depth += 1
-                try:
-                    if mode == "inner":
-                        return build(gi + 1)
-                    res = self.eval(expr_node)
-                    if len(self.guards) != n_guards:
-                        raise CompileError("guarded comprehension body")
-                    if mode == "cond":
-                        return self.truthy(res)
-                    col = self.to_col(res)
-                    out_tag[0] = res.tag
-                    return col
-                finally:
-                    self._hof_depth -= 1
-                    if saved is None:
-                        self._locals.pop(var, None)
-                    else:
-                        self._locals[var] = saved
-
-            arr = it.col
-
-            def make_cond(c):
-                # NOT `lambda x, c=cond:` — pyspark counts defaulted
-                # params, sees arity 2, and passes the array INDEX as c
-                return lambda x: bind_eval(x, "cond", c)
-
-            for cond in gen.ifs:
-                arr = F.filter(arr, make_cond(cond))
-            if gi == len(node.generators) - 1:
-                return F.transform(
-                    arr, lambda x: bind_eval(x, "elt", node.elt))
-            return F.flatten(
-                F.transform(arr, lambda x: bind_eval(x, "inner")))
-
-        out = build(0)
-        return SCol(out, "array", top_nullable[0], elem=out_tag[0])
+        return arr
 
     def _ev_GeneratorExp(self, node):
         # sum(f(v) for v in arr) — same translation as a list comp
@@ -3554,8 +3356,7 @@ class Translator:
         if not items:
             if default is not None:
                 return default
-            self.guard(F.lit(True), "KeyError")
-            self._record_args([idx])
+            self.guard(F.lit(True), "KeyError", args=[idx])
             return SConst(None)
         keys = [k for k, _ in items]
         if all(isinstance(k, (int, bool)) for k in keys):
@@ -3600,8 +3401,7 @@ class Translator:
             kmsg = self._repr_col(idx)  # str(KeyError(k)) == repr(k)
         except CompileError:
             kmsg = None
-        self.guard(~hit, "KeyError", msg=kmsg)
-        self._record_args([idx])
+        self.guard(~hit, "KeyError", msg=kmsg, args=[idx])
         return SCol(expr, tag, nullable)
 
     def _ev_Subscript(self, node):
@@ -3659,8 +3459,8 @@ class Translator:
                 if idx.value in base.items:
                     return base.items[idx.value]
                 # str(KeyError(k)) is repr(k); args is (k,)
-                self.guard(F.lit(True), "KeyError", msg=repr(idx.value))
-                self._record_args([SConst(idx.value)])
+                self.guard(F.lit(True), "KeyError", msg=repr(idx.value),
+                           args=[SConst(idx.value)])
                 return SConst(None)
             return self._dict_dynamic_lookup(
                 list(base.items.items()), idx)
@@ -3669,12 +3469,13 @@ class Translator:
                 try:
                     return SConst(base.value[idx.value])
                 except Exception as e:
-                    self.guard(F.lit(True), type(e).__name__, msg=str(e))
-                    if isinstance(e, KeyError) and all(
+                    args = [SConst(a) for a in e.args] \
+                        if isinstance(e, KeyError) and all(
                             isinstance(a, (int, float, bool, str,
                                            type(None)))
-                            for a in e.args):
-                        self._record_args([SConst(a) for a in e.args])
+                            for a in e.args) else None
+                    self.guard(F.lit(True), type(e).__name__, msg=str(e),
+                               args=args)
                     return SConst(None)
             if isinstance(base.value, dict):
                 # constant lookup-table subscripted by a column — the
@@ -3706,8 +3507,7 @@ class Translator:
                 except CompileError:
                     kmsg = None
                 self.guard(~F.map_contains_key(base.col, k), "KeyError",
-                           msg=kmsg)
-                self._record_args([idx])
+                           msg=kmsg, args=[idx])
                 return SCol(F.element_at(base.col, k), "any", True)
             if base.tag == "struct":
                 if isinstance(idx, SConst) and isinstance(idx.value, str):
@@ -4234,8 +4034,6 @@ class Translator:
     def _under_path(self, cond: Column):
         """Context for evaluating an expression CPython would only reach
         when ``cond`` holds (short-circuit arms, ternary branches)."""
-        import contextlib
-
         @contextlib.contextmanager
         def cm():
             prev = self._path
@@ -5297,29 +5095,22 @@ class Translator:
         def key_of(x):
             if key_node is None:
                 return x, elem
-            saved = dict(self._locals)
-            n_guards = len(self.guards)
-            self._hof_depth += 1
-            try:
-                if isinstance(key_node, ast.Lambda) \
-                        and len(key_node.args.args) == 1 \
-                        and not key_node.args.kwonlyargs:
-                    self._locals[key_node.args.args[0].arg] = \
-                        SCol(x, elem, False)
-                    res = self.eval(key_node.body)
-                elif isinstance(key_node, ast.Name) \
-                        and key_node.id in _BUILTINS:
-                    res = self._call_builtin(key_node.id,
-                                             [SCol(x, elem, False)])
-                else:
-                    raise CompileError("key function shape")
-                if len(self.guards) != n_guards:
-                    self._truncate_guards(n_guards)
-                    raise CompileError("guard-raising key function")
-                return self.to_col(res), res.tag
-            finally:
-                self._hof_depth -= 1
-                self._locals = saved
+            xs = SCol(x, elem, False)
+            if isinstance(key_node, ast.Lambda) \
+                    and len(key_node.args.args) == 1 \
+                    and not key_node.args.kwonlyargs:
+                res, caught = self._lambda_scope(
+                    {key_node.args.args[0].arg: xs},
+                    lambda: self.eval(key_node.body))
+            elif isinstance(key_node, ast.Name) \
+                    and key_node.id in _BUILTINS:
+                res, caught = self._lambda_scope(
+                    {}, lambda: self._call_builtin(key_node.id, [xs]))
+            else:
+                raise CompileError("key function shape")
+            if caught:
+                raise CompileError("guard-raising key function")
+            return self.to_col(res), res.tag
         return key_of
 
     def _b_map_filter(self, node, which: str):
@@ -5680,16 +5471,14 @@ class Translator:
                 return SConst(seq[pos])
             if default is not None:
                 return default
-            self.guard(F.lit(True), "StopIteration")
-            self._record_args([])
+            self.guard(F.lit(True), "StopIteration", args=[])
             return SConst(None)
         if isinstance(base, STuple):
             if pos < len(base.items):
                 return base.items[pos]
             if default is not None:
                 return default
-            self.guard(F.lit(True), "StopIteration")
-            self._record_args([])
+            self.guard(F.lit(True), "StopIteration", args=[])
             return SConst(None)
         empty = F.size(base.col) < pos + 1
         nth = F.element_at(base.col, pos + 1)
@@ -5697,8 +5486,7 @@ class Translator:
             d = self.to_col(default)
             return SCol(F.when(empty, d).otherwise(nth),
                         base.elem or "any", True)
-        self.guard(empty, "StopIteration")
-        self._record_args([])
+        self.guard(empty, "StopIteration", args=[])
         return SCol(nth, base.elem or "any", True)
 
     def _b_reversed(self, args):
@@ -5935,8 +5723,8 @@ class Translator:
         keys = self._jv_keys(base)
         self.guard(F.coalesce(is_obj
                               & ~F.array_contains(keys, idx.value),
-                              F.lit(False)), "KeyError")
-        self._record_args([SConst(idx.value)])
+                              F.lit(False)), "KeyError",
+                   args=[SConst(idx.value)])
         return SJson(base.v_col, f"{base.path}.{idx.value}")
 
     def _json_get(self, base: SJson, args: list[Sym]) -> SJson:
@@ -6908,8 +6696,7 @@ class Translator:
                     if not base.items:
                         # CPython: KeyError('popitem(): dictionary is
                         # empty') — a one-string-arg site
-                        self.guard(F.lit(True), "KeyError")
-                        self._record_args([SConst(
+                        self.guard(F.lit(True), "KeyError", args=[SConst(
                             "popitem(): dictionary is empty")])
                         return SConst(None)
                     k = next(reversed(base.items))  # LIFO like CPython
@@ -6921,8 +6708,8 @@ class Translator:
                     return base.items.pop(k.value)
                 if len(args) > 1:
                     return args[1]
-                self.guard(F.lit(True), "KeyError")
-                self._record_args([SConst(k.value)])
+                self.guard(F.lit(True), "KeyError",
+                           args=[SConst(k.value)])
                 return SConst(None)
         c = self.to_col(base)
         if name == "get":
