@@ -213,11 +213,13 @@ FORMAT_SPEC_CALLERS = ("_ev_JoinedStr", "_str_method", "_b_format",
                        "_percent_format")
 SECOND_LOWERINGS = {"_format_spec_col", "_format_spec_full", "_SPEC_RE",
                     "_while_counter_rewrite_incfirst"}
-# the guard side tables and the second comprehension lowering, which one
-# guard record and one comprehension lowering replaced
+# the guard side tables, the second comprehension lowering and the
+# classify-then-rewrite pair over a handler's exception reads, which one
+# guard record, one comprehension lowering and one pass replaced
 DELETED_TRANSLATOR_NAMES = {"_guard_msgs", "_guard_args", "_record_args",
                             "_truncate_guards", "_ev_listcomp_strict",
-                            "_ev_listcomp_guarded"}
+                            "_ev_listcomp_guarded", "_exc_read_kinds",
+                            "_ExcReadRewriter"}
 
 
 def _uses(rel, src, attrs):
@@ -269,7 +271,7 @@ class TestOneBoundary:
                          for fn in FORMAT_SPEC_CALLERS}, sorted(found)
         tree = ast.parse((ROOT / "udf/compiler.py").read_text())
         names = {n.name for n in ast.walk(tree)
-                 if isinstance(n, ast.FunctionDef)}
+                 if isinstance(n, (ast.FunctionDef, ast.ClassDef))}
         names |= {t.id for n in ast.walk(tree) if isinstance(n, ast.Assign)
                   for t in n.targets if isinstance(t, ast.Name)}
         assert "_format_spec" in names
@@ -289,6 +291,16 @@ class TestOneBoundary:
                   and n.target.attr == "_hof_depth"
                   and isinstance(n.op, ast.Add)}
         assert scopes == {"_lambda_scope"}, sorted(scopes)
+        # one staging call: a single method appends the staged layers
+        stagers = {f.name for f in ast.walk(tree)
+                   if isinstance(f, ast.FunctionDef)
+                   for n in ast.walk(f)
+                   if isinstance(n, ast.Attribute) and n.attr == "append"
+                   and isinstance(n.value, ast.Attribute)
+                   and n.value.attr == "staged"
+                   and isinstance(n.value.value, ast.Name)
+                   and n.value.value.id == "self"}
+        assert len(stagers) == 1, sorted(stagers)
         # no lowering is chosen by a CompileError's text
         for h in ast.walk(tree):
             if isinstance(h, ast.ExceptHandler) and h.name \

@@ -5510,3 +5510,107 @@ class TestCounterRewriteStartsFromAnInt:
                 i += 1
             return s
         run_diff3(ctx, ctx_interp, [0, 1, 3, 5], f)
+
+
+class TestHandlerReadScopes:
+    """A handler's reads of its ``as`` name follow Python scope: a
+    nested ``except ... as <same name>`` owns its reads and unbinds the
+    name when it ends, and a lambda parameter of that name is the
+    parameter.  Compiled, interpreted and CPython agree."""
+
+    def test_nested_handler_reads_its_own_message(self, ctx, ctx_interp):
+        def f(s):
+            try:
+                x = int(s)
+            except ValueError as e:
+                try:
+                    return 1.0 if s != "q" else int("zz")
+                except ValueError as e:
+                    return str(e)
+            return x
+        run_diff3(ctx, ctx_interp, ["1", "q", "2.5"], f)
+
+    def test_nested_handler_reads_its_own_type(self, ctx, ctx_interp):
+        def f(s):
+            try:
+                x = int(s)
+            except ValueError as e:
+                try:
+                    return str(1 // len(s[5:]))
+                except ZeroDivisionError as e:
+                    return type(e).__name__
+            return str(x)
+        run_diff3(ctx, ctx_interp, ["1", "q", "2.5"], f)
+
+    def test_nested_handler_of_another_name_reads_the_outer(
+            self, ctx, ctx_interp):
+        def f(s):
+            try:
+                return int(s)
+            except ValueError as e:
+                try:
+                    return 10 // (len(s) - 1)
+                except ZeroDivisionError as k:
+                    return len(str(e)) + len(type(k).__name__)
+        run_diff3(ctx, ctx_interp, ["1", "q", "ab"], f,
+                  expect_compiled=True)
+
+    def test_read_after_nested_handler_is_unbound(self, ctx, ctx_interp):
+        def f(s):
+            try:
+                return int(s)
+            except ValueError as e:
+                try:
+                    1 // (len(s) - len(s))
+                except ZeroDivisionError as e:
+                    pass
+                return str(e)
+        run_diff3(ctx, ctx_interp, ["1", "q"], f)
+
+    def test_lambda_parameter_shadows_the_name(self, ctx, ctx_interp):
+        def f(s):
+            try:
+                x = int(s)
+            except ValueError as e:
+                return len(list(map(lambda e: str(e), ["ab", "c"]))[0])
+            return x
+        run_diff3(ctx, ctx_interp, ["1", "q"], f)
+
+    def test_sort_key_lambda_parameter_compiles(self, ctx, ctx_interp):
+        def f(s):
+            try:
+                return str(int(s))
+            except ValueError as e:
+                return sorted(["bb", "a"], key=lambda e: len(str(e)))[0]
+        run_diff3(ctx, ctx_interp, ["1", "q"], f, expect_compiled=True)
+
+
+class TestFormatSpecOverNoneAndStr:
+    """CPython's ``format(None, spec)`` raises TypeError for a non-empty
+    spec and gives ``'None'`` for an empty one; the integer presentation
+    types raise ValueError on a str."""
+
+    @pytest.mark.parametrize("fn", [
+        lambda x: f"{x:5d}",
+        lambda x: f"{x:5}",
+        lambda x: "{:>4}".format(x),
+        lambda x: f"{x:.2f}",
+        lambda x: format(x, "x"),
+    ], ids=["5d", "5", "format_align", "2f", "format_builtin"])
+    def test_non_empty_spec_over_none(self, ctx, ctx_interp, fn):
+        run_diff3(ctx, ctx_interp, [1, None, 25], fn, expect_compiled=True)
+
+    def test_empty_spec_over_none(self, ctx, ctx_interp):
+        run_diff3(ctx, ctx_interp, [1, None, 25], lambda x: "{:}".format(x),
+                  expect_compiled=True)
+
+    @pytest.mark.parametrize("fn", [
+        lambda s: f"{s:x}",
+        lambda s: f"{s:d}",
+        lambda s: f"{s:>5X}",
+        lambda s: f"{s:o}",
+        lambda s: f"{s:b}",
+    ], ids=["x", "d", "X", "o", "b"])
+    def test_integer_type_over_str(self, ctx, ctx_interp, fn):
+        run_diff3(ctx, ctx_interp, ["ab", "12", "😀", None], fn,
+                  expect_compiled=True)

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import ast
 import contextlib
+import copy
 import json as _json_mod
 import math as _math
 import re as _re_mod
@@ -76,6 +77,14 @@ class _SymExpr(ast.expr):
 
     def __init__(self, sym):
         self.sym = sym
+
+    def __deepcopy__(self, memo):
+        return self  # carries Columns, which are immutable
+
+
+class _Reraise(_SymExpr):
+    """``raise <as-name>``'s exception: ``sym`` holds the guards that
+    feed the handler, which the raise re-emits."""
 
 
 def _target_names(t) -> list[str]:
@@ -247,52 +256,40 @@ def _contains_continue(node) -> bool:
     return any(_contains_continue(c) for c in ast.iter_child_nodes(node))
 
 
-def _is_typename_read(n, name: str) -> bool:
-    """``type(<name>).__name__`` or ``<name>.__class__.__name__``.
-    Returns the inner Name node when it matches, else None."""
-    if not (isinstance(n, ast.Attribute) and n.attr == "__name__"):
-        return None
-    v = n.value
-    if (isinstance(v, ast.Call) and isinstance(v.func, ast.Name)
-            and v.func.id == "type"
-            and len(v.args) == 1 and not v.keywords
-            and isinstance(v.args[0], ast.Name)
-            and v.args[0].id == name):
-        return v.args[0]
-    if (isinstance(v, ast.Attribute) and v.attr == "__class__"
-            and isinstance(v.value, ast.Name) and v.value.id == name):
-        return v.value
-    return None
+def _exc_read_kind(n, name: str) -> str | None:
+    """The read of the caught exception ``name`` that node ``n`` is, as
+    a whole, or None: 'typename' (``type(e).__name__``,
+    ``e.__class__.__name__``), 'message' (``str(e)``, f-string ``{e}``
+    / ``{e!s}``), 'args' (``e.args``), 'repr' (``repr(e)``, ``{e!r}``)
+    or 'reraise' (``raise e``).  A format spec on ``{e}`` would make
+    CPython raise TypeError (object.__format__ rejects non-empty specs),
+    so it is not a read here."""
+    def is_e(x):
+        return isinstance(x, ast.Name) and x.id == name
 
-
-def _is_args_read(n, name: str):
-    """``<name>.args`` — returns the inner Name node or None."""
-    if (isinstance(n, ast.Attribute) and n.attr == "args"
-            and isinstance(n.value, ast.Name) and n.value.id == name):
-        return n.value
-    return None
-
-
-def _is_message_read(n, name: str) -> bool:
-    """``str(<name>)`` — the exception message."""
-    return (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
-            and n.func.id == "str" and len(n.args) == 1
-            and not n.keywords and isinstance(n.args[0], ast.Name)
-            and n.args[0].id == name)
-
-
-def _fstring_message_read(n, name: str):
-    """``f"...{<name>}..."`` / ``{<name>!s}`` — formatting the
-    exception with STR semantics (no conversion or !s, no format
-    spec) is exactly ``str(e)``; returns the inner Name node.  ``!r``
-    / ``!a`` need CPython repr, and a format spec would make CPython
-    raise TypeError (object.__format__ rejects non-empty specs for
-    exceptions) — both stay exact-fallback via None."""
-    if (isinstance(n, ast.FormattedValue)
-            and isinstance(n.value, ast.Name) and n.value.id == name
-            and n.conversion in (-1, ord("s"))
-            and n.format_spec is None):
-        return n.value
+    if isinstance(n, ast.Attribute):
+        v = n.value
+        if n.attr == "args" and is_e(v):
+            return "args"
+        if n.attr == "__name__" and (
+                (isinstance(v, ast.Call) and isinstance(v.func, ast.Name)
+                 and v.func.id == "type" and len(v.args) == 1
+                 and not v.keywords and is_e(v.args[0]))
+                or (isinstance(v, ast.Attribute)
+                    and v.attr == "__class__" and is_e(v.value))):
+            return "typename"
+    elif isinstance(n, ast.Call):
+        if (isinstance(n.func, ast.Name) and n.func.id in ("str", "repr")
+                and len(n.args) == 1 and not n.keywords
+                and is_e(n.args[0])):
+            return "message" if n.func.id == "str" else "repr"
+    elif isinstance(n, ast.FormattedValue):
+        if is_e(n.value) and n.format_spec is None:
+            return {-1: "message", ord("s"): "message",
+                    ord("r"): "repr"}.get(n.conversion)
+    elif isinstance(n, ast.Raise):
+        if is_e(n.exc) and n.cause is None:
+            return "reraise"
     return None
 
 
@@ -312,12 +309,11 @@ def _format_call_message_reads(n, name: str):
                     for a in n.args)
             and all(kw.arg is not None for kw in n.keywords)):
         return None
-    import string as _string
     try:
-        fields = list(_string.Formatter().parse(n.func.value.value))
+        fields = list(_string_mod.Formatter().parse(n.func.value.value))
     except ValueError:
         return None
-    uses: list[tuple] = []   # (key, full_field_name, spec, conversion)
+    uses: list[tuple] = []   # (key, full_field_name, head, spec, conversion)
     auto = 0
     for _lit, fname, fspec, fconv in fields:
         if fname is None:
@@ -332,193 +328,104 @@ def _format_call_message_reads(n, name: str):
             key = head
         uses.append((key, fname, head, fspec, fconv))
     out = []
-    for i, a in enumerate(n.args):
+    for key, a in [*enumerate(n.args),
+                   *((kw.arg, kw.value) for kw in n.keywords)]:
         if isinstance(a, ast.Name) and a.id == name:
-            for key, fname, head, fspec, fconv in uses:
-                if key == i:
-                    if fname != head or fspec not in ("", None) \
-                            or fconv not in (None, "s"):
-                        return None
+            for k, fname, head, fspec, fconv in uses:
+                if k == key and (fname != head or fspec not in ("", None)
+                                 or fconv not in (None, "s")):
+                    return None
             out.append(a)
-    for kw in n.keywords:
-        if isinstance(kw.value, ast.Name) and kw.value.id == name:
-            for key, fname, head, fspec, fconv in uses:
-                if key == kw.arg:
-                    if fname != head or fspec not in ("", None) \
-                            or fconv not in (None, "s"):
-                        return None
-            out.append(kw.value)
     return out or None
 
 
-def _is_repr_read(n, name: str):
-    """``repr(<name>)`` — CPython defines BaseException.__repr__ as
-    ``TypeName(repr(arg), ...)`` over e.args, so it derives from the
-    same recorded raise-site state as the 'args' kind."""
-    if (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
-            and n.func.id == "repr" and len(n.args) == 1
-            and not n.keywords and isinstance(n.args[0], ast.Name)
-            and n.args[0].id == name):
-        return n.args[0]
-    return None
+class _ExcReads(ast.NodeTransformer):
+    """One pass over the body of an ``except ... as <name>`` handler:
+    each read of the caught exception (the shapes of _exc_read_kind,
+    plus bare ``"...".format(e)`` fields, which CPython defines as
+    ``str(e)``) becomes its Sym, built once per kind by ``make(kind)``
+    and kept in ``syms``; ``raise e`` becomes a _Reraise of the guards
+    that feed the handler.  Any other use of the name (a load, a store
+    or a delete) is a CompileError, which sends the UDF to the exact
+    fallback.
 
+    Scope follows CPython: a lambda whose parameters include the name
+    reads its parameter, so its body is not walked.  A nested
+    ``except ... as <name>`` binds its own exception (its body gets its
+    own pass when it runs) and unbinds the name when it ends, so a read
+    after it, or anywhere in a loop around it, falls back.  A
+    comprehension that binds the name stores it, and falls back."""
 
-def _fstring_repr_read(n, name: str):
-    """``f"...{<name>!r}..."`` with no format spec — same as repr(e)."""
-    if (isinstance(n, ast.FormattedValue)
-            and isinstance(n.value, ast.Name) and n.value.id == name
-            and n.conversion == ord("r")
-            and n.format_spec is None):
-        return n.value
-    return None
+    def __init__(self, name: str, entries: list, make):
+        self.name, self.entries, self.make = name, entries, make
+        self.syms: dict = {}
+        self.unbound = False
 
+    def _read(self, kind: str):
+        if self.unbound:
+            raise CompileError("handler reads its `as` name after a "
+                               "nested handler unbound it")
+        if kind not in self.syms:
+            self.syms[kind] = self.entries if kind == "reraise" \
+                else self.make(kind)
+        return self.syms[kind]
 
-def _is_reraise(n, name: str | None):
-    """``raise <name>`` (no cause) — returns the Name node or None."""
-    if (isinstance(n, ast.Raise) and n.cause is None
-            and isinstance(n.exc, ast.Name)
-            and (name is None or n.exc.id == name)):
-        return n.exc
-    return None
-
-
-def _exc_read_kinds(handler: ast.ExceptHandler) -> set[str] | None:
-    """Classify every Load of the handler's ``as`` name into the reads
-    the compiled path can answer: 'typename' (type(e).__name__ /
-    e.__class__.__name__ — class statically known per guard),
-    'message' (str(e) — needs a recorded raise-site message; since
-    round 11 this also covers f-string ``{e}``/``{e!s}`` and constant-
-    template ``"...".format(e)`` positions with bare fields, both of
-    which CPython defines as str(e)), 'args' (e.args — recorded
-    raise-site args, or derived (str(e),) for the one-string-arg
-    builtins), 'repr' (repr(e) / ``{e!r}`` — TypeName(repr(args))
-    over the recorded raise-site args, round 11), and 'reraise'
-    (``raise e`` — re-emits the per-guard codes/messages).  None =
-    some other read (passing e to a function, a format spec on e,
-    e.<other attribute>) — exact-fallback."""
-    name = handler.name
-    # Any rebind or delete of the ``as`` name (``e = 5``, ``del e``,
-    # ``for e in ...``, ``with ... as e``) makes later Loads refer to
-    # the NEW binding, not the exception — the per-guard rewrites below
-    # would silently answer from the original exception.  Exact-fallback.
-    for hs in handler.body:
-        for n in ast.walk(hs):
-            if (isinstance(n, ast.Name) and n.id == name
-                    and isinstance(n.ctx, (ast.Store, ast.Del))):
-                return None
-    ok: dict[int, str] = {}
-    for hs in handler.body:
-        for n in ast.walk(hs):
-            inner = _is_typename_read(n, name)
-            if inner is not None:
-                ok[id(inner)] = "typename"
-                continue
-            inner = _is_args_read(n, name)
-            if inner is not None:
-                ok[id(inner)] = "args"
-                continue
-            inner = _is_reraise(n, name)
-            if inner is not None:
-                ok[id(inner)] = "reraise"
-                continue
-            if _is_message_read(n, name):
-                ok[id(n.args[0])] = "message"
-                continue
-            inner = _fstring_message_read(n, name)
-            if inner is not None:
-                ok[id(inner)] = "message"
-                continue
-            inner = _is_repr_read(n, name)
-            if inner is not None:
-                ok[id(inner)] = "repr"
-                continue
-            inner = _fstring_repr_read(n, name)
-            if inner is not None:
-                ok[id(inner)] = "repr"
-                continue
-            inners = _format_call_message_reads(n, name)
-            if inners:
-                for fn_node in inners:
-                    ok[id(fn_node)] = "message"
-    kinds: set[str] = set()
-    for hs in handler.body:
-        for n in ast.walk(hs):
-            if (isinstance(n, ast.Name) and n.id == name
-                    and isinstance(n.ctx, ast.Load)):
-                if id(n) not in ok:
-                    return None
-                kinds.add(ok[id(n)])
-    return kinds
-
-
-class _ExcReadRewriter(ast.NodeTransformer):
-    """Replace ``type(<name>).__name__`` / ``<name>.__class__.__name__``
-    / ``str(<name>)`` / ``<name>.args`` with pre-evaluated Syms
-    (per-guard when-chains built in _exec_try).  ``raise <name>`` is NOT
-    rewritten — the Raise executor re-emits the per-guard codes via the
-    re-raise context."""
-
-    def __init__(self, name: str, typename_sym=None, message_sym=None,
-                 args_sym=None, repr_sym=None):
-        self.name = name
-        self.typename_sym, self.message_sym = typename_sym, message_sym
-        self.args_sym = args_sym
-        self.repr_sym = repr_sym
-
-    def visit_Attribute(self, node):
-        if _is_typename_read(node, self.name) is not None \
-                and self.typename_sym is not None:
-            return _SymExpr(self.typename_sym)
-        if _is_args_read(node, self.name) is not None \
-                and self.args_sym is not None:
-            return _SymExpr(self.args_sym)
-        return self.generic_visit(node)
+    def visit(self, node):
+        kind = _exc_read_kind(node, self.name)
+        if kind is None:
+            return super().visit(node)
+        sym = self._read(kind)
+        if kind == "reraise":
+            new = ast.Raise(exc=_Reraise(sym), cause=None)
+        elif isinstance(node, ast.FormattedValue):
+            # str/repr already applied: the value is the formatted text
+            new = ast.FormattedValue(value=_SymExpr(sym), conversion=-1,
+                                     format_spec=None)
+        else:
+            new = _SymExpr(sym)
+        return ast.copy_location(new, node)
 
     def visit_Call(self, node):
-        if _is_message_read(node, self.name) \
-                and self.message_sym is not None:
-            return _SymExpr(self.message_sym)
-        if _is_repr_read(node, self.name) is not None \
-                and self.repr_sym is not None:
-            return _SymExpr(self.repr_sym)
-        if self.message_sym is not None:
-            inners = _format_call_message_reads(node, self.name)
-            if inners:
-                # replace exactly the qualifying Name ARGUMENTS with
-                # the message sym — format() then applies its (bare)
-                # fields to the same str value CPython would pass
-                ids = {id(x) for x in inners}
-                node = ast.copy_location(ast.Call(
-                    func=node.func,
-                    args=[_SymExpr(self.message_sym)
-                          if id(a) in ids else a for a in node.args],
-                    keywords=[ast.keyword(
-                        arg=kw.arg,
-                        value=_SymExpr(self.message_sym)
-                        if id(kw.value) in ids else kw.value)
-                        for kw in node.keywords]), node)
-                ast.fix_missing_locations(node)
+        names = _format_call_message_reads(node, self.name)
+        if names:
+            # the qualifying Name arguments become the message: format()
+            # then applies their bare fields to the str CPython passes
+            ids = {id(x) for x in names}
+            msg = _SymExpr(self._read("message"))
+            node.args = [msg if id(a) in ids else a for a in node.args]
+            for kw in node.keywords:
+                if id(kw.value) in ids:
+                    kw.value = msg
         return self.generic_visit(node)
 
-    def visit_FormattedValue(self, node):
-        if _fstring_message_read(node, self.name) is not None \
-                and self.message_sym is not None:
-            new = ast.copy_location(
-                ast.FormattedValue(value=_SymExpr(self.message_sym),
-                                   conversion=node.conversion,
-                                   format_spec=None), node)
-            ast.fix_missing_locations(new)
-            return new
-        if _fstring_repr_read(node, self.name) is not None \
-                and self.repr_sym is not None:
-            # repr already applied — drop the !r (str of str identity)
-            new = ast.copy_location(
-                ast.FormattedValue(value=_SymExpr(self.repr_sym),
-                                   conversion=-1,
-                                   format_spec=None), node)
-            ast.fix_missing_locations(new)
-            return new
+    def visit_Name(self, node):
+        if node.id == self.name:
+            raise CompileError("handler uses its `as` binding")
+        return node
+
+    def visit_Lambda(self, node):
+        a = node.args
+        if self.name in {p.arg for p in (*a.posonlyargs, *a.args,
+                                         *a.kwonlyargs, a.vararg, a.kwarg)
+                         if p is not None}:
+            self.generic_visit(a)  # the defaults are the handler's reads
+            return node
         return self.generic_visit(node)
+
+    def visit_ExceptHandler(self, node):
+        if node.name != self.name:
+            return self.generic_visit(node)
+        self.unbound = True
+        return node
+
+    def _loop(self, node):
+        # a later iteration reads after a nested handler inside unbinds it
+        if any(isinstance(n, ast.ExceptHandler) and n.name == self.name
+               for n in ast.walk(node)):
+            self.unbound = True
+        return self.generic_visit(node)
+
+    visit_For = visit_While = _loop
 
 
 def _flag_assign(name: str, value: bool) -> ast.Assign:
@@ -947,10 +854,10 @@ class Translator:
         self.col_map = col_map or {}  # schema name -> physical df column
         self.with_guards = with_guards
         self.guards: list[_Guard] = []  # raise sites, in emission order
-        # innermost-last stack of (as-name|None, [_Guard under its
-        # handler condition]) for the handler bodies currently being
-        # compiled — `raise e` / bare `raise` re-emit per-guard
-        self._reraise_ctx: list[tuple[str | None, list]] = []
+        # innermost-last stack of the guards (under their handler
+        # conditions) feeding the handler bodies being compiled — a
+        # bare `raise` re-emits the innermost
+        self._reraise_ctx: list[list[_Guard]] = []
         self.accessed: set[str] = set()
         self._locals: dict[str, Sym] = {}
         self._returns: list[tuple[Column | None, Sym]] = []
@@ -1289,24 +1196,22 @@ class Translator:
             if isinstance(st, ast.Raise):
                 # re-raise shapes first: bare `raise` inside a handler
                 # re-raises the in-flight exception; `raise <as-name>`
-                # re-raises by binding.  Both re-emit the ORIGINAL
+                # (a _Reraise from _ExcReads) re-raises the one its
+                # handler caught.  Both re-emit the ORIGINAL
                 # per-guard (code, message, args) under the current path
                 # — exact CPython re-raise identity.
+                if isinstance(st.exc, _Reraise):
+                    self._emit_reraise(st.exc.sym, path)
+                    return True
                 if st.exc is None:
                     if self._reraise_ctx:
-                        self._emit_reraise(self._reraise_ctx[-1][1],
-                                           path)
+                        self._emit_reraise(self._reraise_ctx[-1], path)
                         return True
                     # CPython: bare raise with no active exception
                     self.guard(F.lit(True), "RuntimeError",
                                msg="No active exception to re-raise")
                     self._returns.append((path, SRaised()))
                     return True
-                if isinstance(st.exc, ast.Name) and st.cause is None:
-                    for nm, entries in reversed(self._reraise_ctx):
-                        if nm == st.exc.id:
-                            self._emit_reraise(entries, path)
-                            return True
                 # self._path == path here, so guard() conditions the raise
                 exc_name = self._exc_name(st.exc)
                 # record str(e) when it's statically derivable: CPython
@@ -1449,9 +1354,7 @@ class Translator:
             return val
         if sum(1 for _ in ast.walk(value_node)) < 4:
             return val  # bare refs/tiny exprs: staging buys nothing
-        name = f"__t{len(self.staged)}"
-        self.staged.append((name, val.col))
-        return SCol(F.col(name), val.tag, val.nullable, val.elem)
+        return self._stage_sym(val)
 
     def _assign(self, tgt, val: Sym):
         if isinstance(tgt, ast.Name):
@@ -1596,9 +1499,7 @@ class Translator:
             # stage the filtered array once; the hit test, the matched
             # element, and every guard in the return expression reference
             # it instead of re-inlining filter(arr, ...) per use
-            name = f"__t{len(self.staged)}"
-            self.staged.append((name, matched))
-            matched = F.col(name)
+            matched = self._stage(matched)
         # null array: the fold path yields a null accumulator rather than
         # CPython's TypeError (documented trade-off); mirror it here by
         # treating null as "no match"
@@ -1654,23 +1555,17 @@ class Translator:
         point (per-guard snapshots, merged by disjoint raise
         conditions) — including across NESTED tries: each guard's
         snapshot holds the names every enclosing level reads, and a
-        kept guard carries it out of an inner try.  Handlers may read
-        the ``as`` binding as ``type(e).__name__`` /
-        ``e.__class__.__name__`` (class static
-        per guard), ``str(e)`` (raise sites record their exact CPython
-        message, incl. operand reprs, via guard(msg=...)), ``e.args``
-        (user raise sites record the evaluated arg Syms; engine sites
-        derive ``(str(e),)`` for the one-string-arg builtins — compiled
-        as an STuple, so subscripts/len/unpacking ride the ordinary
-        tuple machinery), and may re-raise via bare ``raise`` or
-        ``raise e`` (the original per-guard code+message+args re-emit
-        under the handler path).  Still falling back: any OTHER read of
-        the binding (passing e to a function, repr(e), other
-        attributes), str(e)/e.args for a raise site without a record
-        (e.g. KeyError args, Unicode 5-tuples), and raising/returning/
-        breaking finally bodies (an exception in finally REPLACES the
-        in-flight one, which the append-only guard model cannot
-        express).
+        kept guard carries it out of an inner try.  A handler's reads of
+        its ``as`` name are found and replaced in one pass (_ExcReads,
+        which lists the read shapes and the scope rule); each read is
+        merged over the raise sites feeding the handler (_exc_sym), and
+        bare ``raise`` / ``raise e`` re-emit the original per-guard
+        code, message and args under the handler path.  Still falling
+        back: any other use of the name, str(e)/e.args/repr(e) for a
+        raise site without a record (e.g. KeyError args, Unicode
+        5-tuples), and raising/returning/breaking finally bodies (an
+        exception in finally REPLACES the in-flight one, which the
+        append-only guard model cannot express).
 
         Returns (all_paths_terminated, narrowed_path)."""
         for s in st.finalbody:
@@ -1678,28 +1573,7 @@ class Translator:
                     isinstance(n, ast.Return) for n in ast.walk(s)):
                 raise CompileError("control flow in finally")
         handler_codes: list[set[int] | None] = []
-        handler_kinds: list[set[str]] = []
         for h in st.handlers:
-            kinds: set[str] = set()
-            if h.name:
-                # binding the exception instance is fine as long as the
-                # handler reads it only as ``type(e).__name__`` (class
-                # statically known per guard) or ``str(e)`` (raise-site
-                # message recorded by the guard emitter — when absent
-                # for any of this handler's guards, the per-handler
-                # loop below aborts the compile).  Any other read
-                # (e.args, attributes, passing e on) falls back.
-                # CPython unbinds the name after the handler anyway.
-                reads_exc = any(
-                    isinstance(n, ast.Name) and n.id == h.name
-                    and isinstance(n.ctx, ast.Load)
-                    for hs in h.body for n in ast.walk(hs))
-                if reads_exc:
-                    k = _exc_read_kinds(h)
-                    if k is None:
-                        raise CompileError("handler reads `as` binding")
-                    kinds = k
-            handler_kinds.append(kinds)
             if h.type is None:
                 handler_codes.append(None)  # bare except: catches all
             else:
@@ -1778,8 +1652,7 @@ class Translator:
             # run each handler under its raise condition, merging locals
             env = body_env
             all_term = norm_term
-            for h, conds, kinds in zip(st.handlers, per_handler,
-                                       handler_kinds):
+            for h, conds in zip(st.handlers, per_handler):
                 if not conds:
                     continue
                 hcond = conds[0].cond
@@ -1787,48 +1660,13 @@ class Translator:
                     hcond = hcond | g.cond
                 hpath = hcond if path is None else (path & hcond)
                 hbody = h.body
-                if kinds:
-                    # the eff conditions are DISJOINT (each masked by
-                    # ~prior), so a when() chain over the handler's
-                    # guards picks the right value per row
-                    name_sym = msg_sym = args_sym = None
-                    if "typename" in kinds:
-                        # type(e).__name__: class is static per guard
-                        ncol = None
-                        for g in conds:
-                            nm = F.lit(name_for_code(g.code))
-                            ncol = F.when(g.cond, nm) \
-                                if ncol is None else ncol.when(g.cond, nm)
-                        name_sym = SCol(ncol, "str", False)
-                    if "message" in kinds:
-                        # str(e): every guard feeding this handler must
-                        # have recorded its raise-site message; a site
-                        # without one sends the whole UDF to the exact
-                        # fallback (never a made-up message)
-                        mcol = None
-                        for g in conds:
-                            if g.msg is None:
-                                raise CompileError(
-                                    "handler reads str(e) for a raise "
-                                    "site without a recorded message")
-                            mcol = F.when(g.cond, g.msg) if mcol is None \
-                                else mcol.when(g.cond, g.msg)
-                        msg_sym = SCol(mcol, "str", False)
-                    if "args" in kinds:
-                        args_sym = self._exc_args_sym(conds)
-                    repr_sym = None
-                    if "repr" in kinds:
-                        repr_sym = self._exc_repr_sym(conds)
-                    import copy as _copy
-                    rw_t = _ExcReadRewriter(h.name, name_sym, msg_sym,
-                                            args_sym, repr_sym)
-                    hbody = [rw_t.visit(_copy.deepcopy(s))
-                             for s in h.body]
+                if h.name:
+                    reads = _ExcReads(
+                        h.name, conds, lambda k: self._exc_sym(k, conds))
+                    hbody = [reads.visit(copy.deepcopy(s)) for s in h.body]
                 self._locals = dict(saved)
                 # bind body-assigned names the handler reads to their
-                # raise-point values: the eff conditions are DISJOINT
-                # (each is masked by ~prior), so a when-chain over the
-                # handler's guards picks the right snapshot per row
+                # raise-point values
                 for name in rw:
                     arms = []
                     for g in conds:
@@ -1837,13 +1675,10 @@ class Translator:
                             raise CompileError(
                                 "handler reads possibly-unbound name")
                         arms.append((g.cond, s))
-                    merged = arms[-1][1]
-                    for eff, s in reversed(arms[:-1]):
-                        merged = self._merge_vals(eff, s, merged)
-                    self._locals[name] = merged
-                # bare `raise` / `raise <as-name>` inside this handler
-                # re-emits the original per-guard code+message+args
-                self._reraise_ctx.append((h.name, conds))
+                    self._locals[name] = self._merge_sites(arms)
+                # a bare `raise` inside this handler re-emits the
+                # original per-guard code+message+args
+                self._reraise_ctx.append(conds)
                 try:
                     h_term = self.exec_block(hbody, hpath)
                 finally:
@@ -1860,95 +1695,76 @@ class Translator:
         finally:
             self._branch_depth -= 1
 
-    @staticmethod
-    def _site_args(g: _Guard, what: str) -> list:
-        """A raise site's ``e.args``: recorded, or (str(e),) from its
-        recorded message for the one-string-arg builtins."""
-        if g.args is not None:
-            return g.args
-        if name_for_code(g.code) in _ARGS_IS_MESSAGE and g.msg is not None:
-            return [SCol(g.msg, "str", False)]
-        raise CompileError(f"handler reads {what} for a raise site "
-                           "without recorded args")
-
-    def _exc_args_sym(self, conds: list[_Guard]):
-        """Merged ``e.args`` tuple for a handler: explicit raise-site
-        args where recorded, else (str(e),) derived from the recorded
-        message for the one-string-arg builtins.  All feeding guards
-        must agree on arity (CPython handlers see ONE exception per
-        row; mixed arities cannot merge into a static tuple)."""
-        per: list[tuple[Column, list]] = []
-        arity = None
-        for g in conds:
-            a = self._site_args(g, "e.args")
-            if arity is None:
-                arity = len(a)
-            elif arity != len(a):
-                arity = -1  # mixed — padded representation below
-            per.append((g.cond, a))
-        if arity == -1:
-            # round 12: MIXED arity — no static tuple exists (the
-            # length is data-dependent), so carry the per-site args +
-            # a merged length; len()/literal-index reads resolve
-            # per-site and merge (SArgsTuple), everything else falls
-            # back exactly
-            lmerged = SConst(len(per[-1][1]))
-            for eff, a in reversed(per[:-1]):
-                lmerged = self._merge_vals(eff, SConst(len(a)), lmerged)
-            return SArgsTuple(per, lmerged)
-        items = []
-        for j in range(arity):
-            merged = per[-1][1][j]
-            for eff, a in reversed(per[:-1]):
-                merged = self._merge_vals(eff, a[j], merged)
-            items.append(merged)
-        return STuple(items)
-
-    def per_site_args_item(self, base: SArgsTuple, k: int):
-        """Item ``k`` of a mixed-arity e.args: python indexing per site
-        (raises IndexError if any site lacks the position), merged
-        under the sites' eff conditions."""
-        merged = base.per[-1][1][k]
-        for eff, a in reversed(base.per[:-1]):
-            merged = self._merge_vals(eff, a[k], merged)
+    def _merge_sites(self, arms: list[tuple[Column, Sym]]) -> Sym:
+        """One value per raise site feeding a handler, as (site
+        condition, value) pairs, merged into the value of the site that
+        raised on the row.  The conditions are disjoint (each is masked
+        by the earlier ones), so the last site needs no condition."""
+        merged = arms[-1][1]
+        for cond, v in reversed(arms[:-1]):
+            merged = self._merge_vals(cond, v, merged)
         return merged
 
-    def _exc_repr_sym(self, conds: list[_Guard]):
-        """Merged ``repr(e)`` for a handler — CPython's
-        BaseException.__repr__ is ``TypeName(repr(arg), ...)`` over
-        e.args (one arg prints without a trailing comma), so it
-        derives from the same recorded raise-site state as 'args':
-        explicit recorded args (str args via the bit-exact
-        _py_str_repr, int/bool args exact; float args fall back —
-        Python float repr drifts from Spark's cast), or (message,)
-        for the one-string-arg builtins."""
-        rcol = None
+    def _exc_sym(self, kind: str, conds: list[_Guard]) -> Sym:
+        """A handler's read of its caught exception (a kind of
+        _exc_read_kind), merged over the raise sites ``conds`` that feed
+        it.  The class is static per site.  ``str(e)`` needs each site's
+        recorded message.  ``e.args`` is the recorded args, or
+        ``(str(e),)`` for the one-string-arg builtins; sites of mixed
+        arity give an SArgsTuple.  ``repr(e)`` is CPython's
+        ``TypeName(repr(arg), ...)`` over those args (float args fall
+        back: Python's float repr drifts from Spark's cast).  A site
+        without the record it needs sends the UDF to the exact
+        fallback, never a made-up value."""
+        if kind == "typename":
+            return self._merge_sites(
+                [(g.cond, SConst(name_for_code(g.code))) for g in conds])
+        if kind == "message":
+            if any(g.msg is None for g in conds):
+                raise CompileError("handler reads str(e) for a raise "
+                                   "site without a recorded message")
+            return self._merge_sites(
+                [(g.cond, SCol(g.msg, "str", False)) for g in conds])
+        per = []
         for g in conds:
-            nm = name_for_code(g.code)
-            a = self._site_args(g, "repr(e)")
-            parts = []
-            for s in a:
-                tg = getattr(s, "tag", None)
-                if tg == "str":
-                    parts.append(_py_str_repr(self.to_col(s)))
-                elif tg == "int":
-                    parts.append(self.to_col(s).cast("string"))
-                elif tg == "bool":
-                    parts.append(F.when(self.to_col(s), F.lit("True"))
-                                  .otherwise(F.lit("False")))
-                else:
-                    raise CompileError(
-                        f"repr(e) over a {tg} raise-site arg")
-            if parts:
-                inner = parts[0]
-                for p in parts[1:]:
-                    inner = F.concat(inner, F.lit(", "), p)
-                col = F.concat(F.lit(nm + "("), inner, F.lit(")"))
+            if g.args is not None:
+                per.append((g, g.args))
+            elif name_for_code(g.code) in _ARGS_IS_MESSAGE \
+                    and g.msg is not None:
+                per.append((g, [SCol(g.msg, "str", False)]))
             else:
-                col = F.lit(nm + "()")
-            rcol = F.when(g.cond, col) if rcol is None \
-                else rcol.when(g.cond, col)
-        return SCol(rcol, "str", False)
+                what = "e.args" if kind == "args" else "repr(e)"
+                raise CompileError(f"handler reads {what} for a raise "
+                                   "site without recorded args")
+        if kind == "args":
+            if len({len(a) for _, a in per}) > 1:
+                # the length is data-dependent: no static tuple
+                return SArgsTuple(
+                    [(g.cond, a) for g, a in per], self._merge_sites(
+                        [(g.cond, SConst(len(a))) for g, a in per]))
+            return STuple([self._merge_sites([(g.cond, a[j])
+                                              for g, a in per])
+                           for j in range(len(per[0][1]))])
+        arms = []
+        for g, a in per:
+            parts = []
+            for v in a:
+                tg = getattr(v, "tag", None)
+                if tg == "str":
+                    parts.append(_py_str_repr(self.to_col(v)))
+                elif tg == "int":
+                    parts.append(self.to_col(v).cast("string"))
+                elif tg == "bool":
+                    parts.append(F.when(self.to_col(v), F.lit("True"))
+                                 .otherwise(F.lit("False")))
+                else:
+                    raise CompileError(f"repr(e) over a {tg} raise-site arg")
+            inner = [p for part in parts for p in (F.lit(", "), part)][1:]
+            nm = name_for_code(g.code)
+            arms.append((g.cond, SCol(
+                F.concat(F.lit(nm + "("), *inner, F.lit(")"))
+                if inner else F.lit(nm + "()"), "str", False)))
+        return self._merge_sites(arms)
 
     def _emit_reraise(self, entries, path: Column | None) -> None:
         """Re-emit the original guards of the exception a handler is
@@ -2964,7 +2780,7 @@ class Translator:
             col = F.when(cond, self._to_variant(a, present)) \
                 .otherwise(self._to_variant(b, present))
             if self._unroll_depth > 0 and self._hof_depth == 0:
-                col = self._stage_raw(col)
+                col = self._stage(col)
             return SVariant(col, present)
         merged = SCol(F.when(cond, self._as(a, tag, elem))
                       .otherwise(self._as(b, tag, elem)), tag,
@@ -2975,30 +2791,21 @@ class Translator:
 
     _MAX_STAGED = 96
 
-    def _stage_sym(self, val: SCol) -> SCol:
-        if len(self.staged) >= self._MAX_STAGED:
-            # deeply-branched unrolled control flow: a plan with
-            # hundreds of staged projection layers stalls Catalyst's
-            # fixpoint optimizer — the Arrow fallback is faster AND
-            # exact (observed: nested dynamic-break loops)
-            raise CompileError("unrolled control flow too complex")
-        name = f"__t{len(self.staged)}"
-        self.staged.append((name, val.col))
-        return SCol(F.col(name), val.tag, val.nullable, val.elem)
-
-    def _stage_raw(self, c: Column) -> Column:
-        """Stage a raw Column as a CSE projection layer and return a
-        cheap reference to it (non-Sym twin of _stage_sym).  Used by
-        the sci-format lowering (_sci_digits), whose digit-extraction
-        tree is large enough that re-inlining it per reference OOM'd
-        driver codegen on a single '{:e}'."""
-        if self._hof_depth > 0:
-            raise CompileError("format spec inside higher-order function")
+    def _stage(self, c: Column) -> Column:
+        """Append ``c`` as the next staged projection layer (``__tN``,
+        computed once per row) and return a reference to it.  Every
+        layer is staged here.  Past ``_MAX_STAGED`` layers the UDF
+        falls back: a plan with hundreds of staged layers stalls
+        Catalyst's fixpoint optimizer, and the Arrow fallback is faster
+        and exact (observed: nested dynamic-break loops)."""
         if len(self.staged) >= self._MAX_STAGED:
             raise CompileError("too many staged columns")
         name = f"__t{len(self.staged)}"
         self.staged.append((name, c))
         return F.col(name)
+
+    def _stage_sym(self, val: SCol) -> SCol:
+        return SCol(self._stage(val.col), val.tag, val.nullable, val.elem)
 
     def _merge_returns(self) -> Sym:
         arms = self._returns
@@ -3272,9 +3079,7 @@ class Translator:
         read it too); the value evaluates the body unguarded, read only
         on rows where no guard fired."""
         if self._hof_depth == 0:
-            name = f"__t{len(self.staged)}"
-            self.staged.append((name, arr))
-            arr = F.col(name)
+            arr = self._stage(arr)
         codes = [g.code for g in caught]
 
         def any_fn(x, i):
@@ -3286,9 +3091,7 @@ class Translator:
         fb = F.element_at(
             F.filter(F.transform(arr, any_fn), lambda s: s["f"]), 1)
         if self._hof_depth == 0:
-            name = f"__t{len(self.staged)}"
-            self.staged.append((name, fb))
-            fb = F.col(name)
+            fb = self._stage(fb)
         has_bad = fb.isNotNull()
         xbad = F.element_at(arr, (fb["i"] + 1).cast("int"))
         bad = scope(xbad, lambda: self.eval(elt))[1]
@@ -3449,11 +3252,11 @@ class Translator:
             if not (isinstance(idx, SConst) and isinstance(idx.value, int)):
                 raise CompileError("e.args index must be int constant")
             try:
-                merged = self.per_site_args_item(base, idx.value)
+                return self._merge_sites(
+                    [(c, a[idx.value]) for c, a in base.per])
             except IndexError:
                 raise CompileError(
                     "e.args index out of range for a raise site")
-            return merged
         if isinstance(base, SDict):
             if isinstance(idx, SConst) and isinstance(idx.value, str):
                 if idx.value in base.items:
@@ -3857,7 +3660,9 @@ class Translator:
                         raise CompileError(
                             f"unsupported %-format {m!r}")  # precision
                     flags, width = pm.groups()
-                    a = self.num(a, "%-format")
+                    # guard None once, here: _format_spec then sees a
+                    # value that is never None (the same below)
+                    a = self.num(self._deref(a), "%-format")
                     cols.append(self._format_spec(
                         spec_of(flags, width, None) + m[-1], a))
                     out += "%s"
@@ -3868,7 +3673,7 @@ class Translator:
                     pm = _re_mod.match(r"%([-+0 #]*)(\d*)(?:\.(\d+))?$",
                                        m[:-1])
                     flags, width, prc = pm.groups()
-                    a = self.num(a, "%-format")
+                    a = self.num(self._deref(a), "%-format")
                     cols.append(self._format_spec(
                         spec_of(flags, width, prc) + m[-1], a))
                     out += "%s"
@@ -3883,7 +3688,7 @@ class Translator:
                     pm = _re_mod.match(r"%([-+0 #]*)(\d*)(?:\.(\d+))?$",
                                        m[:-1])
                     flags, width, prc = pm.groups()
-                    a = self.num(a, "%-format")
+                    a = self.num(self._deref(a), "%-format")
                     c = self.to_col(a).cast("long")
                     if prc is not None:
                         # '%.3d' % -5 == '-005'; '%08.3d' % 5 keeps
@@ -4370,19 +4175,21 @@ class Translator:
         near-ties are resolved from 21-digit arithmetic.
 
         Every multiply-referenced intermediate is STAGED as a CSE
-        projection layer (_stage_raw) — the inlined tree for one
+        projection layer (_stage) — the inlined tree for one
         '{:e}' printed to 1.7 MB, took 9.5 s to analyze, and OOM'd
         driver codegen.  The K-independent digit extraction (a, s, D,
         E0) is staged once per distinct source expression and cached,
         so several specs over the same value share it."""
         assert 1 <= K <= 15
+        if self._hof_depth > 0:  # no projection to stage in
+            raise CompileError("format spec inside higher-order function")
         skey = a._jc.toString()
         hit = self._sci_staged.get((skey, K))
         if hit is not None:
             return hit
         base = self._sci_staged.get(skey)
         if base is None:
-            a = self._stage_raw(a)
+            a = self._stage(a)
             base = self._sci_base(a)
             self._sci_staged[skey] = base
         a, D, E0 = base
@@ -4394,7 +4201,7 @@ class Translator:
         """Stage the K-independent digit extraction for _sci_digits:
         returns (a, D, E0) with D the repr/subnormal digit string and
         E0 the decimal exponent of its leading digit."""
-        s = self._stage_raw(a.cast("string"))
+        s = self._stage(a.cast("string"))
         m = F.substring_index(s, "E", 1)
         eexp = F.when(s.contains("E"),
                       F.substring_index(s, "E", -1).cast("int")) \
@@ -4417,8 +4224,8 @@ class Translator:
         pi = F.substring_index(prod, ".", 1)
         d_sub = F.concat(pi, F.substring_index(prod, ".", -1))
         e_sub = F.length(pi) - 1 - 324
-        D = self._stage_raw(F.when(sub, d_sub).otherwise(d_repr))
-        E0 = self._stage_raw(
+        D = self._stage(F.when(sub, d_sub).otherwise(d_repr))
+        E0 = self._stage(
             F.when(sub, e_sub)
              .when(d_repr == "", F.lit(0))
              .otherwise(e_repr))
@@ -4466,20 +4273,20 @@ class Translator:
         negp = self._pow10_col(F.greatest(-ne, F.lit(0)))
         # stage the twoProduct outputs: exact_sign references each of
         # its args 2-3x, which re-inlined the ~150-node err trees
-        pa, ea = map(self._stage_raw, two_prod(M, pos))  # a vs M*10^ne
+        pa, ea = map(self._stage, two_prod(M, pos))  # a vs M*10^ne
         sgn_dn = exact_sign(a - pa, -ea)   # a - pa Sterbenz near a tie
-        pb, eb = map(self._stage_raw, two_prod(a, negp))  # ne < 0
+        pb, eb = map(self._stage, two_prod(a, negp))  # ne < 0
         sgn_up = exact_sign(pb - M, eb)
         # dsgn/out are staged too: their re-inlining (4x in digits)
         # pushed one whole-stage method past janino's 64 KB limit,
         # demoting the whole stage to interpreted evaluation
-        dsgn = self._stage_raw(
+        dsgn = self._stage(
             F.when(ne > 22, F.signum(a / pos - M))
              .when(ne >= 0, sgn_dn)
              .otherwise(sgn_up))
         up = up_clear | (tie & ((dsgn > 0)
                                 | ((dsgn == 0) & (hnum % 2 == 1))))
-        out = self._stage_raw(
+        out = self._stage(
             hnum + F.when(up, F.lit(1)).otherwise(F.lit(0)))
         ovf = out == F.lit(10 ** K)
         digits = F.when(L <= K, F.rpad(D, K, "0")) \
@@ -4489,7 +4296,7 @@ class Translator:
             .cast("int")
         # the caller references both several times (mantissa split,
         # fixed/sci arbitration for 'g'): return cheap staged refs
-        return self._stage_raw(digits), self._stage_raw(e10)
+        return self._stage(digits), self._stage(e10)
 
     _FORMAT_SPEC_RE = _re_mod.compile(
         r"^(?:(?P<fill>.)?(?P<align>[<>^=]))?(?P<sign>[-+ ]?)"
@@ -4509,7 +4316,15 @@ class Translator:
         one short), with CPython's exact padding split (the ``^``
         left-bias, ``=`` pad-after-sign); signs and commas ride
         java.util.Formatter, whose en-US grouping matches CPython's ','
-        (probed).  Specs outside this grammar fall back."""
+        (probed).  Specs outside this grammar fall back.  An empty
+        spec is ``str(val)``; any other spec over None raises TypeError
+        (NoneType.__format__ takes no spec)."""
+        if not spec:
+            return self._to_str(val)
+        if isinstance(val, SConst) and val.value is None:
+            self.guard(F.lit(True), "TypeError")
+            return F.lit(None).cast("string")
+        val = self._deref(val)
         m = self._FORMAT_SPEC_RE.match(spec)
         if not m:
             raise CompileError(f"format spec {spec!r}")
@@ -4574,7 +4389,7 @@ class Translator:
             if prec is not None:
                 core = F.substring(core, 1, int(prec))
         elif typ == "d":
-            if tag == "float" or prec is not None:
+            if tag in ("float", "str") or prec is not None:
                 return err()
             if thread:
                 c = self.to_col(val).cast("long")
@@ -4601,7 +4416,8 @@ class Translator:
             # prefix + base digits; CPython renders negatives as
             # -<digits> (not two's complement), and '=' zero-padding
             # fills BETWEEN the prefix and the digits
-            if tag == "float" or prec is not None or comma == ",":
+            if tag in ("float", "str") or prec is not None \
+                    or comma == ",":
                 return err()  # ',' invalid with x/o/b in CPython
             c = self.to_col(val).cast("long")
             a = F.abs(c)
@@ -4870,8 +4686,6 @@ class Translator:
             raise CompileError("format() spec must be a constant str")
         if isinstance(a, SConst):
             return SConst(format(a.value, spec.value))
-        if spec.value == "":
-            return SCol(self._to_str(a), "str", False)
         return SCol(self._format_spec(spec.value, a), "str", False)
 
     # -- calls -----------------------------------------------------------
@@ -5600,14 +5414,11 @@ class Translator:
         parsed = F.try_parse_json(s)
         # one staged parse per distinct source expression: repeated
         # json.loads(x["props"]) calls in one UDF share the column
-        if self._hof_depth == 0 and len(self.staged) < self._MAX_STAGED:
+        if self._hof_depth == 0:
             skey = s._jc.toString()
             hit = self._json_staged.get(skey)
             if hit is None:
-                name = f"__t{len(self.staged)}"
-                self.staged.append((name, parsed))
-                hit = F.col(name)
-                self._json_staged[skey] = hit
+                hit = self._json_staged[skey] = self._stage(parsed)
             parsed = hit
         if arg.nullable:
             self.guard(s.isNull(), "TypeError")
@@ -5624,18 +5435,13 @@ class Translator:
         HotSpot's 8,000-bytecode JIT ceiling, so the stage silently ran
         as interpreted bytecode (caught by
         tests/test_plans.py::TestCodegenNotDemoted)."""
-        if self._hof_depth > 0 or len(self.staged) >= self._MAX_STAGED:
+        if self._hof_depth > 0:
             return build()
         hit = self._json_staged.get(key)
         if hit is None:
-            # build() BEFORE taking the name: it may recursively stage
-            # its own dependencies (typeof stages the variant-get), and
-            # naming first would hand both the same __t index
-            col = build()
-            name = f"__t{len(self.staged)}"
-            self.staged.append((name, col))
-            hit = F.col(name)
-            self._json_staged[key] = hit
+            # build() BEFORE staging: it may stage its own dependencies
+            # (typeof stages the variant-get)
+            hit = self._json_staged[key] = self._stage(build())
         return hit
 
     def _jv_key(self, jv: SJson) -> str:
