@@ -1,6 +1,17 @@
 """Aggregate triples: recognized native lowering + generic fold fallback
 (reference: test_aggregates.py)."""
 
+import copy
+import json
+from collections import Counter
+from fractions import Fraction
+
+import pytest
+
+from tuplex_spark.exceptions import code_for_instance, name_for_code
+from tuplex_spark.operators.aggregate import recognize
+from tuplex_spark.udf.fallback import UDFRow
+
 
 class TestWholeDataset:
     def test_count_shape(self, ctx):
@@ -94,3 +105,91 @@ class TestUnique:
     def test_unique_scalar(self, ctx):
         r = ctx.parallelize([3, 1, 3, 2, 1]).unique().collect()
         assert sorted(r) == [1, 2, 3]
+
+
+def fold_oracle(data, aggregate, initial_value, columns=None, keys=()):
+    """CPython's fold: a row on which ``aggregate(state, row)`` raises
+    leaves the state unchanged and counts under its nearest coded class.
+    Returns (rows, exception_counts) as ``collect`` would; by key, a key
+    whose every row raised has no row."""
+    states, counts = {}, Counter()
+    for row in data:
+        key = tuple(row[columns.index(k)] for k in keys)
+        state = states.get(key, copy.deepcopy(initial_value))
+        try:
+            states[key] = aggregate(
+                state, UDFRow(row, columns) if columns else row)
+        except Exception as e:
+            counts[name_for_code(code_for_instance(e))] += 1
+    if not keys:
+        return [states.get((), initial_value)], dict(counts)
+    return sorted(k + (s if isinstance(s, tuple) else (s,))
+                  for k, s in states.items()), dict(counts)
+
+
+KV = ["k", "v"]
+# (data, columns, keys, combine, aggregate, initial value, lowers natively)
+FOLDS = {
+    "floordiv_by_zero": (
+        [1, 0, 2], None, (), lambda a, b: a + b,
+        lambda a, x: a + 10 // x, 0, True),
+    "floordiv_by_zero_by_key": (
+        [("a", 1), ("a", 0), ("b", 2)], KV, ("k",), lambda a, b: a + b,
+        lambda a, x: a + 10 // x["v"], 0, True),
+    "sum_over_none": (
+        [1, None, 3], None, (), lambda a, b: a + b,
+        lambda a, x: a + x, 0, True),
+    "min_over_none": (
+        [1, None, 3], None, (), lambda a, b: min(a, b),
+        lambda a, x: min(a, x), 0, True),
+    # key "b" has only a raising row: no row for it
+    "max_over_none_by_key": (
+        [("a", 1), ("a", None), ("b", None)], KV, ("k",),
+        lambda a, b: max(a, b), lambda a, x: max(a, x["v"]), 0, True),
+    "int_of_str_by_key": (
+        [("a", "1"), ("a", "x"), ("b", "3")], KV, ("k",),
+        lambda a, b: a + b, lambda a, x: a + int(x["v"]), 0, True),
+    # the raising row is left out of every slot, not only the raising one
+    "one_slot_raises": (
+        [1, 0, 2], None, (), lambda a, b: (a[0] + b[0], a[1] + b[1]),
+        lambda a, x: (a[0] + 1, a[1] + 10 // x), (0, 0), True),
+    "json_loads": (
+        ['{"n": 1}', '{"n": 2}', "bad"], None, (), lambda a, b: a + b,
+        lambda a, x: a + json.loads(x)["n"], 0, False),
+    # key "c" has only a raising row: no row for it
+    "json_loads_by_key": (
+        [("a", '{"n": 1}'), ("a", "bad"), ("b", '{"n": 2}'), ("c", "[")],
+        KV, ("k",), lambda a, b: a + b,
+        lambda a, x: a + json.loads(x["v"])["n"], 0, False),
+}
+
+
+class TestFoldExceptions:
+    """A row on which the aggregate UDF raises is left out and counted,
+    never fails the job, on the native and the generic path, with and
+    without a key, as CPython's fold (``fold_oracle``) does."""
+
+    @pytest.mark.parametrize("name", sorted(FOLDS))
+    @pytest.mark.parametrize("path", ["ctx", "ctx_interp"])
+    def test_matches_cpython_fold(self, name, path, request):
+        c = request.getfixturevalue(path)
+        data, cols, keys, combine, agg, init, native = FOLDS[name]
+        ds = c.parallelize(data, columns=cols)
+        assert (recognize(agg, combine, init, ds._schema_of_visible())
+                is not None) == native
+        out = ds.aggregateByKey(combine, agg, init, list(keys)) if keys \
+            else ds.aggregate(combine, agg, init)
+        assert (sorted(out.collect()), out.exception_counts) \
+            == fold_oracle(data, agg, init, cols, keys)
+
+    @pytest.mark.parametrize("path", ["ctx", "ctx_interp"])
+    def test_objects_reach_the_fold_as_objects(self, path, request):
+        """A PYOBJECT dataset is one column of pickled objects: the fold
+        gets the objects, never the pickled bytes (whose ``len`` a native
+        lowering would sum)."""
+        c = request.getfixturevalue(path)
+        data = [Fraction(1, 2), Fraction(2, 3), "x"]
+        for agg in (lambda a, x: a + x.numerator, lambda a, x: a + len(x)):
+            out = c.parallelize(data).aggregate(lambda a, b: a + b, agg, 0)
+            assert (out.collect(), out.exception_counts) \
+                == fold_oracle(data, agg, 0)

@@ -213,6 +213,9 @@ FORMAT_SPEC_CALLERS = ("_ev_JoinedStr", "_str_method", "_b_format",
                        "_percent_format")
 SECOND_LOWERINGS = {"_format_spec_col", "_format_spec_full", "_SPEC_RE",
                     "_while_counter_rewrite_incfirst"}
+# the flags of the second way to treat a raising row, which recorded
+# nothing (a compile without guards, a row runner without capture)
+RAISING_ROW_FLAGS = {"with_guards", "_exc_enabled", "capture"}
 # the guard side tables, the second comprehension lowering and the
 # classify-then-rewrite pair over a handler's exception reads, which one
 # guard record, one comprehension lowering and one pass replaced
@@ -311,3 +314,17 @@ class TestOneBoundary:
                          for n in ast.walk(c)
                          if isinstance(n, ast.Name) and n.id == h.name]
                 assert not reads, h.lineno
+        # one way to treat a raising row: nothing turns the compiler's
+        # guards or the row runner's exception codes off
+        for rel, src in _core_modules():
+            flags = set()
+            for n in ast.walk(ast.parse(src)):
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    flags |= {n.name} | {a.arg for a in ast.walk(n.args)
+                                         if isinstance(a, ast.arg)}
+                elif isinstance(n, ast.Attribute):
+                    flags.add(n.attr)
+                elif isinstance(n, ast.keyword):
+                    flags.add(n.arg)
+            assert not flags & RAISING_ROW_FLAGS, \
+                (rel, sorted(flags & RAISING_ROW_FLAGS))

@@ -3041,10 +3041,10 @@ class TestCompileCacheStaleness:
         from pyspark.sql import types as T
         schema = T.StructType([T.StructField("x", T.LongType())])
         fn = lambda x: sorted([x, 3, 1], key=lambda y: _G_NESTED - y)[0]
-        k1 = C._compile_cache_key(fn, schema, True, None)
+        k1 = C._compile_cache_key(fn, schema, None)
         globals()["_G_NESTED"] = 101
         try:
-            k2 = C._compile_cache_key(fn, schema, True, None)
+            k2 = C._compile_cache_key(fn, schema, None)
         finally:
             globals()["_G_NESTED"] = 100
         assert k1 is not None and k2 is not None

@@ -204,16 +204,17 @@ class TestContextUtilities:
 
     def test_options_nested(self, ctx):
         flat = ctx.options()
-        assert flat["tuplex.exceptions"] is True
+        assert flat["tuplex.useCompiledUDFs"] is True
+        assert flat["tuplex.inputSplitSize"] == "64MB"
         nested = ctx.options(nested=True)
-        assert nested["tuplex"]["exceptions"] is True
         assert nested["tuplex"]["useCompiledUDFs"] is True
+        assert nested["tuplex"]["inputSplitSize"] == "64MB"
 
     def test_options_to_yaml(self, ctx, tmp_path):
         p = str(tmp_path / "config.yaml")
         ctx.optionsToYAML(p)
         text = open(p).read()
-        assert "tuplex:" in text and "exceptions: true" in text
+        assert "tuplex:" in text and "useCompiledUDFs: true" in text
 
     def test_ls_cp_rm(self, ctx, tmp_path):
         src = tmp_path / "src"

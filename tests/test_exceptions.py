@@ -192,13 +192,19 @@ class TestAcrossOperators:
         assert ds.exception_counts == {"ValueError": 1,
                                        "ZeroDivisionError": 1}
 
-    def test_disable_exceptions_option(self):
+    def test_exceptions_option_is_ignored(self, ctx):
+        """There is one way to treat a raising row: ``tuplex.exceptions``
+        is not a key, so with it False the row is still left out and
+        counted, on the compiled and the interpreter path alike."""
         import tuplex_spark as tx
-        c = tx.Context(conf={"tuplex.exceptions": False}, name="tests")
-        ds = c.parallelize([1, 2, 4]).map(lambda x: x * 2)
-        assert ds.collect() == [2, 4, 8]
-        from tuplex_spark.udf.fallback import EXC_CODE
-        assert EXC_CODE not in ds._df.columns
+        for compiled in (True, False):
+            c = tx.Context(conf={"tuplex.exceptions": False,
+                                 "tuplex.useCompiledUDFs": compiled},
+                           spark=ctx.spark)
+            ds = c.parallelize([1, 0, 2]).map(lambda x: 10 // x)
+            assert c.metrics.compiledUDFs == compiled
+            assert ds.collect() == [10, 5]
+            assert ds.exception_counts == {"ZeroDivisionError": 1}
 
 
 class TestMajorityTypeVoting:

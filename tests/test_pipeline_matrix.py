@@ -2,8 +2,8 @@
 
 Ports the reference's ZillowConfigHarness pattern
 (test/core/FullPipelines.cc:674-721): the same realistic ETL pipeline runs
-under every combination of engine flags (compiled UDFs on/off, exception
-capture on/off) and its output must be byte-identical to the reference
+under every combination of engine flags (compiled UDFs on/off, shuffle
+partitions) and its output must be byte-identical to the reference
 configuration — plus a CPython-computed golden result.
 """
 

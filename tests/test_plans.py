@@ -78,6 +78,31 @@ class TestPushdownBarrier:
         assert ds.collect() == [r for r in rows if len(r) > 4]
 
 
+class TestGeneratedCodeReuse:
+    def test_second_run_compiles_no_class(self, ctx):
+        """Building and collecting the same compiled pipeline again
+        compiles no new Java class: the generated code, pushdown barrier
+        included, is the same text, so Spark's codegen cache serves it.
+        A barrier that drew a fresh shuffle seed at each analysis put a
+        new seed into the code and made every warm run compile again."""
+        codegen = ctx.spark._jvm.org.apache.spark.metrics.source \
+            .CodegenMetrics
+
+        def run():
+            before = codegen.METRIC_COMPILATION_TIME().getCount()
+            got = (ctx.parallelize(["a, bc d", "ef, g h, ij", "k"],
+                                   columns=["s"])
+                   .mapColumn("s", _trim_step)
+                   .withColumn("n", lambda x: len(x) * 2)
+                   .collect())
+            return got, codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+        before = ctx.metrics.compiledUDFs
+        first, _ = run()
+        assert ctx.metrics.compiledUDFs == before + 2
+        assert run() == (first, 0)
+
+
 class TestJoins:
     def test_small_dim_join_broadcasts(self, spark):
         """AQE/planner should broadcast nation against lineitem-scale."""

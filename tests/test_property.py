@@ -671,6 +671,30 @@ class TestAdversarialThreeWay:
         run_diff3(ctx, ctx_interp, STRUCT_ROWS, _build_fn(["x['st']"]),
                   columns=STRUCT_COLS)
 
+    @pytest.mark.xfail(strict=True, reason="the compiled path wraps, "
+                       "saturates or nulls a result past the long range")
+    def test_long_overflow_is_a_violation_row(self, ctx, ctx_interp):
+        """Where CPython makes an int past the long range, which has no
+        Spark type, the interpreter path leaves the row out as a
+        NormalCaseViolation; the compiled path should too, not wrap
+        (``x * x``, ``x + x``), saturate (``int``/``round`` of a float)
+        or return None (``int`` of a str)."""
+        cases = [([3, 2 ** 40], lambda x: x * x),
+                 ([3, 2 ** 62], lambda x: x + x),
+                 ([2.5, 1e30], lambda x: int(x)),
+                 ([2.5, 1e30], lambda x: round(x)),
+                 (["12", "9" * 25], lambda s: int(s)),
+                 (["ff", "f" * 20], lambda s: int(s, 16))]
+        differ = []
+        for data, fn in cases:
+            compiled, interpreted = [
+                (ds.collect(), ds.exception_counts)
+                for ds in (c.parallelize(data).map(fn)
+                           for c in (ctx, ctx_interp))]
+            if compiled != interpreted:
+                differ.append((data, compiled, interpreted))
+        assert not differ, differ
+
 
 class TestArrowHandoff:
     """The interpreter path hands UDFs and the engine exactly the values

@@ -28,7 +28,6 @@ from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, from_frame, \
 _SAMPLE_ROWS = 100
 
 DEFAULTS = {
-    "tuplex.exceptions": True,           # capture per-row exceptions
     "tuplex.useCompiledUDFs": True,      # AST->Column compiler on
     "tuplex.inputSplitSize": "64MB",     # reference ContextOptions.cc:227
     "tuplex.shufflePartitions": None,    # None -> leave Spark default
@@ -283,24 +282,20 @@ class Context:
                     df = df.withColumn(f.name, F.when(
                         F.col(f.name).isin(null_values), None)
                         .otherwise(F.col(f.name)))
-        exc = self._options.get("tuplex.exceptions", True)
         names = [f.name for f in fields]
-        if exc:
-            bad = F.col("_corrupt_record").isNotNull()
-            # the `+ coalesce(col0*0, 0)` term keeps a real data column in
-            # the scan's required schema: Spark rejects queries whose scan
-            # references ONLY _corrupt_record (QUERY_ONLY_CORRUPT_RECORD_
-            # COLUMN), which exception-count queries would otherwise be
-            anchor = F.coalesce(
-                F.col(names[0]).cast("double") * 0, F.lit(0.0)).cast("int")
-            df = df.select(
-                *names,
-                (F.when(bad, code_for("BadParseInput")).otherwise(0)
-                 + anchor).cast("int").alias(EXC_CODE),
-                F.when(bad, F.col("_corrupt_record")).alias(EXC_PAYLOAD),
-                F.when(bad, F.lit("csv")).alias(EXC_OP))
-        else:
-            df = df.select(*names)
+        bad = F.col("_corrupt_record").isNotNull()
+        # the `+ coalesce(col0*0, 0)` term keeps a real data column in
+        # the scan's required schema: Spark rejects queries whose scan
+        # references ONLY _corrupt_record (QUERY_ONLY_CORRUPT_RECORD_
+        # COLUMN), which exception-count queries would otherwise be
+        anchor = F.coalesce(
+            F.col(names[0]).cast("double") * 0, F.lit(0.0)).cast("int")
+        df = df.select(
+            *names,
+            (F.when(bad, code_for("BadParseInput")).otherwise(0)
+             + anchor).cast("int").alias(EXC_CODE),
+            F.when(bad, F.col("_corrupt_record")).alias(EXC_PAYLOAD),
+            F.when(bad, F.lit("csv")).alias(EXC_OP))
         sample = self._sample_from_df(df.select(*names))
         return DataSet(self, df, names, sample=sample)
 
@@ -647,18 +642,14 @@ def build_session(name: str, options: dict | None = None) -> SparkSession:
     # heap at startup (the point: no first-touch page faults mid-query).
     # On a host without `mem` free this fails to launch rather than
     # degrading, so without tuplex.driverMemory / SPARK_DRIVER_MEMORY
-    # the default is sized from the host (_default_driver_memory); set
-    # tuplex.preTouchHeap=False to restore the old lazy-commit behavior
-    # (accepting the variance documented in SCALE.md).
+    # the default is sized from the host (_default_driver_memory).
     mem = str(options.get("tuplex.driverMemory")
               or os.environ.get("SPARK_DRIVER_MEMORY")
               or _default_driver_memory())
-    pin = options.get("tuplex.preTouchHeap", True)
-    jvm_opts = "-XX:ReservedCodeCacheSize=512m"
-    if pin:
-        jvm_opts += f" -Xms{mem} -XX:+AlwaysPreTouch"
     b = (b
-         .config("spark.driver.extraJavaOptions", jvm_opts)
+         .config("spark.driver.extraJavaOptions",
+                 f"-XX:ReservedCodeCacheSize=512m -Xms{mem} "
+                 "-XX:+AlwaysPreTouch")
          .config("spark.driver.memory", mem))
     if options.get("tuplex.scratchDir"):
         b = b.config("spark.local.dir", options["tuplex.scratchDir"])

@@ -177,6 +177,9 @@ def _project(vis, new_cols: dict, value, barrier: bool):
     through.  With ``barrier``, the first computed column is wrapped in
     a pushdown barrier: a nondeterministic IDENTITY (shuffle of a
     1-element array) makes the Project pushdown- and collapse-opaque.
+    Its seed is fixed: Spark inlines the seed into the generated code,
+    so a drawn one (fresh at every analysis) would defeat the codegen
+    cache and make a warm execution compile its stage again.
     Without it, a later filter's predicate gets rewritten by
     substituting the computed columns' expression trees through every
     staged layer — a 10-op find/rfind/slice pipeline's plan grew
@@ -191,7 +194,7 @@ def _project(vis, new_cols: dict, value, barrier: bool):
             continue
         expr = value(v, new_cols[v])
         if barrier:
-            expr = F.element_at(F.shuffle(F.array(expr)), 1)
+            expr = F.element_at(F.shuffle(F.array(expr), 0), 1)
             barrier = False
         sel.append(expr.alias(v))
     return sel
@@ -280,10 +283,6 @@ class DataSet:
 
     # ------------------------------------------------------------- helpers
     @property
-    def _exc_enabled(self) -> bool:
-        return bool(self._ctx._options.get("tuplex.exceptions", True))
-
-    @property
     def _has_exc(self) -> bool:
         return EXC_CODE in self._df.columns
 
@@ -350,9 +349,7 @@ class DataSet:
         if not self._ctx._options.get("tuplex.useCompiledUDFs", True):
             return None
         try:
-            return compiler.compile_udf(fn, in_schema,
-                                        with_guards=self._exc_enabled,
-                                        col_map=col_map)
+            return compiler.compile_udf(fn, in_schema, col_map=col_map)
         except CompileError:
             return None
 
@@ -460,8 +457,7 @@ class DataSet:
     # -- compiled path ----------------------------------------------------
     def _apply_compiled(self, compiled, kind, op_name, target_col, new_col):
         df, barrier = _stage(self._df, compiled)
-        code = _guard_code(compiled.guards) \
-            if compiled.guards and self._exc_enabled else None
+        code = _guard_code(compiled.guards) if compiled.guards else None
         if kind == "filter":
             out, vis = self._finish_op(df, kind, op_name, {}, code,
                                        pred=compiled.as_predicate())
@@ -531,7 +527,7 @@ class DataSet:
         # op on or to pickled objects
         payload = not (self._pyobj or out_kind == "pickle")
         keep = self._df.columns
-        if kind == "map" and not (payload and self._exc_enabled):
+        if kind == "map" and not payload:
             keep = [c for c in keep if c in _HIDDEN]
         df, code = self._run_rows(
             self._df, fn, in_cols, [t for _, t in specs], out_kind,
@@ -547,9 +543,8 @@ class DataSet:
         row-at-a-time over ``in_cols`` of ``df`` inside
         fallback.make_row_runner's mapInArrow.  Rows where ``gate``
         (default: not failed yet) is false pass through.  Returns (frame
-        of ``keep`` + out_col(i) outputs [+ ROW_CODE], the ROW_CODE
-        Column or None when exceptions are not captured)."""
-        capture = self._exc_enabled
+        of ``keep`` + out_col(i) outputs + ROW_CODE, the ROW_CODE
+        Column)."""
         if gate is None and self._has_exc:
             gate = F.col(EXC_CODE) == 0
         src = df if gate is None else df.select("*", gate.alias(GATE))
@@ -557,16 +552,14 @@ class DataSet:
             [df.schema[c] for c in keep]
             + [T.StructField(out_col(i), t, True)
                for i, t in enumerate(out_types)]
-            + ([T.StructField(ROW_CODE, T.IntegerType(), False)]
-               if capture else []))
+            + [T.StructField(ROW_CODE, T.IntegerType(), False)])
         runner = fallback.make_row_runner(
             fn, in_cols,
             None if self._pyobj else [df.schema[c].dataType
                                       for c in in_cols],
             out_types, out_kind, out_keys=out_keys, row_names=row_names,
-            keep=list(keep), capture=capture)
-        out = src.mapInArrow(runner, schema=schema)
-        return out, (F.col(ROW_CODE) if capture else None)
+            keep=list(keep))
+        return src.mapInArrow(runner, schema=schema), F.col(ROW_CODE)
 
     # ---------------------------------------------------------- transforms
     def map(self, ftor) -> "DataSet":
@@ -779,8 +772,7 @@ class DataSet:
                 "scalar" if whole else "fill",
                 keep=self._df.columns, gate=match, row_names=names)
             return finish(df, [F.col(out_col(i))
-                               for i in range(len(out_types))],
-                          F.lit(0) if code is None else code)
+                               for i in range(len(out_types))], code)
 
         out, _ = _demoting(self._try_compile(ftor, in_struct, col_map=remap),
                            compiled_path, interpreted)

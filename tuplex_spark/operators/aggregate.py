@@ -14,7 +14,9 @@ fold loop (``_fold``): per partition in ``mapInArrow`` (whole-dataset;
 the driver combines the pickled partial states with ``combine``) or per
 group in ``applyInArrow`` (by key) — still a distributed partial/final
 fold, just not codegen'd.  Both hand the fold UDF the values CPython
-would see: struct columns as tuples, NaN as NaN, ints as ints.
+would see: struct columns as tuples, NaN as NaN, ints as ints.  On both
+paths a row on which ``aggregate(state, row)`` raises is left out and
+counted, as in CPython, where the raising call leaves the state as is.
 """
 
 from __future__ import annotations
@@ -23,12 +25,14 @@ import ast
 import copy
 import functools
 import pickle
+from collections import Counter
 
 from pyspark.sql import functions as F, types as T
 
 from ..udf import reflection
-from ..udf.compiler import CompileError, SRow, Translator
-from ..exceptions import code_for
+from ..udf.compiler import _NUM_TAGS, CompileError, CompiledUDF, STuple, \
+    Translator
+from ..exceptions import code_for, code_for_instance, name_for_code
 from ..typeutils import coerce, conforms, infer_type
 from ..udf import fallback as FB
 
@@ -67,7 +71,9 @@ def _mentions(node, name: str) -> bool:
 
 
 def recognize(aggregate_fn, combine_fn, initial_value, schema: T.StructType):
-    """Try to lower the fold onto native aggregates; None if not possible."""
+    """Try to lower the fold onto native aggregates: (slots, the
+    CompiledUDF of the slots' row values, whose guards and staged layers
+    their columns need), or None if not possible."""
     try:
         node = reflection.function_ast(aggregate_fn)
     except Exception:
@@ -92,21 +98,33 @@ def recognize(aggregate_fn, combine_fn, initial_value, schema: T.StructType):
             or len(slots_ast) != len(inits):
         return None
 
-    env = reflection.closure_env(aggregate_fn)
-    slots: list[_Slot] = []
-    for i, (sl, init) in enumerate(zip(slots_ast, inits)):
-        want = -1 if not isinstance(body, ast.Tuple) else i
-        parsed = _match_slot(sl, agg_name, row_name, want, env, schema)
-        if parsed is None:
-            return None
-        parsed.init = init
-        slots.append(parsed)
-    if not _combine_matches(combine_fn, [s.op for s in slots]):
+    matched = [_match_slot(sl, agg_name,
+                           -1 if not isinstance(body, ast.Tuple) else i)
+               for i, sl in enumerate(slots_ast)]
+    if None in matched or \
+            not _combine_matches(combine_fn, [op for op, _ in matched]):
         return None
-    return slots
+    # one translator, guards on, for every slot: a row that raises in any
+    # slot leaves all of them, as CPython's raising call changes no state
+    tr = Translator(schema, reflection.closure_env(aggregate_fn))
+    tr._bind_params([row_name])
+    try:
+        # a None row value is a TypeError in CPython's + / min / max
+        syms = [tr._deref(tr.eval(e)) for _, e in matched]
+        slots = [_Slot(op, tr.to_col(s), s.tag, init)
+                 for (op, _), s, init in zip(matched, syms, inits)]
+    except CompileError:
+        return None
+    if any(s.tag not in _NUM_TAGS for s in slots):
+        return None
+    return slots, CompiledUDF(STuple(syms),
+                              [(g.cond, g.code) for g in tr.guards],
+                              tr.accessed, tr)
 
 
-def _match_slot(sl, agg_name, row_name, want, env, schema):
+def _match_slot(sl, agg_name, want):
+    """(native op, the row expression it folds in) of one state slot's
+    update, or None."""
     def is_ref(n):
         return _agg_ref_slot(n, agg_name, 10 ** 6) == want
 
@@ -124,21 +142,7 @@ def _match_slot(sl, agg_name, row_name, want, env, schema):
             op, expr_ast = sl.func.id, b
         elif is_ref(b) and not _mentions(a, agg_name):
             op, expr_ast = sl.func.id, a
-    if op is None:
-        return None
-    tr = Translator(schema, env, with_guards=False)
-    if len(schema.fields) == 1:
-        tr._locals[row_name] = tr._field_sym(schema.fields[0])
-    else:
-        tr._locals[row_name] = SRow(tr)
-    try:
-        sym = tr.eval(expr_ast)
-        col = tr.to_col(sym)
-    except CompileError:
-        return None
-    if sym.tag not in ("bool", "int", "float"):
-        return None
-    return _Slot(op, col, sym.tag, None)
+    return None if op is None else (op, expr_ast)
 
 
 def _combine_matches(combine_fn, ops) -> bool:
@@ -166,37 +170,51 @@ def _combine_matches(combine_fn, ops) -> bool:
     return True
 
 
-def _slot_agg_col(slot: _Slot, name: str):
+def _slot_agg_col(slot: _Slot, value: str, name: str):
     init = slot.init
     if slot.op == "sum":
         zero = F.lit(0).cast("double") if isinstance(init, float) \
             else F.lit(0)
-        base = F.coalesce(F.sum(slot.col), zero)
+        base = F.coalesce(F.sum(value), zero)
         if init:
             base = base + F.lit(init)
         out_is_float = slot.tag == "float" or isinstance(init, float)
         return base.cast("double" if out_is_float else "long").alias(name)
     f = F.min if slot.op == "min" else F.max
     cmb = F.least if slot.op == "min" else F.greatest
-    base = cmb(f(slot.col), F.lit(init))
+    base = cmb(f(value), F.lit(init))
     out_is_float = slot.tag == "float" or isinstance(init, float)
     return base.cast("double" if out_is_float else "long").alias(name)
 
 
 def aggregate_general(ds, combine, aggregate, initial_value, keys):
-    from ..dataset import DataSet, _exact
+    from ..dataset import DataSet, _exact, _guard_code, _stage
 
-    df, parked = ds._split_exceptions()
     schema = ds._schema_of_visible()
     # the fold UDF receives the FULL row (key columns included) — reference
-    # behavior per test_aggregates.py:45 (x['volume'] on ['id','volume'])
-    slots = recognize(aggregate, combine, initial_value, schema)
+    # behavior per test_aggregates.py:45 (x['volume'] on ['id','volume']);
+    # a PYOBJECT row is one pickled column, which only the fold loop
+    # unpickles
+    native = None if ds._pyobj else \
+        recognize(aggregate, combine, initial_value, schema)
     n_out = len(initial_value) if isinstance(initial_value, tuple) else 1
     out_names = [f"column{i}" for i in range(n_out)] if n_out > 1 \
         else ["column0"]
+    op_name = ds._next_op("aggregateByKey" if keys else "aggregate")
 
-    if slots is not None:
-        aggs = [_slot_agg_col(s, n) for s, n in zip(slots, out_names)]
+    if native is not None:
+        # the slot values are a compiled withColumn's columns (no barrier:
+        # the aggregate consumes them); their guards' rows split off
+        slots, compiled = native
+        values = [f"__slot{i}" for i in range(len(slots))]
+        df, vis = ds._finish_op(
+            _stage(ds._df, compiled)[0], "withColumn", op_name,
+            {v: s.col for v, s in zip(values, slots)},
+            _guard_code(compiled.guards) if compiled.guards else None,
+            payload=False)
+        df, parked = ds._spawn(df, columns=vis)._split_exceptions()
+        aggs = [_slot_agg_col(s, v, n)
+                for s, v, n in zip(slots, values, out_names)]
         if keys:
             out = df.groupBy(*keys).agg(*aggs)
             cols = list(keys) + out_names
@@ -207,26 +225,33 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
                        op_seq=ds._op_seq + 1)
 
     # ---- generic fold fallback ----
+    df, parked = ds._split_exceptions()
     if keys:
         return _fold_by_key(ds, df, parked, combine, aggregate,
-                            initial_value, keys, schema, out_names)
+                            initial_value, keys, schema, out_names, op_name)
     # the fold runs now, in a job of its own: no action job observes
     # the splits it consumes
     parked = _exact(parked, "an eager fold consumed the split")
     cols = [f.name for f in schema.fields]
-    in_types = [f.dataType for f in schema.fields]
+    in_types = None if ds._pyobj else [f.dataType for f in schema.fields]
 
     def partial(batches):
-        # one pickled state per partition; the driver combines them
+        # one pickled (state, raising rows' codes) per partition; the
+        # driver combines the states and counts the codes
         import pyarrow as pa
-        state = copy.deepcopy(initial_value)
+        state, raised = copy.deepcopy(initial_value), []
         for batch in batches:
-            state = _fold(aggregate, state, batch, cols, in_types)
+            state = _fold(aggregate, state, batch, cols, in_types, raised)
         yield pa.RecordBatch.from_arrays(
-            [pa.array([pickle.dumps(state)], pa.binary())],
+            [pa.array([pickle.dumps((state, Counter(raised)))],
+                      pa.binary())],
             names=["__state"])
-    states = [pickle.loads(r[0]) for r in FB.from_frame(
+    parts = [pickle.loads(r[0]) for r in FB.from_frame(
         df.mapInArrow(partial, "__state binary"))]
+    raised = sum((codes for _, codes in parts), Counter())
+    if raised:
+        parked = parked + [{name_for_code(c): n for c, n in raised.items()}]
+    states = [state for state, _ in parts]
     result = functools.reduce(combine, states) if states \
         else copy.deepcopy(initial_value)
     outs = result if isinstance(result, tuple) else (result,)
@@ -240,22 +265,31 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
                    op_seq=ds._op_seq + 1)
 
 
-def _fold(aggregate, state, data, cols, in_types):
+def _fold(aggregate, state, data, cols, in_types, raised: list):
     """``state`` folded with ``aggregate`` over the rows of Arrow
     ``data``, each row decoded as CPython sees it: one column's value
-    bare, several as a ``UDFRow``."""
-    for row in zip(*FB.decode_columns(data, cols, in_types)):
-        state = aggregate(state, FB.UDFRow(row, cols) if len(row) != 1
-                          else row[0])
+    bare, several as a ``UDFRow``; ``in_types`` None: one column of
+    pickled objects.  A row on which ``aggregate`` raises leaves the
+    state as it was; its exception code goes on ``raised``."""
+    for row in zip(*FB.decode_values(data, cols, in_types)):
+        try:
+            state = aggregate(state, FB.UDFRow(row, cols) if len(row) != 1
+                              else row[0])
+        except Exception as e:
+            raised.append(code_for_instance(e))
     return state
 
 
 def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
-                 schema, out_names):
+                 schema, out_names, op_name):
     """applyInArrow fold per key.  The state's types come from folding
-    the plan-time sample; a group whose final state does not fit them
-    becomes one NormalCaseViolation row (null state, no payload, this
-    op's tag) instead of a value ``pa.array`` would truncate."""
+    the plan-time sample, under fallback.call_budgeted's line budget (a
+    fold that never ends on a sample row must not hang the driver).  A
+    group emits its state row, unless every one of its rows raised, and
+    one exception row (null state, no payload, this op's tag) per
+    raising row; a state that does not fit the types makes the state
+    row a NormalCaseViolation row instead of a value ``pa.array`` would
+    truncate."""
     from ..dataset import DataSet
 
     cols = [f.name for f in schema.fields]
@@ -264,47 +298,47 @@ def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
     for row in ds._sample[:50]:
         r = row if isinstance(row, tuple) else (row,)
         try:
-            state = aggregate(state,
-                              FB.UDFRow(r, cols) if len(r) != 1 else r[0])
+            state = FB.call_budgeted(
+                aggregate,
+                (state, FB.UDFRow(r, cols) if len(r) != 1 else r[0]), 2,
+                None)
         except Exception:
             continue
     outs = state if isinstance(state, tuple) else (state,)
     stypes = [infer_type(v) or T.DoubleType() for v in outs]
     key_fields = [schema[k] for k in keys]
-    capture = ds._exc_enabled
     hidden = [T.StructField(FB.EXC_CODE, T.IntegerType(), False),
               T.StructField(FB.EXC_PAYLOAD, T.StringType(), True),
-              T.StructField(FB.EXC_OP, T.StringType(), True)] \
-        if capture else []
+              T.StructField(FB.EXC_OP, T.StringType(), True)]
     out_schema = T.StructType(
         list(key_fields) + [T.StructField(n, t, True)
                             for n, t in zip(out_names, stypes)] + hidden)
 
     init = initial_value
     in_types = [f.dataType for f in schema.fields]
-    op_name = ds._next_op("aggregateByKey")
     violation = code_for("NormalCaseViolation")
+    nulls = [None] * len(stypes)
 
     def fold(table):
         import pyarrow as pa
+        raised = []
         state = _fold(aggregate, copy.deepcopy(init), table, cols,
-                      in_types)
+                      in_types, raised)
         outs = state if isinstance(state, tuple) else (state,)
         fits = len(outs) == len(stypes) and all(
             conforms(v, t) for v, t in zip(outs, stypes))
-        if not (fits or capture):
-            raise FB.NormalCaseViolation(
-                f"fold state {state!r} does not fit the sample-inferred "
-                "schema")
-        if not fits:
-            outs = [None] * len(stypes)
-        arrays = [table.column(k).slice(0, 1) for k in keys]
-        arrays += [FB.encode_column([coerce(v, t)], t)
-                   for v, t in zip(outs, stypes)]
-        if capture:
-            arrays += [pa.array([0 if fits else violation], pa.int32()),
-                       pa.nulls(1, pa.string()),
-                       pa.array([None if fits else op_name], pa.string())]
+        # (state values, code) per output row
+        rows = [(outs, 0) if fits else (nulls, violation)] \
+            if len(raised) < table.num_rows else []
+        rows += [(nulls, code) for code in raised]
+        arrays = [table.column(k).take([0] * len(rows)) for k in keys]
+        arrays += [FB.encode_column([coerce(vals[j], t) for vals, _ in rows],
+                                    t)
+                   for j, t in enumerate(stypes)]
+        arrays += [pa.array([c for _, c in rows], pa.int32()),
+                   pa.nulls(len(rows), pa.string()),
+                   pa.array([op_name if c else None for _, c in rows],
+                            pa.string())]
         return pa.Table.from_arrays(arrays, names=out_schema.fieldNames())
 
     out = df.groupBy(*keys).applyInArrow(fold, schema=out_schema)

@@ -847,12 +847,10 @@ _NUM_TAGS = {"bool", "int", "float"}
 
 class Translator:
     def __init__(self, schema: T.StructType, env: dict,
-                 with_guards: bool = True,
                  col_map: dict[str, str] | None = None):
         self.schema = schema
         self.env = env
         self.col_map = col_map or {}  # schema name -> physical df column
-        self.with_guards = with_guards
         self.guards: list[_Guard] = []  # raise sites, in emission order
         # innermost-last stack of the guards (under their handler
         # conditions) feeding the handler bodies being compiled — a
@@ -1004,8 +1002,6 @@ class Translator:
         RAISE POINT, so handlers that read ``str(e)`` compile (_exec_try
         builds a when-chain over the handler's guards); sites without
         one keep those handlers on the exact fallback."""
-        if not self.with_guards:
-            return
         if path is not None:
             cond = path & cond
         if self._path is not None:
@@ -3813,7 +3809,7 @@ class Translator:
     def _deref(self, s: Sym, exc: str = "TypeError") -> Sym:
         """Guard a None receiver (CPython raises ``exc``): past the guard
         the value is never None, so later ops need no guard of their own."""
-        if not (isinstance(s, SCol) and s.nullable and self.with_guards):
+        if not (isinstance(s, SCol) and s.nullable):
             return s
         self.guard(s.col.isNull(), exc)
         return SCol(s.col, s.tag, False, s.elem)
@@ -6695,7 +6691,7 @@ def _freeze_value(v, depth: int = 0):
     raise TypeError(f"uncacheable closure value {type(v)}")
 
 
-def _compile_cache_key(fn, schema, with_guards, col_map):
+def _compile_cache_key(fn, schema, col_map):
     try:
         cells = tuple(_freeze_value(c.cell_contents)
                       for c in (fn.__closure__ or ()))
@@ -6705,8 +6701,7 @@ def _compile_cache_key(fn, schema, with_guards, col_map):
             for n in _all_co_names(fn.__code__) if n in gl))
         key = (fn.__code__, cells, names,
                tuple(_freeze_value(d) for d in (fn.__defaults__ or ())),
-               schema.json(), with_guards,
-               tuple(sorted((col_map or {}).items())))
+               schema.json(), tuple(sorted((col_map or {}).items())))
         hash(key)
         return key
     except Exception:
@@ -6714,7 +6709,6 @@ def _compile_cache_key(fn, schema, with_guards, col_map):
 
 
 def compile_udf(fn, schema: T.StructType, env: dict | None = None,
-                with_guards: bool = True,
                 col_map: dict | None = None) -> CompiledUDF:
     """Compile ``fn`` against ``schema``; raises CompileError on failure.
 
@@ -6722,15 +6716,14 @@ def compile_udf(fn, schema: T.StructType, env: dict | None = None,
     names (used by resolve() to bind the resolver onto payload fields).
 
     Results are memoized per (code object, closure/global VALUES, schema,
-    guards, col_map): plan BUILD time — recognizer trials plus the py4j
+    col_map): plan BUILD time — recognizer trials plus the py4j
     round trips that construct the Column trees — dominated sub-second
     queries (measured 0.57s build vs 0.24s execute), and repeated
     pipelines re-create textually identical lambdas every call.  Failures
     are cached too, so fallback UDFs skip the recognizer gauntlet on
     re-runs.  Columns are immutable expression handles bound to names,
     so one CompiledUDF is safely shared across same-schema DataFrames."""
-    key = None if env else _compile_cache_key(fn, schema, with_guards,
-                                              col_map)
+    key = None if env else _compile_cache_key(fn, schema, col_map)
     if key is not None:
         hit = _COMPILE_CACHE.get(key, _MISS)
         if hit is not _MISS:
@@ -6738,7 +6731,7 @@ def compile_udf(fn, schema: T.StructType, env: dict | None = None,
                 raise CompileError("cached compile failure")
             return hit
     try:
-        tr = Translator(schema, env or {}, with_guards, col_map)
+        tr = Translator(schema, env or {}, col_map)
         out = tr.compile(fn)
     except CompileError:
         if key is not None:

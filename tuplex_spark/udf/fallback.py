@@ -270,6 +270,16 @@ def decode_columns(data, fields: list, types: list) -> list[list]:
     return cols
 
 
+def decode_values(data, fields: list, types: list | None) -> list[list]:
+    """``decode_columns``, or with ``types`` None the one column of
+    pickled Python objects ``fields[0]`` unpickled."""
+    if types is None:
+        import pickle
+        return [[None if b is None else pickle.loads(b)
+                 for b in data.column(fields[0]).to_pylist()]]
+    return decode_columns(data, fields, types)
+
+
 def encode_column(values: list, t: T.DataType):
     """Python values already checked by ``conforms`` and laid out by
     ``coerce`` -> an Arrow array of Spark type ``t`` (tuples fill
@@ -322,8 +332,11 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
                     out_types: list, out_kind: str,
                     out_keys: list | None = None,
                     row_names: list[str] | None = None,
-                    keep: list[str] = (), capture: bool = True):
+                    keep: list[str] = ()):
     """Build the ``mapInArrow`` function applying ``fn`` row-at-a-time.
+    A row on which ``fn`` raises, or whose result misfits ``out_types``
+    (NormalCaseViolation), gets its exception code in the ROW_CODE
+    output and None in every out_col(i); the others get code 0.
 
     in_fields:  input columns, in row order
     in_types:   their Spark types (struct inputs -> tuples); None means
@@ -339,8 +352,6 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
     row_names:  names for ``x['col']`` access (default: in_fields)
     keep:       columns copied to the output unchanged, as the input
                 batch's own Arrow arrays
-    capture:    write each row's exception code to ROW_CODE; without it
-                the first exception fails the task
     """
     import pickle
 
@@ -348,14 +359,10 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
     # a pickled object reaches the UDF as itself, never as a named row
     names = None if in_types is None else list(row_names or in_fields)
     n_out = len(out_types)
-    out_names = list(keep) + [out_col(j) for j in range(n_out)] \
-        + ([ROW_CODE] if capture else [])
+    out_names = list(keep) + [out_col(j) for j in range(n_out)] + [ROW_CODE]
 
     def decode(batch):
-        if in_types is None:
-            return [None if b is None else pickle.loads(b)
-                    for b in batch.column(in_fields[0]).to_pylist()]
-        cols = decode_columns(batch, in_fields, in_types)
+        cols = decode_values(batch, in_fields, in_types)
         return cols[0] if len(cols) == 1 else list(zip(*cols))
 
     def encode(r):
@@ -393,8 +400,6 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
                 try:
                     vals = encode(_apply(fn, row, arity, names))
                 except Exception as e:
-                    if not capture:
-                        raise
                     codes[i] = code_for_instance(e)
                     continue
                 for col, v in zip(outs, vals):
@@ -402,8 +407,7 @@ def make_row_runner(fn, in_fields: list[str], in_types: list | None,
             arrays = [batch.column(f) for f in keep]
             arrays += [encode_column(col, t)
                        for col, t in zip(outs, out_types)]
-            if capture:
-                arrays.append(pa.array(codes, type=pa.int32()))
+            arrays.append(pa.array(codes, type=pa.int32()))
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return run
