@@ -10,6 +10,7 @@ import pytest
 
 from tuplex_spark.exceptions import code_for_instance, name_for_code
 from tuplex_spark.operators.aggregate import recognize
+from tuplex_spark.plans.inspect import explain_summary
 from tuplex_spark.udf.fallback import UDFRow
 
 
@@ -181,6 +182,16 @@ class TestFoldExceptions:
             else ds.aggregate(combine, agg, init)
         assert (sorted(out.collect()), out.exception_counts) \
             == fold_oracle(data, agg, init, cols, keys)
+
+    def test_compiler_off_folds_generically(self, ctx, ctx_interp):
+        """``tuplex.useCompiledUDFs=False`` reaches the recognizer: the
+        same ``state + f(row)`` fold runs on the generic fold loop."""
+        data = [(k % 3, k) for k in range(12)]
+        for c, python_eval in ((ctx, False), (ctx_interp, True)):
+            out = c.parallelize(data, columns=KV).aggregateByKey(
+                lambda a, b: a + b, lambda s, x: s + x["v"] * 2, 0, ["k"])
+            assert explain_summary(out.toDF())["python_eval"] == python_eval
+            assert sorted(out.collect()) == [(0, 36), (1, 44), (2, 52)]
 
     @pytest.mark.parametrize("path", ["ctx", "ctx_interp"])
     def test_objects_reach_the_fold_as_objects(self, path, request):

@@ -267,6 +267,14 @@ class TestOneBoundary:
             assert not any(isinstance(n, ast.Attribute) and n.attr == "toDF"
                            for n in ast.walk(methods[w])), w
 
+    def test_one_owner_of_the_struct_layouts(self):
+        # the variant and set structs' field names are typeutils'
+        found = {rel for rel, src in _core_modules()
+                 for n in ast.walk(ast.parse(src))
+                 if isinstance(n, ast.Constant) and n.value in ("__vt",
+                                                                "__sv")}
+        assert found == {"typeutils.py"}, sorted(found)
+
     def test_one_lowering_per_compiled_construct(self):
         found = {f for rel, src in _core_modules()
                  for f in _uses(rel, src, {"_format_spec"})}

@@ -553,10 +553,11 @@ def _right(ctx):
 
 class TestOnePassCounts:
     """``collect`` reads exception counts from the observed metrics of
-    the job that produces its rows.  Counts are exact, and the exact
-    ``groupBy`` pass runs only where no action job observes a split
-    completely: take(n)/limit, orderBy, an eager fold, and a split whose
-    observed node AQE dropped from the executed plan."""
+    the job that produces its rows; the eager whole-dataset fold reads
+    those of the splits it consumes in its own job.  Counts are exact,
+    and the exact ``groupBy`` pass runs only where no job observes a
+    split completely: take(n)/limit, and a split whose observed node
+    AQE dropped from the executed plan."""
 
     def _counts(self, ctx, ds, exact: bool, action=None):
         labels = _job_labels(ctx, action or ds.collect)
@@ -629,11 +630,25 @@ class TestOnePassCounts:
         assert sorted(ds.collect()) == [(1, 10), (2, 5), (3, 3), (4, 2)]
 
     def test_order_by(self, ctx):
-        # the sort's range partitioner reads the split twice
+        # the failed rows travel through the sort: the action splits
+        # them off above the range exchange
         ds = _failing(ctx).orderBy("k")
-        assert self._counts(ctx, ds, True) == {"ZeroDivisionError": 8}
+        assert self._counts(ctx, ds, False) == {"ZeroDivisionError": 8}
         assert [r[0] for r in ds.collect()] == \
             [k for k in range(40) if k % 5]
+
+    def test_order_by_after_a_join(self, ctx):
+        # the join's splits lie below the range exchange
+        ds = _failing(ctx).join(_right(ctx), "k", "k").orderBy("k")
+        assert self._counts(ctx, ds, False) == {"ZeroDivisionError": 8}
+        assert [r[2] for r in ds.collect()] == \
+            [k for k in range(0, 40, 2) if k % 5]
+
+    def test_ignore_after_order_by(self, ctx):
+        # as after selectColumns, ignore sees the rows an earlier op failed
+        ds = _failing(ctx).orderBy("k").ignore(ZeroDivisionError)
+        assert self._counts(ctx, ds, False) == {}
+        assert len(ds.collect()) == 32
 
     def test_keyed_slot_aggregate(self, ctx):
         ds = _failing(ctx).aggregateByKey(
@@ -645,7 +660,7 @@ class TestOnePassCounts:
     def test_generic_fold_without_key(self, ctx):
         ds = _failing(ctx).aggregate(
             lambda a, b: a + b, lambda a, x: a * 1 + x["q"] % 7, 0)
-        assert self._counts(ctx, ds, True) == {"ZeroDivisionError": 8}
+        assert self._counts(ctx, ds, False) == {"ZeroDivisionError": 8}
         assert ds.collect() == [8 * (3 + 5 + 3 + 2)]
 
     def test_collect_runs_no_more_jobs_than_the_clean_rows(self, ctx):
@@ -662,6 +677,72 @@ class TestOnePassCounts:
         assert ds.exception_counts == {"BadParallelizeInput": 2}
         assert ds.collect() == [10, 20, 40]
 
+
+_LEFT = [(i, "k%d" % (i % 3)) for i in range(20)]
+_KEYED = [("k%d" % i, i * 10) for i in range(3)]
+
+
+class TestPlanTimeSample:
+    """A DataSet reads its plan-time sample on first use: an interpreted
+    op after a join, ``unique`` or an aggregate types its output from
+    the rows that op makes, as CPython's rows show, and a compiled chain
+    over a source starts no Spark job until an action."""
+
+    @pytest.mark.parametrize("path", ["ctx", "ctx_interp"])
+    def test_interpreted_ops_after_split_points(self, path, request):
+        c = request.getfixturevalue(path)
+        left = c.parallelize(_LEFT, ["a", "k"])
+        right = c.parallelize(_KEYED, ["k", "v"])
+        joined = [(a, k, v) for a, k in _LEFT for k2, v in _KEYED
+                  if k == k2]
+        sums = {}
+        for a, k in _LEFT:
+            sums[k] = sums.get(k, 0) + a
+        # hashlib does not compile: every op below takes the interpreter
+        # path, which types its output from the sample
+        h = lambda x: int(  # noqa: E731
+            hashlib.md5(str(x[0]).encode()).hexdigest()[:4], 16)
+        cases = [
+            (left.join(right, "k", "k").withColumn("h", h),
+             [r + (h(r),) for r in joined]),
+            (left.unique().withColumn("h", h), [r + (h(r),) for r in _LEFT]),
+            (left.join(right, "k", "k").map(lambda x: (x[0], h(x))),
+             [(r[0], h(r)) for r in joined]),
+            (left.aggregateByKey(lambda p, q: p + q,
+                                 lambda s, x: s + x["a"], 0, ["k"])
+             .withColumn("h", lambda x: h((x[1],))),
+             [(k, n, h((n,))) for k, n in sums.items()]),
+        ]
+        for ds, want in cases:
+            assert explain_summary(ds.toDF())["python_eval"]
+            assert not ds._pyobj
+            assert sorted(ds.collect()) == sorted(want)
+            assert ds.exception_counts == {}
+
+    def test_compiled_chain_over_a_source_starts_no_job(self, ctx,
+                                                        tmp_path):
+        path = tmp_path / "in.csv"
+        path.write_text("a,b\n" + "".join(f"{i},x{i}\n" for i in range(50)))
+        built = []
+
+        def build():
+            built.append(ctx.csv(str(path))
+                         .withColumn("c", lambda x: x["a"] * 2)
+                         .filter(lambda x: x["c"] > 10)
+                         .mapColumn("b", lambda s: s.upper()))
+        assert _job_labels(ctx, build) == []
+        assert not explain_summary(built[0].toDF())["python_eval"]
+        assert sorted(built[0].collect()) == \
+            [(i, f"X{i}", 2 * i) for i in range(6, 50)]
+
+    def test_part_size_after_a_join(self, ctx, spark, tmp_path):
+        # the record cap reads the join's sample before the write
+        # registers its observations
+        out = str(tmp_path / "out")
+        j = _failing(ctx).join(_right(ctx), "k", "k")
+        j.tocsv(out, part_size=64)
+        assert j.exception_counts == {"ZeroDivisionError": 8}
+        assert spark.read.option("header", True).csv(out).count() == 16
 
 
 # engine writer, and the same write of a plain DataFrame: (format read

@@ -17,15 +17,12 @@ from collections import OrderedDict
 
 from pyspark.sql import SparkSession, functions as F, types as T
 
-from .dataset import PYOBJ_COL, DataSet
+from .dataset import _SAMPLE_ROWS, PYOBJ_COL, DataSet
 from .exceptions import code_for
 from .typeutils import coerce, conforms, infer_schema_from_rows, \
     infer_type, super_type
 from .sources import csv_inference as CSV
-from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, from_frame, \
-    to_frame
-
-_SAMPLE_ROWS = 100
+from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, to_frame
 
 DEFAULTS = {
     "tuplex.useCompiledUDFs": True,      # AST->Column compiler on
@@ -104,9 +101,9 @@ class Context:
         self.spark = spark
         from .metrics import Metrics
         self._metrics = Metrics()
-        # (pattern, columns, mtime) -> (DataFrame, sample): repeated
+        # (pattern, columns, mtime) -> the scan's DataSet: repeated
         # scans of the same files otherwise pay parquet footer analysis
-        # plus a driver-side sample collect per call (~0.2s each) —
+        # and, where a sample is read, its collect (~0.2s each) —
         # plan-build overhead that dominated sub-second queries.  The
         # mtime key drops the entry when the files change.  Past 256
         # entries the oldest goes.
@@ -296,8 +293,7 @@ class Context:
              + anchor).cast("int").alias(EXC_CODE),
             F.when(bad, F.col("_corrupt_record")).alias(EXC_PAYLOAD),
             F.when(bad, F.lit("csv")).alias(EXC_OP))
-        sample = self._sample_from_df(df.select(*names))
-        return DataSet(self, df, names, sample=sample)
+        return DataSet(self, df, names)
 
     def text(self, pattern: str, null_values=None) -> DataSet:
         """One row per line, single str column (reference: context.py:367)."""
@@ -307,16 +303,14 @@ class Context:
             df = df.withColumn("column0", F.when(
                 F.col("column0").isin(list(null_values)), None)
                 .otherwise(F.col("column0")))
-        return DataSet(self, df, ["column0"],
-                       sample=self._sample_from_df(df))
+        return DataSet(self, df, ["column0"])
 
     def orc(self, pattern: str, columns=None) -> DataSet:
         """ORC scan (reference: context.py:389)."""
         df = self.spark.read.orc(pattern)
         if columns:
             df = df.toDF(*columns)
-        return DataSet(self, df, df.columns,
-                       sample=self._sample_from_df(df))
+        return DataSet(self, df, df.columns)
 
     def json(self, pattern: str, columns=None, multiline: bool = False,
              schema=None) -> DataSet:
@@ -334,8 +328,7 @@ class Context:
         if "_corrupt_record" not in df.columns:
             if columns:
                 df = df.toDF(*columns)
-            return DataSet(self, df, df.columns,
-                           sample=self._sample_from_df(df))
+            return DataSet(self, df, df.columns)
         # malformed records travel as failed rows, like bad CSV cells;
         # the rows are cached because a query on raw JSON may not read
         # only the corrupt-record column
@@ -349,9 +342,7 @@ class Context:
             .cast("int").alias(EXC_CODE),
             F.when(bad, F.col("_corrupt_record")).alias(EXC_PAYLOAD),
             F.when(bad, F.lit("json")).alias(EXC_OP))
-        sample = self._sample_from_df(
-            df.filter(F.col(EXC_CODE) == 0).select(*names))
-        return DataSet(self, df, names, sample=sample)
+        return DataSet(self, df, names)
 
     def table(self, name: str, columns=None) -> DataSet:
         """Catalog table source — the read side of bucketed
@@ -362,16 +353,14 @@ class Context:
         df = self.spark.table(name)
         if columns:
             df = df.select(*columns)
-        return DataSet(self, df, list(df.columns),
-                       sample=self._sample_from_df(df))
+        return DataSet(self, df, list(df.columns))
 
     def sql(self, query: str) -> DataSet:
         """ANSI SQL over registered views (DataSet.createOrReplaceTempView
         / Context.table) — the full Catalyst SQL surface as a DataSet
         (parity-plus; the reference has no SQL entry point)."""
         df = self.spark.sql(query)
-        return DataSet(self, df, list(df.columns),
-                       sample=self._sample_from_df(df))
+        return DataSet(self, df, list(df.columns))
 
     def parquet(self, pattern: str, columns=None) -> DataSet:
         """Parquet scan (Spark-native addition; same shape as orc()).
@@ -381,18 +370,16 @@ class Context:
         DuckDB/Arrow do."""
         key = ("parquet", pattern, tuple(columns or ()),
                _scan_mtime(pattern))
-        hit = self._scan_cache.get(key)
-        if hit is not None:
-            df, sample = hit
-            return DataSet(self, df, df.columns, sample=sample)
-        df = self._read_parquet_nanos_safe(pattern)
-        if columns:
-            df = df.toDF(*columns)
-        sample = self._sample_from_df(df)
-        self._scan_cache[key] = (df, sample)
-        if len(self._scan_cache) > 256:
-            self._scan_cache.popitem(last=False)
-        return DataSet(self, df, df.columns, sample=sample)
+        scan = self._scan_cache.get(key)
+        if scan is None:
+            df = self._read_parquet_nanos_safe(pattern)
+            if columns:
+                df = df.toDF(*columns)
+            scan = self._scan_cache[key] = DataSet(self, df, df.columns)
+            if len(self._scan_cache) > 256:
+                self._scan_cache.popitem(last=False)
+        # reads of one scan share its frame and its sample
+        return scan._spawn(scan._df, bump=False)
 
     def _read_parquet_nanos_safe(self, pattern: str):
         from pyspark.sql import functions as F  # noqa: F811
@@ -421,12 +408,6 @@ class Context:
                 df = df.withColumn(field.name, F.timestamp_micros(
                     (F.col(field.name) / 1000).cast("long")))
         return df
-
-    def _sample_from_df(self, df):
-        rows = from_frame(df.limit(_SAMPLE_ROWS))
-        if len(df.columns) == 1:
-            return [r[0] for r in rows]
-        return rows
 
 
 _SCAN_MTIME_CAP = 4096  # stat budget per cache probe

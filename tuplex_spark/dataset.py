@@ -33,16 +33,16 @@ Execution model (Spark-first, not a port):
   materialized — the plan is indistinguishable from hand-written
   DataFrame code.
 - exception counts come from the job that produces an action's rows.
-  Each split point (join, unique, set ops, orderBy, limit, aggregates,
-  the action itself) parks its failed rows as a named
-  ``DataFrame.observe`` of one ``count_if`` per exception class; every
-  action (collect, take, the writers) runs ``DataSet._action``, which
-  reads the counts from the session's observations of its own job.  One
-  exact ``groupBy`` pass over the codes of every split that no action
-  job observes completely runs only when the action stops early (take(n),
-  limit, num_rows), a sort or an eager fold consumed the split, or AQE
-  dropped the observed node from the executed plan.  show and toDF
-  report no counts and split without observing.
+  Each split point (join, unique, set ops, limit, aggregates, the action
+  itself) parks its failed rows as a named ``DataFrame.observe`` of one
+  ``count_if`` per exception class; every action (collect, take, the
+  writers) runs ``DataSet._action``, which reads the counts from the
+  session's observations of its own job, and the eager whole-dataset
+  fold reads those of the splits it consumes in its own job.  One exact
+  ``groupBy`` pass over the codes of every split that no job observes
+  completely runs only when the action stops early (take(n), limit,
+  num_rows) or AQE dropped the observed node from the executed plan.
+  show and toDF report no counts and split without observing.
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ import itertools as _itertools
 import json as _json
 import re as _re
 from collections import Counter as _Counter
-from functools import reduce as _reduce
+from functools import cache as _cache, reduce as _reduce
 from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
@@ -59,13 +59,15 @@ from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from . import exceptions as E
-from .typeutils import infer_type, super_type
+from .typeutils import VARIANT_ARMS, infer_type, is_set_struct, \
+    is_variant_struct, super_type
 from .udf import compiler, fallback
 from .udf.compiler import CompileError
 from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD, GATE, ROW_CODE, \
     out_col
 
 _HIDDEN = (EXC_CODE, EXC_PAYLOAD, EXC_OP)
+_SAMPLE_ROWS = 100  # rows in a plan-time sample
 
 # exception payloads round-trip through to_json/from_json; the default
 # timestampFormat keeps only milliseconds, silently handing resolvers a
@@ -208,17 +210,14 @@ def _py_type(dt: T.DataType, nullable: bool):
     import typing
     if isinstance(dt, T.NullType):
         return type(None)
-    if isinstance(dt, T.StructType) and dt.fields \
-            and dt.fields[0].name == "__vt":
-        # variant struct (compiled mixed-type return): Union of the
-        # families present, Optional because any arm may be None
-        fam = {"__vb": bool, "__vi": int, "__vf": float, "__vs": str}
+    if is_variant_struct(dt):
+        # compiled mixed-type return: Union of the families present,
+        # Optional because any arm may be None
+        fam = {a.field: a.py for a in VARIANT_ARMS.values()}
         opts = tuple(fam[f.name] for f in dt.fields[1:] if f.name in fam)
         return typing.Optional[typing.Union[opts]] if opts else object
-    if isinstance(dt, T.StructType) and len(dt.fields) == 1 \
-            and dt.fields[0].name == "__sv" \
-            and isinstance(dt.fields[0].dataType, T.ArrayType):
-        # compiled set return (compiler.is_set_struct)
+    if is_set_struct(dt):
+        # compiled set return
         return typing.Set[
             _py_type(dt.fields[0].dataType.elementType, False)]
     if isinstance(dt, T.StructType) and \
@@ -262,15 +261,21 @@ def _py_type_of_value(v):
 
 
 class DataSet:
+    """The plan-time sample (``_sample``) is read on first use and kept:
+    the rows given, a function of the parent's sample (``_spawn`` keeps
+    the parent's), or else the first clean rows of the frame.  Interpreted
+    ops, keyed folds, PYOBJECT ``types`` and ``part_size`` read it; after
+    a join or an aggregate, that read runs the join or aggregation."""
+
     def __init__(self, ctx, df: DataFrame, columns: list[str],
-                 sample: list | None = None, parked=None, last_op=None,
+                 sample=None, parked=None, last_op=None,
                  op_seq: int = 0, pyobj: bool = False,
                  tuple1: bool = False):
         self._ctx = ctx
         self._df = df
         self._columns = list(columns)
         self._pyobj = pyobj  # PYOBJECT mode: rows are pickled objects
-        self._sample = sample if sample is not None else []
+        self._sample_of = sample
         # failed rows cut off at split points (join/aggregate/unique/...):
         # _Split entries, or {class: count} dicts a source knows already
         self._parked = list(parked or [])
@@ -290,11 +295,21 @@ class DataSet:
         fields = {f.name: f for f in self._df.schema.fields}
         return T.StructType([fields[c] for c in self._columns])
 
+    @property
+    def _sample(self) -> list:
+        if self._sample_of is None:
+            rows = fallback.from_frame(self.toDF().limit(_SAMPLE_ROWS))
+            self._sample_of = [r[0] for r in rows] \
+                if len(self._columns) == 1 else rows
+        elif not isinstance(self._sample_of, list):
+            self._sample_of = self._sample_of()
+        return self._sample_of
+
     def _spawn(self, df, columns=None, sample=None, parked=None,
                last_op=None, bump=True, tuple1=None, pyobj=None):
         return DataSet(self._ctx, df,
                        self._columns if columns is None else columns,
-                       self._sample if sample is None else sample,
+                       (lambda: self._sample) if sample is None else sample,
                        self._parked if parked is None else parked,
                        last_op,
                        self._op_seq + (1 if bump else 0),
@@ -371,20 +386,19 @@ class DataSet:
         t0 = _time.time()
         compiled = None if self._pyobj else self._try_compile(fn, in_schema)
         m.totalCompilationTime += _time.time() - t0
-        results, sample = self._sample_eval(fn, kind, target_col, new_col)
+        # traced when the interpreter path or the op's own sample needs it
+        traced = _cache(
+            lambda: self._sample_eval(fn, kind, target_col, new_col))
         (out, vis, out_kind), was_compiled = _demoting(
             compiled,
             lambda cu: self._apply_compiled(cu, kind, op_name, target_col,
                                             new_col),
             lambda: self._apply_interpreted(
                 fn, kind, op_name, in_schema.fieldNames(), target_col,
-                new_col, results))
+                new_col, traced()[0]))
         m.compiledUDFs += was_compiled
         m.fallbackUDFs += not was_compiled
-        if out_kind == "dict":
-            # the op's output has one column per key: sample rows too
-            sample = [tuple(r.values()) if isinstance(r, dict) else r
-                      for r in sample]
+        dicts = out_kind == "dict"  # one column per key: sample rows too
         pickled = out_kind == "pickle" or (self._pyobj and kind == "filter")
         info = None
         if not (self._pyobj or pickled):
@@ -395,8 +409,9 @@ class DataSet:
             info = UDFOpInfo(op_name, kind, in_schema, produced)
         tup1 = (out_kind == "tuple" and len(vis) == 1) \
             if kind == "map" else None
-        return self._spawn(out, columns=vis, sample=sample, last_op=info,
-                           tuple1=tup1, pyobj=pickled)
+        return self._spawn(out, columns=vis, sample=lambda: [
+            tuple(r.values()) if dicts and isinstance(r, dict) else r
+            for r in traced()[1]], last_op=info, tuple1=tup1, pyobj=pickled)
 
     def _code_exprs(self, code, op_name, payload=True):
         """(code, payload, op) Columns folding the previous exception
@@ -601,10 +616,10 @@ class DataSet:
                 raise KeyError(f"no column {c!r}")
         keep = names + [h for h in _HIDDEN if h in self._df.columns]
         idx = [self._columns.index(n) for n in names]
-        sample = [tuple((r if isinstance(r, tuple) else (r,))[i] for i in idx)
-                  for r in self._sample]
         return self._spawn(self._df.select(*keep), columns=names,
-                           sample=sample)
+                           sample=lambda: [
+                               tuple((r if isinstance(r, tuple) else (r,))[i]
+                                     for i in idx) for r in self._sample])
 
     def renameColumn(self, old, new: str) -> "DataSet":
         """Rename by name or position (reference: dataset.py:293)."""
@@ -619,7 +634,7 @@ class DataSet:
     def unique(self) -> "DataSet":
         """Row-level distinct (reference: dataset.py:36 — AGG_UNIQUE)."""
         df, parked = self._split_exceptions()
-        return self._spawn(df.dropDuplicates(), parked=parked, sample=[])
+        return self._spawn(df.dropDuplicates(), parked=parked)
 
     def cache(self, store_specialized: bool = True) -> "DataSet":
         """Materialize for reuse (reference: dataset.py:346)."""
@@ -634,15 +649,12 @@ class DataSet:
 
     def orderBy(self, *cols, ascending: bool = True) -> "DataSet":
         """Total sort (Spark range-partitions on sampled bounds — scales
-        to arbitrary data; output order is the contract, so exception
-        rows are split out first).  The range partitioner samples its
-        input in a job of its own, which would count the rows of an
-        observed split in the same stage twice: exact counts instead."""
-        df, parked = self._split_exceptions()
+        to arbitrary data).  Failed rows travel through the sort, as
+        through ``selectColumns``: the next split point or action splits
+        them off above the range exchange, whose partitioner samples its
+        input in a job of its own that never runs that observation."""
         names = [c for c in cols] or list(self._columns)
-        return self._spawn(df.orderBy(*names, ascending=ascending),
-                           parked=_exact(parked, "orderBy samples its "
-                                                 "input twice"))
+        return self._spawn(self._df.orderBy(*names, ascending=ascending))
 
     def limit(self, n: int) -> "DataSet":
         """First n rows as a TRANSFORM (take(n) is the action variant).
@@ -681,10 +693,10 @@ class DataSet:
         frame, pruned to the visible columns and the code (so no payload
         is built), is observed under a fresh name with one ``count_if``
         per exception class: the job that consumes the clean rows counts
-        the failed ones.  Where no job of the action observes the whole
-        split (take(n), limit, orderBy, an eager fold, or AQE dropping the
-        node), the action counts the pruned frame in one exact pass
-        instead.  Returns (clean frame, parked list)."""
+        the failed ones.  Where no job observes the whole split (take(n),
+        limit, or AQE dropping the node), the count reader counts the
+        pruned frame in one exact pass instead.  Returns (clean frame,
+        parked list)."""
         if not self._has_exc:
             return self._df, list(self._parked)
         code = F.col(EXC_CODE)
@@ -800,12 +812,13 @@ class DataSet:
         return dict(self._exception_counts)
 
     def _collect_exception_counts(self, parked, run):
-        """Run an action's ``run()``; set the counts of ``parked`` from
-        session observations keyed like their ``CollectMetrics`` nodes
-        (name, frame id), which any query that runs the node completes.
-        Splits with no observed row (exact ones; an empty row: AQE
-        dropped the node; none within the read's 100 ms wait) are counted
-        in one exact job grouping their codes, labelled with the reason."""
+        """The one count reader: run a job, ``run()``, and return (its
+        result, the exception counts of ``parked``), read from session
+        observations keyed like their ``CollectMetrics`` nodes (name,
+        frame id), which any query that runs the node completes.  Splits
+        with no observed row (exact ones; an empty row: AQE dropped the
+        node; none within the read's 100 ms wait) are counted in one
+        exact job grouping their codes, labelled with the reason."""
         manager = self._ctx.spark._jsparkSession.observationManager()
         obs = [None if isinstance(p, dict) or p.exact else
                manager.getOrNewObservation(p.name, p.frame._jdf.id())
@@ -838,8 +851,7 @@ class DataSet:
             for code, n in rows:
                 if code:
                     counts[E.name_for_code(code)] += n
-        self._exception_counts = {c: n for c, n in counts.items() if n}
-        return out
+        return out, {c: n for c, n in counts.items() if n}
 
     # -------------------------------------------------------------- joins
     def join(self, right: "DataSet", leftKeyColumn: str,
@@ -934,7 +946,8 @@ class DataSet:
         df, parked = self._split_exceptions()
         if limit is not None:
             df, parked = df.limit(limit), _exact(parked, why)
-        out = self._collect_exception_counts(parked, lambda: body(df))
+        out, self._exception_counts = self._collect_exception_counts(
+            parked, lambda: body(df))
         m = self._ctx._metrics
         m.totalRunTime += _time.time() - t0
         m.numActions += 1
@@ -982,12 +995,13 @@ class DataSet:
         row count without another pass: ``lastActionRowCount`` stays."""
         n, parts = kwargs.get("num_rows"), kwargs.get("num_parts")
         size = kwargs.get("part_size")
+        # read before _action registers observations a sample query completes
+        cap = self._records_per_file(size) if size else None
 
         def body(df):
             df = df.repartition(parts) if parts else df
             w = (prep(df) if prep else df).write.mode("overwrite")
-            save(w.option("maxRecordsPerFile", self._records_per_file(size))
-                 if size else w)
+            save(w.option("maxRecordsPerFile", cap) if cap else w)
         self._action(body, int(n) if n else None, "num_rows")
 
     def tocsv(self, path: str, header: bool = True, null_value: str = "",

@@ -188,14 +188,15 @@ def _slot_agg_col(slot: _Slot, value: str, name: str):
 
 
 def aggregate_general(ds, combine, aggregate, initial_value, keys):
-    from ..dataset import DataSet, _exact, _guard_code, _stage
+    from ..dataset import DataSet, _guard_code, _stage
 
     schema = ds._schema_of_visible()
     # the fold UDF receives the FULL row (key columns included) — reference
     # behavior per test_aggregates.py:45 (x['volume'] on ['id','volume']);
     # a PYOBJECT row is one pickled column, which only the fold loop
-    # unpickles
-    native = None if ds._pyobj else \
+    # unpickles; with the compiler off, every fold is generic
+    native = None if ds._pyobj or \
+        not ds._ctx._options.get("tuplex.useCompiledUDFs", True) else \
         recognize(aggregate, combine, initial_value, schema)
     n_out = len(initial_value) if isinstance(initial_value, tuple) else 1
     out_names = [f"column{i}" for i in range(n_out)] if n_out > 1 \
@@ -221,7 +222,7 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
         else:
             out = df.agg(*aggs)
             cols = out_names
-        return DataSet(ds._ctx, out, cols, sample=[], parked=parked,
+        return DataSet(ds._ctx, out, cols, parked=parked,
                        op_seq=ds._op_seq + 1)
 
     # ---- generic fold fallback ----
@@ -229,9 +230,6 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
     if keys:
         return _fold_by_key(ds, df, parked, combine, aggregate,
                             initial_value, keys, schema, out_names, op_name)
-    # the fold runs now, in a job of its own: no action job observes
-    # the splits it consumes
-    parked = _exact(parked, "an eager fold consumed the split")
     cols = [f.name for f in schema.fields]
     in_types = None if ds._pyobj else [f.dataType for f in schema.fields]
 
@@ -246,11 +244,14 @@ def aggregate_general(ds, combine, aggregate, initial_value, keys):
             [pa.array([pickle.dumps((state, Counter(raised)))],
                       pa.binary())],
             names=["__state"])
-    parts = [pickle.loads(r[0]) for r in FB.from_frame(
-        df.mapInArrow(partial, "__state binary"))]
+    # the fold runs now, in a job of its own, which counts the splits it
+    # consumes: the action after it finds their counts known
+    rows, counts = ds._collect_exception_counts(
+        parked, lambda: FB.from_frame(df.mapInArrow(partial,
+                                                    "__state binary")))
+    parts = [pickle.loads(r[0]) for r in rows]
     raised = sum((codes for _, codes in parts), Counter())
-    if raised:
-        parked = parked + [{name_for_code(c): n for c, n in raised.items()}]
+    parked = [counts, {name_for_code(c): n for c, n in raised.items()}]
     states = [state for state, _ in parts]
     result = functools.reduce(combine, states) if states \
         else copy.deepcopy(initial_value)
@@ -342,5 +343,5 @@ def _fold_by_key(ds, df, parked, combine, aggregate, initial_value, keys,
         return pa.Table.from_arrays(arrays, names=out_schema.fieldNames())
 
     out = df.groupBy(*keys).applyInArrow(fold, schema=out_schema)
-    return DataSet(ds._ctx, out, list(keys) + out_names, sample=[],
-                   parked=parked, op_seq=ds._op_seq + 1)
+    return DataSet(ds._ctx, out, list(keys) + out_names, parked=parked,
+                   op_seq=ds._op_seq + 1)

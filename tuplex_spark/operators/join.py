@@ -7,8 +7,7 @@ key's name), then right non-key columns; ``prefixes``/``suffixes`` are
 
 Physical strategy is left to Catalyst/AQE (broadcast-hash for small
 builds, sort-merge otherwise) — the analog of the reference's cost-chosen
-build side (PhysicalPlan.cc:145-178).  We additionally hint broadcast when
-one side's plan-time sample proves it tiny.
+build side (PhysicalPlan.cc:145-178).
 """
 
 from __future__ import annotations
@@ -81,8 +80,7 @@ def join_datasets(left, right, lkey, rkey, how: str,
           [F.col(_decorate(c, rpre, rsuf)) for c in rcols]
     out = joined.select(*sel)
 
-    return DataSet(left._ctx, out, out_cols, sample=[],
-                   parked=lparked + rparked, last_op=None,
+    return DataSet(left._ctx, out, out_cols, parked=lparked + rparked,
                    op_seq=max(left._op_seq, right._op_seq) + 1)
 
 

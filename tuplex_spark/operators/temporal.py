@@ -211,26 +211,3 @@ def range_join(left: DataFrame, right: DataFrame,
         *[F.col(f"__L.{c}").alias(c) for c in lcols],
         *[F.col(f"__R.{renames[c]}").alias(renames[c]) for c in rcols])
 
-
-# ---- SQL twins (DuckDB oracle) -------------------------------------------
-
-def asof_join_sql(left_sql: str, right_sql: str, on="ts", by="user_id",
-                  direction: str = "backward",
-                  out_left: list[str] | None = None,
-                  out_right: list[str] | None = None,
-                  right_suffix: str = "_right") -> str:
-    """DuckDB ASOF JOIN twin (left outer).  out_left/out_right name the
-    projected columns; right columns colliding with left get the
-    suffix."""
-    op = ">=" if direction == "backward" else "<="
-    out_left = out_left or []
-    out_right = out_right or []
-    lsel = ", ".join(f"l.{c} AS {c}" for c in out_left)
-    rsel = ", ".join(
-        f"r.{c} AS {c + right_suffix if c in out_left else c}"
-        for c in out_right)
-    return f"""
-SELECT {lsel}, {rsel}
-FROM ({left_sql}) l
-ASOF LEFT JOIN ({right_sql}) r
-  ON l.{by} = r.{by} AND l.{on} {op} r.{on}"""

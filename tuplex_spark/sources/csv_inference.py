@@ -41,13 +41,6 @@ def _read_sample(path: str, nbytes: int) -> str:
     return text
 
 
-def sample_bytes(pattern: str, nbytes: int = MAX_DETECTION_BYTES) -> str:
-    paths = sorted(_glob.glob(pattern))
-    if not paths:
-        raise FileNotFoundError(pattern)
-    return _read_sample(paths[0], nbytes)
-
-
 def sample_files(pattern: str, nbytes: int = MAX_DETECTION_BYTES,
                  k: int = SAMPLE_FILES) -> list[str]:
     """Per-file sample texts for up to k files of the glob (first,

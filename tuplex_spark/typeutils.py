@@ -16,6 +16,9 @@ arms on the same order:
   ``super_type``; ``Translator._as`` casts each arm to the shared type);
 - ``DataSet.types`` of a PYOBJECT dataset (``dataset._py_type_of_value``).
 
+It also owns the layout of the compiler's variant and set structs
+(``VARIANT_ARMS``, ``is_variant_struct``, ``is_set_struct``).
+
 Two vote rules pick the normal case, on purpose, because the inputs
 differ.  CSV cells are text: the most specific type that covers
 ``tuplex.normalcaseThreshold`` of the cells wins, else string, which
@@ -28,6 +31,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+from typing import NamedTuple
 
 from pyspark.sql import types as T
 
@@ -184,19 +188,45 @@ def infer_schema_from_rows(rows, columns: list[str] | None = None) -> T.StructTy
 _INT_BOUND = {T.LongType: 2 ** 63, T.IntegerType: 2 ** 31,
               T.ShortType: 2 ** 15, T.ByteType: 2 ** 7,
               T.DoubleType: 2 ** 63, T.FloatType: 2 ** 63}
-# the Python type each arm of a variant struct holds (compiler's
-# _VARIANT_FIELDS: __vt is the tag, one nullable field per family)
-_VARIANT_ARMS = {bool: ("__vb", 1), int: ("__vi", 2), float: ("__vf", 3),
-                 str: ("__vs", 4)}
 _ATOMIC = {T.StringType: str, T.BinaryType: (bytes, bytearray),
            T.TimestampType: datetime.datetime,
            T.TimestampNTZType: datetime.datetime,
            T.DateType: datetime.date, T.DecimalType: decimal.Decimal}
 
 
-def _is_variant(t: T.DataType) -> bool:
+class VariantArm(NamedTuple):
+    field: str  # the arm's struct field
+    spark: str  # the Spark type it holds, in SQL
+    code: int  # the tag of a value in this arm
+    py: type  # the Python type it holds
+
+
+# The compiler's two struct layouts for values no one Spark type holds,
+# which every boundary decodes back to the Python value.  A variant
+# struct (a scalar of mixed families) is the tag field VARIANT_TAG (0:
+# None, else the arm's code) and one nullable arm per family present,
+# in code order; a set struct is one field, SET_FIELD, holding the
+# distinct elements sorted.
+VARIANT_TAG, SET_FIELD = "__vt", "__sv"
+VARIANT_ARMS = {"bool": VariantArm("__vb", "boolean", 1, bool),
+                "int": VariantArm("__vi", "bigint", 2, int),
+                "float": VariantArm("__vf", "double", 3, float),
+                "str": VariantArm("__vs", "string", 4, str)}
+
+
+def is_variant_struct(t: T.DataType) -> bool:
     return isinstance(t, T.StructType) and bool(t.fields) \
-        and t.fields[0].name == "__vt"
+        and t.fields[0].name == VARIANT_TAG
+
+
+def is_set_struct(t: T.DataType) -> bool:
+    """A compiled set value at a column boundary, decoded back to a
+    Python ``set`` wherever rows cross into Python and re-bound as a
+    set column by the compiler, so downstream set ops keep compiling
+    (sets are unordered, so the sorted order is free to pick)."""
+    return isinstance(t, T.StructType) and len(t.fields) == 1 \
+        and t.fields[0].name == SET_FIELD \
+        and isinstance(t.fields[0].dataType, T.ArrayType)
 
 
 def conforms(v, t: T.DataType) -> bool:
@@ -227,10 +257,11 @@ def conforms(v, t: T.DataType) -> bool:
                  else t.valueContainsNull)
             for k, x in v.items())
     if tt is T.StructType:
-        if _is_variant(t):
-            arm = _VARIANT_ARMS.get(type(v))
-            return arm is not None and arm[0] in t.fieldNames() and \
-                (type(v) is not int or -2 ** 63 <= v < 2 ** 63)
+        if is_variant_struct(t):
+            arm = VARIANT_ARMS.get(type(v).__name__)
+            return arm is not None and arm.py is type(v) \
+                and arm.field in t.fieldNames() \
+                and (type(v) is not int or -2 ** 63 <= v < 2 ** 63)
         if isinstance(v, dict):
             v = tuple(v.get(n) for n in t.fieldNames())
         return isinstance(v, tuple) and len(v) == len(t.fields) and all(
@@ -244,7 +275,7 @@ def coerce(v, t: T.DataType):
     bools and ints upcast along the lattice (Spark's createDataFrame
     verifier and ``pa.array`` take no int for a double nor a bool for a
     long; the widened type IS the declared semantics), and a scalar in
-    a variant struct becomes ``{"__vt": tag, arm: value}``."""
+    a variant struct becomes ``{VARIANT_TAG: code, arm: value}``."""
     if v is None:
         return None
     tt = type(t)
@@ -253,9 +284,9 @@ def coerce(v, t: T.DataType):
     if tt in (T.LongType, T.IntegerType, T.ShortType, T.ByteType):
         return int(v)
     if tt is T.StructType:
-        if _is_variant(t):
-            arm, tag = _VARIANT_ARMS[type(v)]
-            return {"__vt": tag, arm: v}
+        if is_variant_struct(t):
+            arm = VARIANT_ARMS[type(v).__name__]
+            return {VARIANT_TAG: arm.code, arm.field: v}
         if isinstance(v, dict):
             v = tuple(v.get(n) for n in t.fieldNames())
         return tuple(coerce(x, f.dataType) for x, f in zip(v, t.fields))

@@ -37,7 +37,8 @@ from pyspark.sql import Column, functions as F, types as T
 
 from . import reflection
 from ..exceptions import code_for, codes_caught_by, name_for_code
-from ..typeutils import super_type
+from ..typeutils import SET_FIELD, VARIANT_ARMS, VARIANT_TAG, \
+    is_set_struct, is_variant_struct, super_type
 
 # exception classes whose CPython construction is (message,) wherever
 # the engine emits a guarded raise — so a handler's ``e.args`` read is
@@ -688,14 +689,6 @@ class SJson(Sym):
         self.exists, self.default = exists, default
 
 
-_VARIANT_FIELDS = {
-    "bool": ("__vb", "boolean", 1),
-    "int": ("__vi", "bigint", 2),
-    "float": ("__vf", "double", 3),
-    "str": ("__vs", "string", 4),
-}
-
-
 class SArgsTuple(Sym):
     """Handler ``e.args`` over MIXED-arity raise sites (round 12):
     carries the per-site recorded args (eff-condition, [Sym...]) plus a
@@ -728,23 +721,6 @@ class SVariant(Sym):
 
     def __init__(self, col: Column, present: list[str]):
         self.col, self.present = col, present
-
-
-def is_variant_struct(dt) -> bool:
-    return (isinstance(dt, T.StructType) and dt.fields
-            and dt.fields[0].name == "__vt")
-
-
-def is_set_struct(dt) -> bool:
-    """Compiled SET value at a column boundary: a 1-field struct whose
-    ``__sv`` field holds the distinct elements sorted (sets are
-    unordered, so the deterministic order is free to pick) — decoded
-    back to a real Python ``set`` wherever rows cross into Python
-    (``fallback.decode_columns``), and re-bound as a set-tagged column
-    by _col_sym so downstream compiled set ops keep compiling."""
-    return (isinstance(dt, T.StructType) and len(dt.fields) == 1
-            and dt.fields[0].name == "__sv"
-            and isinstance(dt.fields[0].dataType, T.ArrayType))
 
 
 def _pytag(v) -> str:
@@ -830,7 +806,7 @@ class CompiledUDF:
             # is a valid (and deterministic) representation
             if getattr(s, "tag", None) == "set":
                 return (F.struct(F.array_sort(self._tr.to_col(s))
-                                 .alias("__sv")), "set")
+                                 .alias(SET_FIELD)), "set")
             return (self._tr.to_col(s), s.tag)
 
         if isinstance(r, STuple):
@@ -973,7 +949,7 @@ class Translator:
             # element array as a set-tagged column — downstream set
             # ops (len, membership, algebra) keep compiling
             f = dt.fields[0]
-            return SCol(col.getField("__sv"), "set",
+            return SCol(col.getField(SET_FIELD), "set",
                         f.nullable or nullable,
                         spark_tag(f.dataType.elementType))
         # struct columns following the engine's tuple convention
@@ -1118,13 +1094,13 @@ class Translator:
             c = s.col
             expr = F.lit(False)
             for t in s.present:
-                name, _, code = _VARIANT_FIELDS[t]
+                name, _, code, _ = VARIANT_ARMS[t]
                 v = c.getField(name)
                 tv = (F.coalesce(v, F.lit(False)) if t == "bool"
                       else F.coalesce(v != F.lit(""), F.lit(False))
                       if t == "str"
                       else F.coalesce(v != 0, F.lit(False)))
-                expr = F.when(c.getField("__vt") == code, tv) \
+                expr = F.when(c.getField(VARIANT_TAG) == code, tv) \
                     .otherwise(expr)
             return expr
         if isinstance(s, SConst):
@@ -2860,28 +2836,28 @@ class Translator:
         for v in syms:
             if isinstance(v, SVariant):
                 present |= set(v.present)
-            elif v.tag in _VARIANT_FIELDS:
+            elif v.tag in VARIANT_ARMS:
                 present.add(v.tag)
             elif v.tag != "null":
                 return None
-        return sorted(present, key=lambda t: _VARIANT_FIELDS[t][2])
+        return sorted(present, key=lambda t: VARIANT_ARMS[t].code)
 
     def _to_variant(self, val: Sym, present: list[str]) -> Column:
         """Sym -> tagged variant struct with exactly the ``present``
         value fields (widening an existing SVariant fills the new
         fields with typed nulls)."""
         if isinstance(val, SVariant):
-            fields = [val.col.getField("__vt").alias("__vt")]
+            fields = [val.col.getField(VARIANT_TAG).alias(VARIANT_TAG)]
             for t in present:
-                name, styp, _ = _VARIANT_FIELDS[t]
+                name, styp, _, _ = VARIANT_ARMS[t]
                 c = (val.col.getField(name) if t in val.present
                      else F.lit(None).cast(styp))
                 fields.append(c.alias(name))
             return F.struct(*fields)
-        code = 0 if val.tag == "null" else _VARIANT_FIELDS[val.tag][2]
-        fields = [F.lit(code).cast("int").alias("__vt")]
+        code = 0 if val.tag == "null" else VARIANT_ARMS[val.tag].code
+        fields = [F.lit(code).cast("int").alias(VARIANT_TAG)]
         for t in present:
-            name, styp, _ = _VARIANT_FIELDS[t]
+            name, styp, _, _ = VARIANT_ARMS[t]
             c = (self.to_col(val).cast(styp) if val.tag == t
                  else F.lit(None).cast(styp))
             fields.append(c.alias(name))
@@ -4608,7 +4584,7 @@ class Translator:
             c = s.col
             out = F.lit("None")
             for t in s.present:
-                name, _, code = _VARIANT_FIELDS[t]
+                name, _, code, _ = VARIANT_ARMS[t]
                 v = c.getField(name)
                 if t == "bool":
                     sv = F.when(v, "True").otherwise("False")
@@ -4618,7 +4594,7 @@ class Translator:
                     sv = v
                 else:
                     sv = v.cast("string")
-                out = F.when(c.getField("__vt") == code, sv) \
+                out = F.when(c.getField(VARIANT_TAG) == code, sv) \
                     .otherwise(out)
             return out
         c = self.to_col(s)

@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 from ..exceptions import code_for_instance
-from ..typeutils import coerce, conforms, infer_type, widen
+from ..typeutils import SET_FIELD, VARIANT_ARMS, VARIANT_TAG, coerce, \
+    conforms, infer_type, is_set_struct, is_variant_struct, widen
 
 EXC_CODE = "__exc_code"
 EXC_PAYLOAD = "__exc_payload"
@@ -114,7 +115,7 @@ def infer_output_type(results):
     where out_kind is 'scalar' | 'tuple' | 'dict'.  An output whose
     scalars have no common type but all come from the bool/int/float/
     str families is the compiler's variant struct
-    (``compiler._VARIANT_FIELDS``).
+    (``typeutils.VARIANT_ARMS``).
     Raises AllSampleRowsFailed when there are no results and
     TypeUnstableError on heterogeneous result shapes or any other mix.
     """
@@ -145,19 +146,18 @@ def _output_type(values) -> T.DataType:
     t, _ = widen(values)
     if t is not None:
         return t
-    from .compiler import _VARIANT_FIELDS
     arms = {}
     for v in values:
         if v is not None:
             arms.setdefault(type(v).__name__, infer_type(v))
-    if not arms.keys() <= _VARIANT_FIELDS.keys():
+    if not arms.keys() <= VARIANT_ARMS.keys():
         raise TypeUnstableError(
             "sampled outputs have no common type: "
             + ", ".join(sorted(arms)))
-    present = sorted(arms, key=lambda f: _VARIANT_FIELDS[f][2])
+    present = sorted(arms, key=lambda f: VARIANT_ARMS[f].code)
     return T.StructType(
-        [T.StructField("__vt", T.IntegerType(), True)]
-        + [T.StructField(_VARIANT_FIELDS[f][0], arms[f], True)
+        [T.StructField(VARIANT_TAG, T.IntegerType(), True)]
+        + [T.StructField(VARIANT_ARMS[f].field, arms[f], True)
            for f in present])
 
 
@@ -209,7 +209,7 @@ def _apply(fn, row, arity, names=None):
     return fn(row)
 
 
-_VARIANT_ARMS = {1: "__vb", 2: "__vi", 3: "__vf", 4: "__vs"}
+_ARM_OF_CODE = {a.code: a.field for a in VARIANT_ARMS.values()}
 # types whose Arrow Python values need _struct_to_tuple
 _WALKED = (T.StructType, T.ArrayType, T.MapType, T.TimestampType)
 # types whose numpy conversion gives to_pylist's exact values, an order
@@ -229,16 +229,13 @@ def _struct_to_tuple(v, t: T.DataType):
     if v is None:
         return None
     if isinstance(t, T.StructType):
-        names = t.fieldNames()
-        if names and names[0] == "__vt":
-            arm = _VARIANT_ARMS.get(v["__vt"])
+        if is_variant_struct(t):
+            arm = _ARM_OF_CODE.get(v[VARIANT_TAG])
             f = next((f for f in t.fields if f.name == arm), None)
             return None if f is None else _struct_to_tuple(v[arm],
                                                            f.dataType)
-        if names == ["__sv"] and isinstance(t.fields[0].dataType,
-                                            T.ArrayType):
-            # compiled set return (compiler.is_set_struct)
-            inner = _struct_to_tuple(v["__sv"], t.fields[0].dataType)
+        if is_set_struct(t):
+            inner = _struct_to_tuple(v[SET_FIELD], t.fields[0].dataType)
             return None if inner is None else set(inner)
         return tuple(_struct_to_tuple(v[f.name], f.dataType)
                      for f in t.fields)
