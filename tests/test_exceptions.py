@@ -556,8 +556,10 @@ class TestOnePassCounts:
     the job that produces its rows; the eager whole-dataset fold reads
     those of the splits it consumes in its own job.  Counts are exact,
     and the exact ``groupBy`` pass runs only where no job observes a
-    split completely: take(n)/limit, and a split whose observed node
-    AQE dropped from the executed plan."""
+    split exactly once: take(n)/limit, a split parked before an
+    ``orderBy`` (whose range partitioner samples its input in a job of
+    its own), and a split whose observed node AQE dropped from the
+    executed plan."""
 
     def _counts(self, ctx, ds, exact: bool, action=None):
         labels = _job_labels(ctx, action or ds.collect)
@@ -638,10 +640,33 @@ class TestOnePassCounts:
             [k for k in range(40) if k % 5]
 
     def test_order_by_after_a_join(self, ctx):
-        # the join's splits lie below the range exchange
+        # the join's splits lie below the range exchange, in a stage the
+        # partitioner's sampling job may run again: counted exactly
         ds = _failing(ctx).join(_right(ctx), "k", "k").orderBy("k")
-        assert self._counts(ctx, ds, False) == {"ZeroDivisionError": 8}
+        assert self._counts(ctx, ds, True) == {"ZeroDivisionError": 8}
         assert [r[2] for r in ds.collect()] == \
+            [k for k in range(0, 40, 2) if k % 5]
+
+    def test_order_by_after_a_union(self, ctx):
+        # the union's splits lie in the stage whose rows the range
+        # partitioner samples in a job of its own: counted exactly
+        ds = _failing(ctx)
+        u = ds.union(ds).orderBy("k")
+        assert self._counts(ctx, u, True) == {"ZeroDivisionError": 16}
+        assert [r[0] for r in u.collect()] == \
+            sorted(2 * [k for k in range(40) if k % 5])
+
+    def test_order_by_after_a_broadcast_join(self, ctx, tmp_path):
+        # the join's split on the stream side lies in the sampled stage
+        path = tmp_path / "right.csv"
+        path.write_text("k,v\n" + "".join(f"{k},v{k}\n"
+                                          for k in range(0, 40, 2)))
+        j = _failing(ctx).join(ctx.csv(str(path)), "k", "k")
+        assert explain_summary(j.toDF())["broadcast_join"]
+        ds = j.orderBy("k")
+        assert self._counts(ctx, ds, True) == {"ZeroDivisionError": 8}
+        k = ds.columns.index("k")
+        assert [r[k] for r in ds.collect()] == \
             [k for k in range(0, 40, 2) if k % 5]
 
     def test_ignore_after_order_by(self, ctx):
@@ -658,8 +683,14 @@ class TestOnePassCounts:
                                         (4, 16)]
 
     def test_generic_fold_without_key(self, ctx):
-        ds = _failing(ctx).aggregate(
-            lambda a, b: a + b, lambda a, x: a * 1 + x["q"] % 7, 0)
+        # the fold runs when it is built, and its own job counts the
+        # split it consumes
+        folds = []
+        labels = _job_labels(ctx, lambda: folds.append(
+            _failing(ctx).aggregate(lambda a, b: a + b,
+                                    lambda a, x: a * 1 + x["q"] % 7, 0)))
+        assert labels and not _exact_passes(labels), labels
+        ds, = folds
         assert self._counts(ctx, ds, False) == {"ZeroDivisionError": 8}
         assert ds.collect() == [8 * (3 + 5 + 3 + 2)]
 
@@ -718,6 +749,18 @@ class TestPlanTimeSample:
             assert not ds._pyobj
             assert sorted(ds.collect()) == sorted(want)
             assert ds.exception_counts == {}
+
+    def test_long_chain_reads_its_sample(self, ctx):
+        # each op's sample traces its parent's: a chain longer than the
+        # interpreter's recursion limit allows still resolves
+        ds = ctx.parallelize(_LEFT, ["a", "k"])
+        for _ in range(sys.getrecursionlimit() // 2):
+            ds = ds.selectColumns(["a", "k"])
+        h = lambda x: int(  # noqa: E731
+            hashlib.md5(str(x[0]).encode()).hexdigest()[:4], 16)
+        ds = ds.withColumn("h", h)
+        assert explain_summary(ds.toDF())["python_eval"]
+        assert ds.collect() == [r + (h(r),) for r in _LEFT]
 
     def test_compiled_chain_over_a_source_starts_no_job(self, ctx,
                                                         tmp_path):

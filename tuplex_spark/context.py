@@ -101,9 +101,9 @@ class Context:
         self.spark = spark
         from .metrics import Metrics
         self._metrics = Metrics()
-        # (pattern, columns, mtime) -> the scan's DataSet: repeated
-        # scans of the same files otherwise pay parquet footer analysis
-        # and, where a sample is read, its collect (~0.2s each) —
+        # (pattern, columns, mtime) -> the scan's DataSet, whose frame
+        # and sample every read shares: repeated scans of the same files
+        # otherwise pay parquet footer analysis and a sample collect —
         # plan-build overhead that dominated sub-second queries.  The
         # mtime key drops the entry when the files change.  Past 256
         # entries the oldest goes.
@@ -378,7 +378,6 @@ class Context:
             scan = self._scan_cache[key] = DataSet(self, df, df.columns)
             if len(self._scan_cache) > 256:
                 self._scan_cache.popitem(last=False)
-        # reads of one scan share its frame and its sample
         return scan._spawn(scan._df, bump=False)
 
     def _read_parquet_nanos_safe(self, pattern: str):

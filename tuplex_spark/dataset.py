@@ -41,7 +41,8 @@ Execution model (Spark-first, not a port):
   fold reads those of the splits it consumes in its own job.  One exact
   ``groupBy`` pass over the codes of every split that no job observes
   completely runs only when the action stops early (take(n), limit,
-  num_rows) or AQE dropped the observed node from the executed plan.
+  num_rows), a sort samples a stage that holds one (orderBy after a
+  split), or AQE dropped the observed node from the executed plan.
   show and toDF report no counts and split without observing.
 """
 
@@ -262,8 +263,8 @@ def _py_type_of_value(v):
 
 class DataSet:
     """The plan-time sample (``_sample``) is read on first use and kept:
-    the rows given, a function of the parent's sample (``_spawn`` keeps
-    the parent's), or else the first clean rows of the frame.  Interpreted
+    the rows given, the parent's sample or a function of it once read
+    (``_spawn``), or else the first clean rows of the frame.  Interpreted
     ops, keyed folds, PYOBJECT ``types`` and ``part_size`` read it; after
     a join or an aggregate, that read runs the join or aggregation."""
 
@@ -297,19 +298,24 @@ class DataSet:
 
     @property
     def _sample(self) -> list:
-        if self._sample_of is None:
-            rows = fallback.from_frame(self.toDF().limit(_SAMPLE_ROWS))
-            self._sample_of = [r[0] for r in rows] \
-                if len(self._columns) == 1 else rows
-        elif not isinstance(self._sample_of, list):
-            self._sample_of = self._sample_of()
+        # walk up to a known sample or a frame, then down: no recursion
+        chain, ds = [], self
+        while isinstance(ds._sample_of, tuple):
+            chain.append(ds)
+            ds = ds._sample_of[0]
+        if ds._sample_of is None:
+            rows = fallback.from_frame(ds.toDF().limit(_SAMPLE_ROWS))
+            ds._sample_of = [r[0] for r in rows] \
+                if len(ds._columns) == 1 else rows
+        for ds in reversed(chain):
+            ds._sample_of = ds._sample_of[1]()
         return self._sample_of
 
     def _spawn(self, df, columns=None, sample=None, parked=None,
                last_op=None, bump=True, tuple1=None, pyobj=None):
         return DataSet(self._ctx, df,
                        self._columns if columns is None else columns,
-                       (lambda: self._sample) if sample is None else sample,
+                       (self, sample or (lambda: self._sample_of)),
                        self._parked if parked is None else parked,
                        last_op,
                        self._op_seq + (1 if bump else 0),
@@ -386,8 +392,7 @@ class DataSet:
         t0 = _time.time()
         compiled = None if self._pyobj else self._try_compile(fn, in_schema)
         m.totalCompilationTime += _time.time() - t0
-        # traced when the interpreter path or the op's own sample needs it
-        traced = _cache(
+        traced = _cache(  # for the interpreter path or the op's sample
             lambda: self._sample_eval(fn, kind, target_col, new_col))
         (out, vis, out_kind), was_compiled = _demoting(
             compiled,
@@ -649,12 +654,17 @@ class DataSet:
 
     def orderBy(self, *cols, ascending: bool = True) -> "DataSet":
         """Total sort (Spark range-partitions on sampled bounds — scales
-        to arbitrary data).  Failed rows travel through the sort, as
-        through ``selectColumns``: the next split point or action splits
-        them off above the range exchange, whose partitioner samples its
-        input in a job of its own that never runs that observation."""
+        to arbitrary data).  The range partitioner samples its input in a
+        job of its own.  Failed rows travel through the sort, as through
+        ``selectColumns``: the next split point or action splits them off
+        above the range exchange, where that job never runs the
+        observation.  Splits parked before the sort (a union's, a
+        broadcast join's stream side) may lie in the sampled stage, which
+        would count them twice: exact counts for those."""
         names = [c for c in cols] or list(self._columns)
-        return self._spawn(self._df.orderBy(*names, ascending=ascending))
+        return self._spawn(self._df.orderBy(*names, ascending=ascending),
+                           parked=_exact(self._parked, "orderBy samples "
+                                                       "its input twice"))
 
     def limit(self, n: int) -> "DataSet":
         """First n rows as a TRANSFORM (take(n) is the action variant).
@@ -693,10 +703,10 @@ class DataSet:
         frame, pruned to the visible columns and the code (so no payload
         is built), is observed under a fresh name with one ``count_if``
         per exception class: the job that consumes the clean rows counts
-        the failed ones.  Where no job observes the whole split (take(n),
-        limit, or AQE dropping the node), the count reader counts the
-        pruned frame in one exact pass instead.  Returns (clean frame,
-        parked list)."""
+        the failed ones.  Where no job observes the whole split exactly
+        once (take(n), limit, a sort above it, or AQE dropping the node),
+        the count reader counts the pruned frame in one exact pass
+        instead.  Returns (clean frame, parked list)."""
         if not self._has_exc:
             return self._df, list(self._parked)
         code = F.col(EXC_CODE)
@@ -818,7 +828,10 @@ class DataSet:
         frame id), which any query that runs the node completes.  Splits
         with no observed row (exact ones; an empty row: AQE dropped the
         node; none within the read's 100 ms wait) are counted in one
-        exact job grouping their codes, labelled with the reason."""
+        exact job grouping their codes, labelled with the reason.
+        ``run`` must read no ``_sample``: a join's sample query would
+        complete the observations below it with 100 rows' counts
+        (``_write`` reads ``part_size``'s sample first)."""
         manager = self._ctx.spark._jsparkSession.observationManager()
         obs = [None if isinstance(p, dict) or p.exact else
                manager.getOrNewObservation(p.name, p.frame._jdf.id())
@@ -995,7 +1008,6 @@ class DataSet:
         row count without another pass: ``lastActionRowCount`` stays."""
         n, parts = kwargs.get("num_rows"), kwargs.get("num_parts")
         size = kwargs.get("part_size")
-        # read before _action registers observations a sample query completes
         cap = self._records_per_file(size) if size else None
 
         def body(df):
